@@ -307,14 +307,19 @@ object TextExpressions {
         val hv = ctx.freshName("hv")
         val m = ctx.freshName("m")
         val out = ctx.freshName("out")
+        // one shift per statement: a generated line that starts with `|`
+        // loses it to the enclosing operator's stripMargin, and Janino then
+        // reads the parenthesized term before it as a cast
         s"""
            |int $n = $s.numElements();
            |long[] $mins = new long[$k];
            |java.util.Arrays.fill($mins, Long.MAX_VALUE);
            |for (int $i = 0; $i < $n; $i++) {
            |  byte[] $d = $mdF.digest($s.getUTF8String($i).getBytes());
-           |  long $hv = (($d[0] & 0xffL) << 24) | (($d[1] & 0xffL) << 16)
-           |    | (($d[2] & 0xffL) << 8) | ($d[3] & 0xffL);
+           |  long $hv = $d[0] & 0xffL;
+           |  $hv = ($hv << 8) | ($d[1] & 0xffL);
+           |  $hv = ($hv << 8) | ($d[2] & 0xffL);
+           |  $hv = ($hv << 8) | ($d[3] & 0xffL);
            |  for (int $j = 0; $j < $k; $j++) {
            |    long $m = ($aF[$j] * $hv + $bF[$j]) % ${p}L;
            |    if ($m < $mins[$j]) $mins[$j] = $m;

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlInternals}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /** Deduplication operators for LLM training-data pipelines over the
   * `documents` table: exact (hash-groupBy), MinHash+LSH near-dup, n-gram
@@ -633,8 +636,8 @@ object Dedup {
     val prFut =
       if (overlap) {
         buckets.count()
-        Some(scala.concurrent.Future(freshCheckpoint(prLeg()))(
-          scala.concurrent.ExecutionContext.global))
+        Some(GraftSqlInternals.withCallerProperties(documents.sparkSession)(
+          freshCheckpoint(prLeg())))
       } else None
     // stars CC: identical labels (one oracle pins both variants), ~25%
     // faster here than label contraction at 11 rounds; own rounds key so
@@ -651,14 +654,10 @@ object Dedup {
         .select(col("doc_id"), col("cluster_id"))
       catch {
         case e: Throwable =>
-          prFut.foreach { f =>
-            try scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
-            catch { case _: Throwable => () }
-          }
+          prFut.foreach(drain)
           throw e
       }
-    val pr = prFut.fold(prLeg())(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+    val pr = prFut.fold(prLeg())(Await.result(_, Duration.Inf))
     // top-1-per-cluster as ONE hash aggregate (max of an orderable
     // struct), not a rank window plus a size window: the window pair
     // cost a per-cluster SORT and carried every member row through two
@@ -899,48 +898,134 @@ object Dedup {
     * per round, zero data movement ([[org.apache.spark.sql.GraftSqlInternals]]).
     */
   private def freshCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-    org.apache.spark.sql.GraftSqlInternals.localCheckpointStatsFree(df, eager)
+    GraftSqlInternals.localCheckpointStatsFree(df, eager)
 
-  /** Connected components by label contraction. Exposed separately from
-    * [[nearDupClusters]] so the fixpoint logic is testable on a synthetic
-    * graph (transitive chains, singletons).
-    *
-    * Each round works on the QUOTIENT graph of the current labeling:
-    *   1. contract: edges' = distinct (label(u), label(v)), self-loops
-    *      dropped — supervertex adjacency;
-    *   2. supervertex min: m(L) = min(L, neighbors of L in edges');
-    *   3. relabel every vertex through m: label(v) := m(label(v)).
-    * On bushy graphs (LSH candidate clusters: overlapping bucket cliques)
-    * whole supervertices merge per round, so the quotient collapses in a
-    * handful of rounds (measured on the sf0.1 candidate graph: 5 rounds
-    * versus 19 plain neighbor-min / 14 with pointer jumping). Each round
-    * is two shuffle joins + one aggregate on a SHRINKING edge set;
-    * quotient edges of a merged component disappear, so later rounds get
-    * cheaper. BUT on a path graph the quotient chain shrinks by only ONE
-    * hop per round — m(L) = L−1 for every label on a chain — so worst-case
-    * rounds are O(diameter), not O(log d). (Round 5's planning hang masked
-    * this: the 512-chain test stalled in stats estimation before the
-    * O(d) behavior could surface; the stats fix exposed it.) Rather than
-    * pay d rounds, after [[EscalateAfter]] non-converged rounds the loop
-    * ESCALATES: it runs [[connectedComponentsStars]] — provably O(log n)
-    * on any graph — over the already-contracted quotient graph and
-    * composes the labels. Composition is sound because every label is a
-    * vertex id inside its own component and the component-min label maps
-    * to itself, so the quotient's component mins ARE the original
-    * component mins. Easy graphs never escalate; adversarial ones pay a
-    * few cheap contraction rounds, then the logarithmic path. maxIter is
-    * a safety bound for the escalated phase too, and non-convergence is
-    * still surfaced loudly (a truncated fixpoint would silently mislabel).
-    */
+  /** Waits for an overlapped leg whose result is dropped, ignoring its
+    * outcome. */
+  private def drain(leg: Future[_]): Unit = { Await.ready(leg, Duration.Inf); () }
+
   /** Contraction rounds granted before [[connectedComponents]] escalates
     * to the stars variant. Short-diameter LSH graphs converge well under
-    * this (sf0.1: 5 rounds); a graph still moving after this many rounds
-    * is in the O(diameter) regime where each further contraction round
-    * buys one quotient hop — switching to O(log n) stars is strictly
-    * cheaper from here.
+    * this; a graph still moving after this many rounds is in the
+    * long-path regime, where switching to O(log n) stars is cheaper.
     */
   val EscalateAfter = 12
 
+  /** Per-partition union-find pre-contraction of an edge list `(u, v)`:
+    * for every vertex in a partition's local forest other than the root
+    * it emits `(v, root)`, where `root` is the smallest id of v's local
+    * tree, and a root that only has self-loops emits `(root, root)`. So
+    * the output has the same connectivity and the same endpoint set as
+    * the input, with at most one edge per distinct vertex per partition.
+    * Narrow (no exchange) and lazy. Rows with a null endpoint pass through
+    * unchanged; an edge list whose ids are not longs passes through whole.
+    */
+  private def localSpanningForest(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.LongType
+    if (edges.schema.fields.exists(_.dataType != LongType)) edges
+    else edges.mapPartitions { rows =>
+      val passThrough = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var ends = new Array[Long](1024) // (u, v) pairs, flattened
+      var n = 0
+      rows.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) passThrough += r
+        else {
+          if (2 * n + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, 2 * ends.length)
+          ends(2 * n) = r.getLong(0)
+          ends(2 * n + 1) = r.getLong(1)
+          n += 1
+        }
+      }
+      // dense index per distinct id: open addressing, load ≤ 1/2
+      var cap = 16
+      while (cap < 4 * n) cap <<= 1
+      val slot = Array.fill(cap)(-1)
+      val ids = new Array[Long](2 * n)
+      val parent = new Array[Int](2 * n)
+      var nIds = 0
+      def indexOf(x: Long): Int = {
+        val mixed = x * 0x9E3779B97F4A7C15L
+        var h = (mixed ^ (mixed >>> 32)).toInt & (cap - 1)
+        while (slot(h) >= 0 && ids(slot(h)) != x) h = (h + 1) & (cap - 1)
+        if (slot(h) < 0) {
+          slot(h) = nIds; ids(nIds) = x; parent(nIds) = nIds; nIds += 1
+        }
+        slot(h)
+      }
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      var e = 0
+      while (e < n) {
+        val ra = find(indexOf(ends(2 * e)))
+        val rb = find(indexOf(ends(2 * e + 1)))
+        // union by min id: every root is the smallest id of its tree
+        if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+        e += 1
+      }
+      val root = Array.tabulate(nIds)(find)
+      val hasChild = new Array[Boolean](nIds)
+      root.indices.foreach(i => if (root(i) != i) hasChild(root(i)) = true)
+      passThrough.iterator ++ Iterator.range(0, nIds).collect {
+        case i if root(i) != i => Row(ids(i), ids(root(i)))
+        case i if !hasChild(i) => Row(ids(i), ids(i))
+      }
+    }(org.apache.spark.sql.Encoders.row(edges.schema))
+  }
+
+  /** Connected components by label contraction, labelled by component
+    * min. Exposed separately from [[nearDupClusters]] so the fixpoint is
+    * testable on synthetic graphs (transitive chains, singletons).
+    *
+    * Step 0 is the local spanning forest ([[localSpanningForest]]): each
+    * input partition runs union-find over its own edges and ships one edge
+    * (v, local root) per non-root vertex instead of its raw edges
+    * (Kiveris et al.'s local contraction). Connectivity and the endpoint
+    * set are unchanged, so every step below means what it meant on the raw
+    * edges; a component whose edges share a partition simply arrives
+    * collapsed into a star. The step is narrow and feeds the lazy input
+    * checkpoint, so round 1's first job computes it: no job or exchange
+    * of its own.
+    *
+    * Each round then works on the QUOTIENT graph of the current labeling:
+    *   1. supervertex min: m(L) = min(L, quotient neighbours of L),
+    *      composed once with itself (pointer jumping, m := m∘m), so a
+    *      label moves up to two quotient hops per round;
+    *   2. relabel every vertex through m: label(v) := m(label(v));
+    *   3. contract: edges' = distinct (m(u), m(v)), self-loops dropped.
+    * m maps every label to a label inside its own component and never
+    * above it, so the fixpoint (no label changed) is exactly "every label
+    * is its component min". The loop also stops when step 3 leaves no
+    * edge: the labels of each component are then one label, which can
+    * only be its min (the min vertex never moves), so the round that
+    * would confirm it is skipped; the contraction's checkpoint job counts
+    * its edges at no extra job. Only the active set (edge endpoints) is
+    * iterated; every other vertex is a singleton, restored by one final
+    * join.
+    *
+    * Rounds: a single-partition input converges in 1 (the forest leaves
+    * one star per component, which one round relabels and contracts
+    * away); the benchmark's 4k-doc LSH graph on 4 partitions also takes 1
+    * (4 on raw edges with the confirming round). A long path spread over
+    * many partitions is the worst case: contraction shortens a quotient
+    * path by about two supervertices per round, so after
+    * [[EscalateAfter]] non-converged rounds the loop
+    * finishes on [[connectedComponentsStars]] (O(log n) on any graph) over
+    * the contracted quotient and composes the labels, which is sound
+    * because the quotient's component mins are the original component
+    * mins. `maxIter` bounds both phases together; with `strict` a
+    * truncated fixpoint throws instead of mislabelling.
+    *
+    * Each round materializes three frames: the compose (which also
+    * computes m), the relabelled labels (by the changed count) and the
+    * contracted edges, which run overlapped with the count on a thread
+    * that carries the caller's job group. Design
+    * history and measurements: OPTIMIZATION_r19.md §2, OPTIMIZATION_r20.md
+    * §4, §10 and "connectedComponents design notes".
+    */
   private[graft] def connectedComponents(
       pairs: DataFrame,
       vertices: DataFrame,
@@ -948,87 +1033,44 @@ object Dedup {
       strict: Boolean = true): DataFrame = {
     val pa = pairs.columns(0)
     val pb = pairs.columns(1)
-    // freshCheckpoint per iteration: checkpointing truncates the logical
-    // plan to a LogicalRDD leaf, which keeps the iterated lineage from
-    // unrolling across rounds, and the stats reset keeps each round's
-    // planning cost constant (see freshCheckpoint). (A persist+unpersist
-    // variant was measured catastrophically slower: unpersisting a
-    // superseded iteration cascades into the caches built on top of it and
-    // the recompute walks the fully unrolled lineage. Per-round broadcast
-    // hints also lose — driver collect + broadcast build each round.)
-    // Checkpointed RDDs are reaped by the ContextCleaner once unreferenced.
-    // r20: lazy — round 1's compose job materializes the input edges (one
-    // fewer round-0 barrier); same gate as the nbrMin fuse.
-    var edges = freshCheckpoint(pairs
-      .select(col(pa).as("u"), col(pb).as("v")),
-      eager = pairs.sparkSession.conf
-        .getOption("spark.graft.ccNbrMinLazy").contains("false"))
-    // r20 optimization (guide §2.3): iterate labels over the ACTIVE vertex
-    // set only — distinct endpoints of the edge list. A vertex with no
-    // edges never appears as a supervertex-min key in any round (nbrMin
-    // keys are quotient endpoints ⊆ active labels), so its label stays its
-    // own id and carrying it through `rounds` label-sized joins and the
-    // per-round changed-count scan was dead weight; the full labeling is
-    // recovered by ONE final left join (inactive ⇒ own id/self-keep).
-    // `changed` is identical (inactive rows never counted), so round
-    // counts and the escalation decision are unchanged.
-    // spark.graft.activeSetLegacy=true reverts for the interleaved A/B.
-    val activeSet = !pairs.sparkSession.conf
-      .getOption("spark.graft.activeSetLegacy").contains("true")
+    val conf = pairs.sparkSession.conf
+    // every round's frames are checkpointed (freshCheckpoint): lineage and
+    // planning cost stay constant per round. The input checkpoint is lazy,
+    // so round 1's compose job computes the forest and materializes it.
+    val nbrMinLazy = !conf.getOption("spark.graft.ccNbrMinLazy").contains("false")
+    var edges = freshCheckpoint(
+      localSpanningForest(pairs.select(col(pa).as("u"), col(pb).as("v"))),
+      eager = !nbrMinLazy)
+    // labels over the active set (distinct edge endpoints); an inactive
+    // vertex never becomes a supervertex-min key, so its label is its id
+    val activeSet = !conf.getOption("spark.graft.activeSetLegacy").contains("true")
     var labels = freshCheckpoint(
       if (activeSet)
         edges.select(explode(array(col("u"), col("v"))).as("id")).distinct()
           .withColumn("label", col("id"))
       else vertices.select(col(vertices.columns.head).as("id"))
         .withColumn("label", col("id")),
-      // r20: lazy — round 1's relabel-count job materializes it (one
-      // fewer round-0 barrier); gated with the nbrMin fuse below
-      eager = pairs.sparkSession.conf
-        .getOption("spark.graft.ccNbrMinLazy").contains("false"))
+      eager = !nbrMinLazy) // round 1's relabel count materializes it
+    val jumpLegacy = conf.getOption("spark.graft.ccJumpLegacy").contains("true")
+    val overlap = !conf.getOption("spark.graft.ccContractOverlap").contains("false")
     var changed = 1L
+    // an empty contracted edge set means every label already is its
+    // component min: the next round could change nothing, so it is skipped
+    var quotientEmpty = false
     var it = 0
-    while (changed > 0 && it < math.min(EscalateAfter, maxIter)) {
-      // supervertex min over the (already contracted) edge set, counting
-      // both directions: m(L) = min(L, all quotient neighbors of L).
-      // r20: LAZY checkpoint — its ONLY consumer is the compose join below
-      // (both legs read the same persisted RDD), so the compose's eager
-      // materialization is the job that computes it: one job for
-      // nbrMin0+compose instead of two. (Distinct from the r19 rejected
-      // candidate, which deferred the COMPOSE — that frame feeds both the
-      // relabel and contraction jobs, where laziness serialized work.)
-      // Under ccJumpLegacy the compose is skipped and nbrMin0 IS nbrMin
-      // (two downstream consumers) — kept eager there.
-      // spark.graft.ccNbrMinLazy=false reverts for the interleaved A/B.
-      val jumpLegacy = pairs.sparkSession.conf
-        .getOption("spark.graft.ccJumpLegacy").contains("true")
-      val nbrMinLazy = !jumpLegacy && !pairs.sparkSession.conf
-        .getOption("spark.graft.ccNbrMinLazy").contains("false")
+    while (changed > 0 && !quotientEmpty && it < math.min(EscalateAfter, maxIter)) {
+      // m(L) = min(L, quotient neighbours of L), both edge directions. Lazy:
+      // its one consumer, the compose, materializes it in the same job
+      // (under ccJumpLegacy it is m itself, with two consumers: eager).
       val nbrMin0 = freshCheckpoint(edges.select(col("u").as("l"), col("v").as("n"))
         .union(edges.select(col("v").as("l"), col("u").as("n")))
         .groupBy("l")
         .agg(min("n").as("nmin"))
         .select(col("l"), least(col("l"), col("nmin")).as("m")),
-        eager = !nbrMinLazy)
-      // r19 optimization — ONE pointer-jumping compose per round
-      // (m := m∘m): on long quotient chains plain contraction moves every
-      // label ONE hop per round (the O(diameter) regime the escalation
-      // guard exists for); composing the mapping with itself each round
-      // makes the effective hop length double, so chains collapse in
-      // O(log d) rounds. Soundness: m maps every label to a label inside
-      // its own component and never above it, so any number of composes
-      // stays within-component and ≥ the component min — the fixpoint
-      // (changed == 0) is still exactly "every label is its component
-      // min", and the contraction/relabel consumers are mapping-agnostic.
-      // The compose is one self-join of the label-cardinality mins frame
-      // (reads the checkpointed RDD twice, no recompute); left join keeps
-      // labels whose image has no quotient edges of its own.
-      // spark.graft.ccJumpLegacy=true is the A/B hook back to one-hop.
-      // The compose checkpoint stays EAGER deliberately: a lazy variant
-      // (fused into the relabel count job, wave-2 candidate) measured
-      // 0.90x on the interleaved CcProbe A/B — the compose feeds BOTH the
-      // relabel and the two-leg edge-contraction join, and deferring its
-      // materialization into the relabel job serializes work the eager
-      // form overlaps. Kept the measured-faster shape.
+        eager = jumpLegacy || !nbrMinLazy)
+      // pointer jumping, m := m∘m (left join: an image with no quotient
+      // edges of its own maps to itself). Eager: it feeds both the
+      // relabel and the contraction.
       val nbrMin =
         if (jumpLegacy) nbrMin0
         else freshCheckpoint(
@@ -1038,7 +1080,7 @@ object Dedup {
               col("m") === col("jl"), "left")
             .select(col("l"), coalesce(col("jm"), col("m")).as("m")))
       // relabel every vertex through m (left join: labels whose
-      // supervertex has no quotient neighbors keep their label)
+      // supervertex has no quotient neighbours keep their label)
       val updated = freshCheckpoint(labels
         .join(nbrMin.select(col("l").as("label"), col("m")), Seq("label"), "left")
         .select(
@@ -1046,20 +1088,11 @@ object Dedup {
           col("label"),
           coalesce(col("m"), col("label")).as("new_label")),
         eager = false) // lazy: the count below materializes it
-      // r20 (guide §2.6 — overlap independent jobs, the centralKeep
-      // pattern): the edge-contraction job depends only on the CHECKPOINTED
-      // nbrMin and edges, not on the relabel count — submit it on a driver
-      // thread so its tasks back-fill executors while the count job's tail
-      // drains. The contraction of the FINAL round (changed == 0) is
-      // discarded — one wasted cheap job against one saved barrier per
-      // earlier round. spark.graft.ccContractOverlap=false reverts.
-      val overlap = !pairs.sparkSession.conf
-        .getOption("spark.graft.ccContractOverlap").contains("false")
-      def contract(): DataFrame = {
+      def contract(): (DataFrame, Long) = {
         // contract the edge set through the new supervertex mapping;
         // self-loops vanish, merged components stop costing anything
         val mapped = nbrMin.select(col("l"), col("m"))
-        freshCheckpoint(edges
+        GraftSqlInternals.localCheckpointCounted(edges
           .join(mapped.select(col("l").as("u"), col("m").as("mu")), Seq("u"), "left")
           .join(mapped.select(col("l").as("v"), col("m").as("mv")), Seq("v"), "left")
           .select(
@@ -1068,49 +1101,41 @@ object Dedup {
           .filter(col("u") =!= col("v"))
           .distinct())
       }
+      // the contraction needs only the checkpointed nbrMin and edges, so
+      // it runs while the count job drains; a round that changes no label
+      // discards it
       val contractFut =
-        if (overlap)
-          Some(scala.concurrent.Future(contract())(
-            scala.concurrent.ExecutionContext.global))
+        if (overlap) Some(GraftSqlInternals.withCallerProperties(pairs.sparkSession)(contract()))
         else None
       changed =
         try updated.filter(col("new_label") < col("label")).count()
         catch {
           case e: Throwable =>
-            // drain the overlapped leg before propagating (the centralKeep
-            // failure contract): an abandoned contraction racing a caller's
-            // resetSessionState surfaces confusing checkpoint-block errors
-            contractFut.foreach { f =>
-              try scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
-              catch { case _: Throwable => () }
-            }
+            // drain the overlapped leg before propagating: an abandoned
+            // contraction racing a caller's resetSessionState surfaces
+            // confusing checkpoint-block errors
+            contractFut.foreach(drain)
             throw e
         }
-      // plain projection over the checkpointed `updated` — lineage is
-      // already truncated at its LogicalRDD leaf
       labels = updated.select(col("id"), col("new_label").as("label"))
-      val contracted = contractFut.fold(Option.empty[DataFrame]) { f =>
-        Some(scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      }
-      if (changed > 0)
-        edges = contracted.getOrElse(contract())
+      if (changed > 0) {
+        val (next, quotientEdges) = contractFut.fold(contract())(Await.result(_, Duration.Inf))
+        edges = next
+        quotientEmpty = quotientEdges == 0
+      } else
+        // converged: the contraction is unused, so its failure must not
+        // fail the run; it is only waited for
+        contractFut.foreach(drain)
       it += 1
       if (sys.env.contains("GRAFT_CC_VERBOSE"))
         System.err.println(s"[cc] iter $it changed=$changed")
     }
+    val converged = changed == 0 || quotientEmpty
     lastRounds.put("cc_contraction", it)
-    lastConverged.put("cc_contraction", changed == 0)
-    if (changed > 0) {
-      // still moving after EscalateAfter rounds ⇒ contraction's worst-case
-      // regime (long quotient paths: one hop per round, O(diameter) total).
-      // Finish on the provably O(log n) stars variant over the contracted
-      // QUOTIENT graph and compose the labelings — the quotient's
-      // component mins are the original component mins (the min label
-      // always maps to itself), so label(v) := stars(label(v)).
-      // The escalated phase gets the REMAINING budget (maxIter - it), so
-      // maxIter bounds total rounds across both phases, and records under
-      // its own key so it cannot overwrite a dedicated stars query's
-      // round count.
+    lastConverged.put("cc_contraction", converged)
+    if (!converged) {
+      // escalate: stars over the contracted quotient, with the remaining
+      // budget and its own rounds key; label(v) := stars(label(v))
       if (sys.env.contains("GRAFT_CC_VERBOSE"))
         System.err.println(s"[cc] escalating to stars after $it rounds")
       val quotient = connectedComponentsStars(
@@ -1123,9 +1148,7 @@ object Dedup {
         .select(col("id"), coalesce(col("cluster_id"), col("label")).as("label"))
     }
     if (activeSet)
-      // recover the full labeling: inactive vertices are their own
-      // singleton clusters (identical to what the full-vertex loop
-      // carried through every round)
+      // inactive vertices are their own singleton clusters
       vertices.select(col(vertices.columns.head).as("id"))
         .join(labels, Seq("id"), "left")
         .select(

@@ -69,10 +69,30 @@ object GraftSqlInternals {
     * contract) and the behavior matches plain checkpoint + stats reset.
     */
   def localCheckpointStatsFree(df: Dataset[Row], eager: Boolean = true): Dataset[Row] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    statsFreeLeaf(ds, ds.localCheckpoint(eager), recoverLayout = eager)
+  }
+
+  /** [[localCheckpointStatsFree]] with `eager = true` that also returns the
+    * frame's row count. An eager checkpoint materializes the frame with one
+    * job that counts every partition and drops the counts; this runs that
+    * job itself and keeps them, so the count costs no job of its own.
+    */
+  def localCheckpointCounted(df: Dataset[Row]): (Dataset[Row], Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val cp = ds.localCheckpoint(eager = false)
+    val rdd = cp.queryExecution.optimizedPlan.asInstanceOf[execution.LogicalRDD].rdd
+    val rows = ds.sparkSession.sparkContext
+      .runJob(rdd, org.apache.spark.util.Utils.getIteratorSize _).sum
+    (statsFreeLeaf(ds, cp, recoverLayout = true), rows)
+  }
+
+  private def statsFreeLeaf(
+      ds: classic.Dataset[Row],
+      cp: classic.Dataset[Row],
+      recoverLayout: Boolean): Dataset[Row] = {
     import catalyst.expressions.{Attribute, AttributeMap, Expression}
     import catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val cp = ds.localCheckpoint(eager).asInstanceOf[classic.Dataset[Row]]
     val leaf = cp.queryExecution.optimizedPlan.asInstanceOf[execution.LogicalRDD]
     @annotation.tailrec
     def firstLeafPartitioning(p: Partitioning): Partitioning = p match {
@@ -80,7 +100,7 @@ object GraftSqlInternals {
       case other => other
     }
     val part: Partitioning =
-      if (!eager) leaf.outputPartitioning
+      if (!recoverLayout) leaf.outputPartitioning
       else {
         val physical = ds.queryExecution.executedPlan match {
           case a: execution.adaptive.AdaptiveSparkPlanExec => a.finalPhysicalPlan
@@ -97,5 +117,24 @@ object GraftSqlInternals {
     val statsFree = execution.LogicalRDD(
       leaf.output, leaf.rdd, part, leaf.outputOrdering, leaf.isStreaming)(ds.sparkSession)
     classic.Dataset.ofRows(ds.sparkSession, statsFree)
+  }
+
+  /** Run `body` on the global pool under a copy of the calling thread's
+    * SparkContext local properties (job group, job description, scheduler
+    * pool) and with `spark` active. Pool threads inherit local properties
+    * only once, from whichever thread created them, so without the copy a
+    * job submitted from the pool can escape the caller's job group and
+    * its cancellation.
+    */
+  def withCallerProperties[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] = {
+    val sc = spark.sparkContext
+    val props = org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+    val session = spark.asInstanceOf[classic.SparkSession]
+    scala.concurrent.Future {
+      val saved = sc.getLocalProperties
+      sc.setLocalProperties(props)
+      try session.withActive(body)
+      finally sc.setLocalProperties(saved)
+    }(scala.concurrent.ExecutionContext.global)
   }
 }

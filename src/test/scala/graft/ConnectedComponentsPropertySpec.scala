@@ -64,6 +64,85 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("labels match union-find at 1, 3 and one-edge-per-partition partitionings") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val nVerts = 40
+    val edgeGen = for {
+      density <- Gen.chooseNum(1, 60)
+      edges <- Gen.listOfN(density, for {
+        a <- Gen.chooseNum(0, nVerts - 1)
+        b <- Gen.chooseNum(0, nVerts - 1)
+        if a != b
+      } yield (a.toLong, b.toLong))
+    } yield edges
+    val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
+    for (edges <- samples(edgeGen, 4); parts <- Seq(1, 3, edges.size)) {
+      val expected = unionFindLabels(nVerts, edges)
+      val pairsDf = sparkS.sparkContext.parallelize(edges, parts).toDF("doc_a", "doc_b")
+      val got = Dedup.connectedComponents(pairsDf, vertsDf)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+      val want = expected.map { case (v, l) => v -> (l, v == l) }
+      assert(got == want,
+        s"labels diverge at $parts partitions for edges=$edges\n expected=$want\n got=$got")
+    }
+  }
+
+  test("a single-partition input converges in at most 2 contraction rounds") {
+    val sparkS = spark
+    import sparkS.implicits._
+    // a 512-chain and a random graph: the local forest turns every
+    // component into a star, which one round relabels and contracts away
+    val rnd = new scala.util.Random(11)
+    val random = Seq.fill(80)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter { case (a, b) => a != b }
+    val chain = (0L until 511L).map(i => (i, i + 1))
+    for ((edges, nVerts) <- Seq(chain -> 512, random -> 60)) {
+      val pairsDf = sparkS.sparkContext.parallelize(edges, 1).toDF("doc_a", "doc_b")
+      val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
+      val got = Dedup.connectedComponents(pairsDf, vertsDf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFindLabels(nVerts, edges))
+      val rounds = Dedup.lastRounds.get("cc_contraction")
+      assert(rounds <= 2, s"single-partition input took $rounds contraction rounds")
+    }
+  }
+
+  test("every job of one CC call carries the caller's job group") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val sc = sparkS.sparkContext
+    // start pool threads before the group is set, so a leg that merely
+    // inherited its thread's properties would run outside the group
+    val warm = (1 to 8).map(_ => scala.concurrent.Future(Thread.sleep(50))(
+      scala.concurrent.ExecutionContext.global))
+    warm.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+    // one edge per partition keeps the loop running several rounds, each
+    // with an overlapped contraction
+    val chain = (0L until 39L).map(i => (i, i + 1))
+    val pairsDf = sc.parallelize(chain, chain.size).toDF("doc_a", "doc_b")
+    val vertsDf = (0L until 40L).toDF("doc_id")
+    org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("cc-caller-group", "connected components under a job group")
+      try Dedup.connectedComponents(pairsDf, vertsDf).collect()
+      finally sc.clearJobGroup()
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(Dedup.lastRounds.get("cc_contraction") >= 2, "expected overlapped rounds")
+    val outside = seen.count(_ != "cc-caller-group")
+    assert(seen.nonEmpty && outside == 0,
+      s"$outside of ${seen.size} jobs ran outside the caller's job group")
+  }
+
   test("large-star/small-star labels match union-find and label contraction") {
     val sparkS = spark
     import sparkS.implicits._
@@ -148,7 +227,8 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     // the shape large-star/small-star is built for
     val n = 512L
     val chain = (0L until n - 1).map(i => (i, i + 1))
-    val pairsDf = chain.toDF("doc_a", "doc_b")
+    // one edge per partition: the local spanning forest cannot shorten it
+    val pairsDf = sparkS.sparkContext.parallelize(chain, chain.size).toDF("doc_a", "doc_b")
     val vertsDf = (0L until n).toDF("doc_id")
     val contraction = Dedup.connectedComponents(pairsDf, vertsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -169,7 +249,8 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     val sparkS = spark
     import sparkS.implicits._
     val chain = (0L until 63L).map(i => (i, i + 1))
-    val pairsDf = chain.toDF("doc_a", "doc_b")
+    // one edge per partition: the local spanning forest cannot shorten it
+    val pairsDf = sparkS.sparkContext.parallelize(chain, chain.size).toDF("doc_a", "doc_b")
     val vertsDf = (0L until 64L).toDF("doc_id")
     // strict (the default): maxIter exhaustion throws — a silently
     // truncated fixpoint would hand wrong cluster labels downstream

@@ -192,7 +192,55 @@ class TextExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+  test("every native expression compiles under codegen-only and matches interpreted") {
+    val sparkS = spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // an RDD-backed input: a local Seq would be folded by
+    // ConvertToLocalRelation, which evaluates the projection interpreted
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType),
+      StructField("other", ArrayType(StringType, containsNull = false))))
+    val rows = Seq(
+      Row(1L, "the quick brown fox jumps over the lazy dog", Seq("fox", "dog")),
+      Row(2L, "tiny", Seq.empty[String]),
+      Row(3L, "", Seq("a")),
+      Row(4L, "abcdefgh", Seq("abcdefgh", "x")),
+      Row(5L, "héllo wörld multibyte ünïcode text here", Seq("wörld", "here")),
+      Row(6L, null, null))
+    val input = sparkS.createDataFrame(sparkS.sparkContext.parallelize(rows, 2), schema)
+    val words = TextExpressions.alnumTokens(col("text"))
+    val sh = TextExpressions.shingles(col("text"), 4, 2)
+    val exprs = Seq(
+      "rolling_fingerprint" -> TextExpressions.rollingFingerprint(col("text"), 5, 1000003L, 257L),
+      "str_prefix_u64" -> TextExpressions.strPrefixU64(col("text")),
+      "shingles" -> sh,
+      "minhash_mins" -> TextExpressions.minhashMins(sh,
+        Seq(1000003L, 1000005L, 1000007L), Seq(12345L, 12352L, 12359L), 2147483647L),
+      "hex_ngrams" -> TextExpressions.hexNgrams(words, 2, 16),
+      "fuzzy_variants" -> TextExpressions.fuzzyVariants(words, 2, 8),
+      "alnum_tokens" -> words,
+      "hashed_ngrams" -> TextExpressions.hashedNgrams(words, 2),
+      "array_jaccard" -> TextExpressions.arrayJaccard(words, col("other")))
+    def eval(): Map[String, Seq[Seq[Any]]] = exprs.map { case (name, e) =>
+      name -> input.select(col("doc_id"), e.as("v")).orderBy("doc_id")
+        .collect().map(_.toSeq).toSeq
+    }.toMap
+    // a generated class that fails to compile throws here instead of
+    // silently falling back to interpreted evaluation
+    val generated = withSQLConf(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(eval())
+    val interpreted = withSQLConf(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(eval())
+    exprs.foreach { case (name, _) =>
+      assert(generated(name) == interpreted(name), s"$name: codegen and interpreted differ")
+    }
+  }
+
+  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
     val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally olds.foreach {
