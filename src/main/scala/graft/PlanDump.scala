@@ -34,14 +34,11 @@ object PlanDump {
     for (name <- names) {
       try {
         val df = name match {
-          // pass-level pseudo-plans: the CC star fixpoint checkpoints per
-          // round, so the pass shape (the r19 window-over-join rewrite)
-          // never appears in a registered query's final explain — these
-          // expose ONE large-star pass directly, in both forms
-          case "pass_large_star" | "pass_large_star_legacy" =>
+          // pass-level pseudo-plan: the CC star fixpoint checkpoints per
+          // round, so the pass shape never appears in a registered query's
+          // final explain — this exposes ONE large-star pass directly
+          case "pass_large_star" =>
             import org.apache.spark.sql.functions.col
-            spark.conf.set("spark.graft.ccStarsLegacy",
-              String.valueOf(name.endsWith("_legacy")))
             graft.ops.Dedup.starReduceEdges(
               spark.range(100).select(
                 col("id").as("doc_a"), (col("id") + 1L).as("doc_b")))
@@ -52,11 +49,6 @@ object PlanDump {
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-      } finally {
-        // in a finally: if explain/write throws for a pass_large_star*
-        // target, a legacy flag left set would silently compile every
-        // later query in this dump run with legacy star passes
-        spark.conf.unset("spark.graft.ccStarsLegacy")
       }
       SparkEntry.resetSessionState(spark)
     }

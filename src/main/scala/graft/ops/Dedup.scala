@@ -16,9 +16,9 @@ import scala.concurrent.duration.Duration
   *     banded LSH: docs only meet if a band hash collides, so the join is
   *     an equi-join on (band, hash) buckets — shuffle is proportional to
   *     bucket sizes, not n².
-  *   - Signatures are computed per-row with higher-order array functions
-  *     (`transform`/`array_min`) — a single codegen'd map stage, no explode
-  *     of shingles through a shuffle.
+  *   - LSH signatures are computed per-row by the native `MinhashMinsExpr`
+  *     ([[graft.functions.TextExpressions.minhashMins]]) — a single
+  *     codegen'd map stage, no explode of shingles through a shuffle.
   *   - All hashing is md5-hex (lexicographic min of fixed-width hex ==
   *     numeric min), chosen deliberately so the DuckDB oracle can replay
   *     the exact algorithm; swap in xxhash64 for raw throughput when oracle
@@ -196,7 +196,7 @@ object Dedup {
     *    1.55 s vs 2.23 s narrow; the estimate twin 1.80 s vs 2.67 s).
     *    The shuffle it pays is tiny — partial aggregation collapses to
     *    one row per doc per partition before the exchange.
-    *  - [[bandedSignaturesFromShingles]] (per-row higher-order functions,
+    *  - [[bandedSignaturesFromShingles]] (one native per-row expression,
     *    ZERO shuffle and stream-safe): best when the consumer immediately
     *    re-buckets on (band, hash) (`q_docs_lsh_pairs` 1.91 s vs 2.40 s
     *    through here) — and the only legal form under Structured
@@ -217,18 +217,6 @@ object Dedup {
     sigs.select(col("doc_id") +: (0 until NumHashes).map(k => col(s"h$k")) ++: bands: _*)
   }
 
-  /** LSH candidate pairs: docs sharing any band hash. Implemented as a
-    * band-bucket group-aggregate — signatures are computed ONCE, buckets
-    * form with a single shuffle on (band_idx, band_hash), and pairs are
-    * generated inside each bucket from the sorted id list (never an
-    * all-pairs comparison, never a self-join that recomputes the signature
-    * pipeline on both sides). `maxBucket` bounds worst-case skew by
-    * DROPPING buckets larger than the cap entirely (degenerate boilerplate
-    * buckets at web scale would otherwise contribute O(bucket²) pairs);
-    * over-cap content should instead be routed to exact dedup, which
-    * catches identical text directly. The DuckDB oracle replicates the
-    * cap, so Spark and oracle agree on dropped buckets.
-    */
   /** All ordered in-bucket pairs (members(i), members(j)) with i < j from
     * a sorted member-list column — the pair-generation half of the
     * bounded-bucket pattern, shared by every LSH/IVF pair generator so
@@ -263,11 +251,11 @@ object Dedup {
       .filter(size(col("ids")).between(2, maxBucket))
 
   /** (doc_id, band_idx, band_hash) — the banded signature rows every LSH
-    * consumer buckets on, computed fully NARROW: the base md5 hash is
-    * materialized once per shingle, each affine min is an
-    * array_min(transform(...)) over that array, bands concatenate in-row,
-    * and the band explode is a generator — no aggregation, no sort, no
-    * shuffle anywhere. Because no operator carries cross-row state, the
+    * consumer buckets on, computed fully NARROW: one native loop per row
+    * hashes each shingle once and keeps all `NumHashes` affine minima
+    * ([[graft.functions.TextExpressions.minhashMins]]), bands concatenate
+    * in-row, and the band explode is a generator — no aggregation, no
+    * sort, no shuffle anywhere. Because no operator carries cross-row state, the
     * same pipeline runs unchanged over a STREAMING frame — the
     * ingest-time near-dup path
     * ([[graft.streaming.DocStreams.lshCandidateStream]]). The
@@ -275,36 +263,16 @@ object Dedup {
     * so both formulations produce identical signatures.
     */
   private[graft] def bandedSignaturesFromShingles(shFrame: DataFrame): DataFrame = {
-    // r20 (guide §1.2 step 2 — per-task work): the per-doc minima ride ONE
-    // native codegen'd loop (md5 once per shingle, all NumHashes affine
-    // mins in place) instead of the HOF chain
-    // `array_min(transform(transform(sh, md5…), affine…))`, which
-    // evaluated interpreted — one boxed lambda call per (shingle, hash)
-    // and a materialized hash array per row. Identical values (the hex
-    // prefix of md5 IS the leading digest bytes; operands non-negative so
-    // pmod == %); still fully narrow and stream-legal.
-    // spark.graft.minhashHof=true reverts for the interleaved A/B.
-    val hof = shFrame.sparkSession.conf
-      .getOption("spark.graft.minhashHof").contains("true")
-    val sigs =
-      if (hof) {
-        val withH = shFrame
-          .filter(size(col("sh")) > 0)
-          .select(col("doc_id"),
-            transform(col("sh"),
-              s => conv(substring(md5(s), 1, 8), 16, 10).cast("long")).as("hvs"))
-        val mins = (0 until NumHashes).map(k =>
-          array_min(transform(col("hvs"),
-            h => pmod(lit(hashA(k)) * h + lit(hashB(k)), lit(HashPrime)))).as(s"h$k"))
-        withH.select(col("doc_id") +: mins: _*)
-      } else shFrame
-        .filter(size(col("sh")) > 0)
-        .select(col("doc_id"),
-          graft.functions.TextExpressions.minhashMins(col("sh"),
-            (0 until NumHashes).map(hashA), (0 until NumHashes).map(hashB),
-            HashPrime).as("mins"))
-        .select(col("doc_id") +: (0 until NumHashes).map(k =>
-          element_at(col("mins"), k + 1).as(s"h$k")): _*)
+    // the native minima equal the aggregate path's: the 8-hex md5 prefix is
+    // the leading digest bytes, and with non-negative operands pmod == %
+    val sigs = shFrame
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"),
+        graft.functions.TextExpressions.minhashMins(col("sh"),
+          (0 until NumHashes).map(hashA), (0 until NumHashes).map(hashB),
+          HashPrime).as("mins"))
+      .select(col("doc_id") +: (0 until NumHashes).map(k =>
+        element_at(col("mins"), k + 1).as(s"h$k")): _*)
     val perBand = NumHashes / NumBands
     val bandCols = (0 until NumBands).map { b =>
       val slice = (0 until perBand).map(j => col(s"h${b * perBand + j}"))
@@ -342,6 +310,18 @@ object Dedup {
       .distinct()
   }
 
+  /** LSH candidate pairs: docs sharing any band hash. Implemented as a
+    * band-bucket group-aggregate — signatures are computed ONCE, buckets
+    * form with a single shuffle on (band_idx, band_hash), and pairs are
+    * generated inside each bucket from the sorted id list (never an
+    * all-pairs comparison, never a self-join that recomputes the signature
+    * pipeline on both sides). `maxBucket` bounds worst-case skew by
+    * DROPPING buckets larger than the cap entirely (degenerate boilerplate
+    * buckets at web scale would otherwise contribute O(bucket²) pairs);
+    * over-cap content should instead be routed to exact dedup, which
+    * catches identical text directly. The DuckDB oracle replicates the
+    * cap, so Spark and oracle agree on dropped buckets.
+    */
   def lshCandidatePairs(documents: DataFrame, maxBucket: Int = 1000): DataFrame =
     bucketPairs(lshBuckets(documents, maxBucket))
       .orderBy("doc_a", "doc_b")
@@ -366,12 +346,8 @@ object Dedup {
     * fixpoint loop, cost = rounds × edge scan.
     */
   def labelPropagation(documents: DataFrame, rounds: Int = 3): DataFrame =
-    // r20: feed the UNSORTED pair generator — lshCandidatePairs appends the
-    // output-contract orderBy (a range exchange with its own sampling pass
-    // over the pair pipeline), which the propagation core's explode +
-    // repartition(dst) immediately destroys; join/aggregate consumers take
-    // the raw bucket pairs (same rows, same communities — edge order never
-    // reaches a vote).
+    // the unsorted pair generator: edge order never reaches a vote, so
+    // lshCandidatePairs' contract sort would be a wasted range exchange
     labelPropagationOnPairs(
       bucketPairs(lshBuckets(documents, maxBucket = 1000)),
       documents.select(col("doc_id")), rounds)
@@ -381,78 +357,44 @@ object Dedup {
     */
   private[graft] def labelPropagationOnPairs(
       pairs: DataFrame, verts: DataFrame, rounds: Int): DataFrame = {
-    // A/B hook (session conf, never a JVM global — the LayoutProbe
-    // protocol): spark.graft.lpLegacy=true reverts to the r18 shape
-    // (unpartitioned edge persist + row_number window vote) so the
-    // rewrite below stays measurable in ONE JVM against identical state
-    val legacy = pairs.sparkSession.conf
-      .getOption("spark.graft.lpLegacy").contains("true")
     // persist PARTITIONED on the join key: every round's edge↔label join
     // shuffles the label side only — the cached edge partitioning is
     // visible to the planner, so the (edge-sized, 2×|pairs|) frame is
-    // exchanged once here instead of once per round. r20: bidirect via
-    // explode, not union(pairs, pairs.swapped) — the union legs are
-    // different projections of the UNMATERIALIZED LSH candidate pipeline,
-    // so the whole tokenize→shingle→minhash→bucket preamble executed twice
-    // inside this frame's one materialization. Same rows.
-    // spark.graft.bidirUnion=true reverts for the interleaved A/B.
-    val edges0 =
-      if (bidirUnion(pairs))
-        pairs
-          .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-          .toDF("src", "dst")
-      else pairs
-        .select(explode(array(
-          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val edges = (if (legacy) edges0 else edges0.repartition(col("dst")))
+    // exchanged once here instead of once per round. Bidirected by one
+    // explode: a union of two projections would run the unmaterialized
+    // candidate pipeline twice inside this frame's materialization.
+    val edges = pairs
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("dst"))
       .persist()
     try {
-      // NOTE (r20, measured and rejected): iterating over the ACTIVE
-      // vertex set only (distinct edge endpoints, one final left join to
-      // recover inactive self-labels — the shape kept for contraction CC)
-      // measured 1.41× SLOWER here on the interleaved A/B: LP's per-round
-      // relabel join already rides aligned hash partitioning at zero
-      // exchanges, and the active-set form's extra distinct + final join
-      // stages cost more than the smaller label frame saves at any scale
-      // where the frame fits a partition. Full-vertex iteration kept.
+      // Full-vertex iteration on purpose: the relabel join already rides
+      // aligned hash partitioning at zero exchanges, so an active-set label
+      // frame (as in contraction CC) only adds a distinct and a final join.
       var labels = verts.select(col("doc_id").as("v"), col("doc_id").as("lab"))
-      // r20 optimization (guide §2.4 — two operations keyed the same way
-      // share one exchange): route the vote through ONE hash(src) exchange.
-      // HashPartitioning(src) satisfies the (src, lab) count's
-      // ClusteredDistribution (subset rule), the (src) winner aggregate,
-      // AND the relabel join's best side — so each round pays one exchange
-      // where the plain groupBy chain paid two. Bytes are not worse at
-      // scale: pre-convergence neighbor labels are mostly distinct, so the
-      // (src, lab) partial aggregate barely compressed the edge-sized
-      // stream it exchanged. spark.graft.lpVoteRepartition=false is the
-      // A/B hook back to the two-exchange chain.
-      val singleEx = !legacy && !pairs.sparkSession.conf
+      // Route the vote through ONE hash(src) exchange: HashPartitioning(src)
+      // satisfies the (src, lab) count's ClusteredDistribution (subset
+      // rule), the (src) winner aggregate and the relabel join's best side.
+      // spark.graft.lpVoteRepartition=false keeps the two-exchange groupBy
+      // chain until its skew A/B is recorded (ROADMAP item 4).
+      val singleEx = !pairs.sparkSession.conf
         .getOption("spark.graft.lpVoteRepartition").contains("false")
       for (_ <- 1 to rounds) {
         val joined = edges.join(labels, edges("dst") === labels("v"))
         val counts = (if (singleEx) joined.repartition(col("src")) else joined)
           .groupBy(col("src"), col("lab"))
           .agg(count(lit(1)).as("c"))
-        // the (count DESC, label ASC) vote winner as ONE hash aggregate
-        // (max of an orderable struct; bitwise NOT turns "smallest label
-        // wins" into a max without negation overflow) instead of a
-        // row_number window — drops a per-src SORT and a WindowExec per
-        // round while keeping the exact total order, so the labeling is
-        // bit-identical to the window form (the oracle pins it)
-        val best =
-          if (legacy) {
-            val w = Window.partitionBy("src").orderBy(col("c").desc, col("lab"))
-            counts
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1)
-              .select(col("src"), col("lab").as("blab"))
-          } else counts
-            .groupBy(col("src"))
-            .agg(max(struct(col("c"), bitwise_not(col("lab")).as("nl"),
-              col("lab"))).as("top"))
-            .select(col("src"), col("top.lab").as("blab"))
+        // the (count DESC, label ASC) vote winner as ONE hash aggregate:
+        // max of an orderable struct, where bitwise NOT turns "smallest
+        // label wins" into a max without negation overflow
+        val best = counts
+          .groupBy(col("src"))
+          .agg(max(struct(col("c"), bitwise_not(col("lab")).as("nl"),
+            col("lab"))).as("top"))
+          .select(col("src"), col("top.lab").as("blab"))
         labels = labels
           .join(best, labels("v") === best("src"), "left")
           .select(col("v"), coalesce(col("blab"), col("lab")).as("lab"))
@@ -502,24 +444,17 @@ object Dedup {
       pairs: DataFrame,
       documents: DataFrame,
       iters: Int = 3): DataFrame = {
-    // r20 (guide §1.2): persist the PAIR frame — the bidirectional edge
-    // view below is read by both the degree aggregate and the join probe,
-    // so without this cache the candidate-generation preamble executed
-    // twice inside the edge frame's one materialization (and the
-    // union-of-projections form it replaced executed it up to 4×). The
-    // explode builds both orientations in one pass over the cached pairs.
+    // persist the PAIR frame: the bidirectional edge view below is read
+    // by both the degree aggregate and the join probe, which would
+    // otherwise each run the candidate-generation preamble
     val pairsC =
       if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) pairs.persist()
       else pairs
-    val edgesRaw =
-      if (bidirUnion(pairs))
-        pairsC.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-          .union(pairsC.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      else pairsC
-        .select(explode(array(
-          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val edgesRaw = pairsC
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     val deg = edgesRaw.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val edgesD = edgesRaw.join(deg, Seq("src"))
     val edges =
@@ -595,80 +530,49 @@ object Dedup {
     * member with the highest [[nearDupPageRank]] rank (ties to the lowest
     * doc_id) — "keep the most central copy", the graph-native alternative
     * to quality-based [[graft.ops.TextAnalysis.dedupKeepBest]]. Composes
-    * the two verified operators; the per-cluster argmax and size share
-    * one cluster-partitioned window exchange. Both legs derive from ONE
-    * persisted LSH bucket frame — the signature pipeline (tokenize →
-    * shingle → MinHash → band-bucket) runs exactly once; see the body
-    * comment and [[graft.PlanShapeSpec]]'s single-subtree pin.
+    * the two verified operators (stars clusters and PageRank); the
+    * per-cluster argmax and size share one aggregate. Both legs derive
+    * from ONE persisted LSH bucket frame — the signature pipeline
+    * (tokenize → shingle → MinHash → band-bucket) runs exactly once
+    * ([[graft.PlanShapeSpec]]'s single-subtree pin).
     */
   def centralKeep(documents: DataFrame): DataFrame = {
     // ONE signature pipeline for both legs: tokenize → shingle → MinHash →
-    // band-bucket exactly once, persist the bucket frame, and derive both
-    // the clusters leg (star edges → stars CC) and the PageRank leg
-    // (in-bucket pairs → fixed-point ranks) from that shared frame —
-    // closes the round-8 "LSH computed twice" weakness (at 100× the
-    // second leg was a full extra pass over the corpus). Same
-    // persist-if-unpersisted idiom as ngramJaccardNearDup: a repeated
-    // call finds the live cache entry via storageLevel;
-    // resetSessionState between queries releases it.
+    // band-bucket exactly once into a persisted bucket frame, from which
+    // both the clusters leg (star edges → stars CC) and the PageRank leg
+    // (in-bucket pairs → fixed-point ranks) derive. A repeated call finds
+    // the live cache entry via storageLevel; resetSessionState releases it.
     val bRaw = lshBuckets(documents, maxBucket = 1000)
     val buckets =
       if (bRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) bRaw.persist()
       else bRaw
     val verts = documents.select(col("doc_id"))
-    // r19 wave 2 (guide §2.6 — overlap independent jobs): the two legs are
-    // INDEPENDENT — the CC fixpoint is a chain of small blocking jobs that
-    // leave most of local[32] idle, and the PageRank leg is a second chain
-    // of small jobs with no data dependency on the labels. Materialize the
-    // PageRank leg on a driver-side thread while the fixpoint runs on this
-    // one; Spark's scheduler (FIFO) back-fills the idle executors with the
-    // other leg's tasks. Results are unchanged — both legs are
-    // deterministic frames joined at the end exactly as before; the only
-    // thing that moves is WHEN the PR jobs are submitted. The shared
-    // bucket frame is materialized FIRST (one cheap count on the persisted
-    // frame) so the two threads cannot race duplicate computation of the
-    // signature preamble. spark.graft.ckOverlap=false is the A/B hook
-    // back to the sequential legs.
-    val overlap = !documents.sparkSession.conf
-      .getOption("spark.graft.ckOverlap").contains("false")
-    def prLeg(): DataFrame = pageRankFromPairs(bucketPairs(buckets), documents)
-      .select(col("doc_id"), col("rank_fp"))
-    val prFut =
-      if (overlap) {
-        buckets.count()
-        Some(GraftSqlInternals.withCallerProperties(documents.sparkSession)(
-          freshCheckpoint(prLeg())))
-      } else None
-    // stars CC: identical labels (one oracle pins both variants), ~25%
-    // faster here than label contraction at 11 rounds; own rounds key so
-    // a bench run's "cc_stars" entry always belongs to the direct LSH
-    // consumer (q_docs_clusters_stars), never last-writer-wins with this
-    // composed one.
-    // If the CC leg throws (strict non-convergence, job failure), the
-    // PageRank future must be drained BEFORE propagating: an abandoned leg
-    // keeps submitting jobs whose localCheckpoint blocks race a caller's
-    // subsequent resetSessionState (blocking unpersist of all RDDs).
+    // The legs are independent chains of small jobs, so the PageRank leg
+    // materializes on a pool thread while the CC fixpoint runs here and the
+    // scheduler back-fills idle cores with its tasks. The bucket frame is
+    // materialized first so the two threads cannot both compute it.
+    buckets.count()
+    val prFut = GraftSqlInternals.withCallerProperties(documents.sparkSession)(
+      freshCheckpoint(pageRankFromPairs(bucketPairs(buckets), documents)
+        .select(col("doc_id"), col("rank_fp"))))
+    // Stars CC, under its own rounds key so "cc_stars" always belongs to
+    // the direct LSH consumer. If the CC leg throws, the PageRank future is
+    // drained before propagating: an abandoned leg keeps submitting jobs
+    // whose localCheckpoint blocks race a caller's resetSessionState.
     val labels =
       try connectedComponentsStars(
           starEdges(buckets), verts, roundsKey = "cc_stars_central_keep")
         .select(col("doc_id"), col("cluster_id"))
       catch {
         case e: Throwable =>
-          prFut.foreach(drain)
+          drain(prFut)
           throw e
       }
-    val pr = prFut.fold(prLeg())(Await.result(_, Duration.Inf))
-    // top-1-per-cluster as ONE hash aggregate (max of an orderable
-    // struct), not a rank window plus a size window: the window pair
-    // cost a per-cluster SORT and carried every member row through two
-    // WindowExecs just to keep one. (rank_fp DESC, doc_id ASC) is
-    // encoded as max(struct(rank_fp, ~doc_id, doc_id)) — struct
-    // ordering is lexicographic, and bitwise NOT is a strictly
-    // DECREASING bijection on longs (~x = -x-1, same order as -x but
-    // with no overflow at Long.MinValue, where arithmetic negation
-    // would invert the tiebreak), so "smallest doc_id wins" becomes a
-    // max. Results are bit-identical to the window form (the oracle
-    // pins it).
+    val pr = Await.result(prFut, Duration.Inf)
+    // top-1-per-cluster as ONE hash aggregate: (rank_fp DESC, doc_id ASC)
+    // is max(struct(rank_fp, ~doc_id, doc_id)) — bitwise NOT is a strictly
+    // decreasing bijection on longs with no overflow at Long.MinValue, so
+    // "smallest doc_id wins" becomes a max
     labels.join(pr, Seq("doc_id"))
       .groupBy("cluster_id")
       .agg(
@@ -870,12 +774,13 @@ object Dedup {
   }
 
   /** Iterations taken by the most recent CC run in this JVM, keyed by
-    * variant (`"cc_contraction"` / `"cc_stars"`, plus
-    * `"cc_contraction_escalated"` for a stars phase entered FROM the
-    * contraction loop — its own key, so an escalated run cannot overwrite
-    * the round count of a dedicated stars query) — surfaced in the bench
-    * JSON line so a regression in convergence rounds is visible without
-    * rerunning under GRAFT_CC_VERBOSE.
+    * caller: `"cc_contraction"` ([[connectedComponents]]), `"cc_stars"`
+    * ([[nearDupClusters]] with `useStars`), `"cc_stars_simhash"`
+    * ([[simhashClusters]]), `"cc_stars_central_keep"` ([[centralKeep]]),
+    * and `"cc_contraction_escalated"` for a stars phase entered FROM the
+    * contraction loop. Each caller owns its key, so one run cannot
+    * overwrite another's round count. Surfaced in the bench JSON line and
+    * the perfbench trace, so a regression in convergence rounds is visible.
     */
   val lastRounds = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
@@ -1025,6 +930,11 @@ object Dedup {
     * that carries the caller's job group. Design
     * history and measurements: OPTIMIZATION_r19.md §2, OPTIMIZATION_r20.md
     * §4, §10 and "connectedComponents design notes".
+    *
+    * Precondition: every endpoint in `pairs` is a row of `vertices`. The
+    * output has one row per vertex; an endpoint missing from `vertices`
+    * gets no row of its own, yet still links (and, as a component min,
+    * labels) the components it touches.
     */
   private[graft] def connectedComponents(
       pairs: DataFrame,
@@ -1033,26 +943,18 @@ object Dedup {
       strict: Boolean = true): DataFrame = {
     val pa = pairs.columns(0)
     val pb = pairs.columns(1)
-    val conf = pairs.sparkSession.conf
     // every round's frames are checkpointed (freshCheckpoint): lineage and
-    // planning cost stay constant per round. The input checkpoint is lazy,
-    // so round 1's compose job computes the forest and materializes it.
-    val nbrMinLazy = !conf.getOption("spark.graft.ccNbrMinLazy").contains("false")
+    // planning cost stay constant per round. The input edges and labels are
+    // lazy: round 1's compose and count jobs materialize them.
     var edges = freshCheckpoint(
       localSpanningForest(pairs.select(col(pa).as("u"), col(pb).as("v"))),
-      eager = !nbrMinLazy)
+      eager = false)
     // labels over the active set (distinct edge endpoints); an inactive
     // vertex never becomes a supervertex-min key, so its label is its id
-    val activeSet = !conf.getOption("spark.graft.activeSetLegacy").contains("true")
     var labels = freshCheckpoint(
-      if (activeSet)
-        edges.select(explode(array(col("u"), col("v"))).as("id")).distinct()
-          .withColumn("label", col("id"))
-      else vertices.select(col(vertices.columns.head).as("id"))
+      edges.select(explode(array(col("u"), col("v"))).as("id")).distinct()
         .withColumn("label", col("id")),
-      eager = !nbrMinLazy) // round 1's relabel count materializes it
-    val jumpLegacy = conf.getOption("spark.graft.ccJumpLegacy").contains("true")
-    val overlap = !conf.getOption("spark.graft.ccContractOverlap").contains("false")
+      eager = false)
     var changed = 1L
     // an empty contracted edge set means every label already is its
     // component min: the next round could change nothing, so it is skipped
@@ -1060,25 +962,22 @@ object Dedup {
     var it = 0
     while (changed > 0 && !quotientEmpty && it < math.min(EscalateAfter, maxIter)) {
       // m(L) = min(L, quotient neighbours of L), both edge directions. Lazy:
-      // its one consumer, the compose, materializes it in the same job
-      // (under ccJumpLegacy it is m itself, with two consumers: eager).
+      // its one consumer, the compose, materializes it in the same job.
       val nbrMin0 = freshCheckpoint(edges.select(col("u").as("l"), col("v").as("n"))
         .union(edges.select(col("v").as("l"), col("u").as("n")))
         .groupBy("l")
         .agg(min("n").as("nmin"))
         .select(col("l"), least(col("l"), col("nmin")).as("m")),
-        eager = jumpLegacy || !nbrMinLazy)
+        eager = false)
       // pointer jumping, m := m∘m (left join: an image with no quotient
       // edges of its own maps to itself). Eager: it feeds both the
       // relabel and the contraction.
-      val nbrMin =
-        if (jumpLegacy) nbrMin0
-        else freshCheckpoint(
-          nbrMin0
-            .join(
-              nbrMin0.select(col("l").as("jl"), col("m").as("jm")),
-              col("m") === col("jl"), "left")
-            .select(col("l"), coalesce(col("jm"), col("m")).as("m")))
+      val nbrMin = freshCheckpoint(
+        nbrMin0
+          .join(
+            nbrMin0.select(col("l").as("jl"), col("m").as("jm")),
+            col("m") === col("jl"), "left")
+          .select(col("l"), coalesce(col("jm"), col("m")).as("m")))
       // relabel every vertex through m (left join: labels whose
       // supervertex has no quotient neighbours keep their label)
       val updated = freshCheckpoint(labels
@@ -1088,9 +987,11 @@ object Dedup {
           col("label"),
           coalesce(col("m"), col("label")).as("new_label")),
         eager = false) // lazy: the count below materializes it
-      def contract(): (DataFrame, Long) = {
-        // contract the edge set through the new supervertex mapping;
-        // self-loops vanish, merged components stop costing anything
+      // contract the edge set through the new supervertex mapping (self-loops
+      // vanish, merged components stop costing anything). It needs only the
+      // checkpointed nbrMin and edges, so it runs while the count job
+      // drains; a round that changes no label discards it.
+      val contractFut = GraftSqlInternals.withCallerProperties(pairs.sparkSession) {
         val mapped = nbrMin.select(col("l"), col("m"))
         GraftSqlInternals.localCheckpointCounted(edges
           .join(mapped.select(col("l").as("u"), col("m").as("mu")), Seq("u"), "left")
@@ -1101,12 +1002,6 @@ object Dedup {
           .filter(col("u") =!= col("v"))
           .distinct())
       }
-      // the contraction needs only the checkpointed nbrMin and edges, so
-      // it runs while the count job drains; a round that changes no label
-      // discards it
-      val contractFut =
-        if (overlap) Some(GraftSqlInternals.withCallerProperties(pairs.sparkSession)(contract()))
-        else None
       changed =
         try updated.filter(col("new_label") < col("label")).count()
         catch {
@@ -1114,21 +1009,19 @@ object Dedup {
             // drain the overlapped leg before propagating: an abandoned
             // contraction racing a caller's resetSessionState surfaces
             // confusing checkpoint-block errors
-            contractFut.foreach(drain)
+            drain(contractFut)
             throw e
         }
       labels = updated.select(col("id"), col("new_label").as("label"))
       if (changed > 0) {
-        val (next, quotientEdges) = contractFut.fold(contract())(Await.result(_, Duration.Inf))
+        val (next, quotientEdges) = Await.result(contractFut, Duration.Inf)
         edges = next
         quotientEmpty = quotientEdges == 0
       } else
         // converged: the contraction is unused, so its failure must not
         // fail the run; it is only waited for
-        contractFut.foreach(drain)
+        drain(contractFut)
       it += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] iter $it changed=$changed")
     }
     val converged = changed == 0 || quotientEmpty
     lastRounds.put("cc_contraction", it)
@@ -1136,8 +1029,6 @@ object Dedup {
     if (!converged) {
       // escalate: stars over the contracted quotient, with the remaining
       // budget and its own rounds key; label(v) := stars(label(v))
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] escalating to stars after $it rounds")
       val quotient = connectedComponentsStars(
         edges, labels.select(col("label")).distinct(), maxIter - it,
         strict, roundsKey = "cc_contraction_escalated")
@@ -1147,58 +1038,16 @@ object Dedup {
           Seq("label"), "left")
         .select(col("id"), coalesce(col("cluster_id"), col("label")).as("label"))
     }
-    if (activeSet)
-      // inactive vertices are their own singleton clusters
-      vertices.select(col(vertices.columns.head).as("id"))
-        .join(labels, Seq("id"), "left")
-        .select(
-          col("id").as("doc_id"),
-          coalesce(col("label"), col("id")).as("cluster_id"),
-          (coalesce(col("label"), col("id")) === col("id")).as("keep"))
-        .orderBy("doc_id")
-    else labels
+    // inactive vertices are their own singleton clusters
+    vertices.select(col(vertices.columns.head).as("id"))
+      .join(labels, Seq("id"), "left")
       .select(
         col("id").as("doc_id"),
-        col("label").as("cluster_id"),
-        (col("id") === col("label")).as("keep"))
+        coalesce(col("label"), col("id")).as("cluster_id"),
+        (coalesce(col("label"), col("id")) === col("id")).as("keep"))
       .orderBy("doc_id")
   }
 
-  /** Connected components by alternating large-star/small-star edge
-    * rewiring (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC '14) — the adversarial-diameter alternative to
-    * [[connectedComponents]]'s label contraction, behind the same
-    * contract (same input columns, same `(doc_id, cluster_id, keep)`
-    * output, labels = component min).
-    *
-    * Per round, two rewrites of the EDGE SET (no separate label table):
-    *   - large-star: for every vertex u with m = min(Γ(u) ∪ {u}),
-    *     connect each strictly LARGER neighbor directly to m. One
-    *     groupBy(min) + one equi-join on the bidirectional edge list.
-    *   - small-star: canonicalize edges downhill as (hi, lo); for every
-    *     hi with m = min of its smaller neighbors, connect hi and each
-    *     of its other smaller neighbors to m. One groupBy(min) + one
-    *     equi-join on the canonical edge list.
-    * Both operations preserve connectivity and strictly shrink the
-    * potential Σ depth; the fixpoint is a star per component centered at
-    * its min, from which labels read off with a single left join. Provably
-    * O(log n) rounds on ANY graph — label contraction's worst case
-    * (adversarial long chains where the min sits at one end) collapses
-    * here because large-star rewires every vertex's whole neighborhood to
-    * its local min in one shot, halving chain depth per operation pair.
-    * On short-diameter LSH candidate graphs both variants converge in a
-    * handful of rounds and contraction's per-round cost is lower (one
-    * aggregate vs two rewrites); on paths contraction degrades to one hop
-    * per round and escalates to THIS variant
-    * (`ConnectedComponentsPropertySpec`). Convergence detection is an
-    * (edge-count, bit_xor-of-xxhash64 checksum) pair per round — one tiny
-    * aggregate, no driver-side edge materialization. XOR, not SUM: the
-    * edge set is `distinct`, so xor-of-set is order-independent and sound,
-    * and unlike a sum of uniform 64-bit hashes it cannot overflow (Spark 4
-    * defaults ANSI mode, where a long-sum overflow *throws* — a sum
-    * checksum killed the whole query in round 5, almost surely, on any
-    * edge set beyond a few dozen rows).
-    */
   /** Canonical downhill edge orientation (hi > lo), self-loops dropped —
     * the normal form every stars-family operation works on.
     */
@@ -1219,91 +1068,35 @@ object Dedup {
     * (Kiveris et al. SoCC '14, Lemma 1) and never grows the edge set
     * (each input edge maps to exactly one output edge before `distinct`).
     *
-    * Execution shape (r19 optimization, guide §2.4 "remove shuffles
-    * outright"): the per-vertex min rides an UNORDERED window over the
-    * bidirectional edge list instead of the r18 groupBy(min) + equi-join
-    * pair. The join formulation computed and exchanged `bidir` twice —
-    * the aggregate leg and the join's probe leg are different subtrees
-    * (the probe side is filtered), so ReuseExchange cannot fire — plus a
-    * third exchange for the aggregated mins. The window computes the same
-    * `least(src, min(nbr))` with ONE exchange of `bidir` and a local sort,
-    * and drops the hash-join build entirely. Row-for-row identical output
-    * (same min, same filter, same projection); `spark.graft.ccStarsLegacy`
-    * is the per-plan A/B hook back to the join form.
+    * Execution shape: the per-vertex min rides an UNORDERED window over
+    * the bidirectional edge list (one exchange and a local sort), not a
+    * groupBy(min) + equi-join pair, whose aggregate and filtered probe legs
+    * are different subtrees and so exchange the edge list twice.
     */
-  private def largeStarPass(e: DataFrame): DataFrame = {
-    // bidirectional view: Γ(u) from both orientations. r20 (guide §1.2 —
-    // don't compute things twice): explode each edge into its two
-    // orientations in ONE pass instead of union(e, e.swapped) — the union
-    // legs are different projections, so when `e` is an unmaterialized
-    // pipeline (starReduceEdges over simhash/cosine verified pairs) the
-    // whole candidate generator executed twice. Same rows, same multiset.
-    // spark.graft.bidirUnion=true is the interleaved-A/B hook back to the
-    // union form (fixpoint rounds read a checkpointed `e`, so there the
-    // two forms differ only in operator shape, not recompute).
-    val bidir =
-      if (bidirUnion(e))
-        e.select(col("hi").as("src"), col("lo").as("nbr"))
-          .union(e.select(col("lo").as("src"), col("hi").as("nbr")))
-      else e
-        .select(explode(array(
-          struct(col("hi").as("src"), col("lo").as("nbr")),
-          struct(col("lo").as("src"), col("hi").as("nbr")))).as("e"))
-        .select(col("e.src").as("src"), col("e.nbr").as("nbr"))
-    val legacy = e.sparkSession.conf
-      .getOption("spark.graft.ccStarsLegacy").contains("true")
-    // (nbr, m(src)) for every strictly larger neighbor; nbr > src ≥ m
-    // guarantees hi > lo, no self-loops
-    val rewired =
-      if (legacy) {
-        val mins = bidir.groupBy("src")
-          .agg(least(col("src"), min(col("nbr"))).as("m"))
-        bidir.filter(col("nbr") > col("src"))
-          .join(mins, Seq("src"))
-          .select(col("nbr").as("hi"), col("m").as("lo"))
-      } else bidir
-        .withColumn("m",
-          least(col("src"), min(col("nbr")).over(Window.partitionBy("src"))))
-        .filter(col("nbr") > col("src"))
-        .select(col("nbr").as("hi"), col("m").as("lo"))
-    // r19 wave 2 (guide §2.4 "two operations keyed the same way share one
-    // exchange"): route the dedup through an explicit hash exchange on the
-    // SINGLE key `hi` — HashPartitioning(hi) satisfies the distinct
-    // aggregate's ClusteredDistribution([hi, lo]) (subset rule), so the
-    // aggregate adds NO exchange of its own, and the downstream smallStar
-    // window (partitionBy hi) rides the SAME exchange. Net: the old
-    // distinct's (hi, lo) exchange AND the window's hi exchange collapse
-    // into one (verified: plans/r19/pass_large_star_after.txt shows
-    // REPARTITION_BY_COL hash(hi) feeding the two-key HashAggregate with
-    // no second exchange). Output rows identical (distinct is distinct
-    // under any partitioning). spark.graft.ccSingleKeyDedup=false is the
-    // interleaved-A/B hook back to the plain (hi, lo) distinct.
-    if (legacy || !singleKeyDedup(e)) rewired.distinct()
-    else rewired.repartition(col("hi")).distinct()
-  }
+  private def largeStarPass(e: DataFrame): DataFrame =
+    // bidirectional view Γ(u) by one explode: a union of two projections
+    // would run an unmaterialized `e` (starReduceEdges over verified
+    // pairs) twice
+    e.select(explode(array(
+        struct(col("hi").as("src"), col("lo").as("nbr")),
+        struct(col("lo").as("src"), col("hi").as("nbr")))).as("e"))
+      .select(col("e.src").as("src"), col("e.nbr").as("nbr"))
+      .withColumn("m",
+        least(col("src"), min(col("nbr")).over(Window.partitionBy("src"))))
+      // (nbr, m(src)) for every strictly larger neighbor; nbr > src ≥ m
+      // guarantees hi > lo, no self-loops
+      .filter(col("nbr") > col("src"))
+      .select(col("nbr").as("hi"), col("m").as("lo"))
+      .transform(singleKeyDistinct)
 
-  /** Session-conf gate (default ON) for the single-key dedup exchange in
-    * the star passes — the per-plan A/B hook the CcProbe harness flips.
+  /** `distinct` of canonical (hi, lo) edges behind an explicit hash(hi)
+    * exchange: HashPartitioning(hi) satisfies the distinct aggregate's
+    * ClusteredDistribution([hi, lo]) (subset rule), and the next star
+    * pass's window (partitionBy hi) reuses it — one exchange where a plain
+    * (hi, lo) distinct and the window would each pay one.
     */
-  private def singleKeyDedup(df: DataFrame): Boolean =
-    !df.sparkSession.conf
-      .getOption("spark.graft.ccSingleKeyDedup").contains("false")
-
-  /** Session-conf gate (default OFF) reverting the r20 explode-bidirection
-    * rewrite to the legacy union-of-projections form — the interleaved-A/B
-    * hook shared by the star passes, label propagation and PageRank.
-    */
-  private def bidirUnion(df: DataFrame): Boolean =
-    df.sparkSession.conf
-      .getOption("spark.graft.bidirUnion").contains("true")
-
-  /** Session-conf gate (default ON) for fusing fixpoint bookkeeping
-    * (convergence fingerprint / changed-count) into the round's checkpoint
-    * materialization via a LAZY checkpoint.
-    */
-  private def fusedProbe(df: DataFrame): Boolean =
-    !df.sparkSession.conf
-      .getOption("spark.graft.ccFusedProbe").contains("false")
+  private def singleKeyDistinct(edges: DataFrame): DataFrame =
+    edges.repartition(col("hi")).distinct()
 
   /** Star-reduce a pairwise edge list before clustering: one
     * [[largeStarPass]], so components are IDENTICAL to the input graph's
@@ -1322,43 +1115,62 @@ object Dedup {
   private[graft] def starReduceEdges(pairs: DataFrame): DataFrame =
     largeStarPass(canonicalEdges(pairs))
 
+  /** Connected components by alternating large-star/small-star edge
+    * rewiring (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC '14) — the adversarial-diameter alternative to
+    * [[connectedComponents]]'s label contraction, behind the same
+    * contract (same input columns, same `(doc_id, cluster_id, keep)`
+    * output, labels = component min).
+    *
+    * Per round, two rewrites of the EDGE SET (no separate label table):
+    *   - large-star: for every vertex u with m = min(Γ(u) ∪ {u}),
+    *     connect each strictly LARGER neighbor directly to m. One
+    *     unordered min window over the bidirectional edge list.
+    *   - small-star: canonicalize edges downhill as (hi, lo); for every
+    *     hi with m = min of its smaller neighbors, connect hi and each
+    *     of its other smaller neighbors to m. One unordered min window
+    *     over the canonical edge list.
+    * Both operations preserve connectivity and strictly shrink the
+    * potential Σ depth; the fixpoint is a star per component centered at
+    * its min, from which labels read off with a single left join. Provably
+    * O(log n) rounds on ANY graph — label contraction's worst case
+    * (adversarial long chains where the min sits at one end) collapses
+    * here because large-star rewires every vertex's whole neighborhood to
+    * its local min in one shot, halving chain depth per operation pair.
+    * On short-diameter LSH candidate graphs both variants converge in a
+    * handful of rounds and contraction's per-round cost is lower (one
+    * aggregate vs two rewrites); on paths contraction degrades to one hop
+    * per round and escalates to THIS variant
+    * (`ConnectedComponentsPropertySpec`). Convergence detection is an
+    * (edge-count, bit_xor-of-xxhash64 checksum) pair per round — one tiny
+    * aggregate, no driver-side edge materialization. XOR, not SUM: the
+    * edge set is `distinct`, so xor-of-set is order-independent and sound,
+    * and unlike a sum of uniform 64-bit hashes it cannot overflow (Spark 4
+    * defaults ANSI mode, where a long-sum overflow *throws* — a sum
+    * checksum killed the whole query in round 5, almost surely, on any
+    * edge set beyond a few dozen rows).
+    */
   private[graft] def connectedComponentsStars(
       pairs: DataFrame,
       vertices: DataFrame,
       maxIter: Int = 50,
       strict: Boolean = true,
       roundsKey: String = "cc_stars"): DataFrame = {
-    // r20: LAZY input checkpoint under the same fused-probe gate — the
-    // initial fingerprint aggregate below is the materializing action, so
-    // the round-0 "materialize the canonical edges" job fuses into it
-    // (one job instead of two before the first pass)
-    var edges = freshCheckpoint(canonicalEdges(pairs), eager = !fusedProbe(pairs))
+    // lazy input checkpoint: the initial fingerprint aggregate below
+    // materializes it, so no separate job precedes the first pass
+    var edges = freshCheckpoint(canonicalEdges(pairs), eager = false)
 
-    // Same window-over-join rewrite as largeStarPass (guide §2.4): the
-    // per-hi min rides an unordered window — one exchange of `e` on hi and
-    // a local sort — instead of groupBy(min) + join-back (two consumers of
-    // `e`, two exchanges, one hash build). Row-identical output; the
-    // spark.graft.ccStarsLegacy hook reverts both passes together.
-    def smallStar(e: DataFrame): DataFrame = {
-      val legacy = e.sparkSession.conf
-        .getOption("spark.graft.ccStarsLegacy").contains("true")
-      val withM =
-        if (legacy) {
-          val mins = e.groupBy("hi").agg(min(col("lo")).as("m"))
-          e.join(mins, Seq("hi"))
-        } else e.withColumn("m", min(col("lo")).over(Window.partitionBy("hi")))
-      // each (hi, lo) row emits (lo, m) — except the row carrying the min
-      // itself, which emits (hi, m) exactly once per hi
-      val out = withM
+    // same window-over-join shape as largeStarPass: the per-hi min rides an
+    // unordered window, one exchange of `e` on hi and a local sort
+    def smallStar(e: DataFrame): DataFrame =
+      e.withColumn("m", min(col("lo")).over(Window.partitionBy("hi")))
+        // each (hi, lo) row emits (lo, m) — except the row carrying the
+        // min itself, which emits (hi, m) exactly once per hi
         .select(
           when(col("lo") === col("m"), col("hi")).otherwise(col("lo")).as("hi"),
           col("m").as("lo"))
         .filter(col("hi") =!= col("lo"))
-      // same single-key exchange trick as largeStarPass: dedup rides a
-      // hash(hi) exchange whose partitioning the NEXT consumer can reuse
-      if (legacy || !singleKeyDedup(e)) out.distinct()
-      else out.repartition(col("hi")).distinct()
-    }
+        .transform(singleKeyDistinct)
 
     // (count, bit_xor of per-edge xxhash64): order-independent over the
     // distinct edge set and immune to ANSI long-overflow — xor never
@@ -1378,36 +1190,19 @@ object Dedup {
     var fp = fingerprint(edges)
     var converged = false
     var it = 0
-    // r20 experiment, measured and REJECTED: running two large/small pass
-    // pairs per checkpoint+fingerprint job (halving job barriers; sound —
-    // any pass that changes the edge set strictly decreases the Kiveris
-    // potential, so pair-boundary fingerprint equality implies the true
-    // fixpoint) measured 0.88× median on the interleaved A/B across the
-    // four stars consumers: the extra post-fixpoint passes and the deeper
-    // per-job plans cost more than the saved barriers. One pass per job
-    // kept.
+    // one large/small pass pair per job (paired passes per job measured
+    // slower; OPTIMIZATION_r20.md §9)
     while (!converged && it < maxIter) {
-      // LAZY checkpoint + fused convergence probe (guide §1.2 — don't
-      // compute things twice): with an eager checkpoint each round paid
-      // TWO jobs — one to materialize the rewired edge set, one to
-      // fingerprint it. The lazy checkpoint lets the fingerprint
-      // aggregate (which reads every row and both columns, so nothing is
-      // pruned) be the materializing action: one job does both, and every
-      // later consumer (the next round's union, the converged read-off)
-      // reads the persisted blocks. Costs the recovered output layout
-      // (eager-only, see localCheckpointStatsFree) — worthless here, the
-      // next round's union destroys partitioning anyway.
-      // spark.graft.ccFusedProbe=false is the A/B hook back to eager +
-      // separate probe job.
-      val next = freshCheckpoint(
-        smallStar(largeStarPass(edges)), eager = !fusedProbe(edges))
+      // LAZY checkpoint: the fingerprint aggregate (which reads every row
+      // and both columns) is the materializing action, so one job both
+      // materializes and probes the round; later consumers read the
+      // persisted blocks
+      val next = freshCheckpoint(smallStar(largeStarPass(edges)), eager = false)
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp
       edges = next
       it += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc-stars] iter $it edges=${nfp._1}")
     }
     lastRounds.put(roundsKey, it)
     lastConverged.put(roundsKey, converged)
@@ -1611,25 +1406,13 @@ object Dedup {
       documents: DataFrame,
       t: Double = 0.6,
       shingleK: Int = 3): DataFrame = {
-    // r20 (guide §1.2 step 2): gram hashing rides the native codegen'd
-    // HexNgramsExpr — one generated loop per row — instead of the
-    // interpreted `transform(sequence…, slice+concat+md5)` chain (a boxed
-    // lambda, a slice allocation and a concat per window position).
-    // Identical values (same joined-by-space gram, same 16-hex md5
-    // prefix); spark.graft.gramHof=true reverts for the interleaved A/B.
-    val gramHof = documents.sparkSession.conf
-      .getOption("spark.graft.gramHof").contains("true")
-    def grams = // built per branch: both forms read `ws`
-      if (gramHof)
-        transform(
-          sequence(lit(1), size(col("ws")) - lit(shingleK - 1)),
-          i => substring(md5(concat_ws(" ", slice(col("ws"), i, lit(shingleK)))), 1, 16))
-      else graft.functions.TextExpressions.hexNgrams(col("ws"), shingleK, 16)
     val shingledRaw = Parallelism.floor(documents)
       .select(col("doc_id"),
         graft.functions.TextExpressions.alnumTokens(col("text")).as("ws"))
       .filter(size(col("ws")) >= shingleK)
-      .select(col("doc_id"), array_distinct(grams).as("ts"))
+      .select(col("doc_id"),
+        array_distinct(graft.functions.TextExpressions.hexNgrams(col("ws"), shingleK, 16))
+          .as("ts"))
     val shingled =
       if (shingledRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         shingledRaw.persist()
@@ -1645,13 +1428,10 @@ object Dedup {
         posexplode(expr(
           s"transform(slice(sorted, 1, CAST(size(sorted) - ceil($t * size(sorted)) + 1 AS INT)), x -> x.tok)")))
       .select(col("doc_id"), col("sz"), (col("pos") + 1).as("p"), col("col").as("tok"))
-    // r19 optimization (guide §5 — reuse beats recompute, measured by
-    // PlanAudit): the candidate self-join consumes `prefixes` on BOTH
-    // legs, and runtime exchange reuse does NOT fire across the a/b
-    // aliases here — the audit showed the whole prefix pipeline (tokens ⋈
-    // df counts → per-doc sort → posexplode) executed twice, two
-    // pairwise-identical 13 MB + 9 MB exchanges. Persist it once (same
-    // idiom as the shingle frame; resetSessionState releases it).
+    // the candidate self-join consumes `prefixes` on BOTH legs, and
+    // exchange reuse does not fire across the a/b aliases, so without the
+    // persist the whole prefix pipeline (tokens ⋈ df counts → per-doc sort
+    // → posexplode) runs twice; resetSessionState releases it
     val prefixes =
       if (prefixesRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         prefixesRaw.persist()
@@ -1702,20 +1482,10 @@ object Dedup {
       if (toksRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         toksRaw.persist()
       else toksRaw
-    // native gram hashing (r20, same rewrite/gate as setSimilarityJoin's
-    // shingler): one generated md5 loop per row instead of the interpreted
-    // transform(sequence…) chain; identical 16-hex gram values
-    val gramHof = documents.sparkSession.conf
-      .getOption("spark.graft.gramHof").contains("true")
-    val grams =
-      if (gramHof)
-        transform(
-          sequence(lit(1), size(col("ws")) - lit(k - 1)),
-          i => substring(md5(concat_ws(" ", slice(col("ws"), i, lit(k)))), 1, 16))
-      else graft.functions.TextExpressions.hexNgrams(col("ws"), k, 16)
     val posRaw = toks
       .filter(size(col("ws")) >= k)
-      .select(col("doc_id"), posexplode(grams))
+      .select(col("doc_id"),
+        posexplode(graft.functions.TextExpressions.hexNgrams(col("ws"), k, 16)))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gh"))
     // "gram occurs in >= 2 distinct docs" ⟺ min(doc_id) != max(doc_id)
     // over the gram's partition — ONE unordered window shuffle on the

@@ -66,44 +66,24 @@ object Relational {
 
   /** R1 (dedup by key, deterministic variant): keep the min-linenumber row
     * per order. `dropDuplicates` keeps an *arbitrary* row — correct for the
-    * reference's byte-identical duplicate groups but not oracle-comparable;
-    * a rank-window with a total tiebreak is the deterministic equivalent
-    * and Spark executes it with WindowGroupLimit (partial top-1 per
-    * partition before the shuffle).
+    * reference's byte-identical duplicate groups but not oracle-comparable.
+    * "First row per key under a total order" is min(struct(order columns)):
+    * ONE hash aggregate with map-side partial combine, no per-partition
+    * sort and no WindowExec, and the same rows as a `row_number` window
+    * over the same order (`RelationalSpec` pins the two).
     */
-  def dedupByKeyDeterministic(lineitem: DataFrame): DataFrame = {
-    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data — the
-    // ordering must be a total order or "keep first" is nondeterministic.
-    //
-    // r19 optimization (guide §2.4; same proven trick as centralKeep's
-    // r18 window→aggregate rewrite): "first row per key under a total
-    // order" is min(struct(order columns)) — ONE hash aggregate with
-    // map-side partial combine, no per-partition SORT, no WindowExec.
-    // Rows tied on all four ordering columns are identical in every
-    // OUTPUT column (the projection is a subset of the ordering), so the
-    // kept row is exactly the rank-window's. The window form (kept under
-    // spark.graft.dedupKeyLegacy=true) already benefited from
-    // WindowGroupLimit's partial top-1, but still sorted every map
-    // partition and the post-shuffle groups; the aggregate hashes instead.
-    val legacy = lineitem.sparkSession.conf
-      .getOption("spark.graft.dedupKeyLegacy").contains("true")
-    if (legacy) {
-      val w = Window.partitionBy("l_orderkey")
-        .orderBy("l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
-      lineitem
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-        .orderBy("l_orderkey")
-    } else
-      lineitem
-        .groupBy("l_orderkey")
-        .agg(min(struct(col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"), col("l_quantity"))).as("f"))
-        .select(col("l_orderkey"), col("f.l_linenumber"),
-          col("f.l_partkey"), col("f.l_quantity"))
-        .orderBy("l_orderkey")
-  }
+  def dedupByKeyDeterministic(lineitem: DataFrame): DataFrame =
+    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data, so the
+    // order must be total for "keep first" to be deterministic. Rows tied on
+    // all four order columns are identical in every OUTPUT column (the
+    // projection is a subset of the order), so which of them wins is moot.
+    lineitem
+      .groupBy("l_orderkey")
+      .agg(min(struct(col("l_linenumber"), col("l_partkey"),
+        col("l_suppkey"), col("l_quantity"))).as("f"))
+      .select(col("l_orderkey"), col("f.l_linenumber"),
+        col("f.l_partkey"), col("f.l_quantity"))
+      .orderBy("l_orderkey")
 
   /** R4: left equi-join with explicit condition. The customer dimension is
     * orders-of-magnitude smaller than the fact side — broadcast it so the
@@ -448,46 +428,26 @@ object Relational {
   /** Exact interpolated percentiles (Spark `percentile` == SQL
     * percentile_cont semantics) per group.
     *
-    * r19 optimization (guide §1.2 step 1 — fix the algorithm): the
-    * `percentile(...)` aggregate is a TypedImperativeAggregate that
-    * BUFFERS every raw value per group per expression — here the price
-    * column was buffered TWICE (p95 and p99 each own a buffer), every
-    * partial buffer is serialized through the exchange, and the final
-    * per-group merge+sort is single-threaded over ~|group| entries. That
-    * is also the documented round-18 scale residual (the buffer cannot
-    * spill). The rewrite computes the SAME interpolated value from
-    * value-frequency counts: one hash aggregate to (group, value, cnt) —
-    * partial map-side combine, narrow rows, nothing buffered — then a
-    * per-group cumulative-count window over DISTINCT values (sort-based,
-    * spillable), and the standard interpolation picked at ranks
-    * floor/ceil(p·(n−1)). Both price percentiles read ONE counts+cumsum
-    * pipeline. Results are bit-identical to Spark's `percentile` (the
-    * interpolation `(⌈pos⌉−pos)·lower + (pos−⌊pos⌋)·higher` with the
-    * equal-endpoint shortcut, pinned by `RelationalSpec`'s exact-equality
-    * case and the DuckDB oracle); `spark.graft.percentileLegacy=true` is
-    * the A/B hook back to the buffered aggregate.
+    * Spark's `percentile(...)` aggregate BUFFERS every raw value per group
+    * per expression (here the price column twice), ships every partial
+    * buffer through the exchange, merges and sorts it single-threaded, and
+    * cannot spill. [[exactPercentiles]] computes the SAME interpolated
+    * value from value-frequency counts: one hash aggregate to (group,
+    * value, cnt), then a per-group cumulative-count window over DISTINCT
+    * values (sort-based, spillable), with the interpolation picked at
+    * ranks floor/ceil(p·(n−1)). Both price percentiles read ONE
+    * counts+cumsum pipeline. Results are bit-identical to Spark's
+    * `percentile` (pinned by `RelationalSpec` and the DuckDB oracle).
     */
-  def percentiles(lineitem: DataFrame): DataFrame = {
-    val legacy = lineitem.sparkSession.conf
-      .getOption("spark.graft.percentileLegacy").contains("true")
-    if (legacy)
-      Parallelism.floor(lineitem)
-        .groupBy("l_returnflag")
-        .agg(
-          round(expr("percentile(l_quantity, 0.5)"), 4).as("p50_qty"),
-          round(expr("percentile(l_extendedprice, 0.95)"), 4).as("p95_price"),
-          round(expr("percentile(l_extendedprice, 0.99)"), 4).as("p99_price"))
-        .orderBy("l_returnflag")
-    else
-      exactPercentiles(lineitem, "l_returnflag", Seq(
-        "l_quantity" -> Seq("p50_qty" -> 0.5),
-        "l_extendedprice" -> Seq("p95_price" -> 0.95, "p99_price" -> 0.99)))
-        .select(col("l_returnflag"),
-          round(col("p50_qty"), 4).as("p50_qty"),
-          round(col("p95_price"), 4).as("p95_price"),
-          round(col("p99_price"), 4).as("p99_price"))
-        .orderBy("l_returnflag")
-  }
+  def percentiles(lineitem: DataFrame): DataFrame =
+    exactPercentiles(lineitem, "l_returnflag", Seq(
+      "l_quantity" -> Seq("p50_qty" -> 0.5),
+      "l_extendedprice" -> Seq("p95_price" -> 0.95, "p99_price" -> 0.99)))
+      .select(col("l_returnflag"),
+        round(col("p50_qty"), 4).as("p50_qty"),
+        round(col("p95_price"), 4).as("p95_price"),
+        round(col("p99_price"), 4).as("p99_price"))
+      .orderBy("l_returnflag")
 
   /** Exact interpolated percentiles per `g` from value-frequency counts —
     * the sort-based, spillable equivalent of Spark's buffering
@@ -500,11 +460,11 @@ object Relational {
     *
     * ±0.0 / NaN caveat: grouping on the double value normalizes −0.0 to
     * 0.0 (and collapses NaN bit patterns) in the group key, whereas the
-    * legacy buffered aggregate's hash map distinguishes them and sorts
-    * −0.0 below 0.0 — so on data containing negative zeros the result can
-    * differ from the legacy path in the SIGN of a zero (never in
+    * buffered `percentile` aggregate's hash map distinguishes them and
+    * sorts −0.0 below 0.0 — so on data containing negative zeros the
+    * result can differ from Spark's in the SIGN of a zero (never in
     * magnitude). The suite's inputs (prices, quantities) contain no −0.0;
-    * the legacy-equality test compares post-normalization.
+    * `RelationalSpec`'s equality test compares post-normalization.
     */
   private[graft] def exactPercentiles(
       df: DataFrame,

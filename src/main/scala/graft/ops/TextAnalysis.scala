@@ -244,26 +244,7 @@ object TextAnalysis {
     val variantsRaw = withWords
       .filter(size(col("ws")) >= n)
       .select(col("doc_id"), col("source"),
-        // native variant builder (r20, same class/gate as the hex-ngram
-        // rewrite): one generated loop per row instead of two nested
-        // interpreted lambdas with a slice + concat per (window, mask);
-        // identical (pos, d, vh) values
-        explode(
-          if (documents.sparkSession.conf
-                .getOption("spark.graft.gramHof").contains("true"))
-            flatten(transform(
-              sequence(lit(1), size(col("ws")) - lit(n - 1)),
-              i => transform(sequence(lit(-1), lit(n - 1)), d =>
-                struct(
-                  i.as("pos"), d.as("d"),
-                  substring(md5(concat_ws(" ",
-                    when(d === -1, slice(col("ws"), i, lit(n)))
-                      .otherwise(concat(
-                        slice(col("ws"), i, d),
-                        array(lit("#")),
-                        slice(col("ws"), i + d + 1, lit(n - 1) - d))))), 1, 16)
-                    .as("vh")))))
-          else graft.functions.TextExpressions.fuzzyVariants(col("ws"), n, 16))
+        explode(graft.functions.TextExpressions.fuzzyVariants(col("ws"), n, 16))
           .as("u"))
       .select(col("doc_id"), col("source"), col("u.pos"), col("u.d"), col("u.vh"))
     // one variant computation feeds both the benchmark and corpus legs

@@ -23,24 +23,6 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(1337L + i)))
 
-  /** Reference union-find with path compression. */
-  private def unionFindLabels(nVerts: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = Array.tabulate(nVerts)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a.toInt), find(b.toInt))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // component label = min member = the root under min-union
-    (0 until nVerts).map(v => v.toLong -> find(v).toLong).toMap
-  }
-
   test("labels match an independent union-find on random graphs") {
     val sparkS = spark
     import sparkS.implicits._
@@ -54,7 +36,7 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
       } yield (a.toLong, b.toLong))
     } yield edges
     for (edges <- samples(edgeGen, 6)) {
-      val expected = unionFindLabels(nVerts, edges)
+      val expected = Reference.unionFindLabels(nVerts, edges)
       val pairsDf = edges.toDF("doc_a", "doc_b")
       val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
       val got = Dedup.connectedComponents(pairsDf, vertsDf)
@@ -78,7 +60,7 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     } yield edges
     val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
     for (edges <- samples(edgeGen, 4); parts <- Seq(1, 3, edges.size)) {
-      val expected = unionFindLabels(nVerts, edges)
+      val expected = Reference.unionFindLabels(nVerts, edges)
       val pairsDf = sparkS.sparkContext.parallelize(edges, parts).toDF("doc_a", "doc_b")
       val got = Dedup.connectedComponents(pairsDf, vertsDf)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
@@ -102,7 +84,7 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
       val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
       val got = Dedup.connectedComponents(pairsDf, vertsDf)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == unionFindLabels(nVerts, edges))
+      assert(got == Reference.unionFindLabels(nVerts, edges))
       val rounds = Dedup.lastRounds.get("cc_contraction")
       assert(rounds <= 2, s"single-partition input took $rounds contraction rounds")
     }
@@ -156,7 +138,7 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
       } yield (a.toLong, b.toLong))
     } yield edges
     for (edges <- samples(edgeGen, 6)) {
-      val expected = unionFindLabels(nVerts, edges)
+      val expected = Reference.unionFindLabels(nVerts, edges)
       val pairsDf = edges.toDF("doc_a", "doc_b")
       val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
       val stars = Dedup.connectedComponentsStars(pairsDf, vertsDf)
@@ -166,7 +148,7 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("r19 execution gates do not change stars labels (single-key dedup, fused probe)") {
+  test("stars passes, rounds and labels match the driver-side large-star/small-star model") {
     val sparkS = spark
     import sparkS.implicits._
     val nVerts = 40
@@ -178,45 +160,42 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
         if a != b
       } yield (a.toLong, b.toLong))
     } yield edges
-    try {
-      for (edges <- samples(edgeGen, 4)) {
-        val expected = unionFindLabels(nVerts, edges)
-        val pairsDf = edges.toDF("doc_a", "doc_b")
-        val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
-        sparkS.conf.set("spark.graft.ccSingleKeyDedup", "false")
-        sparkS.conf.set("spark.graft.ccFusedProbe", "false")
-        val off = Dedup.connectedComponentsStars(pairsDf, vertsDf)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        sparkS.conf.set("spark.graft.ccSingleKeyDedup", "true")
-        sparkS.conf.set("spark.graft.ccFusedProbe", "true")
-        val on = Dedup.connectedComponentsStars(pairsDf, vertsDf)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(on == expected && off == expected,
-          s"gate variants diverge for edges=$edges\n expected=$expected\n on=$on\n off=$off")
-      }
-    } finally {
-      sparkS.conf.unset("spark.graft.ccSingleKeyDedup")
-      sparkS.conf.unset("spark.graft.ccFusedProbe")
+    val verts = 0L until nVerts.toLong
+    val vertsDf = verts.toDF("doc_id")
+    for (edges <- samples(edgeGen, 4)) {
+      val pairsDf = edges.toDF("doc_a", "doc_b")
+      // one large-star pass, edge for edge
+      val pass = Dedup.starReduceEdges(pairsDf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      assert(pass == Reference.largeStar(Reference.canonicalEdges(edges)),
+        s"large-star pass diverges for edges=$edges")
+      // the fixpoint: same labels, and the same number of pass pairs
+      val (want, wantRounds) = Reference.starsLabels(edges, verts)
+      val got = Dedup.connectedComponentsStars(pairsDf, vertsDf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want && want == Reference.unionFindLabels(nVerts, edges),
+        s"stars labels diverge for edges=$edges\n expected=$want\n got=$got")
+      assert(Dedup.lastRounds.get("cc_stars") == wantRounds,
+        s"stars took ${Dedup.lastRounds.get("cc_stars")} rounds, the model $wantRounds")
     }
   }
 
-  test("centralKeep overlap gate returns identical rows either way") {
+  test("centralKeep equals the sequential stars-clusters join PageRank reference") {
     val sparkS = spark
     import sparkS.implicits._
     val dup = "the quick brown fox jumps over the lazy dog again and again"
+    val near = "the quick brown fox jumps over the lazy dog again and once more"
     val docs = Seq(
-      (1L, dup), (2L, dup), (3L, dup),
+      (1L, dup), (2L, dup), (3L, dup), (6L, near), (7L, near),
       (4L, "completely unrelated text about spark execution engines"),
       (5L, "another very different document discussing tokenizer training"))
       .toDF("doc_id", "text")
-    try {
-      sparkS.conf.set("spark.graft.ckOverlap", "false")
-      val seq = Dedup.centralKeep(docs).collect().map(_.toSeq).toSeq
-      SparkEntry.resetSessionState(sparkS)
-      sparkS.conf.set("spark.graft.ckOverlap", "true")
-      val par = Dedup.centralKeep(docs).collect().map(_.toSeq).toSeq
-      assert(par == seq, s"overlapped centralKeep diverges:\n seq=$seq\n par=$par")
-    } finally sparkS.conf.unset("spark.graft.ckOverlap")
+    val got = Dedup.centralKeep(docs).collect().toSeq
+    SparkEntry.resetSessionState(sparkS)
+    val want = Reference.centralKeep(docs).collect().toSeq
+    SparkEntry.resetSessionState(sparkS)
+    assert(got == want, s"centralKeep diverges from the reference:\n want=$want\n got=$got")
+    assert(got.exists(_.getAs[Long](1) >= 3L), s"fixture must form a dup cluster: $got")
   }
 
   test("both strategies agree on an adversarial long chain (stars' home turf)") {

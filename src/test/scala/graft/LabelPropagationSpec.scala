@@ -57,10 +57,10 @@ class LabelPropagationSpec extends AnyFunSuite {
   }
 
   test("the max-struct vote equals the legacy window vote, label for label") {
-    // a messy planted graph with ties, bridges, hubs, and isolates —
-    // the aggregate rewrite (max(struct(c, ~lab, lab))) must reproduce
-    // the row_number((c DESC, lab ASC)) winner EXACTLY on every vertex
-    // and round count, including the ~lab tiebreak inversion
+    // a messy planted graph with ties, bridges, hubs, and isolates — the
+    // aggregate vote (max(struct(c, ~lab, lab))) must pick the
+    // (c DESC, lab ASC) winner the legacy row_number window picked, on
+    // every vertex and round count, including the ~lab tiebreak inversion
     val rnd = new scala.util.Random(7)
     val verts = (1L to 120L).toSeq
     val pairs = (Seq.tabulate(200)(i =>
@@ -68,14 +68,11 @@ class LabelPropagationSpec extends AnyFunSuite {
       Seq((1L, 2L), (1L, 3L), (2L, 3L), (50L, 51L))) // planted clique + edge
       .filter { case (a, b) => a != b }.distinct
     for (rounds <- Seq(1, 3)) {
-      spark.conf.set("spark.graft.lpLegacy", "true")
-      val legacy = run(pairs, verts, rounds)
-      spark.conf.set("spark.graft.lpLegacy", "false")
-      val next = run(pairs, verts, rounds)
-      spark.conf.unset("spark.graft.lpLegacy")
-      assert(legacy == next,
-        s"vote rewrite must be bit-identical at rounds=$rounds: " +
-          s"${legacy.toSeq.diff(next.toSeq).take(5)}")
+      val want = Reference.labelPropagation(pairs, verts, rounds)
+      val got = run(pairs, verts, rounds)
+      assert(got == want,
+        s"vote must match the reference at rounds=$rounds: " +
+          s"${want.toSeq.diff(got.toSeq).take(5)}")
     }
   }
 }

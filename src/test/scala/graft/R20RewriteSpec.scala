@@ -1,16 +1,17 @@
 package graft
 
 import graft.ops.{Dedup, TextAnalysis}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused equivalence pins for the round-20 execution rewrites: each case
-  * runs the rewritten operator against its legacy formulation (via the
-  * session-conf A/B gate where one exists, or the legacy plan rebuilt
-  * inline where the rewrite replaced the formulation outright) and asserts
-  * row-identical results. These complement the DuckDB oracle: the oracle
-  * proves the registered query's values; these pin the INTERNAL gate
-  * wiring so a future default flip cannot silently change semantics.
+  * runs the rewritten operator against its legacy formulation (a
+  * [[Reference]] model, the session-conf A/B gate where one remains, or the
+  * legacy plan rebuilt inline) and asserts row-identical results. These
+  * complement the DuckDB oracle: the oracle proves the registered query's
+  * values; these pin the internal formulations so a rewrite cannot
+  * silently change semantics.
   */
 class R20RewriteSpec extends AnyFunSuite {
 
@@ -40,18 +41,25 @@ class R20RewriteSpec extends AnyFunSuite {
   test("bidirectional-edge explode ≡ legacy union form (LP, PageRank, stars)") {
     val s = spark; import s.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (1L, 3L), (4L, 9L))
-      .toDF("doc_a", "doc_b")
-    val verts = (1L to 9L).map(Tuple1(_)).toDF("doc_id")
-    def all() = Seq(
-      collectSorted(Dedup.labelPropagationOnPairs(pairs, verts, 3)),
-      collectSorted(Dedup.pageRankFromPairs(pairs, verts.toDF("doc_id"))),
-      collectSorted(Dedup.connectedComponentsStars(
-        Dedup.starReduceEdges(pairs), verts)))
-    val now = all()
+    val verts = 1L to 9L
+    val pairsDf = pairs.toDF("doc_a", "doc_b")
+    val vertsDf = verts.map(Tuple1(_)).toDF("doc_id")
+    // the references bidirect as pairs ++ pairs.swapped: the union form
+    val lp = Dedup.labelPropagationOnPairs(pairsDf, vertsDf, 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lp == Reference.labelPropagation(pairs, verts, 3))
+    val pr = Dedup.pageRankFromPairs(pairsDf, vertsDf)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(pr == Reference.pageRank(pairs, verts))
+    val reduced = Dedup.starReduceEdges(pairsDf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val wantReduced = Reference.largeStar(Reference.canonicalEdges(pairs))
+    assert(reduced == wantReduced)
+    val stars = Dedup.connectedComponentsStars(Dedup.starReduceEdges(pairsDf), vertsDf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stars == Reference.starsLabels(wantReduced.toSeq, verts)._1)
+    assert(stars == Reference.unionFindLabels(verts, pairs))
     SparkEntry.resetSessionState(spark)
-    val legacy = withConf("spark.graft.bidirUnion" -> "true")(all())
-    SparkEntry.resetSessionState(spark)
-    assert(now == legacy, "explode and union bidirection must be row-identical")
   }
 
   test("LP single-exchange vote ≡ two-exchange chain") {
@@ -70,32 +78,35 @@ class R20RewriteSpec extends AnyFunSuite {
 
   test("contraction CC active-set labels ≡ full-vertex iteration (singletons kept)") {
     val s = spark; import s.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val verts = (Seq(1L, 2L, 3L, 10L, 11L) ++ Seq(20L, 21L)).map(Tuple1(_)).toDF("doc_id")
-    val now = collectSorted(Dedup.connectedComponents(pairs, verts, maxIter = 20))
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val verts = Seq(1L, 2L, 3L, 10L, 11L) ++ Seq(20L, 21L)
+    val now = Dedup.connectedComponents(
+        pairs.toDF("doc_a", "doc_b"), verts.map(Tuple1(_)).toDF("doc_id"), maxIter = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     SparkEntry.resetSessionState(spark)
-    val legacy = withConf("spark.graft.activeSetLegacy" -> "true")(
-      collectSorted(Dedup.connectedComponents(pairs, verts, maxIter = 20)))
-    SparkEntry.resetSessionState(spark)
-    assert(now == legacy, "active-set labels must be row-identical, singletons self-kept")
-    assert(now.exists(_.contains("[20,20,true]")), s"singleton 20 must self-keep: $now")
+    // union-find labels every vertex, so isolated ones label themselves
+    assert(now == Reference.componentRows(verts, pairs),
+      "active-set labels must be row-identical, singletons self-kept")
+    assert(now.contains((20L, 20L, true)), s"singleton 20 must self-keep: $now")
   }
 
   test("contraction lazy-nbrMin fuse + overlapped contraction ≡ sequential eager loop") {
     val s = spark; import s.implicits._
-    // a chain long enough to exercise several rounds plus a separate clique
+    // a chain long enough to exercise several rounds (one edge per
+    // partition, so the local forest cannot collapse it) plus a clique
     val chain = (1L until 40L).map(i => (i, i + 1))
     val clique = Seq((100L, 101L), (100L, 102L), (101L, 102L))
-    val pairs = (chain ++ clique).toDF("doc_a", "doc_b")
-    val verts = ((1L to 40L) ++ Seq(100L, 101L, 102L, 500L)).map(Tuple1(_)).toDF("doc_id")
-    val now = collectSorted(Dedup.connectedComponents(pairs, verts, maxIter = 30))
+    val pairs = chain ++ clique
+    val verts = (1L to 40L) ++ Seq(100L, 101L, 102L, 500L)
+    val pairsDf = s.sparkContext.parallelize(pairs, pairs.size).toDF("doc_a", "doc_b")
+    val now = Dedup.connectedComponents(
+        pairsDf, verts.map(Tuple1(_)).toDF("doc_id"), maxIter = 30)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     SparkEntry.resetSessionState(spark)
-    val legacy = withConf(
-      "spark.graft.ccNbrMinLazy" -> "false",
-      "spark.graft.ccContractOverlap" -> "false")(
-      collectSorted(Dedup.connectedComponents(pairs, verts, maxIter = 30)))
-    SparkEntry.resetSessionState(spark)
-    assert(now == legacy, "fused/overlapped contraction must be row-identical")
+    assert(Dedup.lastRounds.get("cc_contraction") >= 2, "expected overlapped rounds")
+    // the sequential model: union-find, one edge at a time
+    assert(now == Reference.componentRows(verts, pairs),
+      "fused/overlapped contraction must be row-identical")
   }
 
   test("ngramContamination gram-window form ≡ legacy aggregate + join-back") {
@@ -155,51 +166,58 @@ class R20RewriteSpec extends AnyFunSuite {
       (4L, "the quick brown fox jumps over the lazy dog repeatedly")
     ).toDF("doc_id", "text")
     val now = collectSorted(Dedup.bandedSignatures(d))
-    SparkEntry.resetSessionState(spark)
-    val hof = withConf("spark.graft.minhashHof" -> "true")(
-      collectSorted(Dedup.bandedSignatures(d)))
-    SparkEntry.resetSessionState(spark)
+    val hof = collectSorted(Reference.bandedSignatures(d))
     assert(now == hof, "native and HOF banded signatures must be row-identical")
-    assert(now.nonEmpty)
+    assert(now.size == 4 * Dedup.NumBands, s"every doc must band: $now")
+  }
+
+  /** Word sequences covering the tokenizer's domain: repeats, unicode
+    * (which alnumTokens splits on), digits, and lengths on both sides of
+    * every k/n under test. */
+  private def wordDocs = {
+    val s = spark; import s.implicits._
+    Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta alpha beta gamma", "src0"),
+      (2L, "alpha beta gamma delta different tail entirely here now okay", "src1"),
+      (3L, "übermäßig sträußchen çörek tokens with unicode content mixed in", "src1"),
+      (4L, "tiny doc", "src2"),
+      (5L, "question what is the answer to this benchmark item 42", "src0"),
+      (6L, "a b c", "src2"),
+      (7L, "one two three four five six", "src1"),
+      (8L, "", "src2")
+    ).toDF("doc_id", "text", "source")
+  }
+
+  /** Native vs HOF arrays on the callers' domain: alnumTokens output with
+    * the `size(ws) >= k` filter every caller applies. */
+  private def onCallerDomain(k: Int)(native: Column, hof: Column) = {
+    val ws = wordDocs
+      .select(col("doc_id"), graft.functions.TextExpressions.alnumTokens(col("text")).as("ws"))
+      .filter(size(col("ws")) >= k)
+    val rows = ws.select(col("doc_id"), native.as("n"), hof.as("h")).collect()
+    (rows.map(_.getLong(0)).toSet, rows.filter(r => r.get(1) != r.get(2)).map(_.getLong(0)).toSeq)
   }
 
   test("native hex n-grams ≡ HOF slice/concat/md5 chain (setsim + substring dedup)") {
-    val s = spark; import s.implicits._
-    val d = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta alpha beta gamma"),
-      (2L, "alpha beta gamma delta different tail entirely here now okay"),
-      (3L, "übermäßig sträußchen çörek tokens with unicode content mixed in"),
-      (4L, "tiny doc"),
-      (5L, "alpha beta gamma delta epsilon zeta eta theta alpha beta gamma")
-    ).toDF("doc_id", "text")
-    def all() = Seq(
-      collectSorted(Dedup.setSimilarityJoin(d, t = 0.3)),
-      collectSorted(Dedup.substringDedup(d, k = 4)),
-      collectSorted(Dedup.substringDedupApply(d, k = 4)))
-    val now = all()
-    SparkEntry.resetSessionState(spark)
-    val hof = withConf("spark.graft.gramHof" -> "true")(all())
-    SparkEntry.resetSessionState(spark)
-    assert(now == hof, "native and HOF gram hashing must be row-identical")
-    assert(now.head.nonEmpty && now(1).nonEmpty)
+    // setSimilarityJoin shingles at k = 3, the ExactSubstr family at k = 6
+    for (k <- Seq(3, 4, 6)) {
+      val (docs, diff) = onCallerDomain(k)(
+        graft.functions.TextExpressions.hexNgrams(col("ws"), k, 16),
+        Reference.hexNgrams(col("ws"), k))
+      assert(docs.size >= 4, s"k=$k: fixture too short: $docs")
+      assert(diff.isEmpty, s"k=$k: native and HOF gram hashes differ for docs $diff")
+    }
   }
 
   test("native fuzzy variant hashes ≡ nested-HOF masked-gram chain") {
-    val s = spark; import s.implicits._
-    val d = Seq(
-      (1L, "question what is the answer to this benchmark item", "src0"),
-      (2L, "question what is the answer to that benchmark item", "src1"),
-      (3L, "über tokens with unicode content here too now", "src1"),
-      (4L, "short one", "src2"),
-      (5L, "question what is the answer to this benchmark item", "src2")
-    ).toDF("doc_id", "text", "source")
-    val now = collectSorted(graft.ops.TextAnalysis.fuzzyContamination(d, "src0", n = 4))
-    SparkEntry.resetSessionState(spark)
-    val hof = withConf("spark.graft.gramHof" -> "true")(
-      collectSorted(graft.ops.TextAnalysis.fuzzyContamination(d, "src0", n = 4)))
-    SparkEntry.resetSessionState(spark)
-    assert(now == hof, "native and HOF fuzzy variants must be row-identical")
-    assert(now.nonEmpty, "fixture must produce fuzzy hits")
+    // fuzzyContamination masks n = 5 token windows by default
+    for (n <- Seq(4, 5)) {
+      val (docs, diff) = onCallerDomain(n)(
+        graft.functions.TextExpressions.fuzzyVariants(col("ws"), n, 16),
+        Reference.fuzzyVariants(col("ws"), n))
+      assert(docs.size >= 4, s"n=$n: fixture too short: $docs")
+      assert(diff.isEmpty, s"n=$n: native and HOF variant hashes differ for docs $diff")
+    }
   }
 
   test("tfidf df-from-tf ≡ distinct-based document frequency") {

@@ -53,13 +53,33 @@ class RelationalSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToLongBits(mine(g)(i)) ==
         java.lang.Double.doubleToLongBits(ref(g)(i)),
         s"group $g ${all(i)._1}: mine=${mine(g)(i)} ref=${ref(g)(i)}")
-    // and the public query path agrees with its legacy form end to end
+    // and the public query path agrees with the buffered query end to end
     val li = sparkS.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    sparkS.conf.set("spark.graft.percentileLegacy", "true")
-    val legacy = try Relational.percentiles(li).collect().map(_.toSeq).toSeq
-    finally sparkS.conf.unset("spark.graft.percentileLegacy")
+    val buffered = Reference.percentiles(li).collect().map(_.toSeq).toSeq
     val cur = Relational.percentiles(li).collect().map(_.toSeq).toSeq
-    assert(cur == legacy, s"legacy/new percentile paths diverge:\n $legacy\n $cur")
+    assert(cur == buffered, s"buffered/new percentile paths diverge:\n $buffered\n $cur")
+  }
+
+  test("dedupByKeyDeterministic keeps the row_number window's row, ties on l_linenumber included") {
+    val sparkS = spark
+    import org.apache.spark.sql.functions._
+    val li = sparkS.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    // the fixture must hold keys whose minimum l_linenumber is shared by
+    // several rows, so the later order columns decide the kept row
+    val tiedKeys = li
+      .withColumn("first_line", min("l_linenumber").over(
+        org.apache.spark.sql.expressions.Window.partitionBy("l_orderkey")))
+      .filter(col("l_linenumber") === col("first_line"))
+      .groupBy("l_orderkey").count().filter(col("count") > 1)
+      .select("l_orderkey").collect().map(_.getLong(0)).toSet
+    assert(tiedKeys.nonEmpty, "sf0.001 lineitem has no key tied on its first l_linenumber")
+    val got = Relational.dedupByKeyDeterministic(li).collect().map(_.toSeq).toSeq
+    val want = Reference.dedupByKey(li).collect().map(_.toSeq).toSeq
+    assert(got.size == want.size && got.size == li.select("l_orderkey").distinct().count())
+    assert(got == want, s"first diverging rows: ${got.diff(want).take(5)} vs ${want.diff(got).take(5)}")
+    val tiedRows = got.filter(r => tiedKeys.contains(r.head.asInstanceOf[Long]))
+    assert(tiedRows.nonEmpty && tiedRows == want.filter(r =>
+      tiedKeys.contains(r.head.asInstanceOf[Long])))
   }
 
   test("approx_count_distinct stays within the default 5% rsd contract (3-sigma)") {
