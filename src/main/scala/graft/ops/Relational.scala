@@ -231,13 +231,9 @@ object Relational {
     // persisted: the local-rank leg and the per-partition stats leg prune
     // different columns of the ranged frame, so without the cache the
     // whole input pipeline (plus the range sampling pass) executed twice
-    // (r20; persist-if-unpersisted, released by resetSessionState)
-    val rangedRaw = df.repartitionByRange(parts, order: _*)
-      .withColumn("g_pid", spark_partition_id())
-    val ranged =
-      if (rangedRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        rangedRaw.persist()
-      else rangedRaw
+    // (r20)
+    val ranged = QueryCache.cached(df.repartitionByRange(parts, order: _*)
+      .withColumn("g_pid", spark_partition_id()))
     val pw = Window.partitionBy("g_pid").orderBy(order: _*)
     val local = ranged
       .withColumn("g_lr", row_number().over(pw).cast("long"))

@@ -241,17 +241,13 @@ object TextAnalysis {
     val withWords = documents.select(
       col("doc_id"), col("source"),
       graft.functions.TextExpressions.alnumTokens(col("text")).as("ws"))
-    val variantsRaw = withWords
+    // one variant computation feeds both the benchmark and corpus legs
+    val variants = QueryCache.cached(withWords
       .filter(size(col("ws")) >= n)
       .select(col("doc_id"), col("source"),
         explode(graft.functions.TextExpressions.fuzzyVariants(col("ws"), n, 16))
           .as("u"))
-      .select(col("doc_id"), col("source"), col("u.pos"), col("u.d"), col("u.vh"))
-    // one variant computation feeds both the benchmark and corpus legs
-    val variants =
-      if (variantsRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        variantsRaw.persist()
-      else variantsRaw
+      .select(col("doc_id"), col("source"), col("u.pos"), col("u.d"), col("u.vh")))
     val bench = variants.filter(col("source") === benchSource)
       .select("d", "vh").distinct()
     val hits = variants.filter(col("source") =!= benchSource)
@@ -320,10 +316,7 @@ object TextAnalysis {
     // `toks.distinct().groupBy(term)` leg re-ran the tokenize + explode
     // pass AND paid a redundant distinct aggregate for counts tf's keys
     // already are. One corpus scan, one (doc, term) shuffle, identical df.
-    val tfRaw = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val tf =
-      if (tfRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) tfRaw.persist()
-      else tfRaw
+    val tf = QueryCache.cached(toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(df, Seq("term"))
       .crossJoin(broadcast(nRow))
@@ -592,13 +585,9 @@ object TextAnalysis {
       depth: Int = 4,
       width: Int = 1024,
       topk: Int = 20): DataFrame = {
-    val vocabRaw = documents
+    val vocab = QueryCache.cached(documents
       .select(explode(graft.functions.TextExpressions.alnumTokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-    val vocab =
-      if (vocabRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        vocabRaw.persist()
-      else vocabRaw
+      .groupBy("word").agg(count(lit(1)).as("n")))
     def cellOf(k: Int) =
       conv(substring(md5(concat(lit(k.toString), col("word"))), 1, 8), 16, 10)
         .cast("long") % width
@@ -691,14 +680,11 @@ object TextAnalysis {
     * though the pair vocabulary itself is only Heaps-law-sized.
     */
   def bpeMerges(documents: DataFrame, iters: Int = 3, topk: Int = 5): DataFrame = {
-    val vocabRaw = Parallelism.floor(documents)
+    val vocab0 = QueryCache.cached(Parallelism.floor(documents)
       .select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(col("n"), concat_ws(" ", split(col("w"), "")).as("rep"))
-    val vocab0 =
-      if (vocabRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) vocabRaw.persist()
-      else vocabRaw
+      .select(col("n"), concat_ws(" ", split(col("w"), "")).as("rep")))
     var cur = vocab0
     val rounds = (1 to iters).map { it =>
       val toks = split(col("rep"), " ")
@@ -711,23 +697,16 @@ object TextAnalysis {
       // report) and additionally re-derives inside every LATER round's
       // lineage through the broadcast(top1) chain, so without the cache
       // the round-i aggregate recomputes O(iters − i) times inside one
-      // executed plan. Same persist-if-unpersisted idiom as the shingle
-      // frames. CALLER CONTRACT (deliberate, r20-adjudicated): the op
-      // leaves `iters + 1` cached frames (vocab + one pair-count frame per
-      // round) for the returned plan to read; a long-lived session must
-      // release them between invocations (the bench/verify harnesses call
-      // SparkEntry.resetSessionState). An eager per-round
+      // executed plan. The op deliberately leaves `iters + 1` cached
+      // frames (vocab + one pair-count frame per round) for the returned
+      // plan to read (r20-adjudicated). An eager per-round
       // checkpoint-and-unpersist variant was measured ~2× slower warm at
       // sf0.1 (the checkpoint jobs cost more than the recompute they
       // save at iters = 3, and the caches serve repeated calls), so the
       // leak-free form was rejected on measurement.
-      val pcRaw = cur
+      val pairCounts = QueryCache.cached(cur
         .select(col("n"), explode(pairExpr).as("pair"))
-        .groupBy("pair").agg(sum("n").as("cnt"))
-      val pairCounts =
-        if (pcRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          pcRaw.persist()
-        else pcRaw
+        .groupBy("pair").agg(sum("n").as("cnt")))
       val top1 = pairCounts
         .orderBy(col("cnt").desc, col("pair")).limit(1)
         .select(col("pair").as("mp"))
@@ -812,19 +791,15 @@ object TextAnalysis {
       maxTopBps: Int = 2000): DataFrame = {
     // persisted: the stats leg and the top-word leg prune DIFFERENT
     // columns of this frame, so without the cache each re-ran the text
-    // scan + tokenize (r20; same persist-if-unpersisted idiom as the
-    // shingle frames, released by resetSessionState)
-    val baseRaw = documents
+    // scan + tokenize (r20)
+    val base = QueryCache.cached(documents
       .select(col("doc_id"),
         graft.functions.TextExpressions.alnumTokens(col("text")).as("ws"))
       .select(col("doc_id"), col("ws"),
         size(col("ws")).cast("long").as("n_words"),
         expr("aggregate(ws, 0L, (a, x) -> a + length(x))").as("n_chars"),
         size(expr("filter(ws, x -> x IN ('the', 'a', 'and', 'of', 'to'))"))
-          .cast("long").as("n_stop"))
-    val base =
-      if (baseRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) baseRaw.persist()
-      else baseRaw
+          .cast("long").as("n_stop")))
     val top = base
       .select(col("doc_id"), explode(col("ws")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
@@ -913,11 +888,7 @@ object TextAnalysis {
       explode(graft.functions.TextExpressions.alnumTokens(col("text"))).as("term"))
     // counts feeds BOTH the total and the scoring join — persist the
     // vocabulary-sized aggregate so the corpus tokenizes twice, not 3×
-    val countsRaw = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-    val counts =
-      if (countsRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        countsRaw.persist()
-      else countsRaw
+    val counts = QueryCache.cached(toks.groupBy("term").agg(count(lit(1)).as("cnt")))
     // corpus token total derived FROM the term counts — a vocabulary-sized
     // aggregate riding the plan as a 1-row broadcast frame, so ln N lands
     // on the same grid in both engines WITHOUT a driver action (the old
@@ -981,15 +952,11 @@ object TextAnalysis {
       slice(words, lit(2), greatest(size(words) - 1, lit(0))),
       (a, b) => struct(a.as("w1"), b.as("w2")))
     // pairs feeds BOTH the context aggregate and the probability join —
-    // persist so the corpus tokenizes once (ngramJaccardNearDup idiom)
-    val pairsRaw = documents
+    // persist so the corpus tokenizes once
+    val pairs = QueryCache.cached(documents
       .select(explode(bigrams).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val pairs =
-      if (pairsRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        pairsRaw.persist()
-      else pairsRaw
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val contexts = pairs.groupBy("w1").agg(sum("c12").as("c1"))
     pairs
       .join(contexts, Seq("w1"))
@@ -1024,13 +991,9 @@ object TextAnalysis {
       slice(words, lit(1), greatest(size(words) - 1, lit(0))),
       slice(words, lit(2), greatest(size(words) - 1, lit(0))),
       (a, b) => struct(a.as("w1"), b.as("w2")))
-    val occRaw = documents
+    val occ = QueryCache.cached(documents
       .select(col("doc_id"), explode(bigrams).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val occ =
-      if (occRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        occRaw.persist()
-      else occRaw
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
     val pairCnt = occ.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val ctxCnt = pairCnt.groupBy("w1").agg(sum("c12").as("c1"))
     def grid(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -1077,19 +1040,16 @@ object TextAnalysis {
     * plus two vocabulary-sized joins.
     */
   def pmiCollocations(documents: DataFrame, minPair: Long = 5L): DataFrame = {
-    def cached(df: DataFrame): DataFrame =
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-      else df
     val words = graft.functions.TextExpressions.alnumTokens(col("text"))
     val toks = documents.select(explode(words).as("term"))
     // both vocabulary aggregates feed a corpus total AND the scoring
     // joins — persist them so each corpus tokenize pass runs once
-    val uni = cached(toks.groupBy("term").agg(count(lit(1)).as("c")))
+    val uni = QueryCache.cached(toks.groupBy("term").agg(count(lit(1)).as("c")))
     val bigrams = zip_with(
       slice(words, lit(1), greatest(size(words) - 1, lit(0))),
       slice(words, lit(2), greatest(size(words) - 1, lit(0))),
       (a, b) => struct(a.as("w1"), b.as("w2")))
-    val pairs = cached(documents
+    val pairs = QueryCache.cached(documents
       .select(explode(bigrams).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
@@ -1158,17 +1118,11 @@ object TextAnalysis {
   def typoPairs(documents: DataFrame): DataFrame = {
     // ONE tokenization for all six join legs (3 blockings × 2 sides): the
     // vocabulary is Heaps'-law small, so persisting it trades a tiny cache
-    // for five corpus re-scans. Same persist idiom as ngramJaccardNearDup:
-    // a repeated call finds the live entry via storageLevel;
-    // resetSessionState between queries releases it.
-    val vocabRaw = documents
+    // for five corpus re-scans.
+    val vocab = QueryCache.cached(documents
       .select(explode(graft.functions.TextExpressions.alnumTokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .filter(length(col("word")) >= 2)
-    val vocab =
-      if (vocabRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        vocabRaw.persist()
-      else vocabRaw
+      .filter(length(col("word")) >= 2))
     val suffix: Column => Column = w => substring(w, 2, 1000000)
     def leg(blockA: Column => Column, blockB: Column => Column): DataFrame = {
       val a = vocab.select(col("word").as("wa"), col("cnt").as("ca"),
@@ -1377,15 +1331,11 @@ object TextAnalysis {
       slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
       slice(ws, lit(2), greatest(size(ws) - 1, lit(0))),
       (a, b) => concat_ws(" ", a, b))
-    val featsRaw = documents
+    val feats = QueryCache.cached(documents
       .select(col("doc_id"), col("lang"), col("source"),
         explode(concat(ws, bigrams)).as("f"))
       .select(col("doc_id"), col("lang"), col("source"),
-        (conv(substring(md5(col("f")), 1, 8), 16, 10).cast("long") % buckets).as("b"))
-    val feats =
-      if (featsRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        featsRaw.persist()
-      else featsRaw
+        (conv(substring(md5(col("f")), 1, 8), 16, 10).cast("long") % buckets).as("b")))
     val rawCnt = feats.groupBy("b").agg(count(lit(1)).as("cnt_r"))
     val tgtCnt = feats.filter(col("lang") === targetLang)
       .groupBy("b").agg(count(lit(1)).as("cnt_t"))
@@ -1525,10 +1475,7 @@ object TextAnalysis {
     // and T are 1-row broadcast aggregate frames cross-joined into the
     // plan (the pageRankFromPairs scalar idiom), not driver-side actions
     // executed at plan-construction time.
-    val tfRaw = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val tf =
-      if (tfRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) tfRaw.persist()
-      else tfRaw
+    val tf = QueryCache.cached(toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val nRow = documents.agg(count(lit(1)).as("g_n"))
     val tRow = tf.agg(sum("tf").as("g_t"))

@@ -374,10 +374,8 @@ object TimeOps {
     * integers.
     */
   def activeUsers(events: DataFrame): DataFrame = {
-    val udRaw = events.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val ud =
-      if (udRaw.storageLevel == org.apache.spark.storage.StorageLevel.NONE) udRaw.persist()
-      else udRaw
+    val ud = QueryCache.cached(
+      events.select(col("user_id"), to_date(col("ts")).as("day")).distinct())
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"),

@@ -644,9 +644,9 @@ class GraftCatalogTable(table: String, version: Option[Long], ident: String)
     // call (layout, zones, selective seeks, statistics) then resolves
     // against this one version. Head resolution is an O(commits)
     // manifest-directory listing — unpinned, every per-version memo
-    // re-listed it (61 listings / 534 ms of a 592 ms re-plan at a
-    // 10k-commit chain, IngestProbe) — and two listings straddling a
-    // concurrent commit could mix two heads inside one plan. A
+    // re-listed it (61 listings / 534 ms of a 592 ms re-plan at a 10k-commit
+    // chain, SCALING.md round 19 "ingest steady state") — and two listings
+    // straddling a concurrent commit could mix two heads inside one plan. A
     // re-executed DataFrame still sees new commits: Spark calls
     // newScanBuilder per query execution.
     val pinned = version.orElse(VersionedTable.versions(table).lastOption)
@@ -3920,26 +3920,22 @@ private[sources] object GraftRowGroupFilter {
     }
 }
 
-/** Planning-time vectorization gates shared by the catalog's scans.
-  * `private[graft]` (not `[sources]`) only for the probe's measurement
-  * hook below.
-  */
-private[graft] object GraftVectorization {
+/** Planning-time vectorization gates shared by the catalog's scans. */
+private[sources] object GraftVectorization {
   private val copyable: Set[DataType] = Set(
     LongType, IntegerType, DoubleType, FloatType, BooleanType, StringType,
     BinaryType, TimestampType, TimestampNTZType, DateType,
     org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
 
-  /** Measurement hook for the nested-MOR A/B probe ONLY: false reverts
-    * [[copyOk]] to the flat-only gate, recreating the round-16
-    * row-decoder fallback for nested columns under tombstones so the
-    * columnar copy's win is quantifiable on one binary. Read from the
-    * ACTIVE SESSION's conf at each planning-time call — a JVM-global
-    * here could flip between a plan's vectorized= report and its
-    * execution, across every session in the process; a session conf is
-    * scoped to the probe's own session and consistent per plan
-    * compilation. No hot-path cost (planning only; executors see no
-    * active session and take the default).
+  /** `spark.graft.nestedMorCopy=false` reverts [[copyOk]] to the
+    * flat-only gate: nested columns under tombstones take the row decoder,
+    * which NestedTableSpec uses as the reference for the columnar copy. Read
+    * from the ACTIVE SESSION's conf at each planning-time call — a JVM-global
+    * here could flip between a plan's vectorized= report and its execution,
+    * across every session in the process; a session conf is scoped to the
+    * caller's own session and consistent per plan compilation. No hot-path
+    * cost (planning only; executors see no active session and take the
+    * default).
     */
   private def nestedMorCopyEnabled: Boolean =
     org.apache.spark.sql.SparkSession.getActiveSession
@@ -3973,30 +3969,6 @@ private[graft] object GraftVectorization {
         tombstonesAbs.filterNot(VersionedTable.isPosDeleteFile)
           .forall(TombstoneKeys.vectorizable))
 
-  /** Does the commit's footer carry every required column at EXACTLY the
-    * required type? (The strictest gate — used where a reader would
-    * infer its schema from the footer.)
-    */
-  def schemaExact(
-      required: StructType,
-      commitSchema: StructType): Boolean =
-    required.fields.forall(f =>
-      commitSchema.fields.exists(g => g.name == f.name && g.dataType == f.dataType))
-
-  /** [[schemaExact]] relaxed by the LOSSLESS widening promotions Spark
-    * 4's vectorized parquet reader performs natively inside the batch
-    * load (INT32 under a BIGINT snapshot column, FLOAT under DOUBLE):
-    * a widened table stays columnar — the explicit-schema initialize
-    * declares the wide type and the reader's updaters promote during
-    * decode, so no row-decoder fallback and no compaction tax.
-    */
-  /** Measurement hook for the widened-scan A/B probe ONLY: false makes
-    * [[schemaCompatible]] degrade to [[schemaExact]], recreating the
-    * round-14 row-decoder fallback so the promotion's win is
-    * quantifiable on one binary. Planning-time read, no hot-path cost.
-    */
-  @volatile private[graft] var widenPromotionEnabled = true
-
   /** Does the commit's type SERVE the required type? Equal, or — for
     * nested types — recursive COMPATIBILITY, BOTH directions of schema
     * drift: a required struct PRUNED to a subset of the commit's fields
@@ -4023,11 +3995,18 @@ private[graft] object GraftVectorization {
       case _ => false
     })
 
+  /** Does the commit's footer serve every required column? Exact types,
+    * relaxed by the LOSSLESS widening promotions Spark 4's vectorized
+    * parquet reader performs natively inside the batch load (INT32 under
+    * a BIGINT snapshot column, FLOAT under DOUBLE): a widened table stays
+    * columnar — the explicit-schema initialize declares the wide type and
+    * the reader's updaters promote during decode, so no row-decoder
+    * fallback and no compaction tax.
+    */
   def schemaCompatible(
       required: StructType,
       commitSchema: StructType): Boolean =
-    if (!widenPromotionEnabled) schemaExact(required, commitSchema)
-    else required.fields.forall(f =>
+    required.fields.forall(f =>
       commitSchema.fields.find(_.name == f.name) match {
         // an ADD COLUMN evolution gap: the vectorized reader serves the
         // absent column as a constant null vector (and the row decoder

@@ -118,27 +118,14 @@ object VersionedTable {
       s: java.util.stream.Stream[Path])(f: Iterator[Path] => A): A =
     try f(s.iterator.asScala) finally s.close()
 
-  /** Probe counters for the head-resolution listing: calls and total
-    * wall time. A manifest-directory listing is O(committed versions) —
-    * these make its per-plan cost visible to IngestProbe without a
-    * profiler.
-    */
-  val versionsCalls = new java.util.concurrent.atomic.AtomicLong()
-  val versionsNanos = new java.util.concurrent.atomic.AtomicLong()
-
   /** Committed versions, ascending (empty for a nonexistent table). */
   def versions(table: String): Seq[Long] = {
-    val t0 = System.nanoTime()
     val dir = manifestDir(table)
-    val r =
-      if (!Files.isDirectory(dir)) Seq.empty[Long]
-      else usingPaths(Files.list(dir))(_
-        .map(_.getFileName.toString)
-        .collect { case s if s.endsWith(".manifest") => s.stripSuffix(".manifest").toLong }
-        .toSeq.sorted)
-    versionsCalls.incrementAndGet()
-    versionsNanos.addAndGet(System.nanoTime() - t0)
-    r
+    if (!Files.isDirectory(dir)) Seq.empty[Long]
+    else usingPaths(Files.list(dir))(_
+      .map(_.getFileName.toString)
+      .collect { case s if s.endsWith(".manifest") => s.stripSuffix(".manifest").toLong }
+      .toSeq.sorted)
   }
 
   private def manifestLines(table: String, version: Long): Seq[String] =
@@ -175,15 +162,15 @@ object VersionedTable {
 
   // OWN-entry cache: a version's own (fresh) entry lines, O(fresh) per
   // version and immutable once published. Every head-down chain walk
-  // (selective planning, schema-dir enumeration, removal scans) needs
-  // these for each carry version — without the memo, a plan over a
-  // k-append chain re-reads k manifest FILES on every call (measured
-  // 816 ms per re-plan at a 10k-commit chain, IngestProbe). Total
+  // (selective planning, schema-dir enumeration, removal scans) needs these
+  // for each carry version — without the memo, a plan over a k-append chain
+  // re-reads k manifest FILES on every call (measured 816 ms per re-plan at
+  // a 10k-commit chain, SCALING.md round 19 "ingest steady state"). Total
   // retained size across a chain is O(entries ever appended) — the same
-  // order as ONE resolved snapshot — and, unlike [[resolvedEntries]],
-  // each value is O(fresh), so it is NOT subject to [[boundCache]]'s
-  // newest-versions window; it is invalidated with the version
-  // (vacuum expiry, materialization rewrite, dropTable).
+  // order as ONE resolved snapshot — and, unlike [[resolvedEntries]], each
+  // value is O(fresh), so it is NOT subject to [[boundCache]]'s
+  // newest-versions window; it is invalidated with the version (vacuum
+  // expiry, materialization rewrite, dropTable).
   private val ownEntriesCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[String]]()
 
@@ -278,9 +265,10 @@ object VersionedTable {
           // version) deliberately SURVIVE this window: every head-down
           // chain walk touches them for ALL chain versions, so evicting
           // them here turned each plan over a long append chain into
-          // O(chain) file re-reads (IngestProbe, 10k-commit chain:
-          // 816 ms re-plans). Both are invalidated with the version
-          // itself (vacuum expiry/materialization, dropTable).
+          // O(chain) file re-reads (10k-commit chain: 816 ms re-plans;
+          // SCALING.md round 19 "ingest steady state"). Both are invalidated
+          // with the version itself (vacuum expiry/materialization,
+          // dropTable).
         }
   }
 
@@ -412,7 +400,7 @@ object VersionedTable {
     * the full path. Removals along the chain apply ascending, exactly
     * like [[manifestEntries]].
     */
-  /** Probe/spec introspection: plans served by the seek-based fast path. */
+  /** Spec introspection: plans served by the seek-based fast path. */
   private[graft] val selectiveSeekHits =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -878,7 +866,7 @@ object VersionedTable {
     * resolution treats the list as a set, and grouping keeps the dirs'
     * relative first-appearance order.
     */
-  private[graft] def indexedEntryLayout(entries: Seq[String])
+  private def indexedEntryLayout(entries: Seq[String])
       : (Seq[String], Seq[String]) = {
     val (delE, dataE) = entries.partition(isDeleteEntry)
     val order = scala.collection.mutable.LinkedHashMap
@@ -1755,12 +1743,12 @@ object VersionedTable {
   //
   // The planning walks (zone-map pruning, $files, statistics) used to
   // re-parse every entry's stats string on EVERY query — ~4µs/file/plan,
-  // which is 0.4 s PER PLAN at a 100k-file snapshot (PlanLatencyProbe;
-  // SCALING.md round 14). Entry lists are immutable per (table, version)
-  // — the resolvedEntries invariant — so the PARSED forms memoize under
-  // the same key, bounded by the same newest-versions window
-  // ([[boundCache]]) and invalidated at the same sites (dropTable,
-  // vacuum expiry).
+  // which is 0.4 s PER PLAN at a 100k-file snapshot (SCALING.md round 14
+  // "planning latency vs manifest size"). Entry lists are immutable per
+  // (table, version) — the resolvedEntries invariant — so the PARSED forms
+  // memoize under the same key, bounded by the same newest-versions window
+  // ([[boundCache]]) and invalidated at the same sites (dropTable, vacuum
+  // expiry).
 
   private val parsedSnapshots =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), AnyRef]()
@@ -2141,8 +2129,9 @@ object VersionedTable {
     * .schema` (same SQLConf flags, same force-nullable convention) at
     * ~2 ms instead of the ~45 ms a DataFrame resolution costs — the
     * difference between a 482 s and a seconds-scale COLD plan on a
-    * 10k-commit ingest table (PlanLatencyProbe), because snapshot schema
-    * resolution reads one footer per commit directory.
+    * 10k-commit ingest table (SCALING.md round 16 "persisted planning
+    * headers"), because snapshot schema resolution reads one footer per
+    * commit directory.
     */
   private def footerSchema(file: Path): org.apache.spark.sql.types.StructType = {
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -2551,9 +2540,10 @@ object VersionedTable {
   val MorMaxDeleteKeys: Long = 10L * 1000 * 1000
 
   /** Default [[deleteWhere]] routing threshold — a COST crossover, not a
-    * memory bound. MorGateProbe (sf0.1, 9.6M rows, 5-iter medians)
-    * measured the STANDING per-scan read tax of equality tombstones vs
-    * positional vectors on identical data and identical deletes:
+    * memory bound. SCALING.md round 16 "the equality→positional cost
+    * crossover" (sf0.1, 9.6M rows, 5-iter medians) measured the STANDING
+    * per-scan read tax of equality tombstones vs positional vectors on
+    * identical data and identical deletes:
     *
     *   doomed keys   equality tax   positional tax   extra commit cost
     *       11,760        1.26×           0.94×            +0.26 s
@@ -2586,9 +2576,9 @@ object VersionedTable {
     * absolute reader-memory ceiling for explicit callers is
     * [[MorMaxDeleteKeys]]) is NOT committed as a KEY tombstone —
     * above the crossover every scan until compaction pays a growing
-    * per-row key-probe tax (1.14× at ~118k keys, 3.1× at ~1.2M —
-    * MorGateProbe), and above the ceiling every reader task would carry
-    * the whole key set in memory. Such a delete routes to
+    * per-row key-probe tax (1.14× at ~118k keys, 3.1× at ~1.2M — SCALING.md
+    * round 16), and above the ceiling every reader task would carry the whole
+    * key set in memory. Such a delete routes to
     * [[deleteWherePositional]]:
     * still additive (incremental/streaming consumers see an ordinary
     * delete commit), reader memory bounded by a per-file position BITMAP
@@ -2880,7 +2870,8 @@ object VersionedTable {
     val rowsOf = snapshotRowCounts(table, Some(head))
     // EQUALITY tombstones trigger on sight: every scan until compaction
     // pays a per-row key-probe tax that grows with the key count
-    // (MorGateProbe: 1.14× at ~118k keys, 3.1× at ~1.2M)
+    // (1.14× at ~118k keys, 3.1× at ~1.2M; SCALING.md round 16
+    // "the equality→positional cost crossover")
     val eqTombstoned = layout.count(_._3.exists(p => !isPosDeleteFile(p)))
     // POSITIONAL deletion-vector debt is WEIGHED, not binary: vectors
     // read at parity (~1.0× at every measured scale), so a small vector
@@ -2956,11 +2947,11 @@ object VersionedTable {
     }
     // MANIFEST-CHAIN debt: a long un-checkpointed append chain makes
     // every COLD plan walk O(chain) manifest files before the
-    // per-version memos warm (IngestProbe: ~0.1 ms/version of one-time
-    // cost — ~1 s at a 10k-commit chain). Checked LAST: every
-    // consolidation above already writes a self-contained manifest, so
-    // fixing a data debt resets the chain for free; this branch fires
-    // only when the data layout is healthy and ONLY metadata accreted.
+    // per-version memos warm (~0.1 ms/version of one-time cost — ~1 s
+    // at a 10k-commit chain; SCALING.md round 19 "ingest steady state").
+    // Checked LAST: every consolidation above already writes a self-contained
+    // manifest, so fixing a data debt resets the chain for free; this branch
+    // fires only when the data layout is healthy and ONLY metadata accreted.
     // The fix is metadata-only (checkpoint — no data I/O, no versions
     // expired, time travel intact).
     val chainDebt = chainLength(table, head) >= chainThreshold
@@ -3270,7 +3261,8 @@ object VersionedTable {
     // three older families for it before adding its own, and schema
     // hints override independently. The first plan after an append
     // therefore parses ONE manifest's headers, not the whole chain's
-    // (IngestProbe: the 10k-commit chain paid the full walk per append).
+    // (the 10k-commit chain paid the full walk per append; SCALING.md
+    // round 19 "ingest steady state").
     var stack = List.empty[Long] // ascending after the prepends
     var v: Option[Long] = Some(head)
     var acc: Headers = (Map.empty, Map.empty, Map.empty, Map.empty)
@@ -5333,9 +5325,10 @@ object VersionedTable {
     * expiring any version. The non-destructive chain reset (what Delta's
     * log checkpoint does): cold planning of the head, and of every
     * future append built on it, stops walking the accumulated carry
-    * chain (IngestProbe: ~0.1 ms per chain version of one-time cold
-    * cost), while every older version stays exactly time-travelable —
-    * unlike [[vacuum]], whose materialization is tied to expiry.
+    * chain (~0.1 ms per chain version of one-time cold cost; SCALING.md
+    * round 19 "ingest steady state"), while every older version stays exactly
+    * time-travelable — unlike [[vacuum]], whose materialization is tied to
+    * expiry.
     * Returns the checkpointed head version. No-op (returning the head)
     * when it is already self-contained.
     */

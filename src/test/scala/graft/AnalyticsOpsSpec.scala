@@ -160,6 +160,49 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     SparkEntry.resetSessionState(spark)
   }
 
+  test("ngramJaccardNearDup reuses its live cache entry on a repeated call") {
+    val sparkS = spark
+    import sparkS.implicits._
+    // QueryCache.cached persists a plan only when it has no live entry:
+    // a second call over the same frame (bench iterations share the
+    // session cache) must add no entry and must not re-register the
+    // cached plan (the CacheManager logs "Asked to cache already cached
+    // data" when asked to)
+    SparkEntry.resetSessionState(spark)
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "the quick brown fox jumps over the lazy dog near the river"),
+      (3L, "an entirely different sentence about spark caches and plans"))
+      .toDF("doc_id", "text")
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.CacheManager")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "query-cache-reuse", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    try {
+      val first = Dedup.ngramJaccardNearDup(docs).collect().toSeq
+      val entries = spark.sparkContext.getPersistentRDDs.keySet
+      assert(entries.nonEmpty, "the first call caches its shingle frame")
+      logger.addAppender(appender)
+      val second = try Dedup.ngramJaccardNearDup(docs).collect().toSeq
+        finally logger.removeAppender(appender)
+      assert(second == first)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == entries,
+        "the repeated call must add no cache entry")
+      assert(!warnings.stream().anyMatch(_.contains("already cached")),
+        s"the repeated call re-registered a cached plan: $warnings")
+    } finally {
+      appender.stop()
+      SparkEntry.resetSessionState(spark)
+    }
+  }
+
   test("bpeEncode applies the learned merges: hand-computed token counts") {
     val sparkS = spark
     import sparkS.implicits._

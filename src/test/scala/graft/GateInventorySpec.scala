@@ -2,28 +2,52 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Inventory of the `spark.graft.*` session-conf gates in the main
-  * sources. Every gate keeps a second execution path alive, so adding one
-  * means editing the expected set below, next to the gate's retirement
-  * plan in ROADMAP.md.
+/** Inventory of the `spark.graft.*` session-conf gates and of the
+  * entry-point mains in the main sources. Every gate keeps a second
+  * execution path alive, so adding one means editing the expected set
+  * below, next to the gate's retirement plan in ROADMAP.md; a new `main`
+  * is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
 
-  test("the main sources read exactly the three retained spark.graft gates") {
+  /** (path relative to src/main/scala, content) of every main source. */
+  private def mainSources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"run from the repository root: ${root.toAbsolutePath} is not a directory")
-    val key = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
     val walk = java.nio.file.Files.walk(root)
-    val found =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(_.toString.endsWith(".scala"))
-          .flatMap(p => key.findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1)))
-          .toSet
-      } finally walk.close()
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
+        .toList
+    } finally walk.close()
+  }
+
+  test("the main sources read exactly the three retained spark.graft gates") {
+    val key = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
+    val found = mainSources
+      .flatMap { case (_, src) => key.findAllMatchIn(src).map(_.group(1)) }
+      .toSet
     assert(found == Set("lpVoteRepartition", "nestedMorCopy", "parallelismFloor"),
       s"spark.graft gates in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the main sources declare exactly the six entry-point mains") {
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val obj = """(?m)^(?:private\[\w+\]\s+)?object\s+(\w+)""".r
+    val found = mainSources.flatMap { case (path, src) =>
+      val prefix = pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
+      val objects = obj.findAllMatchIn(src).map(m => m.start -> m.group(1)).toList
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        val owner = objects.takeWhile(_._1 < m.start).lastOption
+        assert(owner.nonEmpty, s"$path: def main( outside a top-level object")
+        prefix + owner.get._2
+      }
+    }.toSet
+    assert(found == Set("graft.Bench", "graft.Verify", "graft.PlanAudit",
+      "graft.etl.TradePipeline", "graft.tools.CcScale", "graft.tools.MakeScaleDocs"),
+      s"mains in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -1605,7 +1605,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     val r = root
     // LIGHT: a small vector dooms ~1% of rows — vectors read at parity
-    // (MorGateProbe), so keeping it beats a full rewrite
+    // (SCALING.md round 16 "the equality→positional cost crossover"), so
+    // keeping it beats a full rewrite
     val tl = s"$root/default/pdl"
     VersionedTable.commit(
       (1L to 10000L).map(k => (k, s"v$k")).toDF("k", "v").repartition(2),

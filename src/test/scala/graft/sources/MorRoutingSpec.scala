@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * default gate is the measured COST crossover ([[VersionedTable
   * .MorEqualityMaxKeys]]), not the old reader-memory ceiling — above it
   * every scan until compaction pays a growing per-row key-probe tax
-  * (MorGateProbe: 1.14× at ~118k keys, 3.1× at ~1.2M) while a positional
+  * (1.14× at ~118k keys, 3.1× at ~1.2M; SCALING.md round 16 "the
+  * equality→positional cost crossover") while a positional
   * vector reads at parity, so mid-size scan-derived deletes must commit
   * POSITIONAL by default. Explicit `maxKeys` callers (key-semantics
   * probes) can still force equality up to [[VersionedTable
