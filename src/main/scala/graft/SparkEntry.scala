@@ -1260,10 +1260,10 @@ object SparkEntry {
     }.mkString(" + ")
 
   /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible entries
-    * (`q_multimodal_decode` uses an opaque typed decoder;
-    * `q_etl_cleaned_trades` reads CSVs outside the sf dir) → the driver
-    * records a weaker rows-only check for those.
+    * the same parquet tables. An entry without SQL here gets a weaker
+    * rows-only check. Both `q_etl_*` entries have SQL, but it reads the
+    * fixed reference CSVs outside the sf dir, as the queries themselves
+    * do, so their checks need those files.
     */
   def oracleSql: Map[String, String] = Map(
     "q_scan_filter_project" ->
