@@ -903,9 +903,9 @@ object SparkEntry {
   private def etlResult(s: SparkSession): etl.TradePipeline.Result =
     etlMemo.computeIfAbsent(s, s2 =>
       etl.TradePipeline.run(s2,
-        "/root/reference/trades.csv",
-        "/root/reference/counterparty_fills.csv",
-        "/root/reference/symbols_reference.csv"))
+        s"${etl.TradePipeline.referenceDir}/trades.csv",
+        s"${etl.TradePipeline.referenceDir}/counterparty_fills.csv",
+        s"${etl.TradePipeline.referenceDir}/symbols_reference.csv"))
 
   /** Drop all session-lifetime state a registered query may have left
     * behind: the memoized ETL pipeline (and its persisted branch point),
@@ -1262,8 +1262,9 @@ object SparkEntry {
   /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. An entry without SQL here gets a weaker
     * rows-only check. Both `q_etl_*` entries have SQL, but it reads the
-    * fixed reference CSVs outside the sf dir, as the queries themselves
-    * do, so their checks need those files.
+    * reference CSVs under [[etl.TradePipeline.referenceDir]], outside the
+    * sf dir, as the queries themselves do, so their checks need those
+    * files.
     */
   def oracleSql: Map[String, String] = Map(
     "q_scan_filter_project" ->
@@ -4870,7 +4871,7 @@ object SparkEntry {
     // Scaladoc history before trusting this oracle.
     "q_etl_cleaned_trades" ->
       """WITH raw AS (
-        |  SELECT DISTINCT * FROM read_csv('/root/reference/trades.csv', header=true, all_varchar=true)),
+        |  SELECT DISTINCT * FROM read_csv('{reference_dir}/trades.csv', header=true, all_varchar=true)),
         |tq AS (
         |  SELECT * FROM raw WHERE trade_status <> 'CANCELLED'),
         |f AS (
@@ -4878,10 +4879,10 @@ object SparkEntry {
         |    CASE WHEN regexp_matches(trim(quantity), '^[+-]?[0-9]+$')
         |         THEN CAST(trim(quantity) AS INTEGER) END AS cp_quantity_int,
         |    TRY_CAST(price AS DOUBLE) AS cp_price_dec
-        |  FROM read_csv('/root/reference/counterparty_fills.csv', header=true, all_varchar=true)),
+        |  FROM read_csv('{reference_dir}/counterparty_fills.csv', header=true, all_varchar=true)),
         |sym AS (
         |  SELECT symbol, company_name, is_active
-        |  FROM read_csv('/root/reference/symbols_reference.csv', header=true, all_varchar=true)),
+        |  FROM read_csv('{reference_dir}/symbols_reference.csv', header=true, all_varchar=true)),
         |e AS (
         |  SELECT t.*, f.counterparty_symbol, f.cp_quantity_int, f.cp_price_dec,
         |    s.company_name, s.is_active,
@@ -4925,7 +4926,7 @@ object SparkEntry {
         |  CAST(round(CAST(price AS DECIMAL(28,18)), 2) AS DOUBLE) AS price,
         |  buyer_id, seller_id, counterparty_confirmed, discrepancy_flag
         |FROM c WHERE is_valid
-        |ORDER BY trade_id""".stripMargin,
+        |ORDER BY trade_id""".stripMargin.replace("{reference_dir}", etl.TradePipeline.referenceDir),
     // Invalid-side exceptions report (reference: etl_pipeline.py:395-410),
     // replaying the same dedup → cancel-filter → enrich → validate cascade
     // as q_etl_cleaned_trades. Exception codes join in the FIXED append
@@ -4938,7 +4939,7 @@ object SparkEntry {
     // raw field, so no escaping branch is needed.
     "q_etl_exceptions" ->
       """WITH raw AS (
-        |  SELECT DISTINCT * FROM read_csv('/root/reference/trades.csv', header=true, all_varchar=true)),
+        |  SELECT DISTINCT * FROM read_csv('{reference_dir}/trades.csv', header=true, all_varchar=true)),
         |tq AS (
         |  SELECT * FROM raw WHERE trade_status <> 'CANCELLED'),
         |f AS (
@@ -4946,10 +4947,10 @@ object SparkEntry {
         |    CASE WHEN regexp_matches(trim(quantity), '^[+-]?[0-9]+$')
         |         THEN CAST(trim(quantity) AS INTEGER) END AS cp_quantity_int,
         |    TRY_CAST(price AS DOUBLE) AS cp_price_dec
-        |  FROM read_csv('/root/reference/counterparty_fills.csv', header=true, all_varchar=true)),
+        |  FROM read_csv('{reference_dir}/counterparty_fills.csv', header=true, all_varchar=true)),
         |sym AS (
         |  SELECT symbol, company_name, is_active
-        |  FROM read_csv('/root/reference/symbols_reference.csv', header=true, all_varchar=true)),
+        |  FROM read_csv('{reference_dir}/symbols_reference.csv', header=true, all_varchar=true)),
         |e AS (
         |  SELECT t.*, s.company_name, s.is_active,
         |    CASE WHEN regexp_matches(trim(t.quantity), '^[+-]?[0-9]+$')
@@ -4988,6 +4989,6 @@ object SparkEntry {
         |    '"trade_status":"' || trade_status || '"') || '}' AS raw_data
         |FROM v
         |WHERE NOT (symbol_ok IS TRUE AND quantity_ok IS TRUE AND price_ok IS TRUE)
-        |ORDER BY record_id""".stripMargin,
+        |ORDER BY record_id""".stripMargin.replace("{reference_dir}", etl.TradePipeline.referenceDir),
   )
 }

@@ -17,6 +17,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object TradePipeline {
 
+  /** Directory of the reference inputs (`trades.csv`,
+    * `counterparty_fills.csv`, `symbols_reference.csv`), their
+    * `config.yaml` and golden JSON outputs: env `GRAFT_REFERENCE_DIR`,
+    * default `/root/reference`.
+    */
+  def referenceDir: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
   final case class Metrics(
       processedTrades: Long,
       duplicateTrades: Long,
@@ -151,7 +158,7 @@ object TradePipeline {
     * and prints the metrics.
     */
   def main(args: Array[String]): Unit = {
-    val inputDir = if (args.length > 0) args(0) else "/root/reference"
+    val inputDir = if (args.length > 0) args(0) else referenceDir
     val outDir = if (args.length > 1) args(1) else "target/etl_out"
     val cfg =
       if (args.length > 2) EtlConfig.fromYamlFile(args(2)) else EtlConfig.default

@@ -357,12 +357,20 @@ object TextExpressions {
     UTF8String.fromBytes(out)
   }
 
+  /** The error of an n-gram expression handed fewer than `n` tokens: its
+    * callers filter `size(ws) >= n`, so a shorter input is a caller bug,
+    * and no output would match the HOF formulation there. */
+  def tooFewTokens(expr: String, n: Int, len: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$expr needs at least $n tokens per row, got $len: filter size(ws) >= $n first")
+
   /** Word n-grams hashed to `hexChars`-char md5 hex prefixes in one
     * generated loop — exactly
     * `transform(sequence(1, size(ws) − n + 1), i →
     *    substring(md5(concat_ws(" ", slice(ws, i, n))), 1, hexChars))`
-    * for inputs with ≥ n tokens (callers filter; shorter inputs yield the
-    * single truncated-window gram, matching `max(len − n + 1, 1)`). The
+    * on its domain, inputs with ≥ n tokens. Callers filter
+    * `size(ws) >= n` first; a shorter input throws ([[tooFewTokens]]), as
+    * the HOF's descending `sequence` there has no meaning to match. The
     * HOF formulation evaluated interpreted: a boxed lambda, a slice
     * allocation, and a concat per window position (r20, guide §1.2
     * step 2). Used by the AllPairs set-similarity shingler and the
@@ -384,13 +392,13 @@ object TextExpressions {
     override def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val len = arr.numElements()
-      val out = new Array[Any](math.max(len - n + 1, 1))
+      if (len < n) throw TextExpressions.tooFewTokens(prettyName, n, len)
+      val out = new Array[Any](len - n + 1)
       var i = 0
       while (i < out.length) {
         val sb = new java.lang.StringBuilder()
         var j = i
-        val end = math.min(i + n, len)
-        while (j < end) {
+        while (j < i + n) {
           if (j > i) sb.append(' ')
           sb.append(arr.getUTF8String(j).toString)
           j += 1
@@ -408,7 +416,6 @@ object TextExpressions {
         val sb = ctx.freshName("sb")
         val i = ctx.freshName("i")
         val j = ctx.freshName("j")
-        val end = ctx.freshName("end")
         val md = ctx.addMutableState("java.security.MessageDigest", "hexNgramMd5",
           v => s"""try { $v = java.security.MessageDigest.getInstance("MD5"); }
                   |catch (java.security.NoSuchAlgorithmException e) {
@@ -416,11 +423,13 @@ object TextExpressions {
                   |}""".stripMargin)
         s"""
            |int $len = $a.numElements();
-           |Object[] $out = new Object[Math.max($len - ${n - 1}, 1)];
+           |if ($len < $n) {
+           |  throw graft.functions.TextExpressions.tooFewTokens("$prettyName", $n, $len);
+           |}
+           |Object[] $out = new Object[$len - ${n - 1}];
            |for (int $i = 0; $i < $out.length; $i++) {
            |  StringBuilder $sb = new StringBuilder();
-           |  int $end = Math.min($i + $n, $len);
-           |  for (int $j = $i; $j < $end; $j++) {
+           |  for (int $j = $i; $j < $i + $n; $j++) {
            |    if ($j > $i) $sb.append(' ');
            |    $sb.append($a.getUTF8String($j).toString());
            |  }
@@ -446,10 +455,9 @@ object TextExpressions {
     * where mask d = −1 is the unmasked gram and d ∈ [0, n) replaces the
     * d-th gram token with "#", hashed to a `hexChars`-char md5 prefix —
     * in ONE generated loop per row. The HOF form paid two nested boxed
-    * lambdas, two slice allocations and a concat per (window, mask);
-    * callers filter len ≥ n (the HOF's `sequence(1, len−n+1)` would run
-    * DESCENDING below that, so the native form's empty output only has to
-    * match on the filtered domain).
+    * lambdas, two slice allocations and a concat per (window, mask).
+    * Callers filter len ≥ n; a shorter input throws ([[tooFewTokens]]),
+    * since the HOF's `sequence(1, len−n+1)` runs DESCENDING below that.
     */
   case class FuzzyVariantsExpr(child: Expression, n: Int, hexChars: Int)
       extends UnaryExpression {
@@ -470,7 +478,8 @@ object TextExpressions {
     override def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val len = arr.numElements()
-      val w = math.max(len - n + 1, 0)
+      if (len < n) throw TextExpressions.tooFewTokens(prettyName, n, len)
+      val w = len - n + 1
       val out = new Array[Any](w * (n + 1))
       var idx = 0
       var i = 0
@@ -512,7 +521,10 @@ object TextExpressions {
                   |}""".stripMargin)
         s"""
            |int $len = $a.numElements();
-           |int $w = Math.max($len - ${n - 1}, 0);
+           |if ($len < $n) {
+           |  throw graft.functions.TextExpressions.tooFewTokens("$prettyName", $n, $len);
+           |}
+           |int $w = $len - ${n - 1};
            |Object[] $out = new Object[$w * ${n + 1}];
            |int $idx = 0;
            |for (int $i = 0; $i < $w; $i++) {

@@ -754,13 +754,6 @@ object Dedup {
     */
   val lastRounds = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
-  /** Whether the most recent CC run under each [[lastRounds]] key reached
-    * its fixpoint — the programmatic non-convergence signal (the matching
-    * loud failure is the `strict` throw; this map serves callers that opt
-    * out of throwing but still must not trust truncated labels silently).
-    */
-  val lastConverged = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
   /** localCheckpoint + leaf-stats reset — the iterative-fixpoint
     * checkpoint. `localCheckpoint` alone truncates lineage but the
     * `LogicalRDD` leaf inherits the origin plan's *statistics*; across
@@ -873,13 +866,14 @@ object Dedup {
     *   3. contract: edges' = distinct (m(u), m(v)), self-loops dropped.
     * m maps every label to a label inside its own component and never
     * above it, so the fixpoint (no label changed) is exactly "every label
-    * is its component min". The loop also stops when step 3 leaves no
-    * edge: the labels of each component are then one label, which can
-    * only be its min (the min vertex never moves), so the round that
-    * would confirm it is skipped; the contraction's checkpoint job counts
-    * its edges at no extra job. Only the active set (edge endpoints) is
-    * iterated; every other vertex is a singleton, restored by one final
-    * join.
+    * is its component min". The loop stops when step 3 leaves no edge:
+    * the labels of each component are then one label, which can only be
+    * its min (the min vertex never moves). That edge count is the loop's
+    * one signal: a round changes some label exactly when its input
+    * quotient has an edge with two distinct endpoints, and the previous
+    * round's contraction checkpoint job has counted those edges at no
+    * extra job. Only the active set (edge endpoints) is iterated; every
+    * other vertex is a singleton, restored by one final join.
     *
     * Rounds: a single-partition input converges in 1 (the forest leaves
     * one star per component, which one round relabels and contracts
@@ -891,15 +885,15 @@ object Dedup {
     * finishes on [[connectedComponentsStars]] (O(log n) on any graph) over
     * the contracted quotient and composes the labels, which is sound
     * because the quotient's component mins are the original component
-    * mins. `maxIter` bounds both phases together; with `strict` a
-    * truncated fixpoint throws instead of mislabelling.
+    * mins. `maxIter` bounds both phases together; a truncated fixpoint
+    * throws instead of mislabelling.
     *
-    * Each round materializes three frames: the compose (which also
-    * computes m), the relabelled labels (by the changed count) and the
-    * contracted edges, which run overlapped with the count on a thread
-    * that carries the caller's job group. Design
-    * history and measurements: OPTIMIZATION_r19.md §2, OPTIMIZATION_r20.md
-    * §4, §10 and "connectedComponents design notes".
+    * Each round runs two jobs on the caller's thread: the compose (which
+    * also computes m) and the counted contraction. The relabelled labels
+    * are a lazy checkpoint that the final vertex join (or the escalation)
+    * materializes. Design history and measurements: OPTIMIZATION_r19.md
+    * §2, OPTIMIZATION_r20.md §4, §10 and "connectedComponents design
+    * notes".
     *
     * Precondition: every endpoint in `pairs` is a row of `vertices`. The
     * output has one row per vertex; an endpoint missing from `vertices`
@@ -909,13 +903,13 @@ object Dedup {
   private[graft] def connectedComponents(
       pairs: DataFrame,
       vertices: DataFrame,
-      maxIter: Int = 50,
-      strict: Boolean = true): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val pa = pairs.columns(0)
     val pb = pairs.columns(1)
     // every round's frames are checkpointed (freshCheckpoint): lineage and
     // planning cost stay constant per round. The input edges and labels are
-    // lazy: round 1's compose and count jobs materialize them.
+    // lazy: round 1's compose job materializes the edges, the final vertex
+    // join the labels.
     var edges = freshCheckpoint(
       localSpanningForest(pairs.select(col(pa).as("u"), col(pb).as("v"))),
       eager = false)
@@ -925,12 +919,12 @@ object Dedup {
       edges.select(explode(array(col("u"), col("v"))).as("id")).distinct()
         .withColumn("label", col("id")),
       eager = false)
-    var changed = 1L
-    // an empty contracted edge set means every label already is its
-    // component min: the next round could change nothing, so it is skipped
-    var quotientEmpty = false
+    // the contraction's edge count is the only loop signal: round k ≥ 2
+    // changes some label exactly when its input quotient (round k−1's
+    // contraction, self-loop-free) has an edge, and round 1 always runs
+    var quotientEdges = -1L
     var it = 0
-    while (changed > 0 && !quotientEmpty && it < math.min(EscalateAfter, maxIter)) {
+    while (quotientEdges != 0 && it < math.min(EscalateAfter, maxIter)) {
       // m(L) = min(L, quotient neighbours of L), both edge directions. Lazy:
       // its one consumer, the compose, materializes it in the same job.
       val nbrMin0 = freshCheckpoint(edges.select(col("u").as("l"), col("v").as("n"))
@@ -949,59 +943,33 @@ object Dedup {
             col("m") === col("jl"), "left")
           .select(col("l"), coalesce(col("jm"), col("m")).as("m")))
       // relabel every vertex through m (left join: labels whose
-      // supervertex has no quotient neighbours keep their label)
-      val updated = freshCheckpoint(labels
+      // supervertex has no quotient neighbours keep their label). Lazy:
+      // the final vertex join or the escalation materializes it.
+      labels = freshCheckpoint(labels
         .join(nbrMin.select(col("l").as("label"), col("m")), Seq("label"), "left")
+        .select(col("id"), coalesce(col("m"), col("label")).as("label")),
+        eager = false)
+      // contract the edge set through m: self-loops vanish, merged
+      // components stop costing anything; its checkpoint job counts it
+      val (next, n) = GraftSqlInternals.localCheckpointCounted(edges
+        .join(nbrMin.select(col("l").as("u"), col("m").as("mu")), Seq("u"), "left")
+        .join(nbrMin.select(col("l").as("v"), col("m").as("mv")), Seq("v"), "left")
         .select(
-          col("id"),
-          col("label"),
-          coalesce(col("m"), col("label")).as("new_label")),
-        eager = false) // lazy: the count below materializes it
-      // contract the edge set through the new supervertex mapping (self-loops
-      // vanish, merged components stop costing anything). It needs only the
-      // checkpointed nbrMin and edges, so it runs while the count job
-      // drains; a round that changes no label discards it.
-      val contractFut = GraftSqlInternals.withCallerProperties(pairs.sparkSession) {
-        val mapped = nbrMin.select(col("l"), col("m"))
-        GraftSqlInternals.localCheckpointCounted(edges
-          .join(mapped.select(col("l").as("u"), col("m").as("mu")), Seq("u"), "left")
-          .join(mapped.select(col("l").as("v"), col("m").as("mv")), Seq("v"), "left")
-          .select(
-            coalesce(col("mu"), col("u")).as("u"),
-            coalesce(col("mv"), col("v")).as("v"))
-          .filter(col("u") =!= col("v"))
-          .distinct())
-      }
-      changed =
-        try updated.filter(col("new_label") < col("label")).count()
-        catch {
-          case e: Throwable =>
-            // drain the overlapped leg before propagating: an abandoned
-            // contraction racing a caller's resetSessionState surfaces
-            // confusing checkpoint-block errors
-            drain(contractFut)
-            throw e
-        }
-      labels = updated.select(col("id"), col("new_label").as("label"))
-      if (changed > 0) {
-        val (next, quotientEdges) = Await.result(contractFut, Duration.Inf)
-        edges = next
-        quotientEmpty = quotientEdges == 0
-      } else
-        // converged: the contraction is unused, so its failure must not
-        // fail the run; it is only waited for
-        drain(contractFut)
+          coalesce(col("mu"), col("u")).as("u"),
+          coalesce(col("mv"), col("v")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct())
+      edges = next
+      quotientEdges = n
       it += 1
     }
-    val converged = changed == 0 || quotientEmpty
     lastRounds.put("cc_contraction", it)
-    lastConverged.put("cc_contraction", converged)
-    if (!converged) {
+    if (quotientEdges != 0) {
       // escalate: stars over the contracted quotient, with the remaining
       // budget and its own rounds key; label(v) := stars(label(v))
       val quotient = connectedComponentsStars(
         edges, labels.select(col("label")).distinct(), maxIter - it,
-        strict, roundsKey = "cc_contraction_escalated")
+        roundsKey = "cc_contraction_escalated")
       labels = labels
         .join(
           quotient.select(col("doc_id").as("label"), col("cluster_id")),
@@ -1124,7 +1092,6 @@ object Dedup {
       pairs: DataFrame,
       vertices: DataFrame,
       maxIter: Int = 50,
-      strict: Boolean = true,
       roundsKey: String = "cc_stars"): DataFrame = {
     // lazy input checkpoint: the initial fingerprint aggregate below
     // materializes it, so no separate job precedes the first pass
@@ -1175,16 +1142,9 @@ object Dedup {
       it += 1
     }
     lastRounds.put(roundsKey, it)
-    lastConverged.put(roundsKey, converged)
-    if (!converged) {
-      // a truncated fixpoint would MISLABEL silently — the default
-      // contract is to fail the job; `strict = false` callers get the
-      // stderr warning plus the lastConverged flag and own the risk
-      val msg =
-        s"connectedComponentsStars ($roundsKey) did NOT converge in $maxIter iterations"
-      if (strict) throw new IllegalStateException(s"[graft] $msg")
-      System.err.println(s"[graft] $msg")
-    }
+    // a truncated fixpoint would MISLABEL silently, so it fails the job
+    if (!converged) throw new IllegalStateException(
+      s"[graft] connectedComponentsStars ($roundsKey) did NOT converge in $maxIter iterations")
     // fixpoint is a star per component: every non-min vertex carries one
     // (v, min) edge; min vertices and singletons label themselves
     val labels = edges.groupBy("hi").agg(min(col("lo")).as("m"))

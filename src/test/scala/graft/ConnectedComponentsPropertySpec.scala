@@ -90,6 +90,50 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("contraction rounds and labels match the driver-side quotient model") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val nVerts = 64
+    val edgeGen = for {
+      density <- Gen.chooseNum(1, 50)
+      edges <- Gen.listOfN(density, for {
+        a <- Gen.chooseNum(0, nVerts - 1)
+        b <- Gen.chooseNum(0, nVerts - 1)
+        if a != b
+      } yield (a.toLong, b.toLong))
+    } yield edges
+    def chain(n: Long) = (0L until n - 1).map(i => (i, i + 1))
+    // self-loops, and one row with a null endpoint that links nothing
+    val loops = Seq((3L, 3L), (3L, 7L), (9L, 9L), (7L, 12L), (20L, 20L))
+    def rows(e: Seq[(Long, Long)]): Seq[(Option[Long], Option[Long])] =
+      e.map { case (a, b) => (Some(a), Some(b)) }
+    val cases = samples(edgeGen, 3).zipWithIndex.map { case (e, i) => s"random $i" -> rows(e) } ++ Seq(
+      "20-chain" -> rows(chain(20)),
+      "40-chain" -> rows(chain(40)),
+      "64-chain" -> rows(chain(64)),
+      "self-loops" -> rows(loops),
+      "self-loops + null" -> (rows(loops) :+ ((Some(5L), None))),
+      // no edge between distinct vertices: round 1 changes no label
+      "only self-loops + null" -> (rows(Seq((3L, 3L), (9L, 9L))) :+ ((Some(5L), None))))
+    val vertsDf = (0L until nVerts.toLong).toDF("doc_id")
+    val modelRounds = cases.map { case (name, input) =>
+      val edges = input.collect { case (Some(a), Some(b)) => (a, b) }
+      // one edge per partition: the local spanning forest leaves each edge as it is
+      val pairsDf = sparkS.sparkContext.parallelize(input, input.size).toDF("doc_a", "doc_b")
+      val got = Dedup.connectedComponents(pairsDf, vertsDf)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      assert(got == Reference.componentRows(0L until nVerts.toLong, edges),
+        s"$name: labels diverge from union-find")
+      val want = Reference.contractionRounds(edges)
+      assert(Dedup.lastRounds.get("cc_contraction") == want,
+        s"$name: ${Dedup.lastRounds.get("cc_contraction")} contraction rounds, the model $want")
+      name -> want
+    }.toMap
+    info(s"contraction rounds: $modelRounds")
+    assert(modelRounds("64-chain") == Dedup.EscalateAfter, s"64-chain must escalate: $modelRounds")
+    assert(modelRounds("20-chain") < Dedup.EscalateAfter, s"20-chain must not escalate: $modelRounds")
+  }
+
   test("every job of one CC call carries the caller's job group") {
     val sparkS = spark
     import sparkS.implicits._
@@ -99,11 +143,14 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     val warm = (1 to 8).map(_ => scala.concurrent.Future(Thread.sleep(50))(
       scala.concurrent.ExecutionContext.global))
     warm.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
-    // one edge per partition keeps the loop running several rounds, each
-    // with an overlapped contraction
+    // one edge per partition keeps the loop running several rounds
     val chain = (0L until 39L).map(i => (i, i + 1))
     val pairsDf = sc.parallelize(chain, chain.size).toDF("doc_a", "doc_b")
     val vertsDf = (0L until 40L).toDF("doc_id")
+    // centralKeep runs its PageRank leg on a pool thread
+    val dup = "the quick brown fox jumps over the lazy dog again and again"
+    val docs = Seq((1L, dup), (2L, dup), (3L, "completely unrelated text about spark engines"))
+      .toDF("doc_id", "text")
     org.apache.spark.GraftTestAccess.drainListenerBus(sc)
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -113,13 +160,18 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("cc-caller-group", "connected components under a job group")
-      try Dedup.connectedComponents(pairsDf, vertsDf).collect()
-      finally sc.clearJobGroup()
+      try {
+        Dedup.connectedComponents(pairsDf, vertsDf).collect()
+        Dedup.centralKeep(docs).collect()
+      } finally sc.clearJobGroup()
       org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
+    } finally {
+      sc.removeSparkListener(listener)
+      SparkEntry.resetSessionState(sparkS)
+    }
     import scala.jdk.CollectionConverters._
     val seen = groups.asScala.toSeq
-    assert(Dedup.lastRounds.get("cc_contraction") >= 2, "expected overlapped rounds")
+    assert(Dedup.lastRounds.get("cc_contraction") >= 2, "expected several rounds")
     val outside = seen.count(_ != "cc-caller-group")
     assert(seen.nonEmpty && outside == 0,
       s"$outside of ${seen.size} jobs ran outside the caller's job group")
@@ -214,10 +266,11 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     // a 511-hop quotient chain cannot converge inside the contraction
     // budget, so this run must have taken the escalation path — and must
     // record it under its OWN key (not clobber a dedicated stars query's
-    // cc_stars round count) and report the escalated fixpoint converged
+    // cc_stars round count); getting here without a throw proves the
+    // escalated fixpoint converged
     assert(Dedup.lastRounds.get("cc_contraction") == Dedup.EscalateAfter)
-    assert(Dedup.lastConverged.get("cc_contraction_escalated"),
-      "escalated stars phase should reach its fixpoint")
+    assert(Dedup.lastRounds.get("cc_contraction_escalated") > 0,
+      "escalated stars phase should have run")
     val stars = Dedup.connectedComponentsStars(pairsDf, vertsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(contraction == stars)
@@ -231,16 +284,12 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
     // one edge per partition: the local spanning forest cannot shorten it
     val pairsDf = sparkS.sparkContext.parallelize(chain, chain.size).toDF("doc_a", "doc_b")
     val vertsDf = (0L until 64L).toDF("doc_id")
-    // strict (the default): maxIter exhaustion throws — a silently
-    // truncated fixpoint would hand wrong cluster labels downstream
+    // maxIter exhaustion throws — a silently truncated fixpoint would
+    // hand wrong cluster labels downstream
     val ex = intercept[IllegalStateException] {
       Dedup.connectedComponentsStars(pairsDf, vertsDf, maxIter = 1).collect()
     }
     assert(ex.getMessage.contains("did NOT converge"))
-    // opt-out callers still get a programmatic signal, not just stderr
-    Dedup.connectedComponentsStars(pairsDf, vertsDf, maxIter = 1, strict = false)
-      .collect()
-    assert(!Dedup.lastConverged.get("cc_stars"))
     // the contraction entry point inherits the contract through the
     // escalation path: a tiny total budget exhausts in the stars phase
     intercept[IllegalStateException] {

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class EtlConfigSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
+  private val refDir = TradePipeline.referenceDir
 
   test("parses the reference config.yaml exactly") {
-    val cfg = EtlConfig.fromYamlFile("/root/reference/config.yaml")
+    val cfg = EtlConfig.fromYamlFile(s"$refDir/config.yaml")
     assert(cfg == EtlConfig.default)
     assert(cfg.validation.priceDiscrepancyThresholdExclusive == 0.01)
     assert(cfg.validation.priceDecimalPlaces == 2)
@@ -36,9 +37,9 @@ class EtlConfigSpec extends AnyFunSuite {
       filterCancelledTrades = false, filterDuplicates = false))
     val r = TradePipeline.run(
       spark,
-      "/root/reference/trades.csv",
-      "/root/reference/counterparty_fills.csv",
-      "/root/reference/symbols_reference.csv",
+      s"$refDir/trades.csv",
+      s"$refDir/counterparty_fills.csv",
+      s"$refDir/symbols_reference.csv",
       noFilters)
     assert(r.metrics.processedTrades == 10981L)
     // The reference IDENTIFIES both metrics regardless of the toggles
@@ -58,9 +59,9 @@ class EtlConfigSpec extends AnyFunSuite {
       EtlConfig.default.validation.copy(priceDiscrepancyThresholdExclusive = 1e9))
     val r = TradePipeline.run(
       spark,
-      "/root/reference/trades.csv",
-      "/root/reference/counterparty_fills.csv",
-      "/root/reference/symbols_reference.csv",
+      s"$refDir/trades.csv",
+      s"$refDir/counterparty_fills.csv",
+      s"$refDir/symbols_reference.csv",
       wide)
     // price deltas can no longer trip the flag; only quantity/symbol
     // mismatches remain

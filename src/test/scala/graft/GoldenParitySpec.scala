@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   */
 class GoldenParitySpec extends AnyFunSuite {
 
-  private val refDir = "/root/reference"
+  private val refDir = TradePipeline.referenceDir
   private lazy val result = TradePipeline.run(
     SparkTestBase.spark,
     s"$refDir/trades.csv",

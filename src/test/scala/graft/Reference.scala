@@ -133,6 +133,30 @@ object Reference {
     (verts.map(v => v -> label.getOrElse(v, v)).toMap, rounds)
   }
 
+  /** Rounds [[Dedup.connectedComponents]]' contraction loop takes on raw
+    * `edges` that its local forest leaves as they are (one edge per input
+    * partition): per round, the supervertex min m(l) = min(l, neighbours
+    * of l) composed once with itself (m := m∘m), then the edges contract
+    * to the distinct (m(u), m(v)) with self-loops dropped. Relabelling the
+    * vertices through m moves no edge, so it leaves the count alone. The
+    * loop stops after the first empty contraction, or after
+    * [[Dedup.EscalateAfter]] rounds (the escalation point). A row with a
+    * null endpoint links nothing; callers leave it out.
+    */
+  def contractionRounds(edges: Seq[(Long, Long)]): Int = {
+    var e = edges.distinct
+    var rounds = 0
+    var more = true
+    while (more) {
+      val m0 = bidirected(e).groupBy(_._1).map { case (l, ns) => l -> math.min(l, ns.map(_._2).min) }
+      val m = m0.map { case (l, x) => l -> m0(x) }
+      e = e.map { case (u, v) => (m(u), m(v)) }.filter { case (u, v) => u != v }.distinct
+      rounds += 1
+      more = e.nonEmpty && rounds < Dedup.EscalateAfter
+    }
+    rounds
+  }
+
   // ---- native expressions: the higher-order-function chains -------------
 
   // the MinHash universal-hash family, stated independently of Dedup's

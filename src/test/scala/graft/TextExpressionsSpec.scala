@@ -218,8 +218,9 @@ class TextExpressionsSpec extends AnyFunSuite {
       "shingles" -> sh,
       "minhash_mins" -> TextExpressions.minhashMins(sh,
         Seq(1000003L, 1000005L, 1000007L), Seq(12345L, 12352L, 12359L), 2147483647L),
-      "hex_ngrams" -> TextExpressions.hexNgrams(words, 2, 16),
-      "fuzzy_variants" -> TextExpressions.fuzzyVariants(words, 2, 8),
+      // the n-gram expressions on their domain, as every caller filters it
+      "hex_ngrams" -> when(size(words) >= 2, TextExpressions.hexNgrams(words, 2, 16)),
+      "fuzzy_variants" -> when(size(words) >= 2, TextExpressions.fuzzyVariants(words, 2, 8)),
       "alnum_tokens" -> words,
       "hashed_ngrams" -> TextExpressions.hashedNgrams(words, 2),
       "array_jaccard" -> TextExpressions.arrayJaccard(words, col("other")))
@@ -237,6 +238,32 @@ class TextExpressionsSpec extends AnyFunSuite {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(eval())
     exprs.foreach { case (name, _) =>
       assert(generated(name) == interpreted(name), s"$name: codegen and interpreted differ")
+    }
+  }
+
+  test("n-gram expressions fail loudly on fewer than n tokens, codegen and interpreted") {
+    val sparkS = spark
+    import org.apache.spark.sql.types._
+    // RDD-backed, so the projection is not folded away on the driver
+    val schema = StructType(Seq(StructField("ws", ArrayType(StringType, containsNull = false))))
+    val input = sparkS.createDataFrame(sparkS.sparkContext.parallelize(
+      Seq(org.apache.spark.sql.Row(Seq("only", "two"))), 1), schema)
+    val exprs = Seq(
+      "hex_ngrams" -> TextExpressions.hexNgrams(col("ws"), 3, 16),
+      "fuzzy_variants" -> TextExpressions.fuzzyVariants(col("ws"), 3, 16))
+    val modes = Seq(
+      "codegen" -> Seq(
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      "interpreted" -> Seq(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((name, e) <- exprs; (mode, conf) <- modes) {
+      val ex = intercept[Exception](withSQLConf(conf: _*)(input.select(e).collect()))
+      val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(s"$name needs at least 3 tokens per row, got 2")),
+        s"$name ($mode): expected the too-few-tokens error, got $ex")
     }
   }
 
