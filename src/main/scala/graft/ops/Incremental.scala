@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * keyed merge/upsert, incremental aggregate maintenance, snapshot
   * diffing (change data feed), and small-file compaction planning.
   *
-  * The reference pipeline (`/root/reference/etl_pipeline.py:62-421`) is a
+  * The reference pipeline (`etl_pipeline.py:62-421`) is a
   * full-recompute batch; these ops are the generalization that lets the
   * same engine keep a standing table current by processing only deltas.
   * All of them are declarative DataFrame plans — the heavy lifting
@@ -397,8 +397,8 @@ object Incremental {
   def docsCompactionPlan(documents: DataFrame): DataFrame =
     compactionPlan(documents, "doc_id", "n_chars", 64000L)
 
-  /** Registered q_table_timetravel body: build (pay-once per session and
-    * input, like the bucketed-join ingest) a [[graft.sources.VersionedTable]]
+  /** Registered q_table_timetravel body: build (a pay-once
+    * [[QueryCache.fixture]], like the bucketed-join ingest) a [[graft.sources.VersionedTable]]
     * with three commits — v1 = the base snapshot, v2 = metadata-only
     * APPEND of the held-out inserts (so v2 is exactly every order), v3 =
     * logical OVERWRITE with the CDC-applied state — then read all three
@@ -408,11 +408,8 @@ object Incremental {
     */
   def ordersTimeTravel(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"tt:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_v"
+    val table = QueryCache.fixture("tt", orders) { f =>
+      val t = s"${f.dir}/orders_v"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       val inserts = orders.filter(col("o_orderkey") % 4 === 3)
         .select(col("o_orderkey"), lit("NEW").as("status"),
@@ -421,7 +418,7 @@ object Incremental {
       graft.sources.VersionedTable.commit(
         ordersCdcApply(orders).drop("src"), t, append = false)
       t
-    })
+    }
     versionAggregates(spark, table, 3L)
   }
 
@@ -443,11 +440,8 @@ object Incremental {
     */
   private def ordersMorTable(orders: DataFrame): String = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    versionedTables.computeIfAbsent((spark, s"mor:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_mor"
+    QueryCache.fixture("mor", orders) { f =>
+      val t = s"${f.dir}/orders_mor"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       graft.sources.VersionedTable.deleteWhere(
         spark, t, col("o_orderkey") % 20 === 5, "o_orderkey")
@@ -458,7 +452,7 @@ object Incremental {
       graft.sources.VersionedTable.commit(reinserts, t, append = true)
       graft.sources.VersionedTable.compact(spark, t)
       t
-    })
+    }
   }
 
   /** Registered q_table_posdel body: the POSITIONAL deletion-vector
@@ -492,11 +486,8 @@ object Incremental {
     */
   private def ordersPosDelTable(orders: DataFrame): String = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    versionedTables.computeIfAbsent((spark, s"pdv:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_pdv"
+    QueryCache.fixture("pdv", orders) { f =>
+      val t = s"${f.dir}/orders_pdv"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       graft.sources.VersionedTable.deleteWherePositional(
         spark, t, col("price_c") % 7L < 2L)
@@ -506,7 +497,7 @@ object Incremental {
       graft.sources.VersionedTable.commit(inserts, t, append = true)
       graft.sources.VersionedTable.compact(spark, t)
       t
-    })
+    }
   }
 
   /** Registered q_posdel_changes body: CDF over a positional delete —
@@ -597,24 +588,16 @@ object Incremental {
     // that ignores the cluster's partitioning buys nothing
     val buckets = bucketsOpt.getOrElse(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val base = bucketedBases.computeIfAbsent((spark, s"cb:$inputKey:$buckets"), { _ =>
-      val wh = java.nio.file.Files.createTempDirectory("graft_bucketed_cdc")
-      deleteRecursivelyOnExit(wh)
-      val t = s"g_orders_cdcb_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val base = QueryCache.fixture(s"cb_$buckets", orders) { f =>
+      val t = s"g_orders_cdcb_${f.tag}"
       ordersCdcBase(orders).write.format("parquet")
         .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$wh/base").saveAsTable(t)
+        .option("path", s"${f.dir}/base").saveAsTable(t)
       t
-    })
+    }
     cdcApply(spark.table(base).hint("merge"), ordersCdcChanges(orders), "o_orderkey")
       .orderBy("o_orderkey")
   }
-
-  private val bucketedBases =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-  private val bucketedBaseSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Registered q_table_pruned body: zone-map data skipping on the
     * versioned table. The pay-once build commits orders range-clustered
@@ -629,18 +612,15 @@ object Incremental {
     */
   def ordersPrunedRead(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"pr:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_pr"
+    val table = QueryCache.fixture("pr", orders) { f =>
+      val t = s"${f.dir}/orders_pr"
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
         t, append = false, statsCols = Seq("o_orderkey"))
       t
-    })
+    }
     graft.sources.VersionedTable
       .readWhere(spark, table, None, "o_orderkey", 10000L, 20000L)
       .orderBy("o_orderkey")
@@ -655,16 +635,13 @@ object Incremental {
     */
   def ordersTableMerge(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"mg:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_mg"
+    val table = QueryCache.fixture("mg", orders) { f =>
+      val t = s"${f.dir}/orders_mg"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       graft.sources.VersionedTable.mergeInto(
         spark, t, ordersCdcChanges(orders), "o_orderkey")
       t
-    })
+    }
     graft.sources.VersionedTable.read(spark, table).orderBy("o_orderkey")
   }
 
@@ -678,11 +655,8 @@ object Incremental {
     */
   def ordersTableOptimize(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"opt:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_opt"
+    val table = QueryCache.fixture("opt", orders) { f =>
+      val t = s"${f.dir}/orders_opt"
       val base = ordersCdcBase(orders)
       (0L to 2L).foreach { m =>
         graft.sources.VersionedTable.commit(
@@ -693,7 +667,7 @@ object Incremental {
       graft.sources.VersionedTable.optimize(
         spark, t, "o_orderkey", targetRowsPerFile = 20000L)
       t
-    })
+    }
     graft.sources.VersionedTable
       .readWhere(spark, table, None, "o_orderkey", 1000L, 3000L)
       .groupBy("status")
@@ -724,11 +698,8 @@ object Incremental {
     */
   def ordersTableConstraints(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"ck:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_ck"
+    val table = QueryCache.fixture("ck", orders) { f =>
+      val t = s"${f.dir}/orders_ck"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       graft.sources.VersionedTable.addCheckConstraint(
         spark, t, "price_nonneg", "price_c >= 0")
@@ -748,26 +719,9 @@ object Incremental {
         graft.sources.VersionedTable.commit(
           dirty.filter(col("price_c") >= 0), t, append = true)
       t
-    })
+    }
     graft.sources.VersionedTable.read(spark, table).orderBy("o_orderkey")
   }
-
-  private val catalogRoots =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, String]()
-
-  /** Per-session catalog root: registers the `gtab` SQL catalog
-    * ([[graft.sources.GraftCatalog]]) over a temp directory once, so
-    * every catalog-backed query shares one namespace. Table names carry
-    * a per-input suffix (two input sets never collide).
-    */
-  private def catalogRoot(spark: org.apache.spark.sql.SparkSession): String =
-    catalogRoots.computeIfAbsent(spark, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_catalog")
-      deleteRecursivelyOnExit(d)
-      spark.conf.set("spark.sql.catalog.gtab", "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gtab.root", d.toString)
-      d.toString
-    })
 
   /** Registered q_sql_timetravel body: the versioned table consumed
     * through the SQL CATALOG with Spark's native time-travel syntax —
@@ -778,11 +732,9 @@ object Incremental {
     */
   def ordersSqlTimetravel(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqltt:$inputKey"), { _ =>
-      val n = s"orders_tt_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
-      val t = s"$root/default/$n"
+    val name = QueryCache.fixture("sqltt", orders) { f =>
+      val n = f.catalogTable("orders_tt")
+      val t = f.catalogPath(n)
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       val inserts = orders.filter(col("o_orderkey") % 4 === 3)
         .select(col("o_orderkey"), lit("NEW").as("status"),
@@ -791,7 +743,7 @@ object Incremental {
       graft.sources.VersionedTable.commit(
         ordersCdcApply(orders).drop("src"), t, append = false)
       n
-    })
+    }
     def leg(v: Long) =
       s"""SELECT CAST($v AS BIGINT) AS version, count(*) AS n_rows,
          |CAST(sum(price_c) AS BIGINT) AS total_c
@@ -808,17 +760,15 @@ object Incremental {
     */
   def ordersSqlPruned(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlpr:$inputKey"), { _ =>
-      val n = s"orders_pr_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlpr", orders) { f =>
+      val n = f.catalogTable("orders_pr")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |WHERE o_orderkey BETWEEN 5000 AND 8000
@@ -837,22 +787,24 @@ object Incremental {
     */
   def ordersSqlDblPruned(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqldbl:$inputKey"), { _ =>
-      val n = s"orders_dbl_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
-      graft.sources.VersionedTable.commit(
-        orders.select(col("o_orderkey"),
-            (col("o_orderkey") + lit(0.25)).as("amount"))
-          .repartitionByRange(8, col("amount")),
-        s"$root/default/$n", append = false, statsCols = Seq("amount"))
-      n
-    })
+    val name = dblTable(orders)
     spark.sql(
       s"""SELECT o_orderkey, amount FROM gtab.default.$name
          |WHERE amount > 12000.0 AND amount <= 15000.25
          |ORDER BY o_orderkey""".stripMargin)
   }
+
+  /** The double-clustered table behind q_sql_dbl_prune and q_sql_fastminmax_dbl. */
+  private def dblTable(orders: DataFrame): String =
+    QueryCache.fixture("sqldbl", orders) { f =>
+      val n = f.catalogTable("orders_dbl")
+      graft.sources.VersionedTable.commit(
+        orders.select(col("o_orderkey"),
+            (col("o_orderkey") + lit(0.25)).as("amount"))
+          .repartitionByRange(8, col("amount")),
+        f.catalogPath(n), append = false, statsCols = Seq("amount"))
+      n
+    }
 
   /** Registered q_sql_fastminmax_dbl body: DOUBLE MIN/MAX from manifest
     * arithmetic — the sortable-bits zone edges convert back (bijection)
@@ -862,9 +814,7 @@ object Incremental {
     */
   def ordersSqlFastMinMaxDbl(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    ordersSqlDblPruned(orders) // pay-once fixture build (same table)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.get((spark, s"sqldbl:$inputKey"))
+    val name = dblTable(orders)
     spark.sql(
       s"""SELECT min(amount) AS min_a, max(amount) AS max_a,
          |       count(*) AS n
@@ -884,19 +834,17 @@ object Incremental {
     */
   def ordersSqlPrunedStr(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlprs:$inputKey"), { _ =>
-      val n = s"orders_prs_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlprs", orders) { f =>
+      val n = f.catalogTable("orders_prs")
       graft.sources.VersionedTable.commit(
         orders.select(
             lpad(col("o_orderkey").cast("string"), 10, "0").as("okey_s"),
             col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("okey_s")),
-        s"$root/default/$n", append = false, statsCols = Seq("okey_s"))
+        f.catalogPath(n), append = false, statsCols = Seq("okey_s"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT okey_s, status, price_c FROM gtab.default.$name
          |WHERE okey_s >= '0000005000' AND okey_s <= '0000008000'
@@ -914,12 +862,10 @@ object Incremental {
     */
   def ordersSqlInsert(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlins:$inputKey"), { _ =>
-      val n = s"orders_ins_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlins", orders) { f =>
+      val n = f.catalogTable("orders_ins")
       graft.sources.VersionedTable.commit(
-        ordersCdcBase(orders), s"$root/default/$n", append = false)
+        ordersCdcBase(orders), f.catalogPath(n), append = false)
       orders.createOrReplaceTempView(s"g_src_$n")
       spark.sql(
         s"""INSERT INTO gtab.default.$n
@@ -927,7 +873,7 @@ object Incremental {
            |       CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
            |FROM g_src_$n WHERE o_orderkey % 4 = 3""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"SELECT o_orderkey, status, price_c FROM gtab.default.$name ORDER BY o_orderkey")
   }
@@ -947,10 +893,8 @@ object Incremental {
     */
   def docsSqlBinary(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlbin:$inputKey"), { _ =>
-      val n = s"docs_bin_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlbin", documents) { f =>
+      val n = f.catalogTable("docs_bin")
       documents.createOrReplaceTempView(s"g_bin_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -960,9 +904,9 @@ object Incremental {
            |SELECT doc_id, CAST(text AS BINARY) AS payload, lang
            |FROM g_bin_src_$n""".stripMargin)
       graft.sources.VersionedTable.deleteWhere(
-        spark, s"$root/default/$n", col("doc_id") % 7L === 0L, "doc_id")
+        spark, f.catalogPath(n), col("doc_id") % 7L === 0L, "doc_id")
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, CAST(length(payload) AS BIGINT) AS n_bytes,
          |  md5(payload) AS digest, lang
@@ -983,10 +927,8 @@ object Incremental {
     */
   def docsSqlNested(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlnest:$inputKey"), { _ =>
-      val n = s"docs_nest_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlnest", documents) { f =>
+      val n = f.catalogTable("docs_nest")
       documents.createOrReplaceTempView(s"g_nest_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1001,7 +943,7 @@ object Incremental {
            |FROM g_nest_src_$n""".stripMargin)
       spark.sql(s"DELETE FROM gtab.default.$n WHERE doc_id % 9 = 0")
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, CAST(size(toks) AS BIGINT) AS n_tok,
          |  aggregate(toks, CAST(0 AS BIGINT), (a, x) -> a + x) AS tok_sum,
@@ -1022,10 +964,8 @@ object Incremental {
     */
   def embSqlTopK(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = embeddings.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlemb:$inputKey"), { _ =>
-      val n = s"emb_tab_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlemb", embeddings) { f =>
+      val n = f.catalogTable("emb_tab")
       embeddings.createOrReplaceTempView(s"g_emb_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1034,9 +974,9 @@ object Incremental {
         s"""INSERT INTO gtab.default.$n
            |SELECT vec_id, embedding, label FROM g_emb_src_$n""".stripMargin)
       graft.sources.VersionedTable.deleteWherePositional(
-        spark, s"$root/default/$n", col("vec_id") % 97L === 13L)
+        spark, f.catalogPath(n), col("vec_id") % 97L === 13L)
       n
-    })
+    }
     graft.ops.Similarity.bruteForceTopK(spark.table(s"gtab.default.$name"))
   }
 
@@ -1049,10 +989,8 @@ object Incremental {
     */
   def docsSqlMap(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlmap:$inputKey"), { _ =>
-      val n = s"docs_map_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlmap", documents) { f =>
+      val n = f.catalogTable("docs_map")
       documents.createOrReplaceTempView(s"g_map_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1069,7 +1007,7 @@ object Incremental {
            |FROM g_map_src_$n""".stripMargin)
       spark.sql(s"DELETE FROM gtab.default.$n WHERE doc_id % 11 = 3")
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, tags['chars'] AS chars, tags['words'] AS words,
          |  tags['mod'] AS m, CAST(size(tags) AS BIGINT) AS n_keys,
@@ -1088,10 +1026,8 @@ object Incremental {
     */
   def docsSqlNestedAdd(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlnadd:$inputKey"), { _ =>
-      val n = s"docs_nadd_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlnadd", documents) { f =>
+      val n = f.catalogTable("docs_nadd")
       documents.createOrReplaceTempView(s"g_nadd_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1107,7 +1043,7 @@ object Incremental {
            |  n_chars
            |FROM g_nadd_src_$n WHERE doc_id % 2 = 1""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, meta.lang AS lang, meta.src AS src, n_chars
          |FROM gtab.default.$name ORDER BY doc_id""".stripMargin)
@@ -1132,10 +1068,8 @@ object Incremental {
     */
   private def arrayPruneTable(documents: DataFrame): String = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    versionedTables.computeIfAbsent((spark, s"sqlaprune:$inputKey"), { _ =>
-      val n = s"docs_aprune_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    QueryCache.fixture("sqlaprune", documents) { f =>
+      val n = f.catalogTable("docs_aprune")
       documents.createOrReplaceTempView(s"g_aprune_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1150,7 +1084,7 @@ object Incremental {
              |FROM g_aprune_src_$n WHERE lang = '$lang'""".stripMargin)
       }
       n
-    })
+    }
   }
 
   def docsSqlArrayPrune(documents: DataFrame): DataFrame = {
@@ -1190,10 +1124,8 @@ object Incremental {
     */
   def docsSqlMapPrune(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlmprune:$inputKey"), { _ =>
-      val n = s"docs_mprune_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlmprune", documents) { f =>
+      val n = f.catalogTable("docs_mprune")
       documents.createOrReplaceTempView(s"g_mprune_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1207,7 +1139,7 @@ object Incremental {
              |FROM g_mprune_src_$n WHERE lang = '$lang'""".stripMargin)
       }
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, attrs['lang:en'] AS v
          |FROM gtab.default.$name
@@ -1229,10 +1161,8 @@ object Incremental {
     */
   def docsSqlNestedMember(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlnmem:$inputKey"), { _ =>
-      val n = s"docs_nmem_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlnmem", documents) { f =>
+      val n = f.catalogTable("docs_nmem")
       documents.createOrReplaceTempView(s"g_nmem_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1253,7 +1183,7 @@ object Incremental {
       // translate back to the physical meta.tags bloom key
       spark.sql(s"ALTER TABLE gtab.default.$n RENAME COLUMN meta TO info")
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, info.lang AS lang, n_chars
          |FROM gtab.default.$name
@@ -1275,10 +1205,8 @@ object Incremental {
     */
   def docsSqlNestedRename(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlnren:$inputKey"), { _ =>
-      val n = s"docs_nren_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlnren", documents) { f =>
+      val n = f.catalogTable("docs_nren")
       documents.createOrReplaceTempView(s"g_nren_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1295,7 +1223,7 @@ object Incremental {
            |SELECT doc_id, named_struct('lang_code', lang), n_chars
            |FROM g_nren_src_$n WHERE doc_id % 2 = 1""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, meta.lang_code AS lang_code, n_chars
          |FROM gtab.default.$name
@@ -1314,10 +1242,8 @@ object Incremental {
     */
   def docsSqlNestedPrune(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlnprune:$inputKey"), { _ =>
-      val n = s"docs_nprune_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlnprune", documents) { f =>
+      val n = f.catalogTable("docs_nprune")
       documents.createOrReplaceTempView(s"g_nprune_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (
@@ -1332,7 +1258,7 @@ object Incremental {
              |FROM g_nprune_src_$n WHERE lang = '$lang'""".stripMargin)
       }
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, meta.lang AS lang, meta.n AS n, n_chars
          |FROM gtab.default.$name
@@ -1352,10 +1278,8 @@ object Incremental {
     */
   def ordersSqlCtas(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlctas:$inputKey"), { _ =>
-      val n = s"orders_ctas_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlctas", orders) { f =>
+      val n = f.catalogTable("orders_ctas")
       orders.createOrReplaceTempView(s"g_ctas_src_$n")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n AS
@@ -1370,7 +1294,7 @@ object Incremental {
            |       CAST(1 AS BIGINT) AS tier
            |FROM g_ctas_src_$n WHERE o_orderkey % 4 = 2""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c, tier
          |FROM gtab.default.$name ORDER BY o_orderkey""".stripMargin)
@@ -1389,12 +1313,10 @@ object Incremental {
     */
   def ordersSqlRestore(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlrst:$inputKey"), { _ =>
-      val n = s"orders_rst_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlrst", orders) { f =>
+      val n = f.catalogTable("orders_rst")
       graft.sources.VersionedTable.commit(
-        ordersCdcBase(orders), s"$root/default/$n", append = false)
+        ordersCdcBase(orders), f.catalogPath(n), append = false)
       orders.createOrReplaceTempView(s"g_rst_src_$n")
       spark.sql(
         s"""INSERT INTO gtab.default.$n
@@ -1404,7 +1326,7 @@ object Incremental {
       spark.sql(s"DELETE FROM gtab.default.$n WHERE o_orderkey % 10 = 1")
       spark.sql(s"CALL gtab.system.restore('default.$n', 2)")
       n
-    })
+    }
     def leg(tag: Long, from: String) =
       s"""SELECT CAST($tag AS BIGINT) AS phase, o_orderkey, status, price_c
          |FROM $from""".stripMargin
@@ -1429,12 +1351,9 @@ object Incremental {
     */
   def ordersTableClone(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"clone:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_src"
-      val c = s"$d/orders_clone"
+    val table = QueryCache.fixture("clone", orders) { f =>
+      val t = s"${f.dir}/orders_src"
+      val c = s"${f.dir}/orders_clone"
       graft.sources.VersionedTable.commit(ordersCdcBase(orders), t, append = false)
       graft.sources.VersionedTable.commit(
         orders.filter(col("o_orderkey") % 4 === 3)
@@ -1455,7 +1374,7 @@ object Incremental {
             cents(col("o_totalprice")).as("price_c")),
         t, append = false)
       t
-    })
+    }
     val clone = s"${table.stripSuffix("orders_src")}orders_clone"
     graft.sources.VersionedTable.read(spark, table)
       .withColumn("side", lit(0L))
@@ -1480,15 +1399,13 @@ object Incremental {
     */
   def ordersSqlRename(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlrnm:$inputKey"), { _ =>
-      val n = s"orders_rnm_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlrnm", orders) { f =>
+      val n = f.catalogTable("orders_rnm")
       graft.sources.VersionedTable.commit(
         ordersCdcBase(orders)
           .withColumn("ship_prio", col("o_orderkey") % 7L)
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       spark.sql(s"ALTER TABLE gtab.default.$n RENAME COLUMN o_orderkey TO order_id")
       spark.sql(s"ALTER TABLE gtab.default.$n DROP COLUMN ship_prio")
       orders.createOrReplaceTempView(s"g_rnm_src_$n")
@@ -1499,7 +1416,7 @@ object Incremental {
            |FROM g_rnm_src_$n WHERE o_orderkey % 4 = 3""".stripMargin)
       spark.sql(s"DELETE FROM gtab.default.$n WHERE order_id % 10 = 1")
       n
-    })
+    }
     spark.sql(
       s"""SELECT order_id, status, price_c FROM gtab.default.$name
          |WHERE order_id > 100 ORDER BY order_id""".stripMargin)
@@ -1520,11 +1437,9 @@ object Incremental {
     */
   def ordersMaintenanceAdvisor(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"maint:$inputKey"), { _ =>
-      val n = s"orders_mnt_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
-      val t = s"$root/default/$n"
+    val name = QueryCache.fixture("maint", orders) { f =>
+      val n = f.catalogTable("orders_mnt")
+      val t = f.catalogPath(n)
       val base = orders
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
           cents(col("o_totalprice")).as("price_c"))
@@ -1540,7 +1455,7 @@ object Incremental {
       graft.sources.VersionedTable.deleteWhere(
         spark, t, col("o_orderkey") % 1000L === 2L, "o_orderkey")
       n
-    })
+    }
     spark.sql(
       s"""WITH per AS (
          |  SELECT commit_version, count(*) AS n_files, sum(n_rows) AS n_rows,
@@ -1573,11 +1488,9 @@ object Incremental {
     */
   def ordersAutoMaintain(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"amnt:$inputKey"), { _ =>
-      val n = s"orders_amnt_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
-      val t = s"$root/default/$n"
+    val name = QueryCache.fixture("amnt", orders) { f =>
+      val n = f.catalogTable("orders_amnt")
+      val t = f.catalogPath(n)
       val base = orders
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
           cents(col("o_totalprice")).as("price_c"))
@@ -1594,7 +1507,7 @@ object Incremental {
         spark, t, col("o_orderkey") % 1000L === 2L, "o_orderkey")
       spark.sql(s"CALL gtab.system.auto_maintain('default.$n')").collect()
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |ORDER BY o_orderkey""".stripMargin)
@@ -1612,18 +1525,16 @@ object Incremental {
     */
   def ordersSqlFastcount(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlfc:$inputKey"), { _ =>
-      val n = s"orders_fc_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlfc", orders) { f =>
+      val n = f.catalogTable("orders_fc")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false,
+        f.catalogPath(n), append = false,
         statsCols = Seq("o_orderkey", "price_c"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT count(*) AS n_rows,
          |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
@@ -1642,10 +1553,8 @@ object Incremental {
     */
   def ordersSqlClustered(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlcl:$inputKey"), { _ =>
-      val n = s"orders_cl_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlcl", orders) { f =>
+      val n = f.catalogTable("orders_cl")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey BIGINT, status STRING, price_c BIGINT)
@@ -1657,7 +1566,7 @@ object Incremental {
            |       CAST(round(o_totalprice * 100) AS BIGINT)
            |FROM g_cl_src_$n""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |WHERE o_orderkey BETWEEN 5000 AND 8000
@@ -1676,10 +1585,8 @@ object Incremental {
     */
   def ordersSqlPartitioned(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlip:$inputKey"), { _ =>
-      val n = s"orders_ip_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlip", orders) { f =>
+      val n = f.catalogTable("orders_ip")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey BIGINT, status STRING, price_c BIGINT)
@@ -1691,7 +1598,7 @@ object Incremental {
            |       CAST(round(o_totalprice * 100) AS BIGINT)
            |FROM g_ip_src_$n""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |WHERE o_orderkey BETWEEN 12000 AND 15000
@@ -1708,10 +1615,18 @@ object Incremental {
     */
   def ordersSqlDecPrune(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqldp:$inputKey"), { _ =>
-      val n = s"orders_dp_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = decPruneTable(orders)
+    spark.sql(
+      s"""SELECT o_orderkey, amount FROM gtab.default.$name
+         |WHERE amount BETWEEN 12000.25 AND 15000.25
+         |ORDER BY o_orderkey""".stripMargin)
+  }
+
+  /** The decimal-partitioned table behind q_sql_dec_prune and q_sql_fastminmax_dec. */
+  private def decPruneTable(orders: DataFrame): String = {
+    val spark = orders.sparkSession
+    QueryCache.fixture("sqldp", orders) { f =>
+      val n = f.catalogTable("orders_dp")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey BIGINT, amount DECIMAL(9, 2))
@@ -1722,11 +1637,7 @@ object Incremental {
            |SELECT o_orderkey, CAST(o_orderkey + 0.25 AS DECIMAL(9, 2))
            |FROM g_dp_src_$n""".stripMargin)
       n
-    })
-    spark.sql(
-      s"""SELECT o_orderkey, amount FROM gtab.default.$name
-         |WHERE amount BETWEEN 12000.25 AND 15000.25
-         |ORDER BY o_orderkey""".stripMargin)
+    }
   }
 
   /** Registered q_sql_fastminmax_ts body: ungrouped TIMESTAMP MIN/MAX
@@ -1737,9 +1648,7 @@ object Incremental {
     */
   def ordersSqlFastMinMaxTs(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    ordersSqlPartitionedTs(orders) // same fixture (shared cache key)
-    val name = versionedTables.get((spark, s"sqlipt:$inputKey"))
+    val name = tsPartitionedTable(orders)
     spark.sql(
       s"""SELECT unix_seconds(min(ts)) AS min_s,
          |       unix_seconds(max(ts)) AS max_s,
@@ -1753,9 +1662,7 @@ object Incremental {
     */
   def ordersSqlFastMinMaxDec(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    ordersSqlDecPrune(orders) // same fixture (shared cache key)
-    val name = versionedTables.get((spark, s"sqldp:$inputKey"))
+    val name = decPruneTable(orders)
     spark.sql(
       s"""SELECT CAST(min(amount) AS STRING) AS min_a,
          |       CAST(max(amount) AS STRING) AS max_a,
@@ -1773,10 +1680,20 @@ object Incremental {
     */
   def ordersSqlPartitionedDate(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlipd:$inputKey"), { _ =>
-      val n = s"orders_ipd_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = datePartitionedTable(orders)
+    spark.sql(
+      s"""SELECT CAST(odate AS STRING) AS odate_s,
+         |       count(*) AS n, sum(o_orderkey) AS key_sum
+         |FROM gtab.default.$name
+         |WHERE odate >= DATE'1995-03-01' AND odate < DATE'1995-04-01'
+         |GROUP BY odate ORDER BY odate_s""".stripMargin)
+  }
+
+  /** The date-partitioned table behind q_sql_partitioned_date and q_sql_fastminmax_date. */
+  private def datePartitionedTable(orders: DataFrame): String = {
+    val spark = orders.sparkSession
+    QueryCache.fixture("sqlipd", orders) { f =>
+      val n = f.catalogTable("orders_ipd")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (odate DATE, o_orderkey BIGINT)
            |PARTITIONED BY (odate)""".stripMargin)
@@ -1786,13 +1703,7 @@ object Incremental {
            |SELECT CAST(o_orderdate AS DATE), o_orderkey
            |FROM g_ipd_src_$n""".stripMargin)
       n
-    })
-    spark.sql(
-      s"""SELECT CAST(odate AS STRING) AS odate_s,
-         |       count(*) AS n, sum(o_orderkey) AS key_sum
-         |FROM gtab.default.$name
-         |WHERE odate >= DATE'1995-03-01' AND odate < DATE'1995-04-01'
-         |GROUP BY odate ORDER BY odate_s""".stripMargin)
+    }
   }
 
   /** Registered q_sql_partitioned_ts body: TEMPORAL partition transform —
@@ -1807,10 +1718,20 @@ object Incremental {
     */
   def ordersSqlPartitionedTs(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlipt:$inputKey"), { _ =>
-      val n = s"orders_ipt_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = tsPartitionedTable(orders)
+    spark.sql(
+      s"""SELECT count(*) AS n, sum(o_orderkey) AS key_sum,
+         |       min(unix_seconds(ts)) AS min_s, max(unix_seconds(ts)) AS max_s
+         |FROM gtab.default.$name
+         |WHERE ts >= TIMESTAMP'1995-03-01 00:00:00'
+         |  AND ts < TIMESTAMP'1995-04-01 00:00:00'""".stripMargin)
+  }
+
+  /** The days(ts)-partitioned table behind q_sql_partitioned_ts and q_sql_fastminmax_ts. */
+  private def tsPartitionedTable(orders: DataFrame): String = {
+    val spark = orders.sparkSession
+    QueryCache.fixture("sqlipt", orders) { f =>
+      val n = f.catalogTable("orders_ipt")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (ts TIMESTAMP, o_orderkey BIGINT)
            |PARTITIONED BY (days(ts))""".stripMargin)
@@ -1823,13 +1744,7 @@ object Incremental {
            |         + o_orderkey % 86400), o_orderkey
            |FROM g_ipt_src_$n""".stripMargin)
       n
-    })
-    spark.sql(
-      s"""SELECT count(*) AS n, sum(o_orderkey) AS key_sum,
-         |       min(unix_seconds(ts)) AS min_s, max(unix_seconds(ts)) AS max_s
-         |FROM gtab.default.$name
-         |WHERE ts >= TIMESTAMP'1995-03-01 00:00:00'
-         |  AND ts < TIMESTAMP'1995-04-01 00:00:00'""".stripMargin)
+    }
   }
 
   /** Registered q_sql_part_evolve body: PARTITION-TRANSFORM EVOLUTION —
@@ -1845,10 +1760,8 @@ object Incremental {
     */
   def ordersSqlPartEvolve(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlpevo:$inputKey"), { _ =>
-      val n = s"orders_pevo_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlpevo", orders) { f =>
+      val n = f.catalogTable("orders_pevo")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (ts TIMESTAMP, o_orderkey BIGINT)
            |PARTITIONED BY (days(ts))""".stripMargin)
@@ -1863,7 +1776,7 @@ object Incremental {
       spark.sql(s"CALL gtab.system.set_partitioning('default.$n', 'hours(ts)')")
       insert(1) // generation 2: hours(ts)-clustered
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey % 2 AS gen, count(*) AS n,
          |       sum(o_orderkey) AS key_sum,
@@ -1883,10 +1796,8 @@ object Incremental {
     */
   def ordersSqlPartitionedTrunc(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqliptr:$inputKey"), { _ =>
-      val n = s"orders_iptr_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqliptr", orders) { f =>
+      val n = f.catalogTable("orders_iptr")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n (prio STRING, o_orderkey BIGINT)
            |PARTITIONED BY (truncate(1, prio))""".stripMargin)
@@ -1895,7 +1806,7 @@ object Incremental {
         s"""INSERT INTO gtab.default.$n
            |SELECT o_orderpriority, o_orderkey FROM g_iptr_src_$n""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT prio, count(*) AS n, sum(o_orderkey) AS key_sum
          |FROM gtab.default.$name
@@ -1913,11 +1824,7 @@ object Incremental {
     */
   def ordersSqlFastMinMaxDate(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    // same fixture as q_sql_partitioned_date (shared cache key)
-    ordersSqlPartitionedDate(orders)
-    val name = versionedTables.get((spark, s"sqlipd:$inputKey"))
+    val name = datePartitionedTable(orders)
     spark.sql(
       s"""SELECT CAST(min(odate) AS STRING) AS min_d,
          |       CAST(max(odate) AS STRING) AS max_d,
@@ -1936,10 +1843,8 @@ object Incremental {
     */
   def ordersSqlBloom(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlbl:$inputKey"), { _ =>
-      val n = s"orders_bl_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlbl", orders) { f =>
+      val n = f.catalogTable("orders_bl")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey BIGINT, status STRING, price_c BIGINT)
@@ -1952,7 +1857,7 @@ object Incremental {
            |       CAST(round(o_totalprice * 100) AS BIGINT)
            |FROM g_bl_src_$n""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |WHERE o_orderkey IN (7, 1223, 28673, 54369)
@@ -1971,17 +1876,15 @@ object Incremental {
     */
   def docsSqlZorderStr(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlzs:$inputKey"), { _ =>
-      val n = s"docs_zs_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlzs", documents) { f =>
+      val n = f.catalogTable("docs_zs")
       graft.sources.VersionedTable.commit(
         documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .repartition(8, col("doc_id")), // scrambled: hash placement
-        s"$root/default/$n", append = false)
+        f.catalogPath(n), append = false)
       spark.sql(s"CALL gtab.system.zorder('default.$n', 'lang,n_chars', 64)")
       n
-    })
+    }
     spark.sql(
       s"""SELECT doc_id, lang, n_chars FROM gtab.default.$name
          |WHERE lang = 'es' AND n_chars BETWEEN 400 AND 900
@@ -2000,10 +1903,8 @@ object Incremental {
     */
   def ordersSqlWiden(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlwd:$inputKey"), { _ =>
-      val n = s"orders_wd_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlwd", orders) { f =>
+      val n = f.catalogTable("orders_wd")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey INT, status STRING, price_c BIGINT)""".stripMargin)
@@ -2020,7 +1921,7 @@ object Incremental {
            |       CAST(round(o_totalprice * 100) AS BIGINT)
            |FROM g_wd_src_$n WHERE o_orderkey % 3 = 1""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |ORDER BY o_orderkey""".stripMargin)
@@ -2036,10 +1937,8 @@ object Incremental {
     */
   def ordersSqlWidenDec(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlwdd:$inputKey"), { _ =>
-      val n = s"orders_wdd_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlwdd", orders) { f =>
+      val n = f.catalogTable("orders_wdd")
       spark.sql(
         s"""CREATE TABLE gtab.default.$n
            |(o_orderkey BIGINT, amount DECIMAL(9, 2))""".stripMargin)
@@ -2058,7 +1957,7 @@ object Incremental {
            |       CAST(o_orderkey + 10000000000.25 AS DECIMAL(18, 2))
            |FROM g_wdd_src_$n WHERE o_orderkey % 3 = 1""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, amount FROM gtab.default.$name
          |ORDER BY o_orderkey""".stripMargin)
@@ -2074,19 +1973,17 @@ object Incremental {
     */
   def ordersSqlStatsTable(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlst:$inputKey"), { _ =>
-      val n = s"orders_st_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlst", orders) { f =>
+      val n = f.catalogTable("orders_st")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"),
             col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false,
+        f.catalogPath(n), append = false,
         statsCols = Seq("o_orderkey", "status", "price_c"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT column AS col_name, null_count, min_long, max_long
          |FROM gtab.default.`$name$$stats` ORDER BY col_name""".stripMargin)
@@ -2102,19 +1999,17 @@ object Incremental {
     */
   def ordersSqlFastMinMaxStr(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlfms:$inputKey"), { _ =>
-      val n = s"orders_fms_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlfms", orders) { f =>
+      val n = f.catalogTable("orders_fms")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"),
             col("o_orderstatus").as("status"),
             col("o_orderpriority").as("prio"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false,
+        f.catalogPath(n), append = false,
         statsCols = Seq("o_orderkey", "status", "prio"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT count(*) AS n_rows,
          |       min(status) AS min_status, max(status) AS max_status,
@@ -2135,22 +2030,18 @@ object Incremental {
     */
   def ordersSqlBucketedJoin(orders: DataFrame, customer: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val names = versionedTables.computeIfAbsent((spark, s"sqlspj:$inputKey"), { _ =>
-      val tag = java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())
-      val fn = s"orders_spj_$tag"
-      val dn = s"cust_spj_$tag"
+    val (fn, dn) = QueryCache.fixture("sqlspj", orders, customer) { f =>
+      val fn = f.catalogTable("orders_spj")
+      val dn = f.catalogTable("cust_spj")
       graft.sources.VersionedTable.commitBucketed(
         orders.select(col("o_custkey").as("custkey"), col("o_orderkey"),
           cents(col("o_totalprice")).as("price_c")),
-        s"$root/default/$fn", "custkey", 16, append = false)
+        f.catalogPath(fn), "custkey", 16, append = false)
       graft.sources.VersionedTable.commitBucketed(
         customer.select(col("c_custkey").as("custkey"), col("c_name")),
-        s"$root/default/$dn", "custkey", 16, append = false)
-      s"$fn,$dn"
-    })
-    val Array(fn, dn) = names.split(',')
+        f.catalogPath(dn), "custkey", 16, append = false)
+      (fn, dn)
+    }
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.sql(
       s"""SELECT o_orderkey, custkey, price_c, c_name
@@ -2173,14 +2064,11 @@ object Incremental {
     */
   def ordersSqlBucketedDdl(orders: DataFrame, customer: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val names = versionedTables.computeIfAbsent((spark, s"sqlbddl:$inputKey"), { _ =>
-      val _ = catalogRoot(spark) // force gtab catalog registration
-      val tag = java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())
-      val fn = s"orders_bddl_$tag"
-      val dn = s"cust_bddl_$tag"
-      orders.createOrReplaceTempView(s"g_bddl_o_$tag")
-      customer.createOrReplaceTempView(s"g_bddl_c_$tag")
+    val (fn, dn) = QueryCache.fixture("sqlbddl", orders, customer) { f =>
+      val fn = f.catalogTable("orders_bddl")
+      val dn = f.catalogTable("cust_bddl")
+      orders.createOrReplaceTempView(s"g_bddl_o_${f.tag}")
+      customer.createOrReplaceTempView(s"g_bddl_c_${f.tag}")
       spark.sql(s"""CREATE TABLE gtab.default.$fn
         |(custkey BIGINT, o_orderkey BIGINT, price_c BIGINT)
         |PARTITIONED BY (bucket(16, custkey))""".stripMargin)
@@ -2190,12 +2078,11 @@ object Incremental {
       spark.sql(s"""INSERT INTO gtab.default.$fn
         |SELECT o_custkey AS custkey, o_orderkey,
         |       CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-        |FROM g_bddl_o_$tag""".stripMargin)
+        |FROM g_bddl_o_${f.tag}""".stripMargin)
       spark.sql(s"""INSERT INTO gtab.default.$dn
-        |SELECT c_custkey AS custkey, c_name FROM g_bddl_c_$tag""".stripMargin)
-      s"$fn,$dn"
-    })
-    val Array(fn, dn) = names.split(',')
+        |SELECT c_custkey AS custkey, c_name FROM g_bddl_c_${f.tag}""".stripMargin)
+      (fn, dn)
+    }
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.sql(
       s"""SELECT o_orderkey, custkey, price_c, c_name
@@ -2219,14 +2106,11 @@ object Incremental {
     */
   def ordersSqlBucketedDml(orders: DataFrame, customer: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val names = versionedTables.computeIfAbsent((spark, s"sqlbdml:$inputKey"), { _ =>
-      val _ = catalogRoot(spark) // force gtab catalog registration
-      val tag = java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())
-      val fn = s"orders_bdml_$tag"
-      val dn = s"cust_bdml_$tag"
-      orders.createOrReplaceTempView(s"g_bdml_o_$tag")
-      customer.createOrReplaceTempView(s"g_bdml_c_$tag")
+    val (fn, dn) = QueryCache.fixture("sqlbdml", orders, customer) { f =>
+      val fn = f.catalogTable("orders_bdml")
+      val dn = f.catalogTable("cust_bdml")
+      orders.createOrReplaceTempView(s"g_bdml_o_${f.tag}")
+      customer.createOrReplaceTempView(s"g_bdml_c_${f.tag}")
       spark.sql(s"""CREATE TABLE gtab.default.$fn
         |(custkey BIGINT, o_orderkey BIGINT, price_c BIGINT)
         |PARTITIONED BY (bucket(16, custkey))""".stripMargin)
@@ -2236,9 +2120,9 @@ object Incremental {
       spark.sql(s"""INSERT INTO gtab.default.$fn
         |SELECT o_custkey AS custkey, o_orderkey,
         |       CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-        |FROM g_bdml_o_$tag""".stripMargin)
+        |FROM g_bdml_o_${f.tag}""".stripMargin)
       spark.sql(s"""INSERT INTO gtab.default.$dn
-        |SELECT c_custkey AS custkey, c_name FROM g_bdml_c_$tag""".stripMargin)
+        |SELECT c_custkey AS custkey, c_name FROM g_bdml_c_${f.tag}""".stripMargin)
       spark.sql(
         s"UPDATE gtab.default.$fn SET price_c = price_c + 1 WHERE o_orderkey % 10 = 0")
       spark.sql(s"DELETE FROM gtab.default.$fn WHERE o_orderkey % 7 = 3")
@@ -2246,10 +2130,10 @@ object Incremental {
         s"""MERGE INTO gtab.default.$fn t
            |USING (
            |  SELECT o_custkey AS custkey, o_orderkey, CAST(0 AS BIGINT) AS price_c
-           |  FROM g_bdml_o_$tag WHERE o_orderkey % 10 = 1 AND o_orderkey % 7 <> 3
+           |  FROM g_bdml_o_${f.tag} WHERE o_orderkey % 10 = 1 AND o_orderkey % 7 <> 3
            |  UNION ALL
            |  SELECT o_custkey, o_orderkey + 10000000, CAST(1 AS BIGINT)
-           |  FROM g_bdml_o_$tag WHERE o_orderkey % 20 = 5
+           |  FROM g_bdml_o_${f.tag} WHERE o_orderkey % 20 = 5
            |) c
            |ON t.o_orderkey = c.o_orderkey
            |WHEN MATCHED THEN UPDATE SET price_c = c.price_c
@@ -2260,9 +2144,8 @@ object Incremental {
       // compacted state, closing the whole DDL→DML→maintenance lifecycle
       spark.sql(s"CALL gtab.system.compact('default.$fn')")
       spark.sql(s"CALL gtab.system.compact('default.$dn')")
-      s"$fn,$dn"
-    })
-    val Array(fn, dn) = names.split(',')
+      (fn, dn)
+    }
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.sql(
       s"""SELECT o_orderkey, custkey, price_c, c_name
@@ -2282,24 +2165,20 @@ object Incremental {
     */
   def ordersSqlDppJoin(orders: DataFrame, customer: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val names = versionedTables.computeIfAbsent((spark, s"sqldpp:$inputKey"), { _ =>
-      val tag = java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())
-      val fn = s"orders_dpp_$tag"
-      val dn = s"cust_dpp_$tag"
+    val (fn, dn) = QueryCache.fixture("sqldpp", orders, customer) { f =>
+      val fn = f.catalogTable("orders_dpp")
+      val dn = f.catalogTable("cust_dpp")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_custkey").as("custkey"), col("o_orderkey"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(16, col("custkey")),
-        s"$root/default/$fn", append = false, statsCols = Seq("custkey"))
+        f.catalogPath(fn), append = false, statsCols = Seq("custkey"))
       graft.sources.VersionedTable.commit(
         customer.select(col("c_custkey").as("custkey"), col("c_name"),
           col("c_nationkey")),
-        s"$root/default/$dn", append = false)
-      s"$fn,$dn"
-    })
-    val Array(fn, dn) = names.split(',')
+        f.catalogPath(dn), append = false)
+      (fn, dn)
+    }
     spark.sql(
       s"""SELECT f.o_orderkey, f.custkey, f.price_c, d.c_name
          |FROM gtab.default.$fn f JOIN gtab.default.$dn d USING (custkey)
@@ -2318,17 +2197,15 @@ object Incremental {
     */
   def ordersSqlTopN(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqltopn:$inputKey"), { _ =>
-      val n = s"orders_topn_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqltopn", orders) { f =>
+      val n = f.catalogTable("orders_topn")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       n
-    })
+    }
     spark.sql(
       s"""SELECT o_orderkey, status, price_c FROM gtab.default.$name
          |ORDER BY o_orderkey DESC LIMIT 100""".stripMargin)
@@ -2345,19 +2222,17 @@ object Incremental {
     */
   def ordersSqlDelete(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqldel:$inputKey"), { _ =>
-      val n = s"orders_del_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqldel", orders) { f =>
+      val n = f.catalogTable("orders_del")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       spark.sql(
         s"DELETE FROM gtab.default.$n WHERE o_orderkey >= 5000 AND o_orderkey <= 8000")
       n
-    })
+    }
     spark.sql(
       s"SELECT o_orderkey, status, price_c FROM gtab.default.$name ORDER BY o_orderkey")
   }
@@ -2373,20 +2248,18 @@ object Incremental {
     */
   def ordersSqlUpdate(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlupd:$inputKey"), { _ =>
-      val n = s"orders_upd_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlupd", orders) { f =>
+      val n = f.catalogTable("orders_upd")
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_orderstatus").as("status"),
             cents(col("o_totalprice")).as("price_c"))
           .repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       spark.sql(
         s"""UPDATE gtab.default.$n SET price_c = price_c + 5
            |WHERE o_orderkey >= 5000 AND o_orderkey <= 8000""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"SELECT o_orderkey, status, price_c FROM gtab.default.$name ORDER BY o_orderkey")
   }
@@ -2400,13 +2273,11 @@ object Incremental {
     */
   def ordersSqlMerge(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val root = catalogRoot(spark)
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val name = versionedTables.computeIfAbsent((spark, s"sqlmrg:$inputKey"), { _ =>
-      val n = s"orders_mrg_${java.lang.Long.toHexString(bucketedBaseSeq.incrementAndGet())}"
+    val name = QueryCache.fixture("sqlmrg", orders) { f =>
+      val n = f.catalogTable("orders_mrg")
       graft.sources.VersionedTable.commit(
         ordersCdcBase(orders).repartitionByRange(8, col("o_orderkey")),
-        s"$root/default/$n", append = false, statsCols = Seq("o_orderkey"))
+        f.catalogPath(n), append = false, statsCols = Seq("o_orderkey"))
       orders.createOrReplaceTempView(s"g_mrg_$n")
       spark.sql(
         s"""MERGE INTO gtab.default.$n t
@@ -2419,7 +2290,7 @@ object Incremental {
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, status, price_c)
            |  VALUES (c.o_orderkey, c.status, c.price_c)""".stripMargin)
       n
-    })
+    }
     spark.sql(
       s"SELECT o_orderkey, status, price_c FROM gtab.default.$name ORDER BY o_orderkey")
   }
@@ -2434,11 +2305,8 @@ object Incremental {
     */
   def ordersTableZorder(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val inputKey = orders.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"zo:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/orders_zo"
+    val table = QueryCache.fixture("zo", orders) { f =>
+      val t = s"${f.dir}/orders_zo"
       graft.sources.VersionedTable.commit(
         orders.select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus").as("status"), cents(col("o_totalprice")).as("price_c")),
@@ -2446,7 +2314,7 @@ object Incremental {
       graft.sources.VersionedTable.optimizeZorder(
         spark, t, Seq("o_custkey", "o_orderkey"), targetRowsPerFile = 1000L)
       t
-    })
+    }
     graft.sources.VersionedTable
       .readWhereBounds(spark, table, None,
         Seq(("o_custkey", 100L, 300L), ("o_orderkey", 2000L, 6000L)))
@@ -2475,11 +2343,8 @@ object Incremental {
     */
   def eventsAsofVersioned(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val inputKey = events.inputFiles.sorted.mkString(",")
-    val table = versionedTables.computeIfAbsent((spark, s"av:$inputKey"), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_versioned")
-      deleteRecursivelyOnExit(d)
-      val t = s"$d/views_v"
+    val table = QueryCache.fixture("av", events) { f =>
+      val t = s"${f.dir}/views_v"
       val views = events.filter(col("event_type") === "view")
         .select(col("user_id"), col("event_id").as("view_id"),
           col("ts").as("v_ts"))
@@ -2487,7 +2352,7 @@ object Incremental {
       graft.sources.VersionedTable.deleteWhere(
         spark, t, col("view_id") % 3 === 0, "view_id")
       t
-    })
+    }
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"), col("ts"))
     def enrich(version: Long, outCol: String) =
@@ -2512,19 +2377,4 @@ object Incremental {
         .agg(count(lit(1)).as("n_rows"), sum("price_c").cast("long").as("total_c"))
         .select(lit(v).as("version"), col("n_rows"), col("total_c"))
     }.reduce(_ union _).orderBy("version")
-
-  private val versionedTables =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
-  private def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }))
 }

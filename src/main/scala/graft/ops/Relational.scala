@@ -802,6 +802,7 @@ object Relational {
     * its per-partition sorts. The merge hint pins SMJ so the demo holds
     * even when one side would broadcast at test scale; revenue runs in
     * exact integer cents (order-independent under any bucket layout).
+    * The bucketed ingest is a pay-once [[QueryCache.fixture]].
     * Pinned by `PlanShapeSpec`: zero Exchange below the join.
     */
   def bucketedJoin(
@@ -809,28 +810,16 @@ object Relational {
       orders: DataFrame,
       buckets: Int = 8): DataFrame = {
     val spark = lineitem.sparkSession
-    // The bucketed ingest is the PAY-ONCE half of the strategy, so pay it
-    // once per (session, inputs, bucket count) — not per invocation: the
-    // bench's warmup iteration writes the tables, every later iteration
-    // times the exchange-free join itself (which is the number the
-    // strategy is about). Table names carry a per-entry suffix so two
-    // sessions (or two input sets) never clobber each other, and the temp
-    // warehouse is deleted on JVM exit instead of accumulating per call.
-    val inputKey = (lineitem.inputFiles ++ orders.inputFiles).sorted.mkString(",")
-    val (lTable, oTable) = bucketedTables.computeIfAbsent(
-      (spark, inputKey, buckets), { _ =>
-        val wh = java.nio.file.Files.createTempDirectory("graft_bucketed")
-        deleteRecursivelyOnExit(wh)
-        val suffix = java.lang.Long.toHexString(bucketedSeq.incrementAndGet())
-        val (lt, ot) = (s"g_lineitem_b_$suffix", s"g_orders_b_$suffix")
-        lineitem.write.format("parquet")
-          .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$wh/lineitem").saveAsTable(lt)
-        orders.write.format("parquet")
-          .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$wh/orders").saveAsTable(ot)
-        (lt, ot)
-      })
+    val (lTable, oTable) = QueryCache.fixture(s"bucketed_$buckets", lineitem, orders) { f =>
+      val (lt, ot) = (s"g_lineitem_b_${f.tag}", s"g_orders_b_${f.tag}")
+      lineitem.write.format("parquet")
+        .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"${f.dir}/lineitem").saveAsTable(lt)
+      orders.write.format("parquet")
+        .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"${f.dir}/orders").saveAsTable(ot)
+      (lt, ot)
+    }
     spark.table(lTable).hint("merge")
       .join(spark.table(oTable).hint("merge"),
         col("l_orderkey") === col("o_orderkey"))
@@ -853,7 +842,7 @@ object Relational {
     * this is the difference between "pushdown evaluates the filter per
     * row" and "pushdown never deserializes the irrelevant 95%" — same
     * idea as Z-ordering, in its 1-dimensional exact form. The ingest is
-    * pay-once per (session, inputs), like the bucketed join's; the
+    * a pay-once [[QueryCache.fixture]], like the bucketed join's; the
     * returned frame is the filtered read-back, oracle-checkable against
     * the raw table. `LayoutSpec` asserts the scan's numOutputRows drops
     * with the sorted layout while an unsorted write reads everything.
@@ -861,18 +850,15 @@ object Relational {
   def sortedLayoutScan(
       documents: DataFrame, loChars: Long = 480L, hiChars: Long = 600L): DataFrame = {
     val spark = documents.sparkSession
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val path = sortedLayouts.computeIfAbsent((spark, inputKey), { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_layout")
-      deleteRecursivelyOnExit(dir)
+    val path = QueryCache.fixture("sorted_layout", documents) { f =>
       documents
         .repartitionByRange(4, col("n_chars"), col("doc_id"))
         .sortWithinPartitions("n_chars", "doc_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 64)
-        .parquet(s"$dir/docs_sorted")
-      s"$dir/docs_sorted"
-    })
+        .parquet(s"${f.dir}/docs_sorted")
+      s"${f.dir}/docs_sorted"
+    }
     spark.read.parquet(path)
       .filter(col("n_chars") >= loChars && col("n_chars") < hiChars)
       .select(col("doc_id"), col("n_chars"), col("source"))
@@ -942,7 +928,7 @@ object Relational {
     * dimension (parquet prunes per-column stats independently, which is
     * exactly what a Morton cell's bounded extent in every dimension
     * feeds). Same idea as Delta/Iceberg OPTIMIZE ZORDER; the ingest is
-    * pay-once per (session, inputs), and the min/max bucketing stats
+    * a pay-once [[QueryCache.fixture]], and the min/max bucketing stats
     * come from one cheap aggregate at ingest (catalog stats at scale).
     * `LayoutSpec` measures the skip against the 1-D layout on the same
     * rectangle.
@@ -952,10 +938,7 @@ object Relational {
       loChars: Long = 480L, hiChars: Long = 600L,
       loId: Long = 0L, hiId: Long = 100L): DataFrame = {
     val spark = documents.sparkSession
-    val inputKey = documents.inputFiles.sorted.mkString(",")
-    val path = zorderLayouts.computeIfAbsent((spark, inputKey), { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_zorder")
-      deleteRecursivelyOnExit(dir)
+    val path = QueryCache.fixture("zorder_layout", documents) { f =>
       val Array(minC, maxC, minI, maxI) = documents
         .agg(min("n_chars"), max("n_chars"), min("doc_id"), max("doc_id"))
         .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
@@ -973,43 +956,13 @@ object Relational {
         .sortWithinPartitions("g_z", "doc_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 64)
-        .parquet(s"$dir/docs_z")
-      s"$dir/docs_z"
-    })
+        .parquet(s"${f.dir}/docs_z")
+      s"${f.dir}/docs_z"
+    }
     spark.read.parquet(path)
       .filter(col("n_chars") >= loChars && col("n_chars") < hiChars &&
         col("doc_id") >= loId && col("doc_id") < hiId)
       .select(col("doc_id"), col("n_chars"), col("source"))
       .orderBy("doc_id")
   }
-
-  private val zorderLayouts =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
-  private val sortedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
-  /** Session-lifetime registry of bucketed ingests already written:
-    * (session, sorted input files, bucket count) → the two scoped table
-    * names. Entries live until JVM exit, when their temp warehouses are
-    * deleted; catalog metadata dies with the session.
-    */
-  private val bucketedTables =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int), (String, String)]()
-  private val bucketedSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }))
 }

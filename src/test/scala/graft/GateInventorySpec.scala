@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Inventory of the `spark.graft.*` session-conf gates and of the
-  * entry-point mains in the main sources. Every gate keeps a second
-  * execution path alive, so adding one means editing the expected set
-  * below, next to the gate's retirement plan in ROADMAP.md; a new `main`
-  * is likewise a visible edit here.
+/** Inventory of the `spark.graft.*` session-conf gates, of the
+  * entry-point mains and of the fixture-memo idiom in the main sources.
+  * Every gate keeps a second execution path alive, so adding one means
+  * editing the expected set below, next to the gate's retirement plan in
+  * ROADMAP.md; a new `main`, or a hand-rolled pay-once fixture beside
+  * `QueryCache.fixture`, is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
 
@@ -49,5 +50,22 @@ class GateInventorySpec extends AnyFunSuite {
     assert(found == Set("graft.Bench", "graft.Verify", "graft.PlanAudit",
       "graft.etl.TradePipeline", "graft.tools.CcScale", "graft.tools.MakeScaleDocs"),
       s"mains in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("pay-once fixtures have one owner: QueryCache") {
+    def uses(token: String): Map[String, Int] = mainSources
+      .map { case (path, src) =>
+        path -> java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).size
+      }
+      .filter(_._2 > 0).toMap
+    Seq("createTempDirectory", "addShutdownHook").foreach { token =>
+      assert(uses(token) == Map("graft/ops/QueryCache.scala" -> 1), s"$token in src/main/scala")
+    }
+    Seq("ConcurrentHashMap", "AtomicLong", "inputFiles.sorted", "computeIfAbsent")
+      .foreach { token =>
+        val found = uses(token).keySet &
+          Set("graft/ops/Incremental.scala", "graft/ops/Relational.scala")
+        assert(found.isEmpty, s"$token in ${found.mkString(", ")}")
+      }
   }
 }
