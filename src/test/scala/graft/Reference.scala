@@ -252,4 +252,85 @@ object Reference {
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
       .orderBy("l_orderkey")
   }
+
+  // ---- versioned tables: the manifest read in full ------------------------
+
+  /** One data file of a versioned-table snapshot as its manifest entry
+    * records it: path, footer rows, integral zones, string zones (lower
+    * side and optional upper side, truncation stars dropped) and member
+    * blooms. */
+  final case class ManifestFile(
+      path: String, rows: Option[Long],
+      zones: Map[String, (Long, Long)],
+      strZones: Map[String, (Array[Byte], Option[Array[Byte]])],
+      blooms: Map[String, Array[Byte]])
+
+  /** Every data file of `table`'s snapshot at `version`, read the long
+    * way: each manifest of the carry chain is read whole, the chain is
+    * applied oldest first (`R:` lines drop a carried entry by path, every
+    * other entry line appends), tombstones (`D:`) are dropped and each
+    * data entry's `#` segments are decoded on their own. No header line
+    * (rollup, index, count) is consulted beyond `carry=`. */
+  def manifestFiles(table: String, version: Long): Seq[ManifestFile] = {
+    import scala.jdk.CollectionConverters._
+    def isEntry(l: String): Boolean =
+      l.startsWith("data/") || l.startsWith("D:") || l.startsWith("R:")
+    def pathOf(e: String): String =
+      (if (e.startsWith("D:")) e.split(":", 3)(2) else e).takeWhile(_ != '#')
+    def resolve(v: Long): Vector[String] = {
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(table, "_manifest", s"$v.manifest")).asScala.toList
+      val (headers, body) = lines.span(l => !isEntry(l))
+      val base = headers.find(_.startsWith("carry="))
+        .fold(Vector.empty[String])(c => resolve(c.stripPrefix("carry=").toLong))
+      val gone = body.filter(_.startsWith("R:")).map(_.drop(2)).toSet
+      base.filterNot(e => gone(pathOf(e))) ++ body.filterNot(_.startsWith("R:"))
+    }
+    val b64 = java.util.Base64.getDecoder
+    def cells(seg: String): Seq[(String, String)] =
+      seg.split(';').toSeq.filter(_.contains('=')).map { kv =>
+        val eq = kv.indexOf('='); (kv.take(eq), kv.drop(eq + 1))
+      }
+    resolve(version).filterNot(_.startsWith("D:")).map { e =>
+      val seg = e.split("#", -1).lift
+      val zones = cells(seg(2).getOrElse("")).map { case (c, z) =>
+        val Array(mn, mx) = z.split("\\.\\.", -1); c -> (mn.toLong, mx.toLong)
+      }.toMap
+      val strZones = cells(seg(4).getOrElse("")).map { case (c, z) =>
+        val Array(lo, hi) = z.split("\\.\\.", -1).map(_.stripSuffix("*"))
+        c -> (b64.decode(lo), Some(hi).filter(_.nonEmpty).map(b64.decode))
+      }.toMap
+      val blooms = cells(seg(5).getOrElse("")).map { case (c, b) =>
+        c -> b64.decode(b)
+      }.toMap
+      ManifestFile(pathOf(e),
+        seg(1).flatMap(_.takeWhile(_ != '@').toLongOption), zones, strZones, blooms)
+    }
+  }
+
+  /** The paths of `files` a planner may keep for a conjunction of
+    * integral ranges, string ranges (unsigned byte order, either side
+    * open) and member probe groups (a group is a disjunction of element
+    * hashes), judged file by file. A file keeps unless one of its own
+    * records positively excludes a conjunct; a file that records nothing
+    * for a column is kept. */
+  def prunedFiles(
+      files: Seq[ManifestFile],
+      bounds: Map[String, (Long, Long)],
+      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
+      probes: Seq[(String, Seq[Long])]): Seq[String] = {
+    def le(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b) <= 0
+    files.filter { f =>
+      bounds.forall { case (c, (lo, hi)) =>
+        f.zones.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo }
+      } && strBounds.forall { case (c, (lo, hi)) =>
+        f.strZones.get(c).forall { case (zlo, zhi) =>
+          hi.forall(le(zlo, _)) && lo.forall(l => zhi.forall(le(l, _)))
+        }
+      } && probes.forall { case (c, hs) =>
+        f.blooms.get(c).forall(b =>
+          hs.exists(h => graft.functions.MemberBloom.mightContain(b, h)))
+      }
+    }.map(_.path)
+  }
 }

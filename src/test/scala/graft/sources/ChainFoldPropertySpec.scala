@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge-on-read deletes, checkpoints, vacuums. Each fold is checked
   * against ground truth computed a DIFFERENT way — file counts against
   * the resolved layout, chain dirs against the live entry walk, rollup
-  * soundness against per-file stats, and the selective DML candidate
-  * set against the old global-filter recipe — so a fold that merges a
+  * soundness against per-file stats, and the planner's file selection
+  * against [[graft.Reference.manifestFiles]] (the manifest chain read
+  * whole, each entry judged on its own) — so a fold that merges a
   * version's declarations wrongly, survives a chain reshape it
   * shouldn't, or drops a live file cannot pass by construction.
   */
@@ -19,27 +20,119 @@ class ChainFoldPropertySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private lazy val root = SparkTestBase.tempDir("chain_fold_prop").toString
 
+  private type StrBounds = Map[String, (Option[Array[Byte]], Option[Array[Byte]])]
+
+  /** The planner's file selection for one conjunction of bounds and
+    * probes: commit/chunk rollups first, then each surviving file's own
+    * zones, string zones and member blooms. */
+  private def selection(t: String, v: Long, b: Map[String, (Long, Long)],
+      sb: StrBounds, mp: Seq[(String, Seq[Long])]): Set[String] = {
+    val strOf: String => Option[Map[String, (Array[Byte], Option[Array[Byte]])]] =
+      if (sb.isEmpty) _ => Some(Map.empty)
+      else VersionedTable.selectiveStrStats(t, Some(v), b, sb, mp).getOrElse {
+        val g = VersionedTable.snapshotStrStats(t, Some(v))
+        p => Some(g.getOrElse(p, Map.empty))
+      }
+    val memOf: String => Option[Map[String, Array[Byte]]] =
+      if (mp.isEmpty) _ => Some(Map.empty)
+      else VersionedTable.selectiveMemberBlooms(t, Some(v), b, sb, mp).getOrElse {
+        val g = VersionedTable.snapshotMemberBlooms(t, Some(v))
+        p => Some(g.getOrElse(p, Map.empty))
+      }
+    VersionedTable.selectiveLayoutByCommit(t, Some(v), b, sb, mp)
+      .flatMap(_._2).filter { case (path, _, _, stats) =>
+        b.forall { case (c, (lo, hi)) =>
+          stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+        } && strOf(path).exists(zs => sb.forall { case (c, bb) =>
+          zs.get(c).forall(GraftFilters.strZoneIntersects(_, bb))
+        }) && memOf(path).exists(bl => mp.forall { case (c, hs) =>
+          bl.get(c).forall(x => hs.exists(h =>
+            graft.functions.MemberBloom.mightContain(x, h)))
+        })
+      }.map(_._1).toSet
+  }
+
+  private def tagHash(tag: String): Long = graft.functions.MemberBloom.hashUtf8(
+    org.apache.spark.unsafe.types.UTF8String.fromString(tag))
+
   test("random append/delete/checkpoint/vacuum sequences: counts, dirs, " +
       "rollups, and reads stay consistent with ground truth at every step") {
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(20260817L)
-    (0 until 3).foreach { run =>
+    // two entries per index chunk: materialized manifests then split their
+    // larger commit dirs, so the seek path also drops single chunks
+    val prevChunk = VersionedTable.IndexChunkEntries
+    VersionedTable.IndexChunkEntries = 2
+    // plans seen by check (e): the seek path served it, the seek path
+    // declined (nothing dead at commit/chunk level), and plans made
+    // after an unfiltered selection of the same version
+    var (seekServed, seekDeclined, warm, prunedSome) = (0, 0, 0, 0)
+    try (0 until 3).foreach { run =>
       val t = s"$root/prop$run"
+      VersionedTable.recordTableProps(t, Map("graft.member-cols" -> "tags"))
       // live model of table content: key -> value
       val model = scala.collection.mutable.Map.empty[Long, Long]
-      def commitRows(lo: Long, n: Long, append: Boolean): Unit = {
-        val rows = (lo until lo + n).map(k => (k, k * 3))
+      // string key ordered like k; tags: one per commit step, one per key class
+      def commitRows(lo: Long, n: Long, append: Boolean, step: Int): Unit = {
+        val rows = (lo until lo + n).map(k =>
+          (k, k * 3, f"k$k%06d", Seq(s"g${step % 4}", s"r${k % 3}")))
         if (!append) model.clear()
-        rows.foreach { case (k, v) => model(k) = v }
+        rows.foreach { case (k, v, _, _) => model(k) = v }
         VersionedTable.commit(
-          rows.toDF("k", "v").repartition(1 + rnd.nextInt(2)),
-          t, append = append, statsCols = Seq("k"))
+          rows.toDF("k", "v", "s", "tags").repartition(1 + rnd.nextInt(4)),
+          t, append = append, statsCols = Seq("k", "s"))
       }
-      commitRows(0L, 50L, append = false)
+      // a random conjunction: an integral range on k, a string range on
+      // s (either side may be open) and a member probe group on tags
+      def randomPrune(keys: Seq[Long])
+          : (Map[String, (Long, Long)], StrBounds, Seq[(String, Seq[Long])]) = {
+        def key() = keys(rnd.nextInt(keys.size))
+        def sk(k: Long) = Some(f"k$k%06d".getBytes("UTF-8"))
+        val b = rnd.nextInt(3) match {
+          case 0 => Map.empty[String, (Long, Long)]
+          case 1 => val lo = key(); Map("k" -> (lo, lo + 500L))
+          case _ =>
+            val (x, y) = (key(), key()); Map("k" -> (math.min(x, y), math.max(x, y)))
+        }
+        val sb: StrBounds = rnd.nextInt(4) match {
+          case 0 => Map.empty
+          case 1 => Map("s" -> (sk(key()), None))
+          case 2 => Map("s" -> (None, sk(key())))
+          case _ =>
+            val (x, y) = (key(), key())
+            Map("s" -> (sk(math.min(x, y)), sk(math.max(x, y))))
+        }
+        val tags = Seq("g0", "g1", "g2", "g3", "r0", "r1", "r2", "absent")
+        val mp =
+          if (rnd.nextBoolean()) Nil
+          else Seq("tags" ->
+            Seq.fill(1 + rnd.nextInt(2))(tagHash(tags(rnd.nextInt(tags.size)))))
+        (b, sb, mp)
+      }
+      def checkSelection(head: Long, step: Int, afterFull: Boolean): Unit = {
+        val files = graft.Reference.manifestFiles(t, head)
+        assert(files.forall(_.rows.exists(_ > 0L)),
+          s"run $run step $step: every file of this table carries rows")
+        val (b, sb, mp) = randomPrune(model.keys.toSeq.sorted)
+        val hits = VersionedTable.selectiveSeekHits.get()
+        val got = selection(t, head, b, sb, mp)
+        if (afterFull) warm += 1
+        else if (VersionedTable.selectiveSeekHits.get() > hits) seekServed += 1
+        else seekDeclined += 1
+        val want = graft.Reference.prunedFiles(files, b, sb, mp).toSet
+        if (want.size < files.size) prunedSome += 1
+        assert(got == want,
+          s"run $run step $step (after a full plan: $afterFull): selection " +
+            s"diverged for k $b, s ${sb.view.mapValues(x =>
+              (x._1.map(new String(_)), x._2.map(new String(_)))).toMap}, " +
+            s"tags $mp: selection-only ${got -- want}, reference-only ${want -- got}")
+      }
+      commitRows(0L, 50L, append = false, step = 0)
       (1 to 12).foreach { step =>
         rnd.nextInt(10) match {
           case d if d <= 5 => // append a fresh key range
-            commitRows(step.toLong * 1000L, 20L + rnd.nextInt(30), append = true)
+            commitRows(step.toLong * 1000L, 20L + rnd.nextInt(30), append = true,
+              step = step)
           case 6 | 7 => // MOR delete of a random modulus class
             val m = 3L + rnd.nextInt(5)
             val doomed = model.keys.filter(_ % 10L == m).toSeq
@@ -52,10 +145,13 @@ class ChainFoldPropertySpec extends AnyFunSuite {
         }
         val head = VersionedTable.versions(t).last
         // (a) reads equal the model exactly
-        val got = VersionedTable.read(spark, t)
+        val got = VersionedTable.read(spark, t).select("k", "v")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == model.toMap,
           s"run $run step $step: content diverged (${got.size} vs ${model.size})")
+        // (e) the planner's selection equals the reference, before any
+        // unfiltered plan of this version ...
+        if (model.nonEmpty) checkSelection(head, step, afterFull = false)
         // (b) the fast header count equals the resolved layout's count
         val layout = VersionedTable.snapshotLayout(t, Some(head))
         VersionedTable.snapshotFileCountFast(t, Some(head)).foreach { fc =>
@@ -82,26 +178,12 @@ class ChainFoldPropertySpec extends AnyFunSuite {
             }
           }
         }
-        // (e) selective DML candidates equal the old global-filter
-        // recipe on row-carrying files, for a random narrow range
-        if (model.nonEmpty) {
-          val keys = model.keys.toSeq.sorted
-          val lo = keys(rnd.nextInt(keys.size))
-          val hi = lo + 500L
-          val selective = VersionedTable.selectiveCandidates(
-            t, Some(head), Map("k" -> (lo, hi)), Map.empty)
-            .map(_._1).filterNot(p =>
-              layout.find(_._1 == p).exists(_._4.isEmpty)).toSet
-          val global = layout.filter { case (_, _, _, stats) =>
-            stats.nonEmpty &&
-              stats.get("k").forall { case (mn, mx) => mx >= lo && mn <= hi }
-          }.map(_._1).toSet
-          assert(selective == global,
-            s"run $run step $step: candidates diverged for [$lo,$hi]: " +
-              s"selective-only ${selective -- global}, " +
-              s"global-only ${global -- selective}")
-        }
+        // ... and after it
+        if (model.nonEmpty) checkSelection(head, step, afterFull = true)
       }
-    }
+    } finally VersionedTable.IndexChunkEntries = prevChunk
+    assert(seekServed > 0 && seekDeclined > 0 && warm > 0 && prunedSome > 0,
+      s"check (e) must see every kind of plan: seek served $seekServed, " +
+        s"seek declined $seekDeclined, after a full plan $warm, pruning $prunedSome")
   }
 }
