@@ -749,22 +749,16 @@ class GraftRowLevelOperation(
       override def build(): Scan = {
         // pin the basis and the candidate (= replaced) files EAGERLY:
         // the write's publish must replace exactly what this scan reads.
-        // Candidates come from the SELECTIVE seek path (commit/chunk
-        // rollups first, surviving entries parsed per file) — a narrow
-        // DELETE/UPDATE/MERGE on a million-file table must not
-        // materialize the global O(files) layout + string-stats memos
-        // just to pick its few touched files. Intersecting every pushed
-        // range is equivalent to one (max lo, min hi) test per column,
-        // which is exactly the map the selective planner takes.
+        // Candidates are the planner selection (commit/chunk rollups
+        // first, surviving entries parsed per chunk) — a narrow
+        // DELETE/UPDATE/MERGE on a million-file table parses only the
+        // chunks its bounds reach.
         val vs = VersionedTable.versions(table)
         require(vs.nonEmpty, s"no committed versions at $table")
         basis = vs.last
-        val boundsMap = bounds.groupBy(_._1).map { case (c, bs) =>
-          c -> (bs.map(_._2).max, bs.map(_._3).min)
-        }
-        val kept = VersionedTable.selectiveCandidates(
-          table, Some(basis), boundsMap, strBounds)
-        planned = kept.map(_._1)
+        val kept = VersionedTable.select(table, Some(basis), Prune.conjunction(
+          bounds, strBounds.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }))
+        planned = kept.map(_.path)
         new Scan with Batch {
           override def readSchema(): StructType = reportAs
           override def toBatch: Batch = this
@@ -774,12 +768,12 @@ class GraftRowLevelOperation(
           private lazy val columnarOk: Boolean =
             required.nonEmpty &&
               kept.forall(e =>
-                GraftVectorization.morOk(required, e._3.map(abs))) && {
-                kept.groupBy(_._2).valuesIterator.forall { files =>
+                GraftVectorization.morOk(required, e.tombstones.map(abs))) && {
+                kept.groupBy(_.commit).valuesIterator.forall { files =>
                   GraftVectorization.schemaCompatible(required,
                     VersionedTable.commitSchemaHinted(
                       SparkSession.active, table, Some(basis),
-                      files.map(_._1).min))
+                      files.map(_.path).min))
                 }
               }
           // header-resolved total (exact on count-line manifests) — the
@@ -791,8 +785,8 @@ class GraftRowLevelOperation(
             s"graft-rowlevel-scan $table@v$basis files=${kept.size}/$totalFiles " +
               s"vectorized=$columnarOk"
           override def planInputPartitions(): Array[InputPartition] =
-            kept.map { case (file, _, tombs, _) =>
-              GraftCatalogPartition(abs(file), tombs.map(abs), columnarOk): InputPartition
+            kept.map { f =>
+              GraftCatalogPartition(abs(f.path), f.tombstones.map(abs), columnarOk): InputPartition
             }.toArray
           override def createReaderFactory(): PartitionReaderFactory =
             new GraftCatalogReaderFactory(required)
@@ -876,8 +870,8 @@ class GraftReplaceBatchWrite(
     // open files lazily, so a 0-row rewrite stages nothing) must still
     // leave a schema source — land the carrier CREATE TABLE uses
     val entries = if (entries0.nonEmpty ||
-        VersionedTable.snapshotLayout(table, Some(op.basis))
-          .exists(e => !op.planned.contains(e._1))) entries0
+        VersionedTable.select(table, Some(op.basis), Prune.none)
+          .exists(f => !op.planned.contains(f.path))) entries0
       else {
         val fileName = VersionedTable.bucketSpec(table)
           .fold("part-schema-0.parquet")(_ => "__graft_bucket=0/part-schema-0.parquet")
@@ -1306,6 +1300,25 @@ private[sources] object GraftFilters {
     vs.toArray.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .sortWith(VersionedTable.byteCompare(_, _) < 0)
 
+  /** Admissible-KEY file pruning (static In/EqualTo sets and runtime DPP
+    * sets): a file drops when one of its zones holds none of a column's
+    * keys — one binary search per (file, column) over keys sorted once.
+    * Stat-less columns keep the file.
+    */
+  def inSetsKeep(sets: Map[String, Set[Long]],
+      strSets: Map[String, Set[String]]): FileEntry => Boolean =
+    if (sets.isEmpty && strSets.isEmpty) _ => true
+    else sortedInKeep(sets.view.mapValues(_.toArray.sorted).toMap,
+      strSets.view.mapValues(sortedUtf8).toMap)
+
+  def sortedInKeep(sorted: Map[String, Array[Long]],
+      sSorted: Map[String, Array[Array[Byte]]])(f: FileEntry): Boolean =
+    sorted.forall { case (c, vs) =>
+      f.zones.get(c).forall { case (mn, mx) => anyInRange(vs, mn, mx) }
+    } && sSorted.forall { case (c, vs) =>
+      f.strZones.get(c).forall { case (zlo, zhi) => anyInStrZone(vs, zlo, zhi) }
+    }
+
   /** Date literal → epoch days, the unit the date zone maps record
     * (`unix_date` at commit time). Pushed date filters carry
     * `java.sql.Date` (default) or `java.time.LocalDate` (java8 API).
@@ -1352,19 +1365,6 @@ private[sources] object GraftFilters {
       }
     schema.fields.flatMap(f => walk(f.name, f.dataType)).toSeq
   }
-
-  /** Physical rendering of a possibly-DOTTED leaf name: column-mapping
-    * renames apply to the TOP-LEVEL segment only (nested field names are
-    * not mapped), so "meta.lang" under a mapping {meta→c42} becomes
-    * "c42.lang".
-    */
-  def physLeaf(l2p: Map[String, String], c: String): String =
-    l2p.getOrElse(c, {
-      val i = c.indexOf('.')
-      if (i < 0) c
-      else l2p.get(c.substring(0, i))
-        .fold(c)(phys => phys + c.substring(i))
-    })
 
   def integralBounds(filters: Array[Filter], schema: StructType)
       : (Seq[(String, Long, Long)], Array[Filter]) = {
@@ -1593,7 +1593,7 @@ class GraftHistoryTable(table: String, ident: String)
   * snapshot — path, owning commit, commit-time footer row count (null
   * for pre-stats manifests), how many tombstone files apply to it, and
   * its zone map rendered as `col=lo..hi;…` (empty when none). Built on
-  * the driver from [[VersionedTable.snapshotLayout]] and served as a
+  * the driver from [[VersionedTable.select]] and served as a
   * LocalScan; honors `VERSION AS OF`, so layout drift across commits
   * (small-file buildup, clustering decay, tombstone debt) is
   * SQL-inspectable per snapshot without opening a single data file.
@@ -1618,15 +1618,13 @@ class GraftFilesTable(table: String, version: Option[Long], ident: String)
           override def readSchema(): StructType = filesSchema
           override def description(): String = s"graft-files $table"
           override def rows(): Array[InternalRow] = {
-            val sizesOf = VersionedTable.snapshotSizes(table, version)
-            VersionedTable.snapshotFiles(table, version).map {
-              case (path, commit, rows, tombs, zones) =>
-                new GenericInternalRow(Array[Any](
-                  UTF8String.fromString(path), commit,
-                  rows.map(Long.box).orNull,
-                  sizesOf.getOrElse(path, None).map(Long.box).orNull,
-                  tombs,
-                  UTF8String.fromString(zones))): InternalRow
+            VersionedTable.select(table, version, Prune.none).map { f =>
+              val zones = f.zones.toSeq.sortBy(_._1)
+                .map { case (col, (mn, mx)) => s"$col=$mn..$mx" }.mkString(";")
+              new GenericInternalRow(Array[Any](
+                UTF8String.fromString(f.path), f.commit,
+                f.rows.map(Long.box).orNull, f.bytes.map(Long.box).orNull,
+                f.tombstones.size, UTF8String.fromString(zones))): InternalRow
             }.toArray
           }
         }
@@ -1666,8 +1664,8 @@ class GraftStatsTable(table: String, version: Option[Long], ident: String)
             val spark = SparkSession.active
             val phys = VersionedTable.snapshotSchema(spark, table, version)
             val rep = VersionedTable.logicalizeSchema(table, phys)
-            val paths = VersionedTable.snapshotFiles(table, version).map(_._1)
-            val cs = GraftColumnStats.forScan(table, version, paths, phys, rep)
+            val cs = GraftColumnStats.forScan(table,
+              VersionedTable.select(table, version, Prune.none), phys, rep)
             val byName = {
               import scala.jdk.CollectionConverters._
               cs.asScala.map { case (ref, v) => ref.describe() -> v }.toMap
@@ -2233,10 +2231,9 @@ class GraftTableScanBuilder(
     if (agg.groupByExpressions.nonEmpty || used.nonEmpty ||
       bounds.nonEmpty || strBounds.nonEmpty)
       return None
-    val layout = VersionedTable.snapshotLayout(table, version)
-    if (layout.exists(_._3.nonEmpty)) return None // tombstones
-    val rowsOf = VersionedTable.snapshotRowCounts(table, version)
-    if (rowsOf.valuesIterator.exists(_.isEmpty)) return None // pre-stats file
+    val files = VersionedTable.select(table, version, Prune.none)
+    if (files.exists(_.tombstones.nonEmpty)) return None // tombstones
+    if (files.exists(_.rows.isEmpty)) return None // pre-stats file
     // aggregate references arrive LOGICAL; stats are keyed PHYSICAL.
     // DATE rides along: its zone stats are exact epoch days (unix_date
     // at commit), and Spark's internal DATE value IS epoch days.
@@ -2263,22 +2260,20 @@ class GraftTableScanBuilder(
     val dblCols: Set[String] = physSchema(full).fields.collect {
       case f if f.dataType == DoubleType || f.dataType == FloatType => f.name
     }.toSet
-    def statsComplete(c: String): Boolean = layout.forall { case (p, _, _, st) =>
-      st.contains(c) || rowsOf(p).contains(0L)
-    }
+    def statsComplete(c: String): Boolean =
+      files.forall(f => f.zones.contains(c) || f.rows.contains(0L))
     def extremes(c: String): (Option[Long], Option[Long]) = {
-      val st = layout.flatMap(e => e._4.get(c))
+      val st = files.flatMap(_.zones.get(c))
       (st.map(_._1).minOption, st.map(_._2).maxOption)
     }
     // string MIN/MAX: answerable only from EXACT (unstarred) zone sides —
     // a truncated bound is valid for pruning but is not the extreme value
-    lazy val strExact = VersionedTable.snapshotStrStatsExact(table, version)
     def strSide(c: String, hiSide: Boolean): Option[Option[String]] = {
       // None = decline (some file's side inexact/missing);
       // Some(extreme) = answerable (Some(None) on an all-empty table)
-      val sides = layout.map { case (path, _, _, _) =>
-        if (rowsOf(path).contains(0L)) Some(None)
-        else strExact.getOrElse(path, Map.empty).get(c)
+      val sides = files.map { f =>
+        if (f.rows.contains(0L)) Some(None)
+        else f.strExact.get(c)
           .map(z => if (hiSide) z._2 else z._1) match {
           case Some(Some(v)) => Some(Some(v))
           case _             => None
@@ -2294,8 +2289,7 @@ class GraftTableScanBuilder(
     }
     val specs = agg.aggregateExpressions.map {
       case _: CountStar =>
-        GraftAggSpec("count", "", LongType,
-          Some(rowsOf.valuesIterator.flatten.sum))
+        GraftAggSpec("count", "", LongType, Some(files.flatMap(_.rows).sum))
       case m: VMin => m.column match {
         case f: NamedReference if f.fieldNames.length == 1 &&
             integral.contains(p(f.fieldNames()(0))) &&
@@ -2391,16 +2385,17 @@ class GraftTableScanBuilder(
   }
   override def isPartiallyPushed(): Boolean = true
 
+  private def prune =
+    Prune(bounds, strBounds, memberProbes.map { case (c, h) => p(c) -> h })
+
   override def build(): Scan = (aggPlan, bucket) match {
     case (Some(specs), _) => new GraftAggScan(table, version, specs)
     case (None, Some((c, n))) =>
-      new GraftBucketedScan(table, version, required, bounds, strBounds,
-        c, n, reportAs, staticIn, staticStrIn,
-        memberProbes.map { case (mc, h) => p(mc) -> h })
+      new GraftBucketedScan(table, version, required, prune,
+        c, n, reportAs, staticIn, staticStrIn)
     case (None, None) =>
-      new GraftTableScan(table, version, required, bounds, strBounds,
-        limitOpt, topN, reportAs, staticIn, staticStrIn,
-        memberProbes.map { case (c, h) => p(c) -> h })
+      new GraftTableScan(table, version, required, prune,
+        limitOpt, topN, reportAs, staticIn, staticStrIn)
   }
 }
 
@@ -2418,13 +2413,11 @@ class GraftTableScanBuilder(
   */
 class GraftBucketedScan(
     table: String, version: Option[Long], required: StructType,
-    bounds: Map[String, (Long, Long)],
-    strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
+    prune: Prune,
     bucketCol: String, nBuckets: Int,
     reportAs: StructType = null,
     staticIn: Map[String, Set[Long]] = Map.empty,
-    staticStrIn: Map[String, Set[String]] = Map.empty,
-    memberProbes: Seq[(String, Seq[Long])] = Nil)
+    staticStrIn: Map[String, Set[String]] = Map.empty)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering
@@ -2464,53 +2457,12 @@ class GraftBucketedScan(
         .map { case (c, s) => repToPhys.getOrElse(c, c) -> s })
   }
 
-  private lazy val perBucket: Map[Int, Seq[(String, Seq[String])]] = {
-    val layout0 = VersionedTable.bucketLayout(table, version, nBuckets)
-    // drop footer-counted zero-row files (schema carriers) — same rule
-    // as the flat scan; bucket ids all stay (SPJ alignment), only their
-    // file lists shrink
-    val zeroRows: Set[String] = VersionedTable.snapshotZeroRows(table, version)
-    val layout =
-      if (zeroRows.isEmpty) layout0
-      else layout0.view.mapValues(_.filterNot(f => zeroRows.contains(f._1))).toMap
-    if (bounds.isEmpty && strBounds.isEmpty && memberProbes.isEmpty) layout
-    else {
-      val statsOf = VersionedTable.snapshotLayout(table, version)
-        .map(e => e._1 -> e._4).toMap
-      val strStatsOf = VersionedTable.snapshotStrStats(table, version)
-      // membership pruning inside buckets serves through the seek
-      // path's chunk-granular bloom maps when the selective plan
-      // engages — the bucket LAYOUT enumeration stays O(files)
-      // (bucketLayout needs every bucket id for SPJ alignment), but the
-      // O(files)×~1 KiB global bloom map need not materialize for it;
-      // per-file None = chunk-dead in the surviving selection → drop,
-      // exactly like the flat scan. Index-less legacy manifests fall
-      // back to the global memo unchanged.
-      val memberBloomsOf: String => Option[Map[String, Array[Byte]]] =
-        if (memberProbes.isEmpty) _ => Some(Map.empty)
-        else VersionedTable.selectiveMemberBlooms(table, version, bounds,
-            strBounds, memberProbes)
-          .getOrElse {
-            val g = VersionedTable.snapshotMemberBlooms(table, version)
-            p => Some(g.getOrElse(p, Map.empty))
-          }
-      layout.view.mapValues(_.filter { case (p, _) =>
-        bounds.forall { case (c, (lo, hi)) =>
-          statsOf.getOrElse(p, Map.empty).get(c)
-            .forall { case (mn, mx) => mx >= lo && mn <= hi }
-        } && strBounds.forall { case (c, b) =>
-          strStatsOf.getOrElse(p, Map.empty).get(c)
-            .forall(GraftFilters.strZoneIntersects(_, b))
-        } && (memberProbes.isEmpty || (memberBloomsOf(p) match {
-          case None => false // chunk-dead in the surviving selection
-          case Some(blooms) => memberProbes.forall { case (c, hs) =>
-            blooms.get(c).forall(b => hs.exists(h =>
-              graft.functions.MemberBloom.mightContain(b, h)))
-          }
-        }))
-      }).toMap
-    }
-  }
+  // the planner selection minus footer-counted zero-row files (schema
+  // carriers), grouped by bucket: bucket ids all stay (SPJ alignment),
+  // only their file lists shrink
+  private lazy val perBucket: Map[Int, Seq[FileEntry]] =
+    VersionedTable.bucketLayout(table,
+      VersionedTable.select(table, version, prune).filterNot(_.rows.contains(0L)))
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -2535,7 +2487,7 @@ class GraftBucketedScan(
       Expressions, NullOrdering, SortDirection}
     val sortedSingletons = perBucket.valuesIterator.forall(files =>
       files.size <= 1 &&
-        files.forall(_._1.split('/').last.startsWith("sorted-")))
+        files.forall(_.path.split('/').last.startsWith("sorted-")))
     if (sortedSingletons && required.fieldNames.contains(bucketCol))
       Array(Expressions.sort(Expressions.column(bucketCol),
         SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
@@ -2543,20 +2495,14 @@ class GraftBucketedScan(
   }
 
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val rowsOf = VersionedTable.snapshotRowCounts(table, version)
-    val counts = perBucket.valuesIterator.flatten.map(f => rowsOf.get(f._1).flatten).toSeq
+    val files = perBucket.valuesIterator.flatten.toSeq
     val rows: Option[Long] =
-      if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+      if (files.exists(_.rows.isEmpty)) None else Some(files.flatMap(_.rows).sum)
     // exact recorded bytes when complete (same rule as GraftTableScan)
-    val sizesOf = VersionedTable.snapshotSizes(table, version)
-    val exactBytes: Option[Long] = {
-      val per = perBucket.valuesIterator.flatten
-        .map(f => sizesOf.get(f._1).flatten).toSeq
-      if (per.isEmpty || per.exists(_.isEmpty)) None else Some(per.flatten.sum)
-    }
-    lazy val colStats = GraftColumnStats.forScan(
-      table, version, perBucket.valuesIterator.flatten.map(_._1).toSeq,
-      required, rep)
+    val exactBytes: Option[Long] =
+      if (files.isEmpty || files.exists(_.bytes.isEmpty)) None
+      else Some(files.flatMap(_.bytes).sum)
+    lazy val colStats = GraftColumnStats.forScan(table, files, required, rep)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         exactBytes.orElse(
@@ -2576,10 +2522,10 @@ class GraftBucketedScan(
     required.nonEmpty && {
       def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
       perBucket.valuesIterator.flatten.forall(e =>
-        GraftVectorization.morOk(required, e._2.map(abs)))
+        GraftVectorization.morOk(required, e.tombstones.map(abs)))
     } && {
       val spark = SparkSession.active
-      perBucket.valuesIterator.flatten.map(_._1).toSeq
+      perBucket.valuesIterator.flatten.map(_.path).toSeq
         .groupBy(p => p.split('/')(1)).valuesIterator.forall { files =>
           GraftVectorization.schemaCompatible(required,
             VersionedTable.commitSchemaHinted(spark, table, version, files.min))
@@ -2593,35 +2539,11 @@ class GraftBucketedScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
-    val rt = runtimeSets
-    val srt = strRuntimeSets
-    val keptB: Map[Int, Seq[(String, Seq[String])]] =
-      if (rt.isEmpty && srt.isEmpty) perBucket
-      else {
-        val sorted = rt.view.mapValues(_.toArray.sorted).toMap
-        val sSorted = srt.view.mapValues(GraftFilters.sortedUtf8).toMap
-        val statsOf = VersionedTable.snapshotLayout(table, version)
-          .map(e => e._1 -> e._4).toMap
-        val sstats =
-          if (srt.isEmpty)
-            Map.empty[String, Map[String, (Array[Byte], Option[Array[Byte]])]]
-          else VersionedTable.snapshotStrStats(table, version)
-        perBucket.view.mapValues(_.filter { case (p, _) =>
-          sorted.forall { case (c, vs) =>
-            statsOf.getOrElse(p, Map.empty).get(c).forall { case (mn, mx) =>
-              GraftFilters.anyInRange(vs, mn, mx)
-            }
-          } && sSorted.forall { case (c, vs) =>
-            sstats.getOrElse(p, Map.empty).get(c).forall { case (zlo, zhi) =>
-              GraftFilters.anyInStrZone(vs, zlo, zhi)
-            }
-          }
-        }).toMap
-      }
+    val keep = GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets)
     (0 until nBuckets).map { b =>
       GraftBucketPartition(b,
-        keptB.getOrElse(b, Nil).map { case (p, tombs) =>
-          (abs(p), tombs.map(abs))
+        perBucket.getOrElse(b, Nil).filter(keep).map { f =>
+          (abs(f.path), f.tombstones.map(abs))
         }, columnarOk): InputPartition
     }.toArray
   }
@@ -2630,10 +2552,10 @@ class GraftBucketedScan(
     new GraftBucketReaderFactory(required,
       // per-commit generation-appropriate predicates, as in the flat scan
       GraftRowGroupFilter.perCommit(table,
-        perBucket.valuesIterator.flatten.map(_._1).toSeq,
-        bounds.keySet ++ strBounds.keySet ++
+        perBucket.valuesIterator.flatten.map(_.path).toSeq,
+        prune.bounds.keySet ++ prune.strBounds.keySet ++
           runtimeSets.keySet ++ strRuntimeSets.keySet,
-        bounds, strBounds, runtimeSets, strRuntimeSets, version))
+        prune.bounds, prune.strBounds, runtimeSets, strRuntimeSets, version))
 }
 
 case class GraftBucketPartition(
@@ -2766,15 +2688,12 @@ class GraftAggScan(table: String, version: Option[Long], specs: Seq[GraftAggSpec
 
 class GraftTableScan(
     table: String, version: Option[Long], required: StructType,
-    bounds: Map[String, (Long, Long)],
-    strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])] =
-      Map.empty,
+    prune: Prune,
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Int)] = None,
     reportAs: StructType = null,
     staticIn: Map[String, Set[Long]] = Map.empty,
-    staticStrIn: Map[String, Set[String]] = Map.empty,
-    memberProbes: Seq[(String, Seq[Long])] = Nil) extends Scan with Batch
+    staticStrIn: Map[String, Set[String]] = Map.empty) extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
@@ -2820,32 +2739,8 @@ class GraftTableScan(
         .map { case (c, s) => repToPhys.getOrElse(c, c) -> s })
   }
 
-  private[sources] def runtimeKept = {
-    val rt = runtimeSets
-    val srt = strRuntimeSets
-    if (rt.isEmpty && srt.isEmpty) kept
-    else {
-      // sorted once: "any value inside [mn, mx]?" is then one binary
-      // search per (file, column) instead of a scan of the key set
-      val sorted = rt.view.mapValues(_.toArray.sorted).toMap
-      val sSorted = srt.view.mapValues(GraftFilters.sortedUtf8).toMap
-      lazy val sstats =
-        if (srt.isEmpty)
-          Map.empty[String, Map[String, (Array[Byte], Option[Array[Byte]])]]
-        else VersionedTable.snapshotStrStats(table, version)
-      kept.filter { case (path, _, _, stats) =>
-        sorted.forall { case (c, vs) =>
-          stats.get(c).forall { case (mn, mx) =>
-            GraftFilters.anyInRange(vs, mn, mx)
-          }
-        } && sSorted.forall { case (c, vs) =>
-          sstats.getOrElse(path, Map.empty).get(c).forall { case (zlo, zhi) =>
-            GraftFilters.anyInStrZone(vs, zlo, zhi)
-          }
-        }
-      }
-    }
-  }
+  private[sources] def runtimeKept =
+    kept.filter(GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets))
 
   /** Manifest-derived statistics for the PLANNER: without them a DSv2
     * scan defaults to "unknown = huge", so a join against a catalog
@@ -2859,29 +2754,13 @@ class GraftTableScan(
     * decisions.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    // the seek-path map covers every kept file on selective plans;
-    // global O(files) memos only resolve when it is absent
-    val rowOf: String => Option[Long] = selRB match {
-      case Some(f) => p => f(p).flatMap(_._1)
-      case None =>
-        val g = VersionedTable.snapshotRowCounts(table, version)
-        p => g.get(p).flatten
-    }
-    val counts = kept.map(e => rowOf(e._1))
-    val rows: Option[Long] = if (counts.exists(_.isEmpty)) None
-      else Some(counts.flatten.sum)
+    val rows: Option[Long] = if (kept.exists(_.rows.isEmpty)) None
+      else Some(kept.flatMap(_.rows).sum)
     // EXACT bytes when every planned file recorded its size at commit
     // (post-round-14 manifests); per-type width estimate otherwise
-    val sizeOf: String => Option[Long] = selRB match {
-      case Some(f) => p => f(p).flatMap(_._2)
-      case None =>
-        val g = VersionedTable.snapshotSizes(table, version)
-        p => g.get(p).flatten
-    }
-    val exactBytes: Option[Long] = {
-      val per = kept.map(e => sizeOf(e._1))
-      if (per.isEmpty || per.exists(_.isEmpty)) None else Some(per.flatten.sum)
-    }
+    val exactBytes: Option[Long] =
+      if (kept.isEmpty || kept.exists(_.bytes.isEmpty)) None
+      else Some(kept.flatMap(_.bytes).sum)
     val width = required.fields.map(_.dataType match {
       case LongType | DoubleType | TimestampType | TimestampNTZType => 8L
       case IntegerType | FloatType | DateType => 4L
@@ -2889,8 +2768,7 @@ class GraftTableScan(
       case BooleanType | ByteType => 1L
       case _ => 20L
     }).sum.max(1L)
-    lazy val colStats = GraftColumnStats.forScan(
-      table, version, kept.map(_._1), required, rep)
+    lazy val colStats = GraftColumnStats.forScan(table, kept, required, rep)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         exactBytes.orElse(rows.map(_ * width))
@@ -2903,106 +2781,16 @@ class GraftTableScan(
     }
   }
 
-  private lazy val layout = VersionedTable.snapshotLayout(table, version)
-  // per-file string zones: through the seek path's chunk-granular maps
-  // when the selective plan engages (never materializing the global
-  // O(files) memo on a cold plan), the global memo otherwise. Per-file
-  // None = NOT in the seek path's surviving selection — positively
-  // excluded at commit/chunk granularity, so the per-file check DROPS
-  // it (a warm plan assembling from the reusable full-layout memo must
-  // prune exactly what a cold seek plan never reads)
-  private lazy val strStatsOf
-      : String => Option[Map[String, (Array[Byte], Option[Array[Byte]])]] =
-    if (strBounds.isEmpty) _ => Some(Map.empty)
-    else VersionedTable.selectiveStrStats(table, version, bounds, strBounds,
-        memberProbes)
-      .getOrElse {
-        val g = VersionedTable.snapshotStrStats(table, version)
-        p => Some(g.getOrElse(p, Map.empty))
-      }
-  // footer-counted ZERO-ROW files (schema carriers, emptied rewrites)
-  // hold nothing under any tombstone set — drop them from planning, so
-  // they never decline TopN/LIMIT planning nor open a reader
-  private lazy val zeroRows: Set[String] =
-    VersionedTable.snapshotZeroRows(table, version)
-  // COMMIT-LEVEL pre-filter (two-level interval index, the Iceberg
-  // manifest-list shape): iterate BY COMMIT and drop a whole dead commit
-  // with one rollup range-check — its files are never visited — so a
-  // selective predicate over a long-ingest table pays O(commits) probes
-  // plus only the surviving commits' per-file checks, not O(files).
-  // The rollups are the PERSISTED `rollup=` manifest header lines, so
-  // the pre-filter works on the FIRST plan after process start too: a
-  // cold selective plan parses per-file stats only for surviving
-  // commits ([[VersionedTable.selectiveLayoutByCommit]]). Iteration
-  // order is commit-grouped first-appearance order, memoized, so plans
-  // stay deterministic run to run.
-  // seek-path rows/bytes for the selective selection: lets zero-row
-  // filtering AND the statistics estimate below skip the global
-  // O(files) memos on a cold selective plan
-  private lazy val selRB
-      : Option[String => Option[(Option[Long], Option[Long])]] =
-    if (bounds.isEmpty && strBounds.isEmpty && memberProbes.isEmpty) None
-    else VersionedTable.selectiveRowsBytes(table, version, bounds,
-      strBounds = strBounds, memberProbes = memberProbes)
-  private def isZeroRow(path: String): Boolean = selRB match {
-    case Some(f) => f(path).flatMap(_._1).contains(0L)
-    case None    => zeroRows.contains(path)
-  }
-  // MEMBERSHIP pruning: a file whose commit-time element bloom
-  // positively excludes a probed key cannot hold a row satisfying the
-  // array_contains / map-key conjunct — drop it at planning time.
-  // Omission (no bloom recorded) means cannot-exclude, like every zone.
-  // Blooms serve through the seek path's chunk-granular maps when the
-  // selective plan engages (`b~` OR-rollup cells skip whole commits and
-  // chunks first; only surviving chunks' per-file blooms are parsed or
-  // held) — the global O(files)×~1 KiB driver map only materializes on
-  // index-less legacy manifests.
-  private lazy val memberBloomsOf: String => Option[Map[String, Array[Byte]]] =
-    if (memberProbes.isEmpty) _ => Some(Map.empty)
-    else VersionedTable.selectiveMemberBlooms(table, version, bounds,
-        strBounds, memberProbes)
-      .getOrElse {
-        val g = VersionedTable.snapshotMemberBlooms(table, version)
-        p => Some(g.getOrElse(p, Map.empty))
-      }
-  private def memberKeep(path: String): Boolean =
-    memberProbes.isEmpty || (memberBloomsOf(path) match {
-      case None => false // not in the surviving selection: chunk-dead
-      case Some(blooms) =>
-        // each probe group is a disjunction: the file survives the
-        // group when ANY of its hashes might be contained
-        memberProbes.forall { case (c, hs) =>
-          blooms.get(c).forall(b => hs.exists(h =>
-            graft.functions.MemberBloom.mightContain(b, h)))
-        }
-    })
-  private lazy val pruned =
-    if (bounds.isEmpty && strBounds.isEmpty && memberProbes.isEmpty)
-      layout.filter { case (path, _, _, _) => !zeroRows.contains(path) }
-    else
-      // STRING bounds and MEMBERSHIP probes ride the same commit/chunk
-      // pre-filter as integral ones (`s~` / `b~` rollup cells), so a
-      // `lang = 'en'` or `array_contains(tags, 'en')` cold plan over a
-      // giant table seeks surviving blocks instead of streaming the
-      // O(files) entry section
-      VersionedTable.selectiveLayoutByCommit(table, version, bounds,
-          strBounds, memberProbes)
-        .iterator.flatMap { case (cv, es) =>
-          es.filter { case (path, _, _, stats) =>
-            !isZeroRow(path) &&
-            bounds.forall { case (c, (lo, hi)) =>
-              stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-            } && strKeep(path) && memberKeep(path)
-          }
-        }.toSeq
-  private def strKeep(path: String): Boolean =
-    strBounds.isEmpty || (strStatsOf(path) match {
-      case None => false // not in the surviving selection: chunk-dead
-      case Some(zs) =>
-        strBounds.forall { case (c, b) =>
-          zs.get(c).forall(GraftFilters.strZoneIntersects(_, b))
-        }
-    })
+  // the planner selection ([[VersionedTable.select]]): commit/chunk
+  // rollups drop whole dead commits before their entries are parsed (a
+  // cold selective plan over a long-ingest table pays O(commits) probes
+  // plus the surviving chunks' files), then each file passes the prune
+  // on its own zones, string zones and member blooms. Footer-counted
+  // ZERO-ROW files (schema carriers, emptied rewrites) hold nothing under
+  // any tombstone set — dropped, so they never decline TopN/LIMIT
+  // planning nor open a reader
+  private lazy val pruned: Seq[FileEntry] =
+    VersionedTable.select(table, version, prune).filterNot(_.rows.contains(0L))
   // a pushed (partial) LIMIT plans just enough files to cover it, by
   // footer counts — safe only when every file is tombstone-free (the
   // MOR anti-join shrinks a file's contribution below its footer count)
@@ -3014,10 +2802,8 @@ class GraftTableScan(
   // row of a dropped file can appear in any valid top n. Declines (keeps
   // everything) under tombstones or incomplete stats/NN counts.
   private lazy val topped = topN match {
-    case Some((c, desc, n)) if pruned.forall(_._3.isEmpty) =>
-      val nnOf = VersionedTable.snapshotNonNulls(table, version)
-      val info = pruned.map(e =>
-        (e, e._4.get(c), nnOf.getOrElse(e._1, Map.empty).get(c)))
+    case Some((c, desc, n)) if pruned.forall(_.tombstones.isEmpty) =>
+      val info = pruned.map(e => (e, e.zones.get(c), e.nonNulls.get(c)))
       if (info.exists(t => t._2.isEmpty || t._3.isEmpty)) pruned
       else {
         val fs = info.map { case (e, st, cnt) => (e, st.get, cnt.get) }
@@ -3054,17 +2840,15 @@ class GraftTableScan(
     case _ => pruned
   }
   private lazy val kept = limit match {
-    case Some(n) if topped.forall(_._3.isEmpty) =>
-      val rowsOf = VersionedTable.snapshotRowCounts(table, version)
-      if (topped.exists(e => rowsOf.get(e._1).flatten.isEmpty)) topped
+    case Some(n) if topped.forall(_.tombstones.isEmpty) =>
+      if (topped.exists(_.rows.isEmpty)) topped
       else {
         var acc = 0L
-        val taken = topped.takeWhile { e =>
+        topped.takeWhile { e =>
           val take = acc < n
-          acc += rowsOf(e._1).get
+          acc += e.rows.get
           take
         }
-        taken
       }
     case _ => topped
   }
@@ -3081,32 +2865,32 @@ class GraftTableScan(
     */
   private lazy val columnarOk: Boolean =
     required.nonEmpty &&
-      kept.forall(e => GraftVectorization.morOk(required, e._3.map(abs))) && {
+      kept.forall(e => GraftVectorization.morOk(required, e.tombstones.map(abs))) && {
         val spark = SparkSession.active
-        kept.groupBy(_._2).valuesIterator.forall { files =>
+        kept.groupBy(_.commit).valuesIterator.forall { files =>
           GraftVectorization.schemaCompatible(required, VersionedTable
-            .commitSchemaHinted(spark, table, version, files.map(_._1).min))
+            .commitSchemaHinted(spark, table, version, files.map(_.path).min))
         }
       }
 
   override def description(): String =
     s"graft-catalog $table${version.fold("")(v => s"@v$v")} " +
       // denominator from header count lines when present (exact, zero
-      // entry reads), else the row-count memo — a selective cold plan
+      // entry reads), else the full selection — a selective cold plan
       // must never stream O(files) lines just to print its description
       s"files=${kept.size}/${
         VersionedTable.snapshotFileCountFast(table, version).getOrElse(
-          VersionedTable.snapshotRowCounts(table, version).size.toLong)} " +
+          VersionedTable.select(table, version, Prune.none).size.toLong)} " +
       s"vectorized=$columnarOk " +
-      s"bounds=${bounds.map { case (c, (l, h)) => s"$c∈[$l,$h]" }.mkString(",")}" +
-      (if (strBounds.isEmpty) ""
-       else s" strBounds=${strBounds.keys.toSeq.sorted.mkString(",")}") +
-      (if (memberProbes.isEmpty) ""
-       else s" member=${memberProbes.map(_._1).distinct.sorted.mkString(",")}")
+      s"bounds=${prune.bounds.map { case (c, (l, h)) => s"$c∈[$l,$h]" }.mkString(",")}" +
+      (if (prune.strBounds.isEmpty) ""
+       else s" strBounds=${prune.strBounds.keys.toSeq.sorted.mkString(",")}") +
+      (if (prune.memberProbes.isEmpty) ""
+       else s" member=${prune.memberProbes.map(_._1).distinct.sorted.mkString(",")}")
 
   override def planInputPartitions(): Array[InputPartition] =
-    runtimeKept.map { case (file, _, tombs, _) =>
-      GraftCatalogPartition(abs(file), tombs.map(abs), columnarOk): InputPartition
+    runtimeKept.map { f =>
+      GraftCatalogPartition(abs(f.path), f.tombstones.map(abs), columnarOk): InputPartition
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -3118,10 +2902,10 @@ class GraftTableScan(
     // files and INT64 against the wide ones — no wholesale decline.
     new GraftCatalogReaderFactory(required,
       GraftRowGroupFilter.perCommit(table,
-        kept.map(_._1),
-        bounds.keySet ++ strBounds.keySet ++
+        kept.map(_.path),
+        prune.bounds.keySet ++ prune.strBounds.keySet ++
           runtimeSets.keySet ++ strRuntimeSets.keySet,
-        bounds, strBounds, runtimeSets, strRuntimeSets, version))
+        prune.bounds, prune.strBounds, runtimeSets, strRuntimeSets, version))
 }
 
 case class GraftCatalogPartition(
@@ -3512,18 +3296,14 @@ private[sources] object GraftColumnStats {
   import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
   import java.util.{Optional, OptionalLong}
 
-  def forScan(table: String, version: Option[Long], keptPaths: Seq[String],
+  def forScan(table: String, kept: Seq[FileEntry],
       phys: StructType, rep: StructType)
       : java.util.Map[NamedReference, ColumnStatistics] = {
     import org.apache.datasketches.hll.{HllSketch, Union}
     val out = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    if (keptPaths.isEmpty) return out
-    val dirs = keptPaths.map(_.split('/')(1)).distinct
+    if (kept.isEmpty) return out
+    val dirs = kept.map(_.path.split('/')(1)).distinct
     val sketches = dirs.map(d => VersionedTable.commitNdvSketches(table, d))
-    val zonesOf = VersionedTable.snapshotLayout(table, version)
-      .map(e => e._1 -> e._4).toMap
-    val nnOf = VersionedTable.snapshotNonNulls(table, version)
-    val rowsOf = VersionedTable.snapshotRowCounts(table, version)
     phys.fields.zip(rep.fields).foreach { case (pf, rf) =>
       val c = pf.name
       val ndv: Option[Long] =
@@ -3549,20 +3329,15 @@ private[sources] object GraftColumnStats {
       // contribute no rows: exempt them from completeness, exactly like
       // the aggregate pushdown does — otherwise every CREATE-then-INSERT
       // table would decline min/max forever because of its v1 carrier
-      def zeroRows(p: String): Boolean = rowsOf.get(p).flatten.contains(0L)
       val nulls: Option[Long] = {
-        val per = keptPaths.map { p =>
-          if (zeroRows(p)) Some(0L)
-          else for {
-            r <- rowsOf.get(p).flatten
-            nn <- nnOf.getOrElse(p, Map.empty).get(c)
-          } yield r - nn
+        val per = kept.map { f =>
+          if (f.rows.contains(0L)) Some(0L)
+          else for (r <- f.rows; nn <- f.nonNulls.get(c)) yield r - nn
         }
         if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
       }
       val zone: Option[(Long, Long)] = {
-        val per = keptPaths.filterNot(zeroRows)
-          .map(p => zonesOf.getOrElse(p, Map.empty).get(c))
+        val per = kept.filterNot(_.rows.contains(0L)).map(_.zones.get(c))
         if (per.nonEmpty && per.forall(_.isDefined))
           Some((per.flatten.map(_._1).min, per.flatten.map(_._2).max))
         else None

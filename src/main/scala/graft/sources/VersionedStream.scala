@@ -341,51 +341,25 @@ class VersionedMicroBatchStream(
       .mapValues(GraftFilters.sortedUtf8).toMap
   }
 
-  // per-stream cache of the zone lookup maps, keyed by version (a batch
-  // touches few versions; old entries cleared so a long-lived stream
-  // stays O(recent))
-  private val zonesByV = new java.util.concurrent.ConcurrentHashMap[
-    Long, Map[String, Map[String, (Long, Long)]]]()
-  private def zonesOf(v: Long): Map[String, Map[String, (Long, Long)]] = {
-    if (zonesByV.size > 8) zonesByV.clear()
-    zonesByV.computeIfAbsent(v, _ =>
-      VersionedTable.snapshotLayout(table, Some(v)).map(e => e._1 -> e._4).toMap)
-  }
-
-  /** Zone-map file pruning for INSERT partitions: a fresh file whose
-    * commit-time zones positively exclude the pushed bounds never joins
-    * the micro-batch (stat-less files are kept; delete/CDF partitions
-    * are never pruned — tombstone key files don't carry data zones).
+  /** Zone-map file pruning for INSERT partitions: version `v`'s data
+    * files the pushed predicates admit, by path — the planner selection
+    * for the pushed bounds, string bounds and member probes, then the
+    * admissible-key sets; None when nothing is pushed (every file stays).
+    * A fresh file outside the map never joins the micro-batch (stat-less
+    * files are kept; delete/CDF partitions are never pruned — tombstone
+    * key files don't carry data zones).
     */
-  private def keepInsert(v: Long, rel: String): Boolean = {
+  private def admittedInserts(v: Long): Option[Set[String]] = {
     val b0 = pushedBounds
     val sb0 = pushedStrBounds
     val in0 = pushedInSets
     val sin0 = pushedStrInSets
     val mp0 = pushedMemberProbes
-    (b0.isEmpty && sb0.isEmpty && in0.isEmpty && sin0.isEmpty &&
-      mp0.isEmpty) || {
-      val stats = zonesOf(v).getOrElse(rel, Map.empty)
-      lazy val sstats = VersionedTable.snapshotStrStats(table, Some(v))
-        .getOrElse(rel, Map.empty)
-      lazy val mblooms = VersionedTable.snapshotMemberBlooms(table, Some(v))
-        .getOrElse(rel, Map.empty)
-      b0.forall { case (c, lo, hi) =>
-        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } && in0.forall { case (c, vs) =>
-        stats.get(c).forall { case (mn, mx) =>
-          GraftFilters.anyInRange(vs, mn, mx)
-        }
-      } && sb0.forall { case (c, b) =>
-        sstats.get(c).forall(GraftFilters.strZoneIntersects(_, b))
-      } && sin0.forall { case (c, vs) =>
-        sstats.get(c).forall { case (zlo, zhi) =>
-          GraftFilters.anyInStrZone(vs, zlo, zhi)
-        }
-      } && mp0.forall { case (c, hs) =>
-        mblooms.get(c).forall(b => hs.exists(h =>
-          graft.functions.MemberBloom.mightContain(b, h)))
-      }
+    if (b0.isEmpty && sb0.isEmpty && in0.isEmpty && sin0.isEmpty && mp0.isEmpty) None
+    else {
+      val prune = Prune.conjunction(b0, Nil).copy(strBounds = sb0, memberProbes = mp0)
+      Some(VersionedTable.select(table, Some(v), prune).iterator
+        .filter(GraftFilters.sortedInKeep(in0, sin0)).map(_.path).toSet)
     }
   }
 
@@ -482,20 +456,22 @@ class VersionedMicroBatchStream(
       // files — after vacuum the expired commits' surviving rows ride the
       // materialized manifest's carried entries. Rows are stamped with
       // this snapshot version (Delta's initial-snapshot convention).
+      lazy val admitted = admittedInserts(v)
+      def keepInsert(rel: String): Boolean = admitted.forall(_.contains(rel))
       if (v == minV && s == minV - 1L) {
-        val layout = VersionedTable.snapshotLayout(table, Some(v))
-        val tombstoned = layout.filter(_._3.nonEmpty)
+        val layout = VersionedTable.select(table, Some(v), Prune.none)
+        val tombstoned = layout.filter(_.tombstones.nonEmpty)
         if (tombstoned.nonEmpty)
           throw new IllegalStateException(
             s"streaming read of $table: the oldest retained snapshot $v carries " +
               s"unapplied tombstones over ${tombstoned.size} data file(s); a " +
               "file-level initial load would resurrect deleted rows — run " +
               "compact()/CALL system.compact first, then restart the stream")
-        layout.collect { case (rel, _, _, _) if keepInsert(v, rel) =>
-          (rel, VersionedFilePartition(abs(rel), v, "insert"))
+        layout.collect { case f if keepInsert(f.path) =>
+          (f.path, VersionedFilePartition(abs(f.path), v, "insert"))
         }
       } else planCommit(v, abs).filter { case (rel, p) =>
-        p.changeType != "insert" || keepInsert(v, rel)
+        p.changeType != "insert" || keepInsert(rel)
       }
     }
     // VECTORIZED micro-batches, same all-or-nothing rule as the catalog
@@ -575,7 +551,7 @@ class VersionedMicroBatchStream(
       val refKeys = spark.read
         .parquet(java.nio.file.Paths.get(table, posRel).toString)
         .select("_file").distinct().collect().map(_.getString(0)).toSet
-      VersionedTable.snapshotLayout(table, Some(v)).map(_._1)
+      VersionedTable.select(table, Some(v), Prune.none).map(_.path)
         .filter(rel => refKeys.contains(VersionedTable.dvKeyOf(rel)))
     })
 

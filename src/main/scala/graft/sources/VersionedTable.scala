@@ -90,11 +90,16 @@ object VersionedTable {
   // contain them (resolution consumes removals before memoizing).
   private def isRemoveEntry(e: String): Boolean = e.startsWith("R:")
   // entry grammar:
-  //   ["D:<bound>:"] <path> ["#" <rows> ["#" <col>=<min>..<max> {";" ...}]]
+  //   ["D:<bound>:"] <path> ["#" <rows>["@" <bytes>] ["#" <zones>
+  //     ["#" <non-nulls> ["#" <string zones> ["#" <member blooms>]]]]]
   //   | "R:" <path>
-  // rows is the commit-time footer count; the optional third field is
-  // per-file column min/max stats (integral columns only) — the zone-map
-  // that lets a range read prune files from the manifest alone.
+  // rows is the commit-time footer count and bytes the file size; each
+  // later segment is a `;`-separated cell list, absent or empty when the
+  // commit recorded none: zones `col=<min>..<max>` (long, or sortable
+  // bits under `~col` for doubles), non-nulls `col=<n>`, string zones
+  // `col=<b64 lo>[*]..<b64 hi>[*]` (`*` marks a truncated side, an empty
+  // hi is unbounded), member blooms `col=<b64 bloom>`. [[parseEntry]] is
+  // the one reader of the segments.
   private def entryBody(e: String): String =
     if (isDeleteEntry(e)) e.split(":", 3)(2) else e
   private def entryPath(e: String): String = {
@@ -104,8 +109,85 @@ object VersionedTable {
   }
   // dir grammar: c<N> (pre-token layouts) or c<N>_<token>; N is the
   // commit the data belongs to, which scopes tombstone bounds
-  private def dataCommitOf(e: String): Long =
-    entryPath(e).split("/")(1).stripPrefix("c").takeWhile(_.isDigit).toLong
+  private def dirCommit(dir: String): Long =
+    dir.stripPrefix("c").takeWhile(_.isDigit).toLong
+  private def dataCommitOf(e: String): Long = dirCommit(entryPath(e).split("/")(1))
+
+  /** Parse one data or delete entry into a [[FileEntry]] — every `#`
+    * segment is split here and nowhere else. `tombstones` are the delete
+    * files that apply to it (bound ≥ its commit), which only the
+    * snapshot knows.
+    */
+  private[sources] def parseEntry(e: String, tombstones: Seq[String]): FileEntry = {
+    val parts = entryBody(e).split("#", -1)
+    def cells(i: Int): Iterator[String] =
+      if (parts.length <= i || parts(i).isEmpty) Iterator.empty
+      else parts(i).split(';').iterator
+    val rb = if (parts.length < 2) "" else parts(1)
+    val at = rb.indexOf('@')
+    FileEntry(parts(0), dirCommit(parts(0).split("/")(1)), tombstones,
+      rb.takeWhile(_ != '@').toLongOption,
+      if (at < 0) None else rb.substring(at + 1).toLongOption,
+      zoneCells(cells(2)),
+      cells(3).flatMap { kv =>
+        val eq = kv.indexOf('=')
+        if (eq <= 0) None
+        else kv.substring(eq + 1).toLongOption.map(kv.substring(0, eq) -> _)
+      }.toMap,
+      strZoneCells(cells(4)),
+      if (parts.length > 4) parts(4) else "",
+      if (parts.length > 5) parts(5) else "")
+  }
+
+  /** Integral zone cells `col=<min>..<max>`. String (`s~`) cells are
+    * skipped by name: a digits-only base64 bound could otherwise pass
+    * for a long zone; member (`b~`) cells have no `..` and never parse.
+    */
+  private def zoneCells(cells: Iterator[String]): Map[String, (Long, Long)] =
+    cells.filterNot(_.startsWith("s~")).flatMap { kv =>
+      val eq = kv.indexOf('=')
+      val dots = kv.indexOf("..", eq + 1)
+      if (eq <= 0 || dots <= eq) None
+      else for {
+        mn <- kv.substring(eq + 1, dots).toLongOption
+        mx <- kv.substring(dots + 2).toLongOption
+      } yield kv.substring(0, eq) -> (mn, mx)
+    }.toMap
+
+  /** String zone cells `col=<b64 lo>..<b64 hi|empty>` → (lo bytes,
+    * optional hi bytes); truncation stars are dropped, since pruning
+    * consumes every bound.
+    */
+  private def strZoneCells(cells: Iterator[String])
+      : Map[String, (Array[Byte], Option[Array[Byte]])] = {
+    val dec = java.util.Base64.getDecoder
+    cells.flatMap { kv =>
+      val eq = kv.indexOf('=')
+      val dots = kv.indexOf("..", eq + 1)
+      if (eq <= 0 || dots < 0) None
+      else try {
+        val lo = dec.decode(kv.substring(eq + 1, dots).stripSuffix("*"))
+        val hiS = kv.substring(dots + 2).stripSuffix("*")
+        val hi = if (hiS.isEmpty) None else Some(dec.decode(hiS))
+        Some(kv.substring(0, eq) -> (lo, hi))
+      } catch { case _: IllegalArgumentException => None }
+    }.toMap
+  }
+
+  /** Member bloom cells `col=<b64 bloom>` → bloom bytes. */
+  private[sources] def bloomCells(cells: Iterator[String]): Map[String, Array[Byte]] = {
+    val dec = java.util.Base64.getDecoder
+    cells.flatMap { kv =>
+      val eq = kv.indexOf('=')
+      if (eq <= 0) None
+      else try Some(kv.substring(0, eq) -> dec.decode(kv.substring(eq + 1)))
+      catch { case _: IllegalArgumentException => None }
+    }.toMap
+  }
+
+  /** The `s~` / `b~` cells of a rollup or index cell list, prefix cut. */
+  private def tagged(cells: String, tag: String): Iterator[String] =
+    cells.split(';').iterator.filter(_.startsWith(tag)).map(_.substring(2))
 
   /** Drain a directory stream THROUGH a closing bracket: Files.list /
     * Files.walk hold an open directory fd until closed, and draining
@@ -389,17 +471,6 @@ object VersionedTable {
     } finally ch.close()
   }
 
-  /** SELECTIVE raw entries through the `index=` segment: resolve the
-    * carry chain reading only HEADERS plus each version's own (O(fresh))
-    * entries, then SEEK into the self-contained base manifest for
-    * exactly the commit directories `keepDir` admits — never streaming
-    * the base's O(files) entry section. Delete entries (the `!del`
-    * block) are always read: tombstones must never be dropped by
-    * pruning. Returns None when the base carries no index (legacy
-    * manifest) or any block read fails its guard — callers fall back to
-    * the full path. Removals along the chain apply ascending, exactly
-    * like [[manifestEntries]].
-    */
   /** Spec introspection: plans served by the seek-based fast path. */
   private[graft] val selectiveSeekHits =
     new java.util.concurrent.atomic.AtomicLong(0L)
@@ -461,47 +532,30 @@ object VersionedTable {
     Some(acc)
   }
 
+  /** SELECTIVE raw entries through the `index=` segment: resolve the
+    * carry chain reading only HEADERS plus each version's own (O(fresh))
+    * entries, then SEEK into the self-contained base manifest for
+    * exactly the commit directories `keepDir` admits — never streaming
+    * the base's O(files) entry section. Delete entries (the `!del`
+    * block) are always read: tombstones must never be dropped by
+    * pruning. Returns None when the base carries no index (legacy
+    * manifest) or any block read fails its guard — callers fall back to
+    * the full path. Removals along the chain apply ascending, exactly
+    * like [[manifestEntries]]. A directory or chunk drops when its
+    * rollup cells exclude `prune` ([[Prune.excludes]]: a cell bounds every
+    * row-carrying file under it). The seek engages only when something
+    * actually drops (or `forceSeek`); otherwise None, and the streamed
+    * path's per-dir memo serves repeat plans better.
+    */
   private[sources] def selectiveRawEntries(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)], forceSeek: Boolean = false,
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])] =
-        Map.empty,
-      memberProbes: Seq[(String, Seq[Long])] = Nil)
+      table: String, version: Option[Long], prune: Prune, forceSeek: Boolean)
       : Option[(Seq[(String, Long, Seq[String])], Seq[String])] = {
     val head = version.getOrElse {
       val vs = versions(table)
       if (vs.isEmpty) return None
       vs.last
     }
-    val rolls = persistedRollups(table, version)
-    val strRolls = if (strBounds.isEmpty) Map.empty[String,
-      Map[String, (Array[Byte], Option[Array[Byte]])]]
-      else persistedStrRollups(table, version)
-    val memberRolls = if (memberProbes.isEmpty) Map.empty[String,
-      Map[String, Array[Byte]]]
-      else persistedMemberRollups(table, version)
-    def deadZones(cells: Map[String, (Long, Long)]): Boolean =
-      cells.nonEmpty && bounds.exists { case (c, (lo, hi)) =>
-        cells.get(c).exists { case (mn, mx) => mx < lo || mn > hi }
-      }
-    def deadStrZones(
-        cells: Map[String, (Array[Byte], Option[Array[Byte]])]): Boolean =
-      cells.nonEmpty && strBounds.exists { case (c, b) =>
-        cells.get(c).exists(z => !GraftFilters.strZoneIntersects(z, b))
-      }
-    // an OR-union bloom that positively excludes EVERY hash of a probe
-    // group kills the whole commit/chunk: no member file's bloom can
-    // then contain any of the group's keys (one surviving hash keeps it
-    // — the group is a disjunction, the arrays_overlap shape)
-    def deadMemberZones(cells: Map[String, Array[Byte]]): Boolean =
-      cells.nonEmpty && memberProbes.exists { case (c, hs) =>
-        cells.get(c).exists(b => hs.forall(h =>
-          !graft.functions.MemberBloom.mightContain(b, h)))
-      }
-    def keepDir(dir: String): Boolean =
-      !rolls.get(dir).exists(deadZones) &&
-        !strRolls.get(dir).exists(deadStrZones) &&
-        !memberRolls.get(dir).exists(deadMemberZones)
+    val keepDir = !rollupExcludes(table, version, prune)(_: String)
     // the chain's own-entry lists (ascending) plus its base version,
     // memoized per version with cons-cell sharing: chainOwn(v) is
     // (own(v) :: chainOwn(carry)), so a plan's walk is one memo hit and
@@ -538,39 +592,24 @@ object VersionedTable {
     // CHUNK suffix whose rollup cells prune exactly like commit rollups
     // — a selective plan skips inside one giant commit, not just
     // across commits
-    val noStrCells =
-      Map.empty[String, (Array[Byte], Option[Array[Byte]])]
-    val noMemberCells = Map.empty[String, Array[Byte]]
     val idx = bHdr.filter(_.startsWith("index=")).flatMap { l =>
       l.stripPrefix("index=").split(' ') match {
         case Array(dir, o, n) =>
-          for (off <- o.toLongOption; len <- n.toLongOption)
-            yield (dir, off, len, Map.empty[String, (Long, Long)],
-              noStrCells, noMemberCells)
+          for (off <- o.toLongOption; len <- n.toLongOption) yield (dir, off, len, "")
         case Array(dir, o, n, cells) =>
-          for (off <- o.toLongOption; len <- n.toLongOption) yield {
-            val parsed = cells.split(';').iterator
-              .filterNot(_.startsWith("s~")).flatMap { kv =>
-              val eq = kv.indexOf('=')
-              val dots = kv.indexOf("..", eq + 1)
-              if (eq <= 0 || dots <= eq) None
-              else for {
-                mn <- kv.substring(eq + 1, dots).toLongOption
-                mx <- kv.substring(dots + 2).toLongOption
-              } yield kv.substring(0, eq) -> (mn, mx)
-            }.toMap
-            val strParsed =
-              if (strBounds.isEmpty) noStrCells else parseStrCells(cells)
-            val memberParsed =
-              if (memberProbes.isEmpty) noMemberCells
-              else parseMemberCells(cells)
-            (dir, off, len, parsed, strParsed, memberParsed)
-          }
+          for (off <- o.toLongOption; len <- n.toLongOption) yield (dir, off, len, cells)
         case _ => None
       }
     }
     if (idx.isEmpty) return None
-    var skippedAny = false
+    val live = idx.filter { case (dirspec, _, _, cells) =>
+      dirspec == "!del" || keepDir(dirspec.takeWhile(_ != '%')) && !prune.excludes(
+        zoneCells(cells.split(';').iterator),
+        strZoneCells(tagged(cells, "s~")), bloomCells(tagged(cells, "b~")))
+    }
+    // engagement: with every block surviving, streaming once and
+    // memoizing the reusable full layout serves repeat plans better
+    if (live.size == idx.size && !forceSeek) return None
     // base blocks: kept data dirs + the delete block. Per-dir blocks are
     // memoized immutable Seqs SHARED into the result (no per-plan copy —
     // a chainless warm plan re-assembles in O(selected dirs), not
@@ -579,17 +618,14 @@ object VersionedTable {
     val buckets = scala.collection.mutable.LinkedHashMap
       .empty[String, Seq[String]]
     var dels = Seq.empty[String]
-    idx.foreach { case (dirspec, off, len, cells, strCells, memberCells) =>
+    live.foreach { case (dirspec, off, len, _) =>
       val dir = dirspec.takeWhile(_ != '%')
       if (dirspec == "!del") {
         val block = readEntryBlock(table, base, entryStart, off, len,
           size, mtime, isDeleteEntry)
         if (block.isEmpty) return None
         dels = dels ++ block.get
-      } else if (!keepDir(dir) || deadZones(cells) ||
-          deadStrZones(strCells) || deadMemberZones(memberCells))
-        skippedAny = true
-      else {
+      } else {
         // memoize SUCCESSFUL block reads only — a guard-tripped read
         // must retry next plan, not pin the fallback forever
         val key = (table, base, s"rawdir:$dirspec")
@@ -613,9 +649,6 @@ object VersionedTable {
           buckets.get(dirspec).fold(block.get)(_ ++ block.get))
       }
     }
-    // engagement: with every block surviving, streaming once and
-    // memoizing the reusable full layout serves repeat plans better
-    if (!skippedAny && !forceSeek) return None
     // chain application, ascending: removes drop from the selection,
     // adds append (fresh dirs join subject to keepDir; deletes always)
     chain.foreach { own =>
@@ -637,8 +670,68 @@ object VersionedTable {
       }
     }
     Some((buckets.iterator.filter(_._2.nonEmpty).map { case (dirspec, es) =>
-      (dirspec, dirspec.stripPrefix("c").takeWhile(_.isDigit).toLong, es)
+      (dirspec, dirCommit(dirspec), es)
     }.toSeq, dels))
+  }
+
+  /** Does a commit dir's persisted rollup exclude `prune`? */
+  private def rollupExcludes(
+      table: String, version: Option[Long], prune: Prune): String => Boolean =
+    if (prune.isEmpty) _ => false
+    else {
+      val (rolls, _, strRolls, memberRolls) = persistedHeaders(table, version)
+      dir => prune.excludes(rolls.getOrElse(dir, Map.empty),
+        strRolls.getOrElse(dir, Map.empty), memberRolls.getOrElse(dir, Map.empty))
+    }
+
+  /** THE planner selection: the data files of `table`'s snapshot at
+    * `version` that `prune` admits, as [[FileEntry]]s in commit-grouped
+    * first-appearance order (deterministic plans). Commit dirs (and index
+    * chunks) whose rollup cells exclude `prune` are dropped before their
+    * entries are parsed — through [[selectiveRawEntries]]' seek when the
+    * base is indexed and something drops, through the streamed per-dir
+    * grouping with the same dead-dir test otherwise — and every surviving
+    * file then passes [[Prune.admits]]. Parsed entries memoize per
+    * (version, chunk), so a cold selective plan parses only the surviving
+    * chunks and later plans with other bounds reuse them. Because a
+    * rollup cell bounds every row-carrying file under it, the result
+    * equals a per-file filter of the whole snapshot on every file that
+    * holds rows.
+    */
+  private[sources] def select(
+      table: String, version: Option[Long], prune: Prune): Seq[FileEntry] = {
+    val v = Some(version.getOrElse {
+      val vs = versions(table)
+      require(vs.nonEmpty, s"no committed versions at $table")
+      vs.last
+    })
+    val (chunks, dels) = selectiveRawEntries(table, v, prune, forceSeek = false) match {
+      case Some(hit) => selectiveSeekHits.incrementAndGet(); hit
+      case None =>
+        val entries = pinnedEntries(table, v)
+        // raw entry strings grouped by commit directory — first-appearance
+        // order, no segment parse
+        val byDir = memoParsed(table, v, "rawbydir") {
+          val order = scala.collection.mutable.LinkedHashMap
+            .empty[String, scala.collection.mutable.ArrayBuffer[String]]
+          entries.filterNot(isDeleteEntry).foreach { e =>
+            order.getOrElseUpdate(entryPath(e).split('/')(1),
+              scala.collection.mutable.ArrayBuffer.empty) += e
+          }
+          order.iterator.map { case (dir, es) => (dir, dirCommit(dir), es.toSeq) }.toSeq
+        }
+        val dead = rollupExcludes(table, v, prune)
+        (byDir.filterNot(d => dead(d._1)), entries.filter(isDeleteEntry))
+    }
+    lazy val delRefs = dels.map(e => (e.split(":", 3)(1).toLong, entryPath(e)))
+    chunks.iterator.flatMap { case (dirspec, cv, es) =>
+      // whole chunks memoize (tombstones included — stable per pinned
+      // version), so a warm plan assembles in O(surviving chunks)
+      memoParsed(table, v, s"entries:$dirspec") {
+        val tombs = delRefs.collect { case (b, p) if b >= cv => p }
+        es.map(parseEntry(_, tombs))
+      }
+    }.filter(prune.admits).toVector
   }
 
   private def txnOf(table: String, version: Long): Option[String] =
@@ -689,88 +782,59 @@ object VersionedTable {
     * link-as-CAS is the only primitive here. Content atomicity is kept
     * by the staging step: the target name never exists half-written.
     */
-  /** PERSISTED commit-level zone rollup: one `rollup=<dir> <col>=lo..hi
-    * [;…]` header line per commit directory present in `entries`, the
-    * on-disk twin of [[snapshotCommitZones]]. A column joins a rollup
-    * only when EVERY row-carrying entry of that directory records its
-    * zone (the same omission-means-cannot-exclude soundness rule). A
-    * later replace commit may remove some of a directory's files, making
-    * an old persisted rollup WIDER than the live truth — sound: pruning
-    * only drops commits the rollup positively excludes. The payoff is
-    * the COLD selective plan: [[selectiveLayoutByCommit]] reads these
-    * lines first and parses per-file stats only for surviving commits.
+  /** PERSISTED commit-level rollups: one `rollup=<dir> <cells>` header
+    * line per commit directory present in `entries` ([[rollupCells]]).
+    * A later replace commit may remove some of a directory's files,
+    * making an old persisted rollup WIDER than the live truth — sound:
+    * pruning only drops commits the rollup positively excludes. The
+    * payoff is the COLD selective plan: [[select]] reads these lines
+    * first and parses entries only for surviving commits.
     */
   private def rollupLines(entries: Seq[String]): Seq[String] = {
     val data = entries.filterNot(e => isDeleteEntry(e) || isRemoveEntry(e))
     data.groupBy(e => entryPath(e).split('/')(1)).toSeq.sortBy(_._1).flatMap {
       case (dir, es) =>
-        val carrying = es.filterNot(e => entryRows(e).contains(0L))
-        if (carrying.isEmpty) None
-        else {
-          val statsList = carrying.map(entryStats)
-          val cols = statsList.map(_.keySet).reduce(_ intersect _)
-          val cells = cols.toSeq.sorted.map { c =>
-            val zs = statsList.map(_(c))
-            s"$c=${zs.map(_._1).min}..${zs.map(_._2).max}"
-          } ++ strRollupCells(carrying) ++ memberRollupCells(carrying)
-          if (cells.isEmpty) None
-          else Some(s"rollup=$dir ${cells.mkString(";")}")
-        }
+        val cells = rollupCells(es.map(parseEntry(_, Nil)))
+        if (cells.isEmpty) None
+        else Some(s"rollup=$dir ${cells.mkString(";")}")
     }
   }
 
   private val byteOrd: Ordering[Array[Byte]] =
     Ordering.fromLessThan((a, b) => byteCompare(a, b) < 0)
 
-  /** STRING rollup cells (`s~col=<b64lo>..<b64hi|empty>`): the union of
-    * the entries' truncated byte-prefix string zones, the string twin
-    * of the long `col=lo..hi` cells — what lets a `lang = 'en'` plan
-    * skip commits and chunks from headers alone. A column joins only
-    * when EVERY carrying entry records its string zone (the
-    * omission-means-cannot-exclude rule), and the upper bound is empty
-    * unless every entry bounds above (a bound-less file leaves the
-    * union unbounded). The `s~` key prefix keeps the cells invisible to
-    * the long parser: its toLongOption fails on base64, so old readers
-    * skip them instead of misparsing (and a digits-only base64 bound
-    * could otherwise masquerade as a long zone).
+  /** The rollup cells of a group of files (a commit dir or an index
+    * chunk), over its ROW-CARRYING files only, a column joining a cell
+    * family only when EVERY carrying file records it (omission means
+    * cannot-exclude):
+    *  - `col=lo..hi` — union of the integral zones;
+    *  - `s~col=<b64lo>..<b64hi|empty>` — union of the truncated string
+    *    zones, the hi side empty unless every file bounds above. The `s~`
+    *    prefix keeps the cells invisible to the long parser;
+    *  - `b~col=<b64bloom>` — bitwise OR of the member blooms, only when
+    *    all blooms share one size (a property change mid-commit declines
+    *    rather than OR misaligned bits). Saturation degrades to
+    *    cannot-exclude, never to a wrong answer.
+    * So a cell excludes a predicate only when every carrying file under
+    * it does — what lets a plan skip whole commits and chunks from
+    * headers alone.
     */
-  private def strRollupCells(carrying: Seq[String]): Seq[String] = {
+  private def rollupCells(files: Seq[FileEntry]): Seq[String] = {
+    val carrying = files.filterNot(_.rows.contains(0L))
     if (carrying.isEmpty) return Nil
-    val statsList = carrying.map(entryStrStats)
-    val cols = statsList.map(_.keySet).reduceOption(_ intersect _)
-      .getOrElse(Set.empty[String])
-    val enc = java.util.Base64.getEncoder.withoutPadding
-    cols.toSeq.sorted.map { c =>
-      val zs = statsList.map(_(c))
-      val lo = zs.map(_._1).min(byteOrd)
-      val hiOpts = zs.map(_._2)
-      val hi =
-        if (hiOpts.exists(_.isEmpty)) ""
-        else enc.encodeToString(hiOpts.flatten.max(byteOrd))
-      s"s~$c=${enc.encodeToString(lo)}..$hi"
+    def common[V](of: FileEntry => Map[String, V]): Seq[(String, Seq[V])] = {
+      val ms = carrying.map(of)
+      ms.map(_.keySet).reduce(_ intersect _).toSeq.sorted.map(c => c -> ms.map(_(c)))
     }
-  }
-
-  /** MEMBERSHIP rollup cells (`b~col=<b64bloom>`): the bitwise OR of the
-    * entries' per-file element blooms — the commit/chunk-level rollup
-    * that lets a membership-probe plan skip whole commits and chunks
-    * from HEADERS alone, exactly as `s~` cells do for string bounds. A
-    * column joins only when EVERY carrying entry records its bloom AND
-    * all blooms share one size (a table-property change mid-commit
-    * declines the union rather than OR-ing misaligned bit positions —
-    * omission is merely no-pruning). Saturation (a chunk holding every
-    * tag) degrades to cannot-exclude, never to a wrong answer. The `b~`
-    * prefix keeps the cells invisible to both the long parser (no `..`)
-    * and the `s~` string parser.
-    */
-  private def memberRollupCells(carrying: Seq[String]): Seq[String] = {
-    if (carrying.isEmpty) return Nil
-    val list = carrying.map(entryMemberBlooms)
-    val cols = list.map(_.keySet).reduceOption(_ intersect _)
-      .getOrElse(Set.empty[String])
     val enc = java.util.Base64.getEncoder.withoutPadding
-    cols.toSeq.sorted.flatMap { c =>
-      val bs = list.map(_(c))
+    common(_.zones).map { case (c, zs) =>
+      s"$c=${zs.map(_._1).min}..${zs.map(_._2).max}"
+    } ++ common(_.strZones).map { case (c, zs) =>
+      val hi =
+        if (zs.exists(_._2.isEmpty)) ""
+        else enc.encodeToString(zs.flatMap(_._2).max(byteOrd))
+      s"s~$c=${enc.encodeToString(zs.map(_._1).min(byteOrd))}..$hi"
+    } ++ common(_.memberBlooms).flatMap { case (c, bs) =>
       val len = bs.head.length
       if (len == 0 || bs.exists(_.length != len)) None
       else {
@@ -782,42 +846,6 @@ object VersionedTable {
         Some(s"b~$c=${enc.encodeToString(u)}")
       }
     }
-  }
-
-  /** Parse `b~` membership cells out of a rollup/index cell list: col →
-    * OR-union bloom bytes. Other cell families are ignored here, exactly
-    * as the long and `s~` parsers ignore `b~` cells.
-    */
-  private def parseMemberCells(cells: String): Map[String, Array[Byte]] = {
-    val dec = java.util.Base64.getDecoder
-    cells.split(';').iterator.filter(_.startsWith("b~")).flatMap { kv0 =>
-      val kv = kv0.substring(2)
-      val eq = kv.indexOf('=')
-      if (eq <= 0) None
-      else try Some(kv.substring(0, eq) -> dec.decode(kv.substring(eq + 1)))
-      catch { case _: IllegalArgumentException => None }
-    }.toMap
-  }
-
-  /** Parse `s~` string cells out of a rollup/index cell list: col →
-    * (lo bytes, optional hi bytes). Non-`s~` cells are ignored here,
-    * exactly as the long parser ignores `s~` cells.
-    */
-  private def parseStrCells(cells: String)
-      : Map[String, (Array[Byte], Option[Array[Byte]])] = {
-    val dec = java.util.Base64.getDecoder
-    cells.split(';').iterator.filter(_.startsWith("s~")).flatMap { kv0 =>
-      val kv = kv0.substring(2)
-      val eq = kv.indexOf('=')
-      val dots = kv.indexOf("..", eq + 1)
-      if (eq <= 0 || dots < 0) None
-      else try {
-        val lo = dec.decode(kv.substring(eq + 1, dots))
-        val hiS = kv.substring(dots + 2)
-        val hi = if (hiS.isEmpty) None else Some(dec.decode(hiS))
-        Some(kv.substring(0, eq) -> (lo, hi))
-      } catch { case _: IllegalArgumentException => None }
-    }.toMap
   }
 
   /** PERSISTED commit schemas: one `schema=<dir> <json>` header line per
@@ -857,10 +885,9 @@ object VersionedTable {
     * one `index=<dir> <offset> <bytes>` header line per block (offsets
     * relative to the first entry byte; `!del` names the delete block).
     * Directories past [[IndexChunkEntries]] emit per-CHUNK lines
-    * `index=<dir>%<j> <offset> <bytes> [col=lo..hi;…]` whose rollup
-    * cells (long-zone families only; a column joins only when every
-    * row-carrying entry of the chunk records it) let selective plans
-    * skip chunks the same way commit rollups skip commits. Cold
+    * `index=<dir>%<j> <offset> <bytes> [cells]` whose [[rollupCells]]
+    * let selective plans skip chunks the same way commit rollups skip
+    * commits. Cold
     * SELECTIVE plans then SEEK to surviving blocks instead of streaming
     * O(files) lines. Entry reordering is semantics-free: snapshot
     * resolution treats the list as a set, and grouping keeps the dirs'
@@ -880,19 +907,6 @@ object VersionedTable {
     def blockBytes(es: Seq[String]): Long = es.iterator.map(l =>
       l.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong +
         sepLen).sum
-    def chunkCells(es: Seq[String]): String = {
-      val carrying = es.filterNot(e => entryRows(e).contains(0L))
-      if (carrying.isEmpty) ""
-      else {
-        val statsList = carrying.map(entryStats)
-        val cols = statsList.map(_.keySet).reduce(_ intersect _)
-        (cols.toSeq.sorted.map { c =>
-          val zs = statsList.map(_(c))
-          s"$c=${zs.map(_._1).min}..${zs.map(_._2).max}"
-        } ++ strRollupCells(carrying) ++ memberRollupCells(carrying))
-          .mkString(";")
-      }
-    }
     var off = 0L
     val idx = Seq.newBuilder[String]
     val ordered = Seq.newBuilder[String]
@@ -905,7 +919,7 @@ object VersionedTable {
       } else es.grouped(IndexChunkEntries).zipWithIndex.foreach {
         case (chunk, j) =>
           val b = blockBytes(chunk.toSeq)
-          val cells = chunkCells(chunk.toSeq)
+          val cells = rollupCells(chunk.toSeq.map(parseEntry(_, Nil))).mkString(";")
           idx += s"index=$dir%$j $off $b" +
             (if (cells.isEmpty) "" else s" $cells")
           ordered ++= chunk
@@ -1059,20 +1073,6 @@ object VersionedTable {
       }
     }
   }
-
-  /** The integral (BIGINT/INT) columns of `schema` — the default
-    * zone-map stats set for writes that don't declare one explicitly
-    * (the SQL INSERT / row-level replace paths): planning-time pruning
-    * and the DML candidate probe only consult integral bounds, so
-    * recording exactly those costs nothing extra (same metadata job)
-    * and makes every SQL-written file prunable by default.
-    */
-  private[sources] def integralStatsCols(
-      schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    schema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType => f.name
-    }.toSeq
 
   /** DOUBLE values as SORTABLE BITS: the standard IEEE-754 total-order
     * map (positives keep their bit pattern, negatives flip all bits but
@@ -1684,61 +1684,6 @@ object VersionedTable {
     }
   }
 
-  private def entryRows(e: String): Option[Long] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 2) None
-    else parts(1).takeWhile(_ != '@').toLongOption
-  }
-
-  /** The file's byte size, recorded after '@' in the rows segment by
-    * post-round-14 commits — None for older manifests (consumers fall
-    * back to width estimates there).
-    */
-  private def entryBytes(e: String): Option[Long] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 2) None
-    else {
-      val at = parts(1).indexOf('@')
-      if (at < 0) None else parts(1).substring(at + 1).toLongOption
-    }
-  }
-
-  /** path → recorded file bytes over a pinned snapshot's data files. */
-  private[sources] def snapshotSizes(
-      table: String, version: Option[Long]): Map[String, Option[Long]] =
-    memoParsed(table, version, "sizes") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryBytes(e)).toMap
-    }
-
-  /** path → footer row count over a pinned snapshot's data files — the
-    * MAP form of [[snapshotFiles]]'s row column, memoized so the
-    * per-plan statistics path never rebuilds an O(files) HashMap
-    * (measured at ~1/3 of warm plan latency on a 1M-entry manifest).
-    */
-  private[sources] def snapshotRowCounts(
-      table: String, version: Option[Long]): Map[String, Option[Long]] =
-    memoParsed(table, version, "rowcounts") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryRows(e)).toMap
-    }
-
-  /** Per-file column NON-NULL counts (the zone map's companion fourth
-    * entry segment) — what makes TopN file planning sound under NULLS
-    * LAST: N guaranteed-better non-null rows beat every row of a
-    * dropped file, nulls included. Empty for pre-NN manifests (those
-    * files are then simply never dropped by TopN planning).
-    */
-  private def entryNonNulls(e: String): Map[String, Long] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 4 || parts(3).isEmpty) Map.empty
-    else parts(3).split(';').iterator.flatMap { kv =>
-      val eq = kv.indexOf('=')
-      if (eq <= 0) None
-      else kv.substring(eq + 1).toLongOption.map(kv.substring(0, eq) -> _)
-    }.toMap
-  }
-
   // ---- Parsed-snapshot memoization ----
   //
   // The planning walks (zone-map pruning, $files, statistics) used to
@@ -1748,7 +1693,9 @@ object VersionedTable {
   // (table, version) — the resolvedEntries invariant — so the PARSED forms
   // memoize under the same key, bounded by the same newest-versions window
   // ([[boundCache]]) and invalidated at the same sites (dropTable, vacuum
-  // expiry).
+  // expiry). Kinds: `schema` ([[snapshotSchema]]), `rawbydir` and
+  // `entries:<chunk>` ([[select]]), and `rawdir:<chunk>` — seek-read
+  // blocks, keyed by the BASE version ([[selectiveRawEntries]]).
 
   private val parsedSnapshots =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), AnyRef]()
@@ -1766,133 +1713,6 @@ object VersionedTable {
     parsedSnapshots.computeIfAbsent((table, v, kind), _ => compute)
       .asInstanceOf[T]
   }
-
-  /** path → (col → non-null count) over a pinned snapshot's data files. */
-  private[sources] def snapshotNonNulls(
-      table: String, version: Option[Long]): Map[String, Map[String, Long]] =
-    memoParsed(table, version, "nonnulls") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryNonNulls(e)).toMap
-    }
-
-  /** Per-file column zone map recorded at commit: col → (min, max).
-    * Empty for entries committed without `statsCols` — those files are
-    * never pruned, only files that POSITIVELY exclude the range are.
-    */
-  private def entryStats(e: String): Map[String, (Long, Long)] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 3 || parts(2).isEmpty) Map.empty
-    else parts(2).split(';').iterator.flatMap { kv =>
-      val eq = kv.indexOf('=')
-      val dots = kv.indexOf("..", eq + 1)
-      if (eq <= 0 || dots <= eq) None
-      else for {
-        mn <- kv.substring(eq + 1, dots).toLongOption
-        mx <- kv.substring(dots + 2).toLongOption
-      } yield kv.substring(0, eq) -> (mn, mx)
-    }.toMap
-  }
-
-  /** Per-file STRING zone map (the fifth entry segment): col →
-    * (truncated lower bound, optional truncated upper bound), both raw
-    * bytes. Empty for entries committed before string zones existed or
-    * without string stats — those files are never pruned.
-    */
-  private[sources] def entryStrStats(
-      e: String): Map[String, (Array[Byte], Option[Array[Byte]])] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 5 || parts(4).isEmpty) Map.empty
-    else {
-      val dec = java.util.Base64.getDecoder
-      parts(4).split(';').iterator.flatMap { kv =>
-        val eq = kv.indexOf('=')
-        val dots = kv.indexOf("..", eq + 1)
-        if (eq <= 0 || dots < 0) None
-        else try {
-          // pruning consumes every bound — exactness stars stripped
-          val lo = dec.decode(kv.substring(eq + 1, dots).stripSuffix("*"))
-          val hiS = kv.substring(dots + 2).stripSuffix("*")
-          val hi = if (hiS.isEmpty) None else Some(dec.decode(hiS))
-          Some(kv.substring(0, eq) -> (lo, hi))
-        } catch { case _: IllegalArgumentException => None }
-      }.toMap
-    }
-  }
-
-  /** The EXACT sides of an entry's string zones: a bound decodes to a
-    * value here only when it carries no truncation star — what MIN/MAX
-    * aggregate pushdown needs (truncated bounds are valid for pruning
-    * but are not the extreme value itself).
-    */
-  private[sources] def entryStrStatsExact(
-      e: String): Map[String, (Option[String], Option[String])] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 5 || parts(4).isEmpty) Map.empty
-    else {
-      val dec = java.util.Base64.getDecoder
-      def exact(tok: String): Option[String] =
-        if (tok.isEmpty || tok.endsWith("*")) None
-        else try {
-          Some(new String(dec.decode(tok),
-            java.nio.charset.StandardCharsets.UTF_8))
-        } catch { case _: IllegalArgumentException => None }
-      parts(4).split(';').iterator.flatMap { kv =>
-        val eq = kv.indexOf('=')
-        val dots = kv.indexOf("..", eq + 1)
-        if (eq <= 0 || dots < 0) None
-        else Some(kv.substring(0, eq) ->
-          (exact(kv.substring(eq + 1, dots)), exact(kv.substring(dots + 2))))
-      }.toMap
-    }
-  }
-
-  /** Per-file MEMBERSHIP blooms (the sixth entry segment): col → bloom
-    * bytes over the file's distinct array elements (or map keys).
-    * Empty for entries committed without declared member columns —
-    * those files are never membership-pruned.
-    */
-  private[sources] def entryMemberBlooms(e: String): Map[String, Array[Byte]] = {
-    val parts = entryBody(e).split("#", -1)
-    if (parts.length < 6 || parts(5).isEmpty) Map.empty
-    else {
-      val dec = java.util.Base64.getDecoder
-      parts(5).split(';').iterator.flatMap { kv =>
-        val eq = kv.indexOf('=')
-        if (eq <= 0) None
-        else try Some(kv.substring(0, eq) -> dec.decode(kv.substring(eq + 1)))
-        catch { case _: IllegalArgumentException => None }
-      }.toMap
-    }
-  }
-
-  /** path → membership blooms over a pinned snapshot's data files. */
-  private[sources] def snapshotMemberBlooms(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, Array[Byte]]] =
-    memoParsed(table, version, "memberblooms") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryMemberBlooms(e)).toMap
-    }
-
-  /** path → exact string zone sides over a pinned snapshot. */
-  private[sources] def snapshotStrStatsExact(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, (Option[String], Option[String])]] =
-    memoParsed(table, version, "strexact") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryStrStatsExact(e)).toMap
-    }
-
-  /** path → string zone map over a pinned snapshot's data files — the
-    * planning-time lookup behind string-predicate file pruning.
-    */
-  private[sources] def snapshotStrStats(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, (Array[Byte], Option[Array[Byte]])]] =
-    memoParsed(table, version, "strstats") {
-      pinnedEntries(table, version).filterNot(isDeleteEntry)
-        .map(e => entryPath(e) -> entryStrStats(e)).toMap
-    }
 
   // ---- Per-commit NDV sketches (ANALYZE-free column statistics) ----
   //
@@ -1960,7 +1780,7 @@ object VersionedTable {
     val entries = manifestEntries(table, v)
     if (entries.exists(isDeleteEntry)) None
     else {
-      val counts = entries.map(entryRows)
+      val counts = entries.map(parseEntry(_, Nil).rows)
       if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
     }
   }
@@ -2359,7 +2179,7 @@ object VersionedTable {
       // footer I/O — the cold-plan path); footer read only for commits
       // without one (pre-upgrade manifests). Forced OUTSIDE the memo
       // below — a nested computeIfAbsent on the shared parsedSnapshots
-      // map throws "Recursive update" (the snapshotCommitZones lesson)
+      // map throws "Recursive update" (the manifestHeaderBytes lesson)
       val hints = persistedSchemas(table, version)
       memoParsed(table, version, "schema") {
         // HEADER fast path: when every chain data dir carries a schema
@@ -2740,22 +2560,11 @@ object VersionedTable {
     val basis = vs.last
     val entries = manifestEntries(table, basis)
     val delE = entries.filter(isDeleteEntry)
-    val pb = bounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) }
-    val psb = strBounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) }
-    val candidates = entries.filterNot(isDeleteEntry).filter { e =>
-      val stats = entryStats(e)
-      pb.forall { case (c, lo, hi) =>
-        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } && {
-        lazy val sstats = entryStrStats(e)
-        psb.forall { case (c, lo, hi) =>
-          sstats.get(c).forall { case (zlo, zhiOpt) =>
-            hi.forall(h => byteCompare(zlo, h) <= 0) &&
-              lo.forall(l => zhiOpt.forall(zh => byteCompare(zh, l) >= 0))
-          }
-        }
-      }
-    }
+    val prune = Prune.conjunction(
+      bounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) },
+      strBounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) })
+    val candidates = entries.filterNot(isDeleteEntry)
+      .filter(e => prune.admits(parseEntry(e, Nil)))
     if (candidates.isEmpty) return basis
     val hit = coalesce(predicate, lit(false))
     // the source-file tag is projected INSIDE the per-commit scan (before
@@ -2821,7 +2630,7 @@ object VersionedTable {
     // the live rows need).
     val snap = targetRowsPerFile.fold(snap0) { target =>
       require(target > 0, "targetRowsPerFile must be positive")
-      val n = snapshotFiles(table, Some(basis)).flatMap(_._3).sum
+      val n = select(table, Some(basis), Prune.none).flatMap(_.rows).sum
       snap0.coalesce(math.max(1L, (n + target - 1) / target).toInt)
     }
     // a compaction is the one rewrite every file passes through — record
@@ -2866,13 +2675,12 @@ object VersionedTable {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions at $table")
     val head = vs.last
-    val layout = snapshotLayout(table, Some(head))
-    val rowsOf = snapshotRowCounts(table, Some(head))
+    val layout = select(table, Some(head), Prune.none)
     // EQUALITY tombstones trigger on sight: every scan until compaction
     // pays a per-row key-probe tax that grows with the key count
     // (1.14× at ~118k keys, 3.1× at ~1.2M; SCALING.md round 16
     // "the equality→positional cost crossover")
-    val eqTombstoned = layout.count(_._3.exists(p => !isPosDeleteFile(p)))
+    val eqTombstoned = layout.count(_.tombstones.exists(p => !isPosDeleteFile(p)))
     // POSITIONAL deletion-vector debt is WEIGHED, not binary: vectors
     // read at parity (~1.0× at every measured scale), so a small vector
     // is not worth a full rewrite. What accumulates is doomed-row mass —
@@ -2883,13 +2691,10 @@ object VersionedTable {
     val entriesAll = manifestEntries(table, head)
     val doomedPos = entriesAll
       .filter(e => isDeleteEntry(e) && isPosDeleteFile(entryPath(e)))
-      .flatMap(entryRows).sum
-    val liveRows = layout.flatMap(e => rowsOf.get(e._1).flatten).sum
+      .flatMap(parseEntry(_, Nil).rows).sum
+    val liveRows = layout.flatMap(_.rows).sum
     val posDebt = liveRows > 0 && doomedPos.toDouble / liveRows >= 0.3
-    val small = layout.count { e =>
-      val r = rowsOf.get(e._1).flatten
-      r.exists(n => n > 0L && n < smallFileRows)
-    }
+    val small = layout.count(_.rows.exists(n => n > 0L && n < smallFileRows))
     // CLUSTERING DECAY: a declared layout whose zone maps no longer
     // prune. The measure is what pruning actually depends on — the
     // expected fraction of files a point predicate keeps: per declared
@@ -2903,12 +2708,12 @@ object VersionedTable {
     // schema-evolution carrier entries hold zero rows and no zones:
     // they are metadata vehicles, not layout — both the decay metric
     // and the granularity estimate look only at files that carry rows
-    val dataLayout = layout.filterNot(e => rowsOf.get(e._1).flatten.contains(0L))
+    val dataLayout = layout.filterNot(_.rows.contains(0L))
     val decayed = {
       val cs = clusterSpecCols(table)
       cs.nonEmpty && dataLayout.size >= 4 && {
         val score = cs.map { c =>
-          val zones = dataLayout.map(_._4.get(c))
+          val zones = dataLayout.map(_.zones.get(c))
           val known = zones.flatten
           if (known.isEmpty) 1.0
           else {
@@ -2939,7 +2744,7 @@ object VersionedTable {
     // Floored at twice the small-file line — the advisor must never
     // write files it would itself flag on the next call
     val keepGranularity = {
-      val known = dataLayout.flatMap(e => rowsOf.get(e._1).flatten)
+      val known = dataLayout.flatMap(_.rows)
       if (known.size == dataLayout.size && dataLayout.nonEmpty)
         math.min(1L << 20,
           math.max(smallFileRows * 2, known.sum / dataLayout.size))
@@ -2974,18 +2779,10 @@ object VersionedTable {
   val chainDebtThreshold = 64
 
   /** Commit classification for the streaming source: the paths of the
-    * data files made fresh by version `v`, whether the commit carries
-    * fresh tombstones, and whether it is an overwrite (no carried
-    * entries on a non-first version).
-    */
-  private[sources] def commitClass(
-      table: String, v: Long): (Seq[String], Boolean, Boolean) = {
-    val (data, deletes, ow) = commitClassFiles(table, v)
-    (data, deletes.nonEmpty, ow)
-  }
-
-  /** As [[commitClass]], but with the fresh TOMBSTONE file paths too —
-    * the change-feed stream plans them as delete-row partitions.
+    * data files and of the TOMBSTONE files made fresh by version `v` (the
+    * change-feed stream plans the latter as delete-row partitions), and
+    * whether it is an overwrite (no carried entries on a non-first
+    * version).
     */
   private[sources] def commitClassFiles(
       table: String, v: Long): (Seq[String], Seq[String], Boolean) = {
@@ -3012,7 +2809,7 @@ object VersionedTable {
   private[sources] def freshRows(table: String, v: Long): Option[Long] = {
     val fresh = manifestEntries(table, v)
       .filter(e => !isDeleteEntry(e) && dataCommitOf(e) == v)
-    val cs = fresh.map(entryRows)
+    val cs = fresh.map(parseEntry(_, Nil).rows)
     if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
   }
 
@@ -3024,7 +2821,7 @@ object VersionedTable {
   private[sources] def freshBytes(table: String, v: Long): Option[Long] = {
     val fresh = manifestEntries(table, v)
       .filter(e => !isDeleteEntry(e) && dataCommitOf(e) == v)
-    val cs = fresh.map(entryBytes)
+    val cs = fresh.map(parseEntry(_, Nil).bytes)
     if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
   }
 
@@ -3032,91 +2829,6 @@ object VersionedTable {
   private def ownRemovals(table: String, v: Long): Seq[String] =
     ownEntriesOf(table, v)
       .filter(isRemoveEntry).map(_.stripPrefix("R:"))
-
-  /** Physical layout of a pinned snapshot, for external readers (the SQL
-    * catalog): each data file with its commit number, the tombstone files
-    * applicable to it (bound ≥ its commit), and its zone map.
-    */
-  private[sources] def snapshotLayout(table: String, version: Option[Long])
-      : Seq[(String, Long, Seq[String], Map[String, (Long, Long)])] =
-    memoParsed(table, version, "layout") {
-      val entries = pinnedEntries(table, version)
-      val delE = entries.filter(isDeleteEntry)
-        .map(e => (e.split(":", 3)(1).toLong, entryPath(e)))
-      entries.filterNot(isDeleteEntry).map { e =>
-        val c = dataCommitOf(e)
-        (entryPath(e), c, delE.collect { case (b, p) if b >= c => p }, entryStats(e))
-      }
-    }
-
-  /** COMMIT-LEVEL zone rollup of a pinned snapshot: per data commit, per
-    * column, the union [min(mins), max(maxes)] across the commit's
-    * row-carrying files — the two-level interval index of the Iceberg
-    * manifest-list design, computed once under the same (table, version)
-    * memoization as the layout itself. A column joins a commit's rollup
-    * ONLY when every row-carrying file of that commit recorded its
-    * zone (a stat-less file makes the commit unconstrainable on that
-    * column — omission means "cannot exclude", the sound direction).
-    * Selective planning then drops WHOLE COMMITS with one probe each
-    * before touching per-file zones: on an ingest table of 10k commits ×
-    * 100 files, a one-day predicate pays ~10k probes + the matching
-    * commits' files instead of 1M per-file bound checks.
-    */
-  private[sources] def snapshotCommitZones(
-      table: String, version: Option[Long])
-      : Map[Long, Map[String, (Long, Long)]] = {
-    // force the inputs' own memoization BEFORE entering ours — a nested
-    // computeIfAbsent on the shared parsedSnapshots map throws
-    // "Recursive update" whenever the keys land in one bin
-    val layout = snapshotLayout(table, version)
-    val rowsOf = snapshotRowCounts(table, version)
-    memoParsed(table, version, "commitzones") {
-      layout
-        .filterNot(e => rowsOf.get(e._1).flatten.contains(0L))
-        .groupBy(_._2).map { case (v, es) =>
-          val cols = es.iterator.flatMap(_._4.keysIterator).toSet
-          v -> cols.iterator.flatMap { c =>
-            val zs = es.map(_._4.get(c))
-            if (zs.exists(_.isEmpty)) None
-            else Some(c -> ((zs.flatten.map(_._1).min, zs.flatten.map(_._2).max)))
-          }.toMap
-        }
-    }
-  }
-
-  /** Footer-counted ZERO-ROW files of a pinned snapshot (schema
-    * carriers, emptied rewrites) — memoized: scans consult this set on
-    * EVERY plan, and rebuilding it per query re-walks the whole layout
-    * (measured: the dominant per-plan cost at 1M files once the rollup
-    * skips dead commits).
-    */
-  private[sources] def snapshotZeroRows(
-      table: String, version: Option[Long]): Set[String] = {
-    val rows = snapshotRowCounts(table, version) // memoize OUTSIDE ours
-    memoParsed(table, version, "zerorows") {
-      rows.collect { case (p, Some(0L)) => p }.toSet
-    }
-  }
-
-  /** The snapshot layout GROUPED BY data commit, in first-appearance
-    * order (within a commit, layout order) — the iteration shape the
-    * rollup pre-filter needs so a dead commit skips its files entirely,
-    * paying O(1) instead of O(its files). Memoized like the layout.
-    */
-  private[sources] def snapshotLayoutByCommit(
-      table: String, version: Option[Long])
-      : Seq[(Long, Seq[(String, Long, Seq[String], Map[String, (Long, Long)])])] = {
-    val layout = snapshotLayout(table, version) // memoize OUTSIDE ours
-    memoParsed(table, version, "layoutbycommit") {
-      val order = scala.collection.mutable.LinkedHashMap.empty[Long,
-        scala.collection.mutable.ArrayBuffer[
-          (String, Long, Seq[String], Map[String, (Long, Long)])]]
-      layout.foreach(e =>
-        order.getOrElseUpdate(e._2,
-          scala.collection.mutable.ArrayBuffer.empty) += e)
-      order.iterator.map { case (v, b) => (v, b.toSeq) }.toSeq
-    }
-  }
 
   /** PERSISTED rollups of a pinned snapshot: commit directory →
     * col → [min, max], read from the `rollup=` header lines along the
@@ -3130,24 +2842,6 @@ object VersionedTable {
       : Map[String, Map[String, (Long, Long)]] =
     persistedHeaders(table, version)._1
 
-  /** Persisted STRING rollups (`s~` cells of the `rollup=` lines):
-    * commit directory → col → (lo bytes, optional hi bytes). Same chain
-    * walk and memoization; empty for pre-string-rollup manifests.
-    */
-  private[sources] def persistedStrRollups(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, (Array[Byte], Option[Array[Byte]])]] =
-    persistedHeaders(table, version)._3
-
-  /** Persisted MEMBERSHIP rollups (`b~` cells of the `rollup=` lines):
-    * commit directory → col → OR-union element bloom. Same chain walk
-    * and memoization; empty for pre-member-rollup manifests.
-    */
-  private[sources] def persistedMemberRollups(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, Array[Byte]]] =
-    persistedHeaders(table, version)._4
-
   /** Persisted per-commit SCHEMAS (the `schema=` header lines): commit
     * directory → Spark schema. Same chain walk and memoization as the
     * rollups — snapshot schema resolution consults this first and opens
@@ -3158,13 +2852,6 @@ object VersionedTable {
       : Map[String, org.apache.spark.sql.types.StructType] =
     persistedHeaders(table, version)._2
 
-  /** ONE manifest-chain header walk per (table, version): collects both
-    * the `rollup=` zone rollups and the `schema=` schema hints, newest
-    * declaration of a directory winning (a vacuum materialization
-    * recomputes both from the surviving entries). O(commits) header
-    * lines, never O(files); an unparseable line is skipped (readers
-    * fall back to per-file parses / footer reads).
-    */
   /** One version's OWN header declarations, parsed once: the three
     * joint rollup families (first line per dir wins, matching the
     * head-down walk's within-manifest order; a dir is CLAIMED only when
@@ -3197,20 +2884,11 @@ object VersionedTable {
           val dir = body.substring(0, sp)
           if (!claimed.contains(dir)) {
             val cellStr = body.substring(sp + 1)
-            val cells = cellStr.split(';').iterator
-              .filterNot(_.startsWith("s~")).flatMap { kv =>
-                val eq = kv.indexOf('=')
-                val dots = kv.indexOf("..", eq + 1)
-                if (eq <= 0 || dots <= eq) None
-                else for {
-                  mn <- kv.substring(eq + 1, dots).toLongOption
-                  mx <- kv.substring(dots + 2).toLongOption
-                } yield kv.substring(0, eq) -> (mn, mx)
-            }.toMap
+            val cells = zoneCells(cellStr.split(';').iterator)
             if (cells.nonEmpty) rolls.update(dir, cells)
-            val strCells = parseStrCells(cellStr)
+            val strCells = strZoneCells(tagged(cellStr, "s~"))
             if (strCells.nonEmpty) strRolls.update(dir, strCells)
-            val memberCells = parseMemberCells(cellStr)
+            val memberCells = bloomCells(tagged(cellStr, "b~"))
             if (memberCells.nonEmpty) memberRolls.update(dir, memberCells)
             if (cells.nonEmpty || strCells.nonEmpty || memberCells.nonEmpty)
               claimed += dir
@@ -3238,6 +2916,13 @@ object VersionedTable {
       claimed.toSet)
   }
 
+  /** ONE manifest-chain header walk per (table, version): collects both
+    * the `rollup=` zone rollups and the `schema=` schema hints, newest
+    * declaration of a directory winning (a vacuum materialization
+    * recomputes both from the surviving entries). O(commits) header
+    * lines, never O(files); an unparseable line is skipped (readers
+    * fall back to per-file parses / footer reads).
+    */
   private def persistedHeaders(
       table: String, version: Option[Long])
       : (Map[String, Map[String, (Long, Long)]],
@@ -3287,265 +2972,6 @@ object VersionedTable {
     }
     acc
   }
-
-  /** Candidate files of a SELECTIVE row-level rewrite (DELETE / UPDATE
-    * / MERGE with zone-prunable conditions): the commit/chunk-pruned
-    * selection a selective scan plans, with the per-file integral and
-    * string zone checks applied — same tuples as [[snapshotLayout]]
-    * rows, WITHOUT materializing the global O(files) layout and
-    * string-stats memos the old candidate filter paid on every DML
-    * statement. Per-file semantics match the scan path: a file the
-    * seek path positively excluded at commit/chunk granularity is
-    * dropped; a stat-less file is kept (omission is cannot-exclude).
-    */
-  private[sources] def selectiveCandidates(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)],
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])])
-      : Seq[(String, Long, Seq[String], Map[String, (Long, Long)])] = {
-    val byCommit = selectiveLayoutByCommit(table, version, bounds, strBounds)
-    val strOf: String => Option[Map[String, (Array[Byte], Option[Array[Byte]])]] =
-      if (strBounds.isEmpty) _ => Some(Map.empty)
-      else selectiveStrStats(table, version, bounds, strBounds)
-        .getOrElse {
-          val g = snapshotStrStats(table, version)
-          p => Some(g.getOrElse(p, Map.empty))
-        }
-    byCommit.iterator.flatMap(_._2).filter { case (path, _, _, stats) =>
-      bounds.forall { case (c, (lo, hi)) =>
-        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } && (strBounds.isEmpty || (strOf(path) match {
-        case None => false // chunk-dead in the surviving selection
-        case Some(zs) => strBounds.forall { case (c, b) =>
-          zs.get(c).forall(GraftFilters.strZoneIntersects(_, b))
-        }
-      }))
-    }.toSeq
-  }
-
-  /** SELECTIVE snapshot layout: the per-file planning tuples of ONLY the
-    * commits whose PERSISTED rollup intersects `bounds` — what makes the
-    * COLD selective plan cheap. The full-layout path parses every
-    * entry's stats string once per (table, version); here a commit whose
-    * `rollup=` header positively excludes the bounds is dropped before
-    * any of its entries' stats are parsed, so the first plan after
-    * process start pays O(commits) rollup probes plus only the surviving
-    * commits' per-file parses. Per-commit parses memoize individually
-    * (`clayout:<dir>`), so later plans with different bounds reuse every
-    * commit parsed so far, and a full-layout memo that already exists is
-    * served directly. Commits without a persisted rollup (pre-upgrade
-    * manifests, stat-less commits) parse as before — strictly never
-    * worse than the full walk.
-    */
-  private[sources] def selectiveLayoutByCommit(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)],
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])] =
-        Map.empty,
-      memberProbes: Seq[(String, Seq[Long])] = Nil)
-      : Seq[(Long, Seq[(String, Long, Seq[String], Map[String, (Long, Long)])])] = {
-    // a fully-parsed layout memo already paid the walk — reuse it
-    val v = version.getOrElse(versions(table).last)
-    if (parsedSnapshots.containsKey((table, v, "layoutbycommit")) ||
-      parsedSnapshots.containsKey((table, v, "layout")))
-      return snapshotLayoutByCommit(table, version)
-    val rolls = persistedRollups(table, version)
-    val strRolls = if (strBounds.isEmpty) Map.empty[String,
-      Map[String, (Array[Byte], Option[Array[Byte]])]]
-      else persistedStrRollups(table, version)
-    val memberRolls = if (memberProbes.isEmpty) Map.empty[String,
-      Map[String, Array[Byte]]]
-      else persistedMemberRollups(table, version)
-    def isDead(dir: String): Boolean =
-      rolls.get(dir).exists(roll => bounds.exists {
-        case (c, (lo, hi)) =>
-          roll.get(c).exists { case (mn, mx) => mx < lo || mn > hi }
-      }) || strRolls.get(dir).exists(roll => strBounds.exists {
-        case (c, b) =>
-          roll.get(c).exists(z => !GraftFilters.strZoneIntersects(z, b))
-      }) || memberRolls.get(dir).exists(roll => memberProbes.exists {
-        case (c, hs) =>
-          roll.get(c).exists(b => hs.forall(h =>
-            !graft.functions.MemberBloom.mightContain(b, h)))
-      })
-    // INDEXED fast path: seek to surviving entry blocks — never streams
-    // the base manifest's O(files) entry section. Commit dirs drop on
-    // their persisted rollups, CHUNKS of a large dir on their index-line
-    // cells; the function itself declines (None) when nothing actually
-    // skips — the legacy path's reusable full-layout memo is strictly
-    // better for repeat plans then — and for index-less manifests.
-    val (rawSurviving, delRefs): (Seq[(String, Long, Seq[String])],
-        Seq[(Long, String)]) =
-      selectiveRawEntries(table, version, bounds, strBounds = strBounds,
-        memberProbes = memberProbes) match {
-        case Some((raw, dels)) =>
-          selectiveSeekHits.incrementAndGet()
-          (raw, dels.map(e => (e.split(":", 3)(1).toLong, entryPath(e))))
-        case None =>
-          val entries = pinnedEntries(table, version)
-          // raw entry strings grouped by commit directory —
-          // first-appearance order (deterministic plans), no stats parse
-          val rawByDir: Seq[(String, Long, Seq[String])] =
-            memoParsed(table, version, "rawbydir") {
-              val order = scala.collection.mutable.LinkedHashMap
-                .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-              entries.filterNot(isDeleteEntry).foreach { e =>
-                order.getOrElseUpdate(entryPath(e).split('/')(1),
-                  scala.collection.mutable.ArrayBuffer.empty) += e
-              }
-              order.iterator.map { case (dir, es) =>
-                (dir, dir.stripPrefix("c").takeWhile(_.isDigit).toLong,
-                  es.toSeq)
-              }.toSeq
-            }
-          (rawByDir.filterNot(r => isDead(r._1)),
-            entries.filter(isDeleteEntry)
-              .map(e => (e.split(":", 3)(1).toLong, entryPath(e))))
-      }
-    rawSurviving.map { case (dirspec, cv, es) =>
-      // the PLANNING tuples memoize whole per CHUNK (tombs included —
-      // stable per pinned version), so a warm selective plan assembles
-      // in O(surviving blocks), never re-allocating per entry
-      val parsed = memoParsed(table, version, s"cplanned:$dirspec") {
-        val tombs = delRefs.collect { case (b, p) if b >= cv => p }
-        es.map(e => (entryPath(e), cv, tombs, entryStats(e)))
-      }
-      cv -> parsed
-    }
-  }
-
-  /** Rows + bytes of exactly the files a selective plan admits, through
-    * the seek-based fast path — what lets the scan's statistics
-    * estimate skip the global O(files) row-count/size memos on a cold
-    * selective plan. None when the fast path doesn't serve this
-    * snapshot (legacy manifest) — callers fall back to the global maps.
-    */
-  private[sources] def selectiveRowsBytes(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)],
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])] =
-        Map.empty,
-      memberProbes: Seq[(String, Seq[Long])] = Nil)
-      : Option[String => Option[(Option[Long], Option[Long])]] = {
-    selectiveRawEntries(table, version, bounds, strBounds = strBounds,
-      memberProbes = memberProbes).map {
-      case (raw, _) =>
-        // per-CHUNK maps memoized once (dirspec-keyed, bounds-safe);
-        // lookups route through the path's dir and probe its few chunks
-        val byDir: Map[String, Seq[Map[String, (Option[Long], Option[Long])]]] =
-          raw.groupBy(_._1.takeWhile(_ != '%')).map { case (dir, specs) =>
-            dir -> specs.map { case (dirspec, _, es) =>
-              memoParsed(table, version, s"crb:$dirspec") {
-                es.map(e => (entryPath(e), (entryRows(e), entryBytes(e)))).toMap
-              }
-            }
-          }
-        (p: String) => {
-          val parts = p.split('/')
-          if (parts.length < 2) None
-          else byDir.getOrElse(parts(1), Nil).iterator
-            .flatMap(_.get(p)).nextOption()
-        }
-    }
-  }
-
-  /** Per-file STRING zones of exactly the files a selective plan
-    * admits, through the seek-based fast path — the string twin of
-    * [[selectiveRowsBytes]]: a string-bounded cold plan probes only the
-    * surviving chunks' entries instead of materializing the global
-    * O(files) string-stats memo. The OUTER None means the fast path
-    * doesn't serve this snapshot — callers fall back to
-    * [[snapshotStrStats]]. The INNER Option is per FILE: None means the
-    * path is NOT in the surviving selection — its commit/chunk cells
-    * positively excluded the plan's predicates, so a caller that plans
-    * from a reusable full-layout memo must DROP it (returning an empty
-    * map there would silently keep every dead-chunk file on warm
-    * plans); Some(empty) means served but stat-less (keep — omission is
-    * cannot-exclude).
-    */
-  private[sources] def selectiveStrStats(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)],
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
-      memberProbes: Seq[(String, Seq[Long])] = Nil)
-      : Option[String => Option[Map[String, (Array[Byte], Option[Array[Byte]])]]] = {
-    selectiveRawEntries(table, version, bounds, strBounds = strBounds,
-      memberProbes = memberProbes).map {
-      case (raw, _) =>
-        val byDir: Map[String,
-            Seq[Map[String, Map[String, (Array[Byte], Option[Array[Byte]])]]]] =
-          raw.groupBy(_._1.takeWhile(_ != '%')).map { case (dir, specs) =>
-            dir -> specs.map { case (dirspec, _, es) =>
-              memoParsed(table, version, s"cstr:$dirspec") {
-                es.map(e => entryPath(e) -> entryStrStats(e)).toMap
-              }
-            }
-          }
-        (p: String) => {
-          val parts = p.split('/')
-          if (parts.length < 2) None
-          else byDir.getOrElse(parts(1), Nil).iterator
-            .flatMap(_.get(p)).nextOption()
-        }
-    }
-  }
-
-  /** Per-file MEMBERSHIP blooms of exactly the files a selective plan
-    * admits, through the seek-based fast path — the membership twin of
-    * [[selectiveStrStats]]: a member-probe plan over an indexed manifest
-    * parses (and holds) only the SURVIVING chunks' blooms instead of
-    * materializing the global O(files)×~1 KiB driver map
-    * ([[snapshotMemberBlooms]]) and streaming the whole entry section.
-    * Outer None = fast path doesn't serve this snapshot (fall back to
-    * the global memo); inner per-file None = the path is NOT in the
-    * surviving selection (positively excluded at commit/chunk
-    * granularity — callers planning from a full-layout memo must DROP
-    * it, see [[selectiveStrStats]]).
-    */
-  private[sources] def selectiveMemberBlooms(
-      table: String, version: Option[Long],
-      bounds: Map[String, (Long, Long)],
-      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
-      memberProbes: Seq[(String, Seq[Long])])
-      : Option[String => Option[Map[String, Array[Byte]]]] = {
-    selectiveRawEntries(table, version, bounds, strBounds = strBounds,
-      memberProbes = memberProbes).map {
-      case (raw, _) =>
-        val byDir: Map[String, Seq[Map[String, Map[String, Array[Byte]]]]] =
-          raw.groupBy(_._1.takeWhile(_ != '%')).map { case (dir, specs) =>
-            dir -> specs.map { case (dirspec, _, es) =>
-              memoParsed(table, version, s"cmem:$dirspec") {
-                es.map(e => entryPath(e) -> entryMemberBlooms(e)).toMap
-              }
-            }
-          }
-        (p: String) => {
-          val parts = p.split('/')
-          if (parts.length < 2) None
-          else byDir.getOrElse(parts(1), Nil).iterator
-            .flatMap(_.get(p)).nextOption()
-        }
-    }
-  }
-
-  /** Per-file metadata of a pinned snapshot for the catalog's `$files`
-    * table: (path, owning commit, footer row count if recorded,
-    * applicable-tombstone count, zone map rendered `col=lo..hi;…`).
-    * Pure manifest arithmetic — no data file is opened.
-    */
-  private[sources] def snapshotFiles(table: String, version: Option[Long])
-      : Seq[(String, Long, Option[Long], Int, String)] =
-    memoParsed(table, version, "files") {
-      val entries = pinnedEntries(table, version)
-      val delE = entries.filter(isDeleteEntry)
-        .map(e => (e.split(":", 3)(1).toLong, entryPath(e)))
-      entries.filterNot(isDeleteEntry).map { e =>
-        val c = dataCommitOf(e)
-        val zones = entryStats(e).toSeq.sortBy(_._1)
-          .map { case (col, (mn, mx)) => s"$col=$mn..$mx" }.mkString(";")
-        (entryPath(e), c, entryRows(e), delE.count(_._1 >= c), zones)
-      }
-    }
 
   /** MERGE INTO (row-level upsert): apply a keyed I/U/D change batch to
     * the table head with last-writer-wins semantics and commit the
@@ -3597,7 +3023,7 @@ object VersionedTable {
         else if (carryOf(table, v).isEmpty) if (v == vs.min) "create" else "overwrite"
         else "append"
       val rowsOf = (es: Seq[String]) => {
-        val cs = es.map(entryRows)
+        val cs = es.map(parseEntry(_, Nil).rows)
         if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
       }
       (v, op, freshData.size, freshDel.size,
@@ -4127,22 +3553,19 @@ object VersionedTable {
       sortWithin = true)
   }
 
-  /** Per-bucket data files of a pinned snapshot of a bucketed table:
-    * bucket id → (relative path, applicable tombstone paths) — parsed
-    * from the manifest paths alone. Files missing the bucket component
-    * fail loudly (the write path makes them impossible).
+  /** Data files of a bucketed table grouped by bucket id, parsed from
+    * the paths alone. Files missing the bucket component fail loudly
+    * (the write path makes them impossible).
     */
   private[sources] def bucketLayout(
-      table: String, version: Option[Long], nBuckets: Int)
-      : Map[Int, Seq[(String, Seq[String])]] =
-    snapshotLayout(table, version).map { case (path, _, tombs, _) =>
-      val b = path.split('/').collectFirst {
+      table: String, files: Seq[FileEntry]): Map[Int, Seq[FileEntry]] =
+    files.groupBy { f =>
+      f.path.split('/').collectFirst {
         case seg if seg.startsWith("__graft_bucket=") =>
           seg.stripPrefix("__graft_bucket=").toInt
       }.getOrElse(throw new IllegalStateException(
-        s"bucketed table $table holds an unbucketed data file: $path"))
-      (b, (path, tombs))
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        s"bucketed table $table holds an unbucketed data file: ${f.path}"))
+    }
 
   /** PARTIAL OPTIMIZE (`OPTIMIZE ... WHERE` shape): rewrite ONLY the
     * files whose `clusterBy` zone map intersects `[lo, hi]` (stat-less
@@ -4174,14 +3597,13 @@ object VersionedTable {
     val entries = manifestEntries(table, basis)
     val delE = entries.filter(isDeleteEntry)
     val pc = physName(table, clusterBy) // stats and frame are physical
-    val touched = entries.filterNot(isDeleteEntry).filter { e =>
-      entryStats(e).get(pc)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
+    val prune = Prune.conjunction(Seq((pc, lo, hi)), Nil)
+    val touched = entries.filterNot(isDeleteEntry)
+      .filter(e => prune.admits(parseEntry(e, Nil)))
     if (touched.isEmpty) return basis
     val frame = snapshotFrame(spark, table, touched ++ delE, mergeSchema = false)
     val n = {
-      val cs = touched.map(entryRows)
+      val cs = touched.map(parseEntry(_, Nil).rows)
       if (cs.exists(_.isEmpty) || delE.nonEmpty) frame.count()
       else cs.flatten.sum
     }
@@ -4216,14 +3638,13 @@ object VersionedTable {
       mergeSchema: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val pb = bounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) }
+    val prune = Prune.conjunction(pb, Nil)
     val entries = pinnedEntries(table, version)
     val pruned = entries.filter(e =>
-      isDeleteEntry(e) || {
-        val stats = entryStats(e)
-        pb.forall { case (c, lo, hi) =>
-          stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        }
-      })
+      isDeleteEntry(e) || prune.admits(parseEntry(e, Nil)))
+    // all data files excluded: scan the unpruned snapshot (the filter
+    // still yields zero rows) rather than special-casing an empty scan's
+    // schema — correct, and the zero-match case is not the hot path
     val base =
       if (pruned.forall(isDeleteEntry)) snapshotFrame(spark, table, entries, mergeSchema)
       else snapshotFrame(spark, table, pruned, mergeSchema)
@@ -4237,14 +3658,9 @@ object VersionedTable {
       table: String, version: Option[Long],
       bounds: Seq[(String, Long, Long)]): (Int, Int) = {
     val dataE = pinnedEntries(table, version).filterNot(isDeleteEntry)
-    val pb = bounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) }
-    val kept = dataE.count { e =>
-      val stats = entryStats(e)
-      pb.forall { case (c, lo, hi) =>
-        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-    (kept, dataE.size)
+    val prune = Prune.conjunction(
+      bounds.map { case (c, lo, hi) => (physName(table, c), lo, hi) }, Nil)
+    (dataE.count(e => prune.admits(parseEntry(e, Nil))), dataE.size)
   }
 
   // ---- Column mapping (metadata-only RENAME / DROP COLUMN) ----
@@ -4863,13 +4279,8 @@ object VersionedTable {
     */
   def pruneCount(
       table: String, version: Option[Long], column: String,
-      lo: Long, hi: Long): (Int, Int) = {
-    val dataE = pinnedEntries(table, version).filterNot(isDeleteEntry)
-    val pc = physName(table, column)
-    val kept = dataE.count(e => entryStats(e).get(pc)
-      .forall { case (mn, mx) => mx >= lo && mn <= hi })
-    (kept, dataE.size)
-  }
+      lo: Long, hi: Long): (Int, Int) =
+    pruneCountBounds(table, version, Seq((column, lo, hi)))
 
   /** Data-skipping range read: `read` restricted to `lo <= column <= hi`,
     * with files PRUNED FROM THE MANIFEST ALONE — a data file whose
@@ -4889,21 +4300,8 @@ object VersionedTable {
   def readWhere(
       spark: SparkSession, table: String, version: Option[Long],
       column: String, lo: Long, hi: Long,
-      mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val pc = physName(table, column) // zone maps key physical names
-    val entries = pinnedEntries(table, version)
-    val pruned = entries.filter(e =>
-      isDeleteEntry(e) || entryStats(e).get(pc)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi })
-    // all data files excluded: scan the unpruned snapshot (the filter
-    // still yields zero rows) rather than special-casing an empty scan's
-    // schema — correct, and the zero-match case is not the hot path
-    val base =
-      if (pruned.forall(isDeleteEntry)) snapshotFrame(spark, table, entries, mergeSchema)
-      else snapshotFrame(spark, table, pruned, mergeSchema)
-    logicalizeFrame(table, base.filter(col(pc) >= lo && col(pc) <= hi))
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    readWhereBounds(spark, table, version, Seq((column, lo, hi)), mergeSchema)
 
   /** Incremental consumption, additive side: the data rows added by the
     * commits in `(fromVersion, toVersion]`, each stamped with its
@@ -5102,7 +4500,7 @@ object VersionedTable {
     * maps all ride along unchanged), so no data file is read, written,
     * or moved and the cost is O(snapshot files) manifest lines at any
     * data scale. The restored commit resets the carry chain — it
-    * classifies as an overwrite in [[commitClass]] terms, so streams
+    * classifies as an overwrite in [[commitClassFiles]] terms, so streams
     * refuse to silently cross it, exactly as they refuse any overwrite
     * — and because the old files become referenced by the NEW head,
     * [[vacuum]] retains them for as long as the restore itself is
@@ -5418,3 +4816,106 @@ object VersionedTable {
   */
 private[sources] case class CommitColStat(
     sketch: Array[Byte], lenStats: Option[(Long, Long, Long)] = None)
+
+/** One data file of a pinned snapshot, parsed once from its manifest
+  * entry ([[VersionedTable.parseEntry]]): path, owning commit, the
+  * tombstone files that apply to it, footer rows and bytes, integral
+  * zones, non-null counts and string zones. The exact string sides and
+  * the member blooms decode on demand from the raw segments, so a plan
+  * without member probes never holds decoded blooms. Every planner reads
+  * its files from [[VersionedTable.select]].
+  */
+private[sources] final case class FileEntry(
+    path: String, commit: Long, tombstones: Seq[String],
+    rows: Option[Long], bytes: Option[Long],
+    zones: Map[String, (Long, Long)], nonNulls: Map[String, Long],
+    strZones: Map[String, (Array[Byte], Option[Array[Byte]])],
+    strSegment: String, bloomSegment: String) {
+
+  /** The EXACT sides of the string zones: a side decodes to a value only
+    * when it carries no truncation star — what MIN/MAX aggregate
+    * pushdown needs (a truncated bound prunes soundly but is not the
+    * extreme value itself).
+    */
+  def strExact: Map[String, (Option[String], Option[String])] = {
+    val dec = java.util.Base64.getDecoder
+    def exact(tok: String): Option[String] =
+      if (tok.isEmpty || tok.endsWith("*")) None
+      else try Some(new String(dec.decode(tok), java.nio.charset.StandardCharsets.UTF_8))
+      catch { case _: IllegalArgumentException => None }
+    strSegment.split(';').iterator.flatMap { kv =>
+      val eq = kv.indexOf('=')
+      val dots = kv.indexOf("..", eq + 1)
+      if (eq <= 0 || dots < 0) None
+      else Some(kv.substring(0, eq) ->
+        (exact(kv.substring(eq + 1, dots)), exact(kv.substring(dots + 2))))
+    }.toMap
+  }
+
+  /** col → bloom bytes over the file's distinct array elements (or map keys). */
+  def memberBlooms: Map[String, Array[Byte]] =
+    VersionedTable.bloomCells(
+      if (bloomSegment.isEmpty) Iterator.empty else bloomSegment.split(';').iterator)
+}
+
+/** One plan's pruning conjunction on PHYSICAL names: integral ranges
+  * (sortable bits under `~col` for doubles), string byte ranges (either
+  * side open) and member probe groups (each a disjunction of element
+  * hashes). [[excludes]] is the one prune test — for single files
+  * ([[admits]]) and for the rollup cells of commit dirs and index chunks
+  * alike, since a cell bounds every row-carrying file under it.
+  * Omission (no zone, no bloom) never excludes.
+  */
+final case class Prune(
+    bounds: Map[String, (Long, Long)],
+    strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
+    memberProbes: Seq[(String, Seq[Long])]) {
+
+  def isEmpty: Boolean = bounds.isEmpty && strBounds.isEmpty && memberProbes.isEmpty
+
+  def excludes(
+      zones: => Map[String, (Long, Long)],
+      strZones: => Map[String, (Array[Byte], Option[Array[Byte]])],
+      blooms: => Map[String, Array[Byte]]): Boolean =
+    (bounds.nonEmpty && {
+      val zs = zones
+      bounds.exists { case (c, (lo, hi)) =>
+        zs.get(c).exists { case (mn, mx) => mx < lo || mn > hi }
+      }
+    }) || (strBounds.nonEmpty && {
+      val zs = strZones
+      strBounds.exists { case (c, b) =>
+        zs.get(c).exists(z => !GraftFilters.strZoneIntersects(z, b))
+      }
+    }) || (memberProbes.nonEmpty && {
+      // a group survives when ANY of its hashes might be contained
+      val bl = blooms
+      memberProbes.exists { case (c, hs) =>
+        bl.get(c).exists(b => hs.forall(h =>
+          !graft.functions.MemberBloom.mightContain(b, h)))
+      }
+    })
+
+  private[sources] def admits(f: FileEntry): Boolean =
+    !excludes(f.zones, f.strZones, f.memberBlooms)
+}
+
+object Prune {
+  val none: Prune = Prune(Map.empty, Map.empty, Nil)
+
+  /** A conjunction of possibly repeated per-column ranges as one prune:
+    * each column's intersection, since a zone meets every one of the
+    * ranges exactly when it meets [max lo, min hi].
+    */
+  def conjunction(
+      bounds: Seq[(String, Long, Long)],
+      strBounds: Seq[(String, Option[Array[Byte]], Option[Array[Byte]])]): Prune = {
+    val ord = Ordering.fromLessThan[Array[Byte]](VersionedTable.byteCompare(_, _) < 0)
+    Prune(
+      bounds.groupBy(_._1).map { case (c, bs) => c -> (bs.map(_._2).max, bs.map(_._3).min) },
+      strBounds.groupBy(_._1).map { case (c, bs) =>
+        c -> (bs.flatMap(_._2).maxOption(ord), bs.flatMap(_._3).minOption(ord))
+      },
+      Nil)
+  }
+}

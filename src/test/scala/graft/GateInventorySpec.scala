@@ -3,11 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Inventory of the `spark.graft.*` session-conf gates, of the
-  * entry-point mains and of the fixture-memo idiom in the main sources.
-  * Every gate keeps a second execution path alive, so adding one means
-  * editing the expected set below, next to the gate's retirement plan in
-  * ROADMAP.md; a new `main`, or a hand-rolled pay-once fixture beside
-  * `QueryCache.fixture`, is likewise a visible edit here.
+  * entry-point mains, of the fixture-memo idiom and of the manifest
+  * entry readers in the main sources. Every gate keeps a second
+  * execution path alive, so adding one means editing the expected set
+  * below, next to the gate's retirement plan in ROADMAP.md; a new `main`,
+  * a hand-rolled pay-once fixture beside `QueryCache.fixture`, or a
+  * second entry parser or planner selection beside `parseEntry` and
+  * `select` is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
 
@@ -52,12 +54,14 @@ class GateInventorySpec extends AnyFunSuite {
       s"mains in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
   }
 
+  /** path → occurrences of `token` in that main source, where any. */
+  private def uses(token: String): Map[String, Int] = mainSources
+    .map { case (path, src) =>
+      path -> java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).size
+    }
+    .filter(_._2 > 0).toMap
+
   test("pay-once fixtures have one owner: QueryCache") {
-    def uses(token: String): Map[String, Int] = mainSources
-      .map { case (path, src) =>
-        path -> java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).size
-      }
-      .filter(_._2 > 0).toMap
     Seq("createTempDirectory", "addShutdownHook").foreach { token =>
       assert(uses(token) == Map("graft/ops/QueryCache.scala" -> 1), s"$token in src/main/scala")
     }
@@ -67,5 +71,17 @@ class GateInventorySpec extends AnyFunSuite {
           Set("graft/ops/Incremental.scala", "graft/ops/Relational.scala")
         assert(found.isEmpty, s"$token in ${found.mkString(", ")}")
       }
+  }
+
+  test("manifest entries have one parser and the planner one selection") {
+    assert(uses("entryBody(e).split(\"#\", -1)") ==
+      Map("graft/sources/VersionedTable.scala" -> 1),
+      "the entry segment split belongs to VersionedTable.parseEntry alone")
+    val selective = "def (selective\\w*)".r
+    val found = mainSources
+      .flatMap { case (_, src) => selective.findAllMatchIn(src).map(_.group(1)) }
+      .toSet
+    assert(found == Set("selectiveRawEntries"),
+      s"selective readers in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -753,7 +753,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       (301L to 600L).map(k => (k, s"g${k % 7}", s"v$k")).toDF("k", "grp", "v"),
       t, append = true, statsCols = Seq("k", "grp"))
     val schema = VersionedTable.read(spark, t).schema
-    val scan = new graft.sources.GraftTableScan(t, None, schema, Map.empty)
+    val scan = new graft.sources.GraftTableScan(t, None, schema, graft.sources.Prune.none)
     val st = scan.estimateStatistics()
     assert(st.numRows().getAsLong == 900L)
     val cs = st.columnStats()
@@ -2174,7 +2174,7 @@ class GraftCatalogSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("k",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("amt",
-          org.apache.spark.sql.types.LongType))), Map.empty)
+          org.apache.spark.sql.types.LongType))), graft.sources.Prune.none)
     val all = scan.planInputPartitions().length
     assert(all == 8)
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
@@ -2208,7 +2208,7 @@ class GraftCatalogSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("amt",
         org.apache.spark.sql.types.LongType)))
-    val scan = new graft.sources.GraftTableScan(t, None, schema, Map.empty)
+    val scan = new graft.sources.GraftTableScan(t, None, schema, graft.sources.Prune.none)
     assert(scan.planInputPartitions().length == 8)
     // the scan reports string columns as runtime-filterable
     assert(scan.filterAttributes().map(_.describe()).contains("doc_id"))

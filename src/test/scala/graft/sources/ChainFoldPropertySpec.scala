@@ -23,34 +23,10 @@ class ChainFoldPropertySpec extends AnyFunSuite {
   private type StrBounds = Map[String, (Option[Array[Byte]], Option[Array[Byte]])]
 
   /** The planner's file selection for one conjunction of bounds and
-    * probes: commit/chunk rollups first, then each surviving file's own
-    * zones, string zones and member blooms. */
+    * probes. */
   private def selection(t: String, v: Long, b: Map[String, (Long, Long)],
-      sb: StrBounds, mp: Seq[(String, Seq[Long])]): Set[String] = {
-    val strOf: String => Option[Map[String, (Array[Byte], Option[Array[Byte]])]] =
-      if (sb.isEmpty) _ => Some(Map.empty)
-      else VersionedTable.selectiveStrStats(t, Some(v), b, sb, mp).getOrElse {
-        val g = VersionedTable.snapshotStrStats(t, Some(v))
-        p => Some(g.getOrElse(p, Map.empty))
-      }
-    val memOf: String => Option[Map[String, Array[Byte]]] =
-      if (mp.isEmpty) _ => Some(Map.empty)
-      else VersionedTable.selectiveMemberBlooms(t, Some(v), b, sb, mp).getOrElse {
-        val g = VersionedTable.snapshotMemberBlooms(t, Some(v))
-        p => Some(g.getOrElse(p, Map.empty))
-      }
-    VersionedTable.selectiveLayoutByCommit(t, Some(v), b, sb, mp)
-      .flatMap(_._2).filter { case (path, _, _, stats) =>
-        b.forall { case (c, (lo, hi)) =>
-          stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        } && strOf(path).exists(zs => sb.forall { case (c, bb) =>
-          zs.get(c).forall(GraftFilters.strZoneIntersects(_, bb))
-        }) && memOf(path).exists(bl => mp.forall { case (c, hs) =>
-          bl.get(c).forall(x => hs.exists(h =>
-            graft.functions.MemberBloom.mightContain(x, h)))
-        })
-      }.map(_._1).toSet
-  }
+      sb: StrBounds, mp: Seq[(String, Seq[Long])]): Set[String] =
+    VersionedTable.select(t, Some(v), Prune(b, sb, mp)).map(_.path).toSet
 
   private def tagHash(tag: String): Long = graft.functions.MemberBloom.hashUtf8(
     org.apache.spark.unsafe.types.UTF8String.fromString(tag))
@@ -72,14 +48,18 @@ class ChainFoldPropertySpec extends AnyFunSuite {
       VersionedTable.recordTableProps(t, Map("graft.member-cols" -> "tags"))
       // live model of table content: key -> value
       val model = scala.collection.mutable.Map.empty[Long, Long]
-      // string key ordered like k; tags: one per commit step, one per key class
+      // string key ordered like k; tags: one per commit step, one per run
+      // of 8 keys. Range-partitioned files hold disjoint key runs, so
+      // zones, string zones and blooms also differ between the files of
+      // one commit, not only between commits
       def commitRows(lo: Long, n: Long, append: Boolean, step: Int): Unit = {
         val rows = (lo until lo + n).map(k =>
-          (k, k * 3, f"k$k%06d", Seq(s"g${step % 4}", s"r${k % 3}")))
+          (k, k * 3, f"k$k%06d", Seq(s"g${step % 4}", s"r${k / 8 % 4}")))
         if (!append) model.clear()
         rows.foreach { case (k, v, _, _) => model(k) = v }
         VersionedTable.commit(
-          rows.toDF("k", "v", "s", "tags").repartition(1 + rnd.nextInt(4)),
+          rows.toDF("k", "v", "s", "tags")
+            .repartitionByRange(1 + rnd.nextInt(4), col("k")),
           t, append = append, statsCols = Seq("k", "s"))
       }
       // a random conjunction: an integral range on k, a string range on
@@ -102,7 +82,7 @@ class ChainFoldPropertySpec extends AnyFunSuite {
             val (x, y) = (key(), key())
             Map("s" -> (sk(math.min(x, y)), sk(math.max(x, y))))
         }
-        val tags = Seq("g0", "g1", "g2", "g3", "r0", "r1", "r2", "absent")
+        val tags = Seq("g0", "g1", "g2", "g3", "r0", "r1", "r2", "r3", "absent")
         val mp =
           if (rnd.nextBoolean()) Nil
           else Seq("tags" ->
@@ -153,14 +133,14 @@ class ChainFoldPropertySpec extends AnyFunSuite {
         // unfiltered plan of this version ...
         if (model.nonEmpty) checkSelection(head, step, afterFull = false)
         // (b) the fast header count equals the resolved layout's count
-        val layout = VersionedTable.snapshotLayout(t, Some(head))
+        val layout = VersionedTable.select(t, Some(head), Prune.none)
         VersionedTable.snapshotFileCountFast(t, Some(head)).foreach { fc =>
           assert(fc == layout.size,
             s"run $run step $step: fcount $fc != layout ${layout.size}")
         }
         // (c) chainDataDirs is a superset of live data dirs and excludes
         // tombstone-only dirs
-        val liveDirs = layout.map(_._1.split('/')(1)).toSet
+        val liveDirs = layout.map(_.path.split('/')(1)).toSet
         VersionedTable.chainDataDirs(t, Some(head)).foreach { dirs =>
           assert(liveDirs.subsetOf(dirs.toSet),
             s"run $run step $step: live dirs missing: ${liveDirs -- dirs.toSet}")
@@ -168,9 +148,9 @@ class ChainFoldPropertySpec extends AnyFunSuite {
         // (d) rollup soundness: every live file's recorded zone sits
         // inside its commit dir's persisted rollup cell
         val rolls = VersionedTable.persistedRollups(t, Some(head))
-        layout.foreach { case (path, _, _, stats) =>
-          val dir = path.split('/')(1)
-          stats.get("k").foreach { case (mn, mx) =>
+        layout.foreach { f =>
+          val (path, dir) = (f.path, f.path.split('/')(1))
+          f.zones.get("k").foreach { case (mn, mx) =>
             rolls.get(dir).flatMap(_.get("k")).foreach { case (rlo, rhi) =>
               assert(rlo <= mn && mx <= rhi,
                 s"run $run step $step: $path zone [$mn,$mx] outside " +

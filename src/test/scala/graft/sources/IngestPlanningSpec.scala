@@ -40,10 +40,10 @@ class IngestPlanningSpec extends AnyFunSuite {
       assert(VersionedTable.snapshotFileCountFast(t, None)
         .exists(_ >= 1L), s"fast count lost at append $i")
       // selective planning keeps pruning to exactly the matching commit
-      val sel = VersionedTable.selectiveLayoutByCommit(
-        t, None, Map("k" -> (lo, lo + 5L)))
-      assert(sel.map(_._1) == Seq(i.toLong + 1L),
-        s"append $i: selective plan kept commits ${sel.map(_._1)}")
+      val sel = VersionedTable.select(
+        t, None, Prune(Map("k" -> (lo, lo + 5L)), Map.empty, Nil))
+      assert(sel.map(_.commit).distinct == Seq(i.toLong + 1L),
+        s"append $i: selective plan kept commits ${sel.map(_.commit).distinct}")
       // and a re-plan of the same head is identical
       assert(VersionedTable.read(spark, t)
         .filter(col("k").between(lo, lo + 5L)).count() == 6L)
@@ -70,9 +70,9 @@ class IngestPlanningSpec extends AnyFunSuite {
     // from the REBUILT chain (stale base pointers would throw here)
     assert(VersionedTable.read(spark, t).count() == 350L)
     assert(VersionedTable.snapshotFileCountFast(t, None).isDefined)
-    val sel = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (2000L, 2010L)))
-    assert(sel.nonEmpty && sel.flatMap(_._2).nonEmpty,
+    val sel = VersionedTable.select(
+      t, None, Prune(Map("k" -> (2000L, 2010L)), Map.empty, Nil))
+    assert(sel.nonEmpty,
       "selective plan lost the vacuumed table's files")
     // and the loop continues: post-vacuum appends fold onto the new base
     VersionedTable.commit(
@@ -94,12 +94,12 @@ class IngestPlanningSpec extends AnyFunSuite {
       (1000L to 1100L).map(k => (k, s"s$k")).toDF("k", "v"),
       t, append = true, statsCols = Seq("k", "v"))
     // both commits' rollups serve pruning (long + string families)
-    val sel1 = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (1L, 50L)))
-    assert(sel1.map(_._1) == Seq(1L), s"got ${sel1.map(_._1)}")
-    val sel2 = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (1050L, 1100L)))
-    assert(sel2.map(_._1) == Seq(2L), s"got ${sel2.map(_._1)}")
+    val sel1 = VersionedTable.select(
+      t, None, Prune(Map("k" -> (1L, 50L)), Map.empty, Nil))
+    assert(sel1.map(_.commit).distinct == Seq(1L), s"got ${sel1.map(_.commit)}")
+    val sel2 = VersionedTable.select(
+      t, None, Prune(Map("k" -> (1050L, 1100L)), Map.empty, Nil))
+    assert(sel2.map(_.commit).distinct == Seq(2L), s"got ${sel2.map(_.commit)}")
     // results stay exact through the same path
     assert(VersionedTable.read(spark, t).count() == 201L)
   }
@@ -145,9 +145,9 @@ class IngestPlanningSpec extends AnyFunSuite {
     assert(VersionedTable.chainLength(t, 7L) == 1,
       "an append after checkpoint must carry from the checkpointed base")
     // selective planning keeps pruning through the rebuilt index
-    val sel = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (3000L, 3005L)))
-    assert(sel.map(_._1) == Seq(4L), s"got ${sel.map(_._1)}")
+    val sel = VersionedTable.select(
+      t, None, Prune(Map("k" -> (3000L, 3005L)), Map.empty, Nil))
+    assert(sel.map(_.commit).distinct == Seq(4L), s"got ${sel.map(_.commit)}")
   }
 
   test("auto_maintain flags manifest-chain debt on a healthy layout and " +

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pins for the PERSISTED planning headers (`rollup=` / `schema=`
   * manifest lines): every commit writes them, cold selective planning
-  * consumes them ([[VersionedTable.selectiveLayoutByCommit]] parses only
-  * surviving commits' entries; [[VersionedTable.snapshotSchema]] unions
+  * consumes them ([[VersionedTable.select]] parses only surviving
+  * commits' entries; [[VersionedTable.snapshotSchema]] unions
   * header hints with zero footer I/O), and vacuum's materialization
   * carries the CHAIN's hints forward before deleting the manifests that
   * declared them.
@@ -44,10 +44,10 @@ class PlanHeaderSpec extends AnyFunSuite {
       s"commit 1 rollup must span k=1..1000:\n${m1.take(400)}")
     // selective planning drops the dead commit without parsing it: the
     // surviving layout holds only commit 2's files
-    val sel = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (1500L, 1600L)))
-    assert(sel.map(_._1) == Seq(2L),
-      s"commit 1 must be dropped by its persisted rollup: ${sel.map(_._1)}")
+    val sel = VersionedTable.select(
+      t, None, Prune(Map("k" -> (1500L, 1600L)), Map.empty, Nil))
+    assert(sel.map(_.commit).distinct == Seq(2L),
+      s"commit 1 must be dropped by its persisted rollup: ${sel.map(_.commit)}")
     // schema hints serve snapshot resolution (values must match a read)
     assert(VersionedTable.read(spark, t).count() == 2000L)
   }
@@ -69,28 +69,27 @@ class PlanHeaderSpec extends AnyFunSuite {
       append = true, statsCols = Seq("k"))
     VersionedTable.deleteWhere(spark, t, col("k") % 100L === 7L, "k")
     // the selective fast path must agree with the resolved full read
-    val sel = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (1L, 1000000L)))
+    val sel = VersionedTable.select(
+      t, None, Prune(Map("k" -> (1L, 1000000L)), Map.empty, Nil))
     val full = VersionedTable.read(spark, t)
       .collect().map(_.getLong(0)).toSet
     assert(full == (1L to 900L).filterNot(_ % 100 == 7).toSet)
-    val selFiles = sel.flatMap(_._2.map(_._1)).toSet
+    val selFiles = sel.map(_.path).toSet
     assert(selFiles.nonEmpty && selFiles.forall(_.startsWith("data/")))
     // a selective plan over a bounded range still drops dead commits
-    val sel2 = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (700L, 750L)))
-    assert(sel2.map(_._1).forall(_ >= 2L),
-      s"commit 1 must drop on its rollup through the seek path: ${sel2.map(_._1)}")
+    val sel2 = VersionedTable.select(
+      t, None, Prune(Map("k" -> (700L, 750L)), Map.empty, Nil))
+    assert(sel2.map(_.commit).forall(_ >= 2L),
+      s"commit 1 must drop on its rollup through the seek path: ${sel2.map(_.commit)}")
     // the fast path's selected entries equal the full-resolution set for
     // unbounded bounds (nothing dead): union of blocks + chain = resolved
     val resolvedData = VersionedTable.selectiveRawEntries(
-      t, None, Map.empty, forceSeek = true)
+      t, None, Prune.none, forceSeek = true)
     assert(resolvedData.nonEmpty, "indexed base must serve the fast path")
     val (raw, dels) = resolvedData.get
     val fastPaths = raw.flatMap(_._3).map(e => e.takeWhile(_ != '#')).toSet
-    val sel3 = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map.empty)
-    assert(sel3.flatMap(_._2.map(_._1)).toSet == fastPaths,
+    val sel3 = VersionedTable.select(t, None, Prune.none)
+    assert(sel3.map(_.path).toSet == fastPaths,
       "seek-path and layout paths must agree")
     assert(dels.nonEmpty, "the replace commit's tombstones must be visible")
   }
@@ -113,12 +112,14 @@ class PlanHeaderSpec extends AnyFunSuite {
         s"a 300-entry dir must chunk at 50:\n${m1.take(600)}")
       assert("index=c1_\\S+%0 \\d+ \\d+ k=".r.findFirstIn(m1).isDefined,
         s"chunk lines must carry rollup cells:\n${m1.take(600)}")
-      // a selective plan must read ONLY the matching chunks' entries
-      val sel = VersionedTable.selectiveLayoutByCommit(
-        t, None, Map("k" -> (1500L, 1520L)))
-      val selPaths = sel.flatMap(_._2.map(_._1))
-      assert(selPaths.nonEmpty && selPaths.size <= 120,
-        s"chunk rollups must bound the parsed entries, got ${selPaths.size}")
+      // a selective plan must read ONLY the matching chunks' entries:
+      // the seek path hands the selection exactly the entries it parses
+      val prune = Prune(Map("k" -> (1500L, 1520L)), Map.empty, Nil)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+        .getOrElse(fail("chunk rollups must engage the seek path"))._1.flatMap(_._3)
+      val selPaths = VersionedTable.select(t, None, prune).map(_.path)
+      assert(selPaths.nonEmpty && parsed.size <= 120,
+        s"chunk rollups must bound the parsed entries, got ${parsed.size}")
       // results stay exact through the catalog
       spark.conf.set("spark.sql.catalog.gchk", "graft.sources.GraftCatalog")
       spark.conf.set("spark.sql.catalog.gchk.root",
@@ -130,8 +131,8 @@ class PlanHeaderSpec extends AnyFunSuite {
       assert(got == (1500L to 1520L).toSet,
         "chunk skipping must be invisible to results")
       // unbounded plans still see every file (chunks merge back whole)
-      val all = VersionedTable.selectiveLayoutByCommit(t, None, Map.empty)
-      assert(all.flatMap(_._2.map(_._1)).toSet.size >= 300,
+      val all = VersionedTable.select(t, None, Prune.none)
+      assert(all.map(_.path).toSet.size >= 300,
         "an unbounded plan must keep every entry")
     } finally VersionedTable.IndexChunkEntries = prev
   }
@@ -156,12 +157,12 @@ class PlanHeaderSpec extends AnyFunSuite {
       // a string-bounded selective plan parses only the matching chunks
       val b = "k01500".getBytes("UTF-8")
       val hi = "k01520".getBytes("UTF-8")
-      val sel = VersionedTable.selectiveLayoutByCommit(
-        t, None, Map.empty,
-        strBounds = Map("sk" -> (Some(b), Some(hi))))
-      val selPaths = sel.flatMap(_._2.map(_._1))
-      assert(selPaths.nonEmpty && selPaths.size <= 120,
-        s"string chunk rollups must bound the parsed entries, got ${selPaths.size}")
+      val prune = Prune(Map.empty, Map("sk" -> (Some(b), Some(hi))), Nil)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+        .getOrElse(fail("string chunk rollups must engage the seek path"))._1.flatMap(_._3)
+      val selPaths = VersionedTable.select(t, None, prune).map(_.path)
+      assert(selPaths.nonEmpty && parsed.size <= 120,
+        s"string chunk rollups must bound the parsed entries, got ${parsed.size}")
       // catalog read: a string range plans a small file share, exact rows
       spark.conf.set("spark.sql.catalog.gsck", "graft.sources.GraftCatalog")
       spark.conf.set("spark.sql.catalog.gsck.root",
@@ -206,7 +207,7 @@ class PlanHeaderSpec extends AnyFunSuite {
     try {
       // one commit, 300 files sorted by a DOUBLE key: the `~d` sortable-
       // bits cells must ride the chunk index lines exactly like commit
-      // rollups (they share entryStats, but nothing pinned it)
+      // rollups (they share one zone parser, but nothing pinned it)
       VersionedTable.commit(
         (1L to 3000L).map(k => (k.toDouble / 2.0, k)).toDF("d", "n")
           .repartitionByRange(300, col("d")),
@@ -219,11 +220,12 @@ class PlanHeaderSpec extends AnyFunSuite {
       // a double-bounded selective plan parses only the matching chunks
       val lo = VersionedTable.sortableBits(750.0)
       val hi = VersionedTable.sortableBits(760.0)
-      val sel = VersionedTable.selectiveLayoutByCommit(
-        t, None, Map("~d" -> (lo, hi)))
-      val selPaths = sel.flatMap(_._2.map(_._1))
-      assert(selPaths.nonEmpty && selPaths.size <= 120,
-        s"double chunk rollups must bound the parsed entries, got ${selPaths.size}")
+      val prune = Prune(Map("~d" -> (lo, hi)), Map.empty, Nil)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+        .getOrElse(fail("double chunk rollups must engage the seek path"))._1.flatMap(_._3)
+      val selPaths = VersionedTable.select(t, None, prune).map(_.path)
+      assert(selPaths.nonEmpty && parsed.size <= 120,
+        s"double chunk rollups must bound the parsed entries, got ${parsed.size}")
       // catalog read: a double range plans a small file share, exact rows
       spark.conf.set("spark.sql.catalog.gdck", "graft.sources.GraftCatalog")
       spark.conf.set("spark.sql.catalog.gdck.root",
@@ -292,9 +294,9 @@ class PlanHeaderSpec extends AnyFunSuite {
     assert(!m3.contains("carry="), "materialized manifests are self-contained")
     // and planning still drops dead commits cold (fresh memo key: the
     // rewritten manifest resolves identically)
-    val sel = VersionedTable.selectiveLayoutByCommit(
-      t, None, Map("k" -> (600L, 700L)))
-    assert(sel.map(_._1) == Seq(2L), s"got ${sel.map(_._1)}")
+    val sel = VersionedTable.select(
+      t, None, Prune(Map("k" -> (600L, 700L)), Map.empty, Nil))
+    assert(sel.map(_.commit).distinct == Seq(2L), s"got ${sel.map(_.commit)}")
     assert(VersionedTable.read(spark, t).count() == 1500L)
   }
 
