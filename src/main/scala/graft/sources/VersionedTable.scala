@@ -544,11 +544,11 @@ object VersionedTable {
     * like [[manifestEntries]]. A directory or chunk drops when its
     * rollup cells exclude `prune` ([[Prune.excludes]]: a cell bounds every
     * row-carrying file under it). The seek engages only when something
-    * actually drops (or `forceSeek`); otherwise None, and the streamed
-    * path's per-dir memo serves repeat plans better.
+    * actually drops; otherwise None, and the streamed path's per-dir memo
+    * serves repeat plans better.
     */
   private[sources] def selectiveRawEntries(
-      table: String, version: Option[Long], prune: Prune, forceSeek: Boolean)
+      table: String, version: Option[Long], prune: Prune)
       : Option[(Seq[(String, Long, Seq[String])], Seq[String])] = {
     val head = version.getOrElse {
       val vs = versions(table)
@@ -609,7 +609,7 @@ object VersionedTable {
     }
     // engagement: with every block surviving, streaming once and
     // memoizing the reusable full layout serves repeat plans better
-    if (live.size == idx.size && !forceSeek) return None
+    if (live.size == idx.size) return None
     // base blocks: kept data dirs + the delete block. Per-dir blocks are
     // memoized immutable Seqs SHARED into the result (no per-plan copy —
     // a chainless warm plan re-assembles in O(selected dirs), not
@@ -684,34 +684,24 @@ object VersionedTable {
         strRolls.getOrElse(dir, Map.empty), memberRolls.getOrElse(dir, Map.empty))
     }
 
-  /** THE planner selection: the data files of `table`'s snapshot at
-    * `version` that `prune` admits, as [[FileEntry]]s in commit-grouped
-    * first-appearance order (deterministic plans). Commit dirs (and index
-    * chunks) whose rollup cells exclude `prune` are dropped before their
-    * entries are parsed — through [[selectiveRawEntries]]' seek when the
+  /** The chunks [[select]] parses, before any entry is parsed: the
+    * snapshot's data entries as (dir or index chunk, commit, raw entries)
+    * in commit-grouped first-appearance order, plus its delete entries.
+    * Commit dirs (and index chunks) whose rollup cells exclude `prune`
+    * are dropped here — through [[selectiveRawEntries]]' seek when the
     * base is indexed and something drops, through the streamed per-dir
-    * grouping with the same dead-dir test otherwise — and every surviving
-    * file then passes [[Prune.admits]]. Parsed entries memoize per
-    * (version, chunk), so a cold selective plan parses only the surviving
-    * chunks and later plans with other bounds reuse them. Because a
-    * rollup cell bounds every row-carrying file under it, the result
-    * equals a per-file filter of the whole snapshot on every file that
-    * holds rows.
+    * grouping with the same dead-dir test otherwise.
     */
-  private[sources] def select(
-      table: String, version: Option[Long], prune: Prune): Seq[FileEntry] = {
-    val v = Some(version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no committed versions at $table")
-      vs.last
-    })
-    val (chunks, dels) = selectiveRawEntries(table, v, prune, forceSeek = false) match {
+  private[sources] def survivingChunks(
+      table: String, version: Option[Long], prune: Prune)
+      : (Seq[(String, Long, Seq[String])], Seq[String]) =
+    selectiveRawEntries(table, version, prune) match {
       case Some(hit) => selectiveSeekHits.incrementAndGet(); hit
       case None =>
-        val entries = pinnedEntries(table, v)
+        val entries = pinnedEntries(table, version)
         // raw entry strings grouped by commit directory — first-appearance
         // order, no segment parse
-        val byDir = memoParsed(table, v, "rawbydir") {
+        val byDir = memoParsed(table, version, "rawbydir") {
           val order = scala.collection.mutable.LinkedHashMap
             .empty[String, scala.collection.mutable.ArrayBuffer[String]]
           entries.filterNot(isDeleteEntry).foreach { e =>
@@ -720,9 +710,28 @@ object VersionedTable {
           }
           order.iterator.map { case (dir, es) => (dir, dirCommit(dir), es.toSeq) }.toSeq
         }
-        val dead = rollupExcludes(table, v, prune)
+        val dead = rollupExcludes(table, version, prune)
         (byDir.filterNot(d => dead(d._1)), entries.filter(isDeleteEntry))
     }
+
+  /** THE planner selection: the data files of `table`'s snapshot at
+    * `version` that `prune` admits, as [[FileEntry]]s in commit-grouped
+    * first-appearance order (deterministic plans). Only the
+    * [[survivingChunks]] are parsed, and every file of them then passes
+    * [[Prune.admits]]. Parsed entries memoize per (version, chunk), so a
+    * cold selective plan parses only the surviving chunks and later plans
+    * with other bounds reuse them. Because a rollup cell bounds every
+    * row-carrying file under it, the result equals a per-file filter of
+    * the whole snapshot on every file that holds rows.
+    */
+  private[sources] def select(
+      table: String, version: Option[Long], prune: Prune): Seq[FileEntry] = {
+    val v = Some(version.getOrElse {
+      val vs = versions(table)
+      require(vs.nonEmpty, s"no committed versions at $table")
+      vs.last
+    })
+    val (chunks, dels) = survivingChunks(table, v, prune)
     lazy val delRefs = dels.map(e => (e.split(":", 3)(1).toLong, entryPath(e)))
     chunks.iterator.flatMap { case (dirspec, cv, es) =>
       // whole chunks memoize (tombstones included — stable per pinned
@@ -1693,9 +1702,10 @@ object VersionedTable {
   // (table, version) — the resolvedEntries invariant — so the PARSED forms
   // memoize under the same key, bounded by the same newest-versions window
   // ([[boundCache]]) and invalidated at the same sites (dropTable, vacuum
-  // expiry). Kinds: `schema` ([[snapshotSchema]]), `rawbydir` and
-  // `entries:<chunk>` ([[select]]), and `rawdir:<chunk>` — seek-read
-  // blocks, keyed by the BASE version ([[selectiveRawEntries]]).
+  // expiry). Kinds: `schema` ([[snapshotSchema]]), `rawbydir`
+  // ([[survivingChunks]]), `entries:<chunk>` ([[select]]), and
+  // `rawdir:<chunk>` — seek-read blocks, keyed by the BASE version
+  // ([[selectiveRawEntries]]).
 
   private val parsedSnapshots =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), AnyRef]()
@@ -2830,22 +2840,10 @@ object VersionedTable {
     ownEntriesOf(table, v)
       .filter(isRemoveEntry).map(_.stripPrefix("R:"))
 
-  /** PERSISTED rollups of a pinned snapshot: commit directory →
-    * col → [min, max], read from the `rollup=` header lines along the
-    * manifest carry chain (newest declaration of a directory wins — a
-    * vacuum materialization recomputes them from the surviving entries).
-    * One chain walk per (table, version), memoized; header-only parsing,
-    * O(commits) lines, never O(files).
-    */
-  private[sources] def persistedRollups(
-      table: String, version: Option[Long])
-      : Map[String, Map[String, (Long, Long)]] =
-    persistedHeaders(table, version)._1
-
   /** Persisted per-commit SCHEMAS (the `schema=` header lines): commit
     * directory → Spark schema. Same chain walk and memoization as the
-    * rollups — snapshot schema resolution consults this first and opens
-    * a footer only for directories without a hint.
+    * rollups ([[persistedHeaders]]) — snapshot schema resolution consults
+    * this first and opens a footer only for directories without a hint.
     */
   private[sources] def persistedSchemas(
       table: String, version: Option[Long])
@@ -4821,9 +4819,10 @@ private[sources] case class CommitColStat(
   * entry ([[VersionedTable.parseEntry]]): path, owning commit, the
   * tombstone files that apply to it, footer rows and bytes, integral
   * zones, non-null counts and string zones. The exact string sides and
-  * the member blooms decode on demand from the raw segments, so a plan
-  * without member probes never holds decoded blooms. Every planner reads
-  * its files from [[VersionedTable.select]].
+  * the member blooms decode from the raw segments on first use and then
+  * stay with the memoized entry, so each is decoded once per file and
+  * only for plans that read it (member blooms: plans with member
+  * probes). Every planner reads its files from [[VersionedTable.select]].
   */
 private[sources] final case class FileEntry(
     path: String, commit: Long, tombstones: Seq[String],
@@ -4837,7 +4836,7 @@ private[sources] final case class FileEntry(
     * pushdown needs (a truncated bound prunes soundly but is not the
     * extreme value itself).
     */
-  def strExact: Map[String, (Option[String], Option[String])] = {
+  lazy val strExact: Map[String, (Option[String], Option[String])] = {
     val dec = java.util.Base64.getDecoder
     def exact(tok: String): Option[String] =
       if (tok.isEmpty || tok.endsWith("*")) None
@@ -4853,7 +4852,7 @@ private[sources] final case class FileEntry(
   }
 
   /** col → bloom bytes over the file's distinct array elements (or map keys). */
-  def memberBlooms: Map[String, Array[Byte]] =
+  lazy val memberBlooms: Map[String, Array[Byte]] =
     VersionedTable.bloomCells(
       if (bloomSegment.isEmpty) Iterator.empty else bloomSegment.split(';').iterator)
 }

@@ -272,17 +272,12 @@ object Reference {
     * data entry's `#` segments are decoded on their own. No header line
     * (rollup, index, count) is consulted beyond `carry=`. */
   def manifestFiles(table: String, version: Long): Seq[ManifestFile] = {
-    import scala.jdk.CollectionConverters._
-    def isEntry(l: String): Boolean =
-      l.startsWith("data/") || l.startsWith("D:") || l.startsWith("R:")
     def pathOf(e: String): String =
       (if (e.startsWith("D:")) e.split(":", 3)(2) else e).takeWhile(_ != '#')
     def resolve(v: Long): Vector[String] = {
-      val lines = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(table, "_manifest", s"$v.manifest")).asScala.toList
-      val (headers, body) = lines.span(l => !isEntry(l))
-      val base = headers.find(_.startsWith("carry="))
-        .fold(Vector.empty[String])(c => resolve(c.stripPrefix("carry=").toLong))
+      val (headers, body) = manifestSections(table, v)
+      val base = carryOf(headers)
+        .fold(Vector.empty[String])(c => resolve(c))
       val gone = body.filter(_.startsWith("R:")).map(_.drop(2)).toSet
       base.filterNot(e => gone(pathOf(e))) ++ body.filterNot(_.startsWith("R:"))
     }
@@ -307,6 +302,38 @@ object Reference {
         seg(1).flatMap(_.takeWhile(_ != '@').toLongOption), zones, strZones, blooms)
     }
   }
+
+  /** Each commit directory's integral rollup cells (`rollup=<dir>
+    * col=<min>..<max>;…` header lines, string `s~` and member `b~` cells
+    * skipped) along the carry chain of `table` at `version`: the newest
+    * manifest's line for a directory wins, and within one manifest the
+    * first. Entry lines are not read. */
+  def manifestRollups(table: String, version: Long): Map[String, Map[String, (Long, Long)]] = {
+    val (headers, _) = manifestSections(table, version)
+    val own = headers.filter(_.startsWith("rollup=")).reverse.map { l =>
+      val Array(dir, cells) = l.stripPrefix("rollup=").split(" ", 2)
+      dir -> cells.split(';').toSeq
+        .filterNot(c => c.startsWith("s~") || c.startsWith("b~"))
+        .filter(_.contains("..")).map { kv =>
+          val eq = kv.indexOf('=')
+          val Array(mn, mx) = kv.drop(eq + 1).split("\\.\\.", -1)
+          kv.take(eq) -> (mn.toLong, mx.toLong)
+        }.toMap
+    }.toMap
+    carryOf(headers).fold(Map.empty[String, Map[String, (Long, Long)]])(
+      manifestRollups(table, _)) ++ own
+  }
+
+  /** One manifest's header lines and entry lines, in file order. */
+  private def manifestSections(table: String, v: Long): (List[String], List[String]) = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(table, "_manifest", s"$v.manifest")).asScala.toList
+      .span(l => !(l.startsWith("data/") || l.startsWith("D:") || l.startsWith("R:")))
+  }
+
+  private def carryOf(headers: List[String]): Option[Long] =
+    headers.find(_.startsWith("carry=")).map(_.stripPrefix("carry=").toLong)
 
   /** The paths of `files` a planner may keep for a conjunction of
     * integral ranges, string ranges (unsigned byte order, either side

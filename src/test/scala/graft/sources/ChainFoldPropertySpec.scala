@@ -146,16 +146,17 @@ class ChainFoldPropertySpec extends AnyFunSuite {
             s"run $run step $step: live dirs missing: ${liveDirs -- dirs.toSet}")
         }
         // (d) rollup soundness: every live file's recorded zone sits
-        // inside its commit dir's persisted rollup cell
-        val rolls = VersionedTable.persistedRollups(t, Some(head))
+        // inside its commit dir's persisted rollup cell (the `rollup=`
+        // header lines, read test-side along the carry chain)
+        val rolls = graft.Reference.manifestRollups(t, head)
         layout.foreach { f =>
           val (path, dir) = (f.path, f.path.split('/')(1))
           f.zones.get("k").foreach { case (mn, mx) =>
-            rolls.get(dir).flatMap(_.get("k")).foreach { case (rlo, rhi) =>
-              assert(rlo <= mn && mx <= rhi,
-                s"run $run step $step: $path zone [$mn,$mx] outside " +
-                  s"$dir rollup [$rlo,$rhi]")
-            }
+            val (rlo, rhi) = rolls.get(dir).flatMap(_.get("k")).getOrElse(
+              fail(s"run $run step $step: live dir $dir declares no k rollup"))
+            assert(rlo <= mn && mx <= rhi,
+              s"run $run step $step: $path zone [$mn,$mx] outside " +
+                s"$dir rollup [$rlo,$rhi]")
           }
         }
         // ... and after it

@@ -39,11 +39,15 @@ class IngestPlanningSpec extends AnyFunSuite {
       // the fast header count agrees at every step
       assert(VersionedTable.snapshotFileCountFast(t, None)
         .exists(_ >= 1L), s"fast count lost at append $i")
-      // selective planning keeps pruning to exactly the matching commit
-      val sel = VersionedTable.select(
-        t, None, Prune(Map("k" -> (lo, lo + 5L)), Map.empty, Nil))
+      // selective planning keeps pruning to exactly the matching commit,
+      // before any entry is parsed
+      val prune = Prune(Map("k" -> (lo, lo + 5L)), Map.empty, Nil)
+      val live = VersionedTable.survivingChunks(t, None, prune)._1
+      assert(live.map(_._2).distinct == Seq(i.toLong + 1L),
+        s"append $i: selective plan kept commits ${live.map(_._2).distinct}")
+      val sel = VersionedTable.select(t, None, prune)
       assert(sel.map(_.commit).distinct == Seq(i.toLong + 1L),
-        s"append $i: selective plan kept commits ${sel.map(_.commit).distinct}")
+        s"append $i: selection kept commits ${sel.map(_.commit).distinct}")
       // and a re-plan of the same head is identical
       assert(VersionedTable.read(spark, t)
         .filter(col("k").between(lo, lo + 5L)).count() == 6L)
@@ -70,10 +74,11 @@ class IngestPlanningSpec extends AnyFunSuite {
     // from the REBUILT chain (stale base pointers would throw here)
     assert(VersionedTable.read(spark, t).count() == 350L)
     assert(VersionedTable.snapshotFileCountFast(t, None).isDefined)
-    val sel = VersionedTable.select(
-      t, None, Prune(Map("k" -> (2000L, 2010L)), Map.empty, Nil))
-    assert(sel.nonEmpty,
+    val prune = Prune(Map("k" -> (2000L, 2010L)), Map.empty, Nil)
+    assert(VersionedTable.survivingChunks(t, None, prune)._1.exists(_._3.nonEmpty),
       "selective plan lost the vacuumed table's files")
+    assert(VersionedTable.select(t, None, prune).nonEmpty,
+      "selection lost the vacuumed table's files")
     // and the loop continues: post-vacuum appends fold onto the new base
     VersionedTable.commit(
       (9000L until 9050L).map(k => (k, k * 2)).toDF("k", "x"),
@@ -93,12 +98,22 @@ class IngestPlanningSpec extends AnyFunSuite {
     VersionedTable.commit(
       (1000L to 1100L).map(k => (k, s"s$k")).toDF("k", "v"),
       t, append = true, statsCols = Seq("k", "v"))
-    // both commits' rollups serve pruning (long + string families)
-    val sel1 = VersionedTable.select(
-      t, None, Prune(Map("k" -> (1L, 50L)), Map.empty, Nil))
+    // both commits' rollups serve pruning (long + string families),
+    // before any entry is parsed. Commit 2 sits on the carry chain over a
+    // base that survives whole, so the seek declines and the streamed
+    // per-dir path drops commit 2 on its rollup
+    val prune1 = Prune(Map("k" -> (1L, 50L)), Map.empty, Nil)
+    val hits = VersionedTable.selectiveSeekHits.get()
+    val live1 = VersionedTable.survivingChunks(t, None, prune1)._1
+    assert(VersionedTable.selectiveSeekHits.get() == hits,
+      "a whole surviving base must decline the seek")
+    assert(live1.map(_._2).distinct == Seq(1L), s"got ${live1.map(_._2)}")
+    val sel1 = VersionedTable.select(t, None, prune1)
     assert(sel1.map(_.commit).distinct == Seq(1L), s"got ${sel1.map(_.commit)}")
-    val sel2 = VersionedTable.select(
-      t, None, Prune(Map("k" -> (1050L, 1100L)), Map.empty, Nil))
+    val prune2 = Prune(Map("k" -> (1050L, 1100L)), Map.empty, Nil)
+    val live2 = VersionedTable.survivingChunks(t, None, prune2)._1
+    assert(live2.map(_._2).distinct == Seq(2L), s"got ${live2.map(_._2)}")
+    val sel2 = VersionedTable.select(t, None, prune2)
     assert(sel2.map(_.commit).distinct == Seq(2L), s"got ${sel2.map(_.commit)}")
     // results stay exact through the same path
     assert(VersionedTable.read(spark, t).count() == 201L)
@@ -145,8 +160,10 @@ class IngestPlanningSpec extends AnyFunSuite {
     assert(VersionedTable.chainLength(t, 7L) == 1,
       "an append after checkpoint must carry from the checkpointed base")
     // selective planning keeps pruning through the rebuilt index
-    val sel = VersionedTable.select(
-      t, None, Prune(Map("k" -> (3000L, 3005L)), Map.empty, Nil))
+    val prune = Prune(Map("k" -> (3000L, 3005L)), Map.empty, Nil)
+    val live = VersionedTable.survivingChunks(t, None, prune)._1
+    assert(live.map(_._2).distinct == Seq(4L), s"got ${live.map(_._2)}")
+    val sel = VersionedTable.select(t, None, prune)
     assert(sel.map(_.commit).distinct == Seq(4L), s"got ${sel.map(_.commit)}")
   }
 

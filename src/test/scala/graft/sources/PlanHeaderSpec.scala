@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pins for the PERSISTED planning headers (`rollup=` / `schema=`
   * manifest lines): every commit writes them, cold selective planning
-  * consumes them ([[VersionedTable.select]] parses only surviving
-  * commits' entries; [[VersionedTable.snapshotSchema]] unions
+  * consumes them ([[VersionedTable.select]] parses only the
+  * [[VersionedTable.survivingChunks]]; [[VersionedTable.snapshotSchema]] unions
   * header hints with zero footer I/O), and vacuum's materialization
   * carries the CHAIN's hints forward before deleting the manifests that
   * declared them.
@@ -43,11 +43,13 @@ class PlanHeaderSpec extends AnyFunSuite {
     assert("rollup=c1_\\S+ k=1\\.\\.1000".r.findFirstIn(m1).isDefined,
       s"commit 1 rollup must span k=1..1000:\n${m1.take(400)}")
     // selective planning drops the dead commit without parsing it: the
-    // surviving layout holds only commit 2's files
-    val sel = VersionedTable.select(
-      t, None, Prune(Map("k" -> (1500L, 1600L)), Map.empty, Nil))
-    assert(sel.map(_.commit).distinct == Seq(2L),
-      s"commit 1 must be dropped by its persisted rollup: ${sel.map(_.commit)}")
+    // chunks left to parse hold only commit 2's entries
+    val prune = Prune(Map("k" -> (1500L, 1600L)), Map.empty, Nil)
+    val live = VersionedTable.survivingChunks(t, None, prune)._1
+    assert(live.map(_._2).distinct == Seq(2L),
+      s"commit 1 must be dropped by its persisted rollup: ${live.map(_._2)}")
+    val sel = VersionedTable.select(t, None, prune)
+    assert(sel.nonEmpty && sel.forall(_.commit == 2L), s"${sel.map(_.commit)}")
     // schema hints serve snapshot resolution (values must match a read)
     assert(VersionedTable.read(spark, t).count() == 2000L)
   }
@@ -76,22 +78,28 @@ class PlanHeaderSpec extends AnyFunSuite {
     assert(full == (1L to 900L).filterNot(_ % 100 == 7).toSet)
     val selFiles = sel.map(_.path).toSet
     assert(selFiles.nonEmpty && selFiles.forall(_.startsWith("data/")))
-    // a selective plan over a bounded range still drops dead commits
-    val sel2 = VersionedTable.select(
-      t, None, Prune(Map("k" -> (700L, 750L)), Map.empty, Nil))
-    assert(sel2.map(_.commit).forall(_ >= 2L),
-      s"commit 1 must drop on its rollup through the seek path: ${sel2.map(_.commit)}")
-    // the fast path's selected entries equal the full-resolution set for
-    // unbounded bounds (nothing dead): union of blocks + chain = resolved
-    val resolvedData = VersionedTable.selectiveRawEntries(
-      t, None, Prune.none, forceSeek = true)
-    assert(resolvedData.nonEmpty, "indexed base must serve the fast path")
-    val (raw, dels) = resolvedData.get
-    val fastPaths = raw.flatMap(_._3).map(e => e.takeWhile(_ != '#')).toSet
-    val sel3 = VersionedTable.select(t, None, Prune.none)
-    assert(sel3.map(_.path).toSet == fastPaths,
-      "seek-path and layout paths must agree")
+    // a selective plan over a bounded range still drops dead commits,
+    // through the seek path, before parsing them
+    val bounds = Map("k" -> (700L, 750L))
+    val hits = VersionedTable.selectiveSeekHits.get()
+    val (live, dels) =
+      VersionedTable.survivingChunks(t, None, Prune(bounds, Map.empty, Nil))
+    assert(VersionedTable.selectiveSeekHits.get() > hits,
+      "indexed base must serve the fast path")
+    assert(live.nonEmpty && live.map(_._2).forall(_ >= 2L),
+      s"commit 1 must drop on its rollup through the seek path: ${live.map(_._2)}")
     assert(dels.nonEmpty, "the replace commit's tombstones must be visible")
+    // the seek path's selection equals the manifest chain read whole and
+    // judged file by file (blocks + chain removes/adds = resolved), and
+    // so does the unbounded streamed selection
+    val files = graft.Reference.manifestFiles(t, VersionedTable.versions(t).last)
+    val sel2 = VersionedTable.select(t, None, Prune(bounds, Map.empty, Nil))
+    assert(sel2.map(_.path).toSet ==
+      graft.Reference.prunedFiles(files, bounds, Map.empty, Nil).toSet,
+      "seek-path and full-resolution selections must agree")
+    val sel3 = VersionedTable.select(t, None, Prune.none)
+    assert(sel3.map(_.path).toSet == files.map(_.path).toSet,
+      "layout and full-resolution paths must agree")
   }
 
   test("CHUNKED index: selective plans skip inside one giant commit") {
@@ -115,7 +123,7 @@ class PlanHeaderSpec extends AnyFunSuite {
       // a selective plan must read ONLY the matching chunks' entries:
       // the seek path hands the selection exactly the entries it parses
       val prune = Prune(Map("k" -> (1500L, 1520L)), Map.empty, Nil)
-      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune)
         .getOrElse(fail("chunk rollups must engage the seek path"))._1.flatMap(_._3)
       val selPaths = VersionedTable.select(t, None, prune).map(_.path)
       assert(selPaths.nonEmpty && parsed.size <= 120,
@@ -158,7 +166,7 @@ class PlanHeaderSpec extends AnyFunSuite {
       val b = "k01500".getBytes("UTF-8")
       val hi = "k01520".getBytes("UTF-8")
       val prune = Prune(Map.empty, Map("sk" -> (Some(b), Some(hi))), Nil)
-      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune)
         .getOrElse(fail("string chunk rollups must engage the seek path"))._1.flatMap(_._3)
       val selPaths = VersionedTable.select(t, None, prune).map(_.path)
       assert(selPaths.nonEmpty && parsed.size <= 120,
@@ -221,7 +229,7 @@ class PlanHeaderSpec extends AnyFunSuite {
       val lo = VersionedTable.sortableBits(750.0)
       val hi = VersionedTable.sortableBits(760.0)
       val prune = Prune(Map("~d" -> (lo, hi)), Map.empty, Nil)
-      val parsed = VersionedTable.selectiveRawEntries(t, None, prune, forceSeek = false)
+      val parsed = VersionedTable.selectiveRawEntries(t, None, prune)
         .getOrElse(fail("double chunk rollups must engage the seek path"))._1.flatMap(_._3)
       val selPaths = VersionedTable.select(t, None, prune).map(_.path)
       assert(selPaths.nonEmpty && parsed.size <= 120,
@@ -294,9 +302,11 @@ class PlanHeaderSpec extends AnyFunSuite {
     assert(!m3.contains("carry="), "materialized manifests are self-contained")
     // and planning still drops dead commits cold (fresh memo key: the
     // rewritten manifest resolves identically)
-    val sel = VersionedTable.select(
-      t, None, Prune(Map("k" -> (600L, 700L)), Map.empty, Nil))
-    assert(sel.map(_.commit).distinct == Seq(2L), s"got ${sel.map(_.commit)}")
+    val prune = Prune(Map("k" -> (600L, 700L)), Map.empty, Nil)
+    val live = VersionedTable.survivingChunks(t, None, prune)._1
+    assert(live.map(_._2).distinct == Seq(2L), s"got ${live.map(_._2)}")
+    val sel = VersionedTable.select(t, None, prune)
+    assert(sel.nonEmpty && sel.forall(_.commit == 2L), s"got ${sel.map(_.commit)}")
     assert(VersionedTable.read(spark, t).count() == 1500L)
   }
 
