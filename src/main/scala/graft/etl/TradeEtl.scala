@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   *   - validation is a pure column-expression cascade (zero UDFs) so the
   *     whole stage stays inside WholeStageCodegen;
   *   - unlike the reference (which re-executes the upstream DAG ~6x for its
-  *     metric counts, etl_pipeline.py:112-337), [[TradePipeline]] persists
-  *     the two branch points before counting.
+  *     metric counts, etl_pipeline.py:112-337), [[TradePipeline]] collects
+  *     every stage count as an observation of the one action that persists
+  *     the validated branch point, the only frame it persists.
   *
   * Spark 4 runs with ANSI mode on by default; every cast/parse a malformed
   * row can reach uses `try_cast` / `try_to_timestamp` so bad input yields
@@ -34,9 +35,16 @@ object TradeEtl {
   /** All-string CSV scan, header row, NO schema inference
     * (reference: etl_pipeline.py:66-70 — types are introduced later by
     * explicit casts; validation semantics depend on string-level nulls).
+    * `path` is one file. Its header is read on the driver and passed as
+    * the schema, the one Spark would infer, so no job runs to learn the
+    * column names.
     */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val options = Map("header" -> "true")
+    spark.read.options(options)
+      .schema(GraftSqlInternals.csvHeaderSchema(spark, path, options))
+      .csv(path)
+  }
 
   /** Counterparty fills scan with source-level rename projection to avoid
     * join-name collisions (reference: etl_pipeline.py:72-85).
@@ -91,9 +99,10 @@ object TradeEtl {
   /** Validation cascade (reference: etl_pipeline.py:142-286). Adds, in order:
     *   - typed casts: `trade_quantity_int`, `trade_price_dec`,
     *     `cp_quantity_int`, `cp_price_dec` (null on failed parse);
-    *   - `exception_types` machine codes, appended in the fixed order
-    *     SYMBOL_INVALID → QUANTITY_INVALID → PRICE_INVALID;
-    *   - `exception_details` human messages (4 independent appends);
+    *   - `exception_types` machine codes, each failed check's code in the
+    *     fixed order SYMBOL_INVALID → QUANTITY_INVALID → PRICE_INVALID;
+    *   - `exception_details` human messages (4 independent conditions, in
+    *     order);
     *   - `counterparty_confirmed` := cp quantity OR cp price present —
     *     note: NOT "join matched"; a matched fill with both empty is
     *     unconfirmed (reference: etl_pipeline.py:225-227);
@@ -109,50 +118,29 @@ object TradeEtl {
       .withColumn("cp_quantity_int", col("counterparty_quantity").try_cast(IntegerType))
       .withColumn("cp_price_dec", col("counterparty_price").try_cast(DoubleType))
 
-    val emptyArr = array().cast("array<string>")
-
+    // `<=>`: a matched symbol with a null `is_active` is not ok (and gets
+    // the code), but adds no detail, as `=== "false"` is null there
     val symbolOk =
-      col("company_name").isNotNull && (col("is_active") === "true")
+      col("company_name").isNotNull && (col("is_active") <=> "true")
     val quantityOk =
       col("trade_quantity_int").isNotNull && (col("trade_quantity_int") > 0)
     val priceOk =
       col("trade_price_dec").isNotNull && (col("trade_price_dec") > 0)
 
     val withCodes = typed
-      .withColumn("exception_types", emptyArr)
-      .withColumn("exception_details", emptyArr)
       .withColumn(
         "exception_types",
-        when(symbolOk, col("exception_types"))
-          .otherwise(array_append(col("exception_types"), lit("SYMBOL_INVALID"))))
-      .withColumn(
-        "exception_types",
-        when(quantityOk, col("exception_types"))
-          .otherwise(array_append(col("exception_types"), lit("QUANTITY_INVALID"))))
-      .withColumn(
-        "exception_types",
-        when(priceOk, col("exception_types"))
-          .otherwise(array_append(col("exception_types"), lit("PRICE_INVALID"))))
+        array_compact(array(
+          when(!symbolOk, lit("SYMBOL_INVALID")),
+          when(!quantityOk, lit("QUANTITY_INVALID")),
+          when(!priceOk, lit("PRICE_INVALID")))))
       .withColumn(
         "exception_details",
-        when(col("company_name").isNull,
-          array_append(col("exception_details"), lit("Symbol not found in reference data")))
-          .otherwise(col("exception_details")))
-      .withColumn(
-        "exception_details",
-        when(col("is_active") === "false",
-          array_append(col("exception_details"), lit("Symbol is not active")))
-          .otherwise(col("exception_details")))
-      .withColumn(
-        "exception_details",
-        when(col("trade_quantity_int").isNull || col("trade_quantity_int") <= 0,
-          array_append(col("exception_details"), lit("Quantity is null or non-integer/non-positive")))
-          .otherwise(col("exception_details")))
-      .withColumn(
-        "exception_details",
-        when(col("trade_price_dec").isNull || col("trade_price_dec") <= 0,
-          array_append(col("exception_details"), lit("Price is null or non-numeric/non-positive")))
-          .otherwise(col("exception_details")))
+        array_compact(array(
+          when(col("company_name").isNull, lit("Symbol not found in reference data")),
+          when(col("is_active") === "false", lit("Symbol is not active")),
+          when(!quantityOk, lit("Quantity is null or non-integer/non-positive")),
+          when(!priceOk, lit("Price is null or non-numeric/non-positive")))))
 
     withCodes
       .withColumn(

@@ -10,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Where the reference re-executes the upstream DAG for every `count()`
   * (~6 redundant executions — it never caches), this orchestrator persists
-  * the two branch points (post-quality trades, validated trades) so each
+  * one branch point, the validated trades, and collects every stage count
+  * as an observation of the one action that materializes it, so each
   * stage executes once. Metric *values* are identical; only the physical
   * execution count changes. At 100 TB this is the difference between one
   * pass and six.
@@ -115,8 +116,11 @@ object TradePipeline {
           .as("discrepant"))
       .count() // THE materializing action: cache lands, all observations fire
 
-    def obsN(o: Observation, key: String = "n"): Long =
-      o.get(key).asInstanceOf[Long]
+    // a `sum` over zero rows observes null: no rows, so 0
+    def obsN(o: Observation, key: String = "n"): Long = o.get(key) match {
+      case null => 0L
+      case n => n.asInstanceOf[Long]
+    }
     val processed = obsN(processedObs)
     // out-of-flow branches: the reference still counts them — side action
     val dedupCount =

@@ -119,6 +119,50 @@ object GraftSqlInternals {
     classic.Dataset.ofRows(ds.sparkSession, statsFree)
   }
 
+  /** The physical rows of `df`'s executed plan. Unlike `df.rdd` there is no
+    * conversion to external `Row`s: a string column stays the
+    * `UTF8String` the plan produced. Rows may be reused by the iterator,
+    * so a consumer copies what it keeps.
+    */
+  def internalRows(df: Dataset[Row]): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+
+  /** The schema `spark.read.options(options).csv(path)` infers for one
+    * CSV file with `header` on and `inferSchema` off, read on the driver
+    * with no Spark job. It takes the steps of Spark's own inference: the
+    * first line that is neither empty nor a comment (`CSVUtils
+    * .readHeaderLine`), parsed by univocity with the reader's settings,
+    * then `CSVUtils.makeSafeHeader` (empty names become `_c<i>`,
+    * duplicates get their index appended), every column a nullable
+    * string. A file with no such line gives the empty schema, as
+    * inference does. A directory or a missing path throws, naming the
+    * path.
+    */
+  def csvHeaderSchema(
+      spark: SparkSession,
+      path: String,
+      options: Map[String, String]): types.StructType = {
+    import catalyst.csv.CSVOptions
+    import execution.datasources.csv.CSVUtils
+    import types.{StringType, StructField, StructType}
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val conf = session.sessionState.conf
+    val csvOptions = new CSVOptions(options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val file = new org.apache.hadoop.fs.Path(path)
+    val status = file.getFileSystem(hadoopConf).getFileStatus(file)
+    require(!status.isDirectory, s"expected one CSV file, but $path is a directory")
+    CSVUtils.readHeaderLine(status.getPath, csvOptions, hadoopConf)
+      .map(line => new com.univocity.parsers.csv.CsvParser(csvOptions.asParserSettings)
+        .parseLine(line))
+      .filter(_ != null)
+      .fold(StructType(Nil)) { names =>
+        StructType(CSVUtils.makeSafeHeader(names, conf.caseSensitiveAnalysis, csvOptions)
+          .map(StructField(_, StringType)))
+      }
+  }
+
   /** Run `body` on the global pool under a copy of the calling thread's
     * SparkContext local properties (job group, job description, scheduler
     * pool) and with `spark` active. Pool threads inherit local properties

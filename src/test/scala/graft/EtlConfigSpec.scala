@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{EtlConfig, JsonSink, TradePipeline}
+import graft.etl.{EtlConfig, TradePipeline}
 import org.scalatest.funsuite.AnyFunSuite
 
 class EtlConfigSpec extends AnyFunSuite {
@@ -68,17 +68,5 @@ class EtlConfigSpec extends AnyFunSuite {
     assert(r.metrics.discrepancyTrades < 4774L)
     assert(r.metrics.successfulTrades == 6935L) // validity unaffected
     r.unpersist()
-  }
-
-  test("JsonSink maxRows guard trips before buffering past the limit") {
-    val df = spark.range(100).toDF("id")
-    val out = java.nio.file.Files.createTempFile("sink", ".json").toString
-    val e = intercept[IllegalArgumentException] {
-      JsonSink.writeSingleJsonArray(df, out, maxRows = 10)
-    }
-    assert(e.getMessage.contains("maxRows"))
-    // and under the limit it writes the full array
-    assert(JsonSink.writeSingleJsonArray(df.limit(5), out, maxRows = 10) == 5L)
-    assert(JsonSink.readJsonArray(out).size() == 5)
   }
 }

@@ -1,8 +1,13 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ArrayNode
+import graft.etl.JsonSink
 import graft.functions.TextExpressions
 import graft.ops.Dedup
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +21,9 @@ import org.apache.spark.sql.functions._
   * plain sequential or window formulations. Each reference states only the
   * semantics, never the production execution shape, so a spec that
   * compares the two pins behaviour while leaving the plan free to change.
+  * The trade ETL's JSON sink and CSV header read are pinned against the
+  * forms production replaced: Spark's own schema inference and the
+  * driver-side Jackson pretty-printer.
   */
 object Reference {
 
@@ -251,6 +259,36 @@ object Reference {
       .filter(col("rn") === 1)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
       .orderBy("l_orderkey")
+  }
+
+  // ---- the trade ETL's extract and sink ----------------------------------
+
+  /** The schema Spark infers for a header CSV with `inferSchema` off: a
+    * `take(1)` job over the file's non-empty lines, then the safe header. */
+  def inferredCsvSchema(spark: SparkSession, path: String): StructType =
+    spark.read.option("header", "true").csv(path).schema
+
+  /** The driver-side JSON array sink: drain `toJSON` partition by
+    * partition, re-parse every record with Jackson and pretty-print the
+    * array on the driver. The same `maxRows` guard. Returns the record
+    * count. */
+  def writeSingleJsonArray(df: DataFrame, path: String,
+      maxRows: Long = JsonSink.DefaultMaxRows): Long = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val it = df.toJSON.toLocalIterator()
+    while (it.hasNext) {
+      require(
+        buf.length < maxRows,
+        s"writeSingleJsonArray: more than maxRows=$maxRows rows; use writeJsonLines for large outputs")
+      buf += it.next()
+    }
+    val rows: Seq[String] = buf.toSeq
+    val mapper = new ObjectMapper()
+    val arr: ArrayNode = mapper.createArrayNode()
+    rows.foreach { r => arr.add(mapper.readTree(r): JsonNode) }
+    val writer = mapper.writerWithDefaultPrettyPrinter()
+    Files.write(Paths.get(path), writer.writeValueAsBytes(arr))
+    rows.length.toLong
   }
 
   // ---- versioned tables: the manifest read in full ------------------------

@@ -73,6 +73,13 @@ class ValidationSpec extends AnyFunSuite {
     assert(r.getString(4) == "Symbol is not active")
   }
 
+  test("P3: a known symbol with a null is_active is SYMBOL_INVALID with no detail") {
+    val r = validateOne(enriched("100", "10.0", null, null, null, "Apple Inc", null))
+    assert(!r.getBoolean(0))
+    assert(r.getString(3) == "SYMBOL_INVALID")
+    assert(r.getString(4) == "")
+  }
+
   test("P5: valid row has null exception_type and details") {
     val r = validateOne(enriched("100", "10.0", "100", "10.0", "AAPL", "Apple Inc", "true"))
     assert(r.getBoolean(0))
