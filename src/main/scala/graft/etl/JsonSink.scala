@@ -4,12 +4,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlInternals}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions.{struct, to_json}
 import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType, MapType, StructType}
+import org.apache.spark.unsafe.Platform
 
 import java.io.{BufferedOutputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 /** Output sinks.
   *
@@ -18,9 +21,10 @@ import java.nio.file.{Files, Paths}
   * null fields omitted (so e.g. the 406 cleaned records with an unparseable
   * timestamp have no `timestamp_utc` key, and `raw_data` omits null
   * members). The reference collects the records and pretty-prints them on
-  * the driver; here the executors render them and the driver only joins
-  * the pieces, so only the bytes the file holds reach the driver. The one
-  * file is still the contract, so the sink stays guarded by `maxRows`.
+  * the driver; here the executors render them and the driver only merges
+  * the pieces, so only the bytes the file holds and one sort-key row a
+  * record reach the driver. The one file is still the contract, so the
+  * sink stays guarded by `maxRows`.
   *
   * [[writeJsonLines]] is the 100 TB-scale path: fully distributed JSON-lines
   * parquet-style part files, same null-dropping record shape, no single
@@ -31,60 +35,116 @@ object JsonSink {
 
   val DefaultMaxRows: Long = 5000000L
 
-  private val Separator = ", ".getBytes(StandardCharsets.US_ASCII)
   private val Hex = "0123456789ABCDEF".getBytes(StandardCharsets.US_ASCII)
 
-  /** Write `df` as one pretty JSON array (2-space indent), records in
-    * partition order (the sort order of an `orderBy` frame). Returns the
-    * record count.
+  /** Write `df` as one pretty JSON array (2-space indent) and return the
+    * record count. Records are in the order of the frame's top global
+    * `Sort` (an `orderBy` frame); any other frame is written in partition
+    * order. A sorted frame runs as one job: every partition sorts itself
+    * and renders its records with [[record]] on the executors, together
+    * with each record's sort key as an `UnsafeRow`, and the driver merges
+    * the partitions by the sort's own ordering, equal keys in partition
+    * order, then row order. That saves the range sort's sample job and
+    * its shuffle, and the rendering runs on every core. A frame with no
+    * top `Sort` takes the same path with no keys, which concatenates its
+    * partitions.
     *
     * Jackson's default pretty printer, which the reference's output uses,
     * lays an array out inline (`[ a, b ]`), so a record pretty-printed on
-    * its own has the same bytes as inside the array. Each partition renders
-    * its records with [[rendered]] and joins them with `", "` into one
-    * chunk; one job gathers every partition's chunk at once, and the driver
-    * writes `"[ "`, the chunks joined by `", "`, and `" ]"` (`"[ ]"` when
-    * empty).
+    * its own has the same bytes as inside the array. The driver writes
+    * `"[ "`, the records joined by `", "`, and `" ]"` (`"[ ]"` when
+    * empty). Every record and key row reaches the driver as a task
+    * result, so both count towards `spark.driver.maxResultSize`.
     *
     * @throws IllegalArgumentException if the row count exceeds `maxRows`
     *         (use [[writeJsonLines]] instead at scale). A partition renders
-    *         at most `maxRows + 1` records, the driver drops every chunk as
+    *         at most `maxRows + 1` records, the driver drops every run as
     *         soon as the count passes `maxRows`, and nothing is written.
     */
   def writeSingleJsonArray(df: DataFrame, path: String, maxRows: Long = DefaultMaxRows): Long = {
-    val rows = GraftSqlInternals.internalRows(rendered(df))
+    val (local, keys, ordering) = GraftSqlInternals.localSort(df)
+    val keyed = local.select(keys :+ record(local): _*)
+    val keyTypes = keyed.schema.fields.init.map(_.dataType)
+    val rows = GraftSqlInternals.internalRows(keyed)
     val renderPartition = (it: Iterator[InternalRow]) => {
-      val out = new ByteArrayOutputStream()
+      val keyOf = UnsafeProjection.create(keyTypes)
+      val records, keyRows = new ByteArrayOutputStream()
+      val recordEnds, keyEnds = Array.newBuilder[Int]
+      val copyBuffer = new Array[Byte](4096)
       var n = 0L
       while (n <= maxRows && it.hasNext) {
-        if (n > 0) out.write(Separator)
-        writeWithSurrogateEscapes(it.next().getUTF8String(0).getBytes, out)
+        val row = it.next()
+        writeWithSurrogateEscapes(row.getUTF8String(keyTypes.length).getBytes, records)
+        keyOf(row).writeToStream(keyRows, copyBuffer)
+        recordEnds += records.size
+        keyEnds += keyRows.size
         n += 1
       }
-      (n, out.toByteArray)
+      Run(records.toByteArray, recordEnds.result(), keyRows.toByteArray, keyEnds.result())
     }
-    val chunks = new Array[Array[Byte]](rows.getNumPartitions)
+    val runs = new Array[Run](rows.getNumPartitions)
     var total = 0L
-    rows.sparkContext.runJob(rows, renderPartition,
-      (i: Int, chunk: (Long, Array[Byte])) => {
-        total += chunk._1
-        if (total <= maxRows) chunks(i) = chunk._2
-        else chunks.indices.foreach(chunks(_) = null)
-      })
+    rows.sparkContext.runJob(rows, renderPartition, (i: Int, run: Run) => {
+      total += run.size
+      if (total <= maxRows) runs(i) = run
+      else runs.indices.foreach(runs(_) = null)
+    })
     require(total <= maxRows,
       s"writeSingleJsonArray: more than maxRows=$maxRows rows; use writeJsonLines for large outputs")
     val out = new BufferedOutputStream(Files.newOutputStream(Paths.get(path)))
     try {
       out.write('[')
-      chunks.filter(_.nonEmpty).zipWithIndex.foreach { case (chunk, i) =>
-        if (i > 0) out.write(',')
+      var first = true
+      merge(runs, keyTypes.length, ordering) { (run, i) =>
+        if (!first) out.write(',')
         out.write(' ')
-        out.write(chunk)
+        val from = run.recordStart(i)
+        out.write(run.records, from, run.recordEnds(i) - from)
+        first = false
       }
       out.write(' ')
       out.write(']')
     } finally out.close()
     total
+  }
+
+  /** One partition's rendered records and their sort keys: the records'
+    * bytes back to back, the key rows' `UnsafeRow` bytes back to back, and
+    * each one's end offset. Two byte arrays a partition, not an object a
+    * record, keep the driver's heap flat while it holds every run.
+    */
+  private final case class Run(
+      records: Array[Byte], recordEnds: Array[Int], keys: Array[Byte], keyEnds: Array[Int]) {
+    def size: Int = recordEnds.length
+    def recordStart(i: Int): Int = if (i == 0) 0 else recordEnds(i - 1)
+    def keyStart(i: Int): Int = if (i == 0) 0 else keyEnds(i - 1)
+  }
+
+  /** Visit every record of `runs`, each run already in `ordering` of its
+    * keys, in that ordering: equal keys in run order, then record order.
+    * One `UnsafeRow` a run points at the key of the run's next record.
+    */
+  private def merge(runs: Array[Run], numKeys: Int, ordering: Ordering[InternalRow])(
+      visit: (Run, Int) => Unit): Unit = {
+    val heads = runs.map(_ => new UnsafeRow(numKeys))
+    val next = new Array[Int](runs.length)
+    def point(p: Int): Unit = {
+      val run = runs(p)
+      val from = run.keyStart(next(p))
+      heads(p).pointTo(run.keys, Platform.BYTE_ARRAY_OFFSET + from, run.keyEnds(next(p)) - from)
+    }
+    val first: Ordering[Int] = (a, b) => ordering.compare(heads(a), heads(b)) match {
+      case 0 => Integer.compare(a, b)
+      case c => c
+    }
+    val queue = mutable.PriorityQueue.empty[Int](first.reverse)
+    runs.indices.filter(runs(_).size > 0).foreach { p => point(p); queue.enqueue(p) }
+    while (queue.nonEmpty) {
+      val p = queue.dequeue()
+      visit(runs(p), next(p))
+      next(p) += 1
+      if (next(p) < runs(p).size) { point(p); queue.enqueue(p) }
+    }
   }
 
   /** Copy one rendered record to `out`, writing each character outside the
@@ -123,7 +183,7 @@ object JsonSink {
     * scale as a double, so such values (at any depth) are cast to double
     * first and render as that double's text.
     */
-  private def rendered(df: DataFrame): DataFrame = {
+  private def record(df: DataFrame): Column = {
     def asReparsed(t: DataType): DataType = t match {
       case d: DecimalType if d.scale > 0 => DoubleType
       case s: StructType => StructType(s.fields.map(f => f.copy(dataType = asReparsed(f.dataType))))
@@ -136,7 +196,7 @@ object JsonSink {
       val t = asReparsed(f.dataType)
       (if (t == f.dataType) c else c.cast(t)).as(f.name)
     }
-    df.select(to_json(struct(fields: _*), Map("pretty" -> "true", "ignoreNullFields" -> "true")))
+    to_json(struct(fields: _*), Map("pretty" -> "true", "ignoreNullFields" -> "true"))
   }
 
   /** Distributed JSON-lines sink: one record per line across part files.

@@ -46,6 +46,13 @@ object TradePipeline {
       unpersist: () => Unit,
   )
 
+  /** The validated columns [[TradeEtl.cleanValid]], [[TradeEtl.exceptionsReport]]
+    * and the validity metrics read: all the persisted branch point keeps.
+    */
+  private val BranchColumns = Seq("trade_id", "timestamp", "symbol", "quantity", "price",
+    "buyer_id", "seller_id", "trade_status", "trade_quantity_int", "trade_price_dec",
+    "counterparty_confirmed", "discrepancy_flag", "is_valid", "exception_type", "details")
+
   /** Run extract → quality → enrich → validate → clean lazily, computing the
     * six reference metrics. Input paths point at the three CSVs.
     */
@@ -66,14 +73,13 @@ object TradePipeline {
     // Metrics ride the ONE materializing pass as `observe` checkpoints
     // (CollectMetrics nodes) instead of per-stage count() actions: the
     // reference re-executes its DAG ~6 times for its running counts
-    // (etl_pipeline.py:105-140, 275-281); the previous revision here ran
-    // 6 actions over two MEMORY_AND_DISK caches. Now every stage-count
-    // metric is an exact aggregate collected DURING the single action
-    // that materializes the validated branch point — at 100 TB that is
-    // the difference between caching a corpus-sized dedup intermediate
-    // and streaming through it once. Metric VALUES are identical
-    // (observe aggregates are exact, and the same count-subtraction
-    // arithmetic applies); only the execution count changes.
+    // (etl_pipeline.py:105-140, 275-281). Every stage-count metric is an
+    // exact aggregate collected DURING the single action that
+    // materializes the validated branch point, so at 100 TB the pipeline
+    // streams through its dedup intermediate once instead of caching it.
+    // Metric VALUES are identical (observe aggregates are exact, and the
+    // same count-subtraction arithmetic applies); only the execution
+    // count changes.
     // Both "identified" metrics are still computed UNCONDITIONALLY —
     // the reference always runs the dedup and cancelled counts and gates
     // only which DataFrame flows downstream (etl_pipeline.py:120-123,
@@ -99,12 +105,14 @@ object TradePipeline {
       else afterDedup
 
     // Enrich + validate, persisted once as the single branch point for
-    // the two output writes; the validity/discrepancy metrics observe
-    // ABOVE the cache so the materializing count collects them too.
+    // the two output writes, with only the columns the outputs and the
+    // metrics read; the validity/discrepancy metrics observe ABOVE the
+    // cache so the materializing write collects them too.
     val validated = TradeEtl
       .validate(
         TradeEtl.enrich(qualityDf, fills, symbols),
         cfg.validation.priceDiscrepancyThresholdExclusive)
+      .select(BranchColumns.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val validityObs = Observation("validity")
     validated
@@ -114,7 +122,8 @@ object TradePipeline {
         sum(when(!col("is_valid"), 1L).otherwise(0L)).as("invalid"),
         sum(when(col("is_valid") && col("discrepancy_flag"), 1L).otherwise(0L))
           .as("discrepant"))
-      .count() // THE materializing action: cache lands, all observations fire
+      .write.format("noop").mode("overwrite")
+      .save() // THE materializing action: cache lands, all observations fire
 
     // a `sum` over zero rows observes null: no rows, so 0
     def obsN(o: Observation, key: String = "n"): Long = o.get(key) match {

@@ -127,6 +127,31 @@ object GraftSqlInternals {
   def internalRows(df: Dataset[Row]): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
 
+  /** `df` with a top global `Sort` run as a local one: the frame, the
+    * sort's keys as columns of it, and the sort's ordering bound to a row
+    * that holds those keys at positions `0 until keys.size`. Every
+    * partition of the frame is sorted, so a merge of its partitions by
+    * the ordering, equal keys taken from the lower partition first, gives
+    * an order the global sort can give, without its sample job and its
+    * range shuffle. A frame whose analyzed plan does not end in a global
+    * `Sort` comes back as it is with no keys; the ordering then finds
+    * every row equal and the same merge concatenates the partitions.
+    */
+  def localSort(df: Dataset[Row]): (Dataset[Row], Seq[Column], Ordering[catalyst.InternalRow]) = {
+    import catalyst.expressions.{BoundReference, InterpretedOrdering}
+    import catalyst.plans.logical.Sort
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val (local, order) = ds.queryExecution.analyzed match {
+      case s @ Sort(order, true, _, _) =>
+        (classic.Dataset.ofRows(ds.sparkSession, s.copy(global = false)), order)
+      case _ => (df, Nil)
+    }
+    val bound = order.zipWithIndex.map { case (o, i) =>
+      o.copy(child = BoundReference(i, o.dataType, o.nullable), sameOrderExpressions = Nil)
+    }
+    (local, order.map(o => classic.ExpressionUtils.column(o.child)), new InterpretedOrdering(bound))
+  }
+
   /** The schema `spark.read.options(options).csv(path)` infers for one
     * CSV file with `header` on and `inferSchema` off, read on the driver
     * with no Spark job. It takes the steps of Spark's own inference: the

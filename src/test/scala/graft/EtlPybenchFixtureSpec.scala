@@ -55,4 +55,19 @@ class EtlPybenchFixtureSpec extends AnyFunSuite {
       assert(gotCodes.toMap == wantCodes)
     } finally r.unpersist()
   }
+
+  test("one op runs 7 jobs: TradePipeline.run and both sinks") {
+    val out = SparkTestBase.tempDir("etl_pybench_jobs")
+    val (r, jobs) = SparkTestBase.countingJobs {
+      val r = TradePipeline.run(spark, s"$dir/trades.csv", s"$dir/counterparty_fills.csv",
+        s"$dir/symbols_reference.csv", EtlConfig.default)
+      JsonSink.writeSingleJsonArray(r.cleanedTrades.orderBy("trade_id"), s"$out/cleaned.json")
+      JsonSink.writeSingleJsonArray(r.exceptions.orderBy("record_id"), s"$out/exceptions.json")
+      r
+    }
+    r.unpersist()
+    // run's materializing write 5 (the dedup shuffle, two broadcasts, the
+    // cache build, the write's result stage), each sink 1
+    assert(jobs == 7, s"expected 7 jobs, saw $jobs")
+  }
 }

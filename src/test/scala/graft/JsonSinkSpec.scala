@@ -1,16 +1,22 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.etl.{EtlConfig, JsonSink, TradePipeline}
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** `JsonSink.writeSingleJsonArray` renders on the executors; its bytes are
   * pinned against `Reference.writeSingleJsonArray`, the driver-side
   * Jackson re-parse and pretty-print it replaced, on both ETL fixtures'
   * outputs and on frames built to reach every rendering difference
-  * between Spark's JSON generator and the re-parse. The `maxRows` guard
-  * is checked here too. Needs no reference dataset.
+  * between Spark's JSON generator and the re-parse. Sorted frames are
+  * pinned on every ordering shape the sink's merge reads: several keys,
+  * directions, null orderings, expression keys and duplicate keys. The
+  * `maxRows` guard and the sorted sink's one job are checked here too.
+  * Needs no reference dataset.
   */
 class JsonSinkSpec extends AnyFunSuite {
 
@@ -85,6 +91,80 @@ class JsonSinkSpec extends AnyFunSuite {
 
   test("a frame with more partitions than rows has the reference sink's bytes") {
     assertSameBytes("sparse", spark.range(0, 3, 1, 8).selectExpr("id", "concat('r', id) AS name"))
+  }
+
+  // a frame whose every sort below is a total order, so the reference's
+  // range sort has one right answer; partitions of 10 rows each
+  private lazy val keyed = spark.range(0, 40, 1, 4).selectExpr(
+    "id",
+    "id % 5 AS a",
+    "CASE WHEN id % 7 = 0 THEN NULL ELSE id % 3 END AS b",
+    "concat('r', id) AS name",
+    "CASE WHEN id = 13 THEN NULL ELSE (id * 37) % 40 END AS solo",
+    """CASE id WHEN 3 THEN NULL WHEN 5 THEN double('NaN') WHEN 7 THEN double('-Infinity')
+         WHEN 11 THEN double('Infinity') ELSE (id - 20) * 1.5D END AS dbl""")
+
+  test("multi-key, descending and nulls-first/last orderings have the reference sink's bytes") {
+    assertSameBytes("desc_nulls_last",
+      keyed.orderBy(col("a").desc, col("b").asc_nulls_last, col("id")))
+    assertSameBytes("nulls_first_desc",
+      keyed.orderBy(col("b").desc_nulls_first, col("name").desc))
+    assertSameBytes("nulls_first_asc",
+      keyed.orderBy(col("b").asc_nulls_first, col("a").desc_nulls_last, col("id").desc))
+    assertSameBytes("expression_keys", keyed.orderBy((col("id") % 4).desc, col("id")))
+  }
+
+  test("null sort keys merge where the reference puts them") {
+    assertSameBytes("one_null_key", keyed.orderBy("solo"))
+    assertSameBytes("one_null_key_desc", keyed.orderBy(col("solo").desc))
+    assertSameBytes("null_nan_infinity", keyed.orderBy(col("dbl").asc_nulls_last))
+    assertSameBytes("null_nan_infinity_desc", keyed.orderBy(col("dbl").desc_nulls_first))
+  }
+
+  test("a sort on a column outside the output is written in partition order, as sorted") {
+    val df = keyed.select("name", "a").orderBy(col("id").desc)
+    assert(org.apache.spark.sql.GraftSqlInternals.localSort(df)._2.isEmpty,
+      "the analyzer puts a projection above the sort, so the sink merges no keys")
+    assertSameBytes("outside_key", df)
+  }
+
+  test("a sorted frame with more partitions than rows has the reference sink's bytes") {
+    assertSameBytes("sparse_sorted",
+      spark.range(0, 3, 1, 8).selectExpr("id", "concat('r', id) AS name").orderBy(col("id").desc))
+  }
+
+  test("duplicate sort keys merge in partition order, then row order") {
+    // 3 partitions of 8 ids each, in id order, and 4 ids to a key. The
+    // reference's range sort leaves equal keys in the order its shuffle
+    // blocks arrive, which is not deterministic; only the records' multiset
+    // is pinned to it. Equal keys here come from the lower partition
+    // first, then in row order: ordered by (k, id), as the reference
+    // writes a sort on both.
+    val df = spark.range(0, 24, 1, 3).selectExpr("id % 6 AS k", "id")
+    val (got, want) = bothSinks("dup_keys", df.orderBy("k"))
+    def records(json: String): Seq[String] =
+      new ObjectMapper().readTree(json).elements().asScala.map(_.toString).toSeq
+    assert(records(got).sorted == records(want).sorted)
+    val (_, byBoth) = bothSinks("dup_keys_total", df.orderBy("k", "id"))
+    assert(got == byBoth)
+  }
+
+  test("a sorted frame's sink runs one job") {
+    val df = keyed.orderBy("name")
+    val path = out.resolve("one_job.json").toString
+    val (n, jobs) = SparkTestBase.countingJobs(JsonSink.writeSingleJsonArray(df, path))
+    assert(n == 40L)
+    assert(jobs == 1, s"expected the render job alone, saw $jobs jobs")
+  }
+
+  test("the guard trips on a sorted frame and writes no file") {
+    val path = out.resolve("sorted_never.json")
+    val e = intercept[IllegalArgumentException] {
+      JsonSink.writeSingleJsonArray(spark.range(0, 12, 1, 4).toDF("id").orderBy("id"),
+        path.toString, maxRows = 10)
+    }
+    assert(e.getMessage.contains("maxRows"))
+    assert(!Files.exists(path))
   }
 
   test("JsonSink maxRows guard trips before buffering past the limit") {

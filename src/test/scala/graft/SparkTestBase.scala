@@ -27,6 +27,27 @@ object SparkTestBase {
     d
   }
 
+  /** `body`'s result and the number of Spark jobs it started: a listener
+    * counts the jobs of a job group set around `body` on this thread. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counting-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .appName("graft-tests")
