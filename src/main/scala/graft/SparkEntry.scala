@@ -693,7 +693,7 @@ object SparkEntry {
     "q_when_case" -> ((s, d) => Relational.whenCaseBuckets(t(s, d, "orders"))),
     "q_validate_chain" -> ((s, d) => Relational.validateChain(t(s, d, "lineitem"))),
     "q_struct_pack" -> ((s, d) => Relational.structPackJson(t(s, d, "orders"))),
-    // ---- time / ordering (SURVEY §2.3 F11-F15 + streaming twin) ----
+    // ---- time / ordering (SURVEY §2.3 F11-F15) ----
     "q_date_format" -> ((s, d) => TimeOps.dateFormatIso(t(s, d, "orders"))),
     "q_ts_dispatch" -> ((s, d) => TimeOps.timestampDispatch(t(s, d, "events"))),
     "q_events_hourly" -> ((s, d) => TimeOps.hourlyEventAgg(t(s, d, "events"))),
@@ -855,8 +855,7 @@ object SparkEntry {
     "q_docs_bloom_decontam" -> ((s, d) => TextAnalysis.bloomDecontaminate(t(s, d, "documents"))),
     "q_docs_repetition" -> ((s, d) => TextAnalysis.repetitionScore(t(s, d, "documents"))),
     "q_emb_srp_pairs" -> ((s, d) => Similarity.srpNearDupPairs(t(s, d, "embeddings"))),
-    // candidate half only (no cosine verify) — the batch twin the
-    // streaming SRP ingest (EmbStreams.srpCandidateStream) pins against
+    // candidate half only (no cosine verify)
     "q_emb_srp_cands" -> ((s, d) => Similarity.srpCandidatePairs(t(s, d, "embeddings"))),
     // ---- multimodal plumbing ----
     "q_multimodal_meta" -> ((s, d) => Multimodal.binaryMeta(t(s, d, "documents"))),

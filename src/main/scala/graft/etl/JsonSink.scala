@@ -26,10 +26,10 @@ import scala.collection.mutable
   * record reach the driver. The one file is still the contract, so the
   * sink stays guarded by `maxRows`.
   *
-  * [[writeJsonLines]] is the 100 TB-scale path: fully distributed JSON-lines
-  * parquet-style part files, same null-dropping record shape, no single
-  * output file. Callers at scale use this; the array sink exists for golden
-  * format parity on small reconciliation outputs.
+  * At scale, `DataFrame.write.json` is the path: fully distributed
+  * JSON-lines part files with the same null-dropping record shape and no
+  * single output file. The array sink exists for golden format parity on
+  * small reconciliation outputs.
   */
 object JsonSink {
 
@@ -57,7 +57,7 @@ object JsonSink {
     * result, so both count towards `spark.driver.maxResultSize`.
     *
     * @throws IllegalArgumentException if the row count exceeds `maxRows`
-    *         (use [[writeJsonLines]] instead at scale). A partition renders
+    *         (use `DataFrame.write.json` instead at scale). A partition renders
     *         at most `maxRows + 1` records, the driver drops every run as
     *         soon as the count passes `maxRows`, and nothing is written.
     */
@@ -90,7 +90,7 @@ object JsonSink {
       else runs.indices.foreach(runs(_) = null)
     })
     require(total <= maxRows,
-      s"writeSingleJsonArray: more than maxRows=$maxRows rows; use writeJsonLines for large outputs")
+      s"writeSingleJsonArray: more than maxRows=$maxRows rows; use DataFrame.write.json for large outputs")
     val out = new BufferedOutputStream(Files.newOutputStream(Paths.get(path)))
     try {
       out.write('[')
@@ -198,14 +198,6 @@ object JsonSink {
     }
     to_json(struct(fields: _*), Map("pretty" -> "true", "ignoreNullFields" -> "true"))
   }
-
-  /** Distributed JSON-lines sink: one record per line across part files.
-    * Spark's JSON writer drops null fields, matching the array sink's
-    * record shape. `ignoreNullFields` is the default but set explicitly —
-    * it is the correctness contract, not a preference.
-    */
-  def writeJsonLines(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").option("ignoreNullFields", "true").json(dir)
 
   /** Read back a single-file JSON array written by [[writeSingleJsonArray]]
     * (or the reference's golden files) for comparison in tests.

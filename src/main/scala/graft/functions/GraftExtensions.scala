@@ -28,11 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // for a node it doesn't know.
     ext.injectPlannerStrategy(session => new graft.plans.AsOfJoinStrategy(session))
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
-    // streaming zone-map pruning: Spark never invokes pushFilters on a
-    // micro-batch scan builder, so the per-batch Filter's bounds reach
-    // the graft stream through this rule instead (conservative file
-    // skipping only — the Filter stays in the plan)
-    ext.injectOptimizerRule(_ => graft.plans.PushFiltersIntoVersionedStream)
     // array/map membership file pruning: Spark's V2 filter translation
     // has no array_contains rendering, so membership conjuncts reach
     // the graft scan as an OPTION the rule attaches to the relation

@@ -189,10 +189,8 @@ object Dedup {
     *    The shuffle it pays is tiny — partial aggregation collapses to
     *    one row per doc per partition before the exchange.
     *  - [[bandedSignaturesFromShingles]] (one native per-row expression,
-    *    ZERO shuffle and stream-safe): best when the consumer immediately
-    *    re-buckets on (band, hash) (`q_docs_lsh_pairs` 1.91 s vs 2.40 s
-    *    through here) — and the only legal form under Structured
-    *    Streaming, where a batch groupBy cannot appear mid-stream.
+    *    ZERO shuffle): best when the consumer immediately re-buckets on
+    *    (band, hash) (`q_docs_lsh_pairs` 1.91 s vs 2.40 s through here).
     */
   private def minhashFromShingles(shFrame: DataFrame): DataFrame = {
     val ex = shFrame.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -247,12 +245,9 @@ object Dedup {
     * hashes each shingle once and keeps all `NumHashes` affine minima
     * ([[graft.functions.TextExpressions.minhashMins]]), bands concatenate
     * in-row, and the band explode is a generator — no aggregation, no
-    * sort, no shuffle anywhere. Because no operator carries cross-row state, the
-    * same pipeline runs unchanged over a STREAMING frame — the
-    * ingest-time near-dup path
-    * ([[graft.streaming.DocStreams.lshCandidateStream]]). The
-    * empty-shingle filter replicates the explode path's drop semantics,
-    * so both formulations produce identical signatures.
+    * sort, no shuffle anywhere. The empty-shingle filter replicates the
+    * explode path's drop semantics, so both formulations produce
+    * identical signatures.
     */
   private[graft] def bandedSignaturesFromShingles(shFrame: DataFrame): DataFrame = {
     // the native minima equal the aggregate path's: the 8-hex md5 prefix is

@@ -532,10 +532,8 @@ object Similarity {
     * sign pattern) would otherwise emit O(bucket²) pairs at web scale.
     */
   /** Narrow per-table bucket assignment in long form: (vec_id, embedding,
-    * t, b) — one row per (vector, table), no aggregation and no ordering,
-    * so the exact same expression runs on an unbounded stream
-    * ([[graft.streaming.EmbStreams.srpCandidateStream]]) and inside the
-    * batch pair generators below.
+    * t, b) — one row per (vector, table), no aggregation and no ordering;
+    * shared by the batch pair generators below.
     */
   private[graft] def srpBucketed(embeddings: DataFrame): DataFrame =
     embeddings.select(
@@ -546,9 +544,8 @@ object Similarity {
 
   /** SRP candidate pairs BEFORE the exact-cosine verify: every distinct
     * id pair sharing a (table, bucket), capped buckets dropped — the
-    * candidate-generation half of [[srpNearDupPairs]], split out so the
-    * streaming ingest twin has a batch op to pin equivalence against
-    * (the same generate-candidates / verify-downstream split as
+    * candidate-generation half of [[srpNearDupPairs]] (the same
+    * generate-candidates / verify-downstream split as
     * [[graft.ops.Dedup.lshCandidatePairs]] vs the verified near-dup op).
     */
   def srpCandidatePairs(

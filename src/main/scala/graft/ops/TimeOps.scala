@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Time/ordering operators: format rendering, the reference's 3-way
   * timestamp-format dispatch exercised as a registered query, windowed
-  * event aggregation (the batch twin of the streaming path), sessionization,
+  * event aggregation, sessionization,
   * and an as-of join — all declarative, no UDFs.
   */
 object TimeOps {
@@ -48,11 +48,7 @@ object TimeOps {
       .orderBy("event_id")
   }
 
-  /** Streaming-shaped batch aggregation: tumbling 1-hour windows per event
-    * type. This is the exact logical plan the Structured Streaming path
-    * (graft.streaming.EventStreams) runs incrementally; registered as a
-    * batch query so the oracle can check it.
-    */
+  /** Tumbling 1-hour windows per event type (`q_events_hourly`). */
   def hourlyEventAgg(events: DataFrame): DataFrame =
     events
       .groupBy(

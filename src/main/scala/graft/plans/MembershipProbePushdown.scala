@@ -15,13 +15,12 @@ import graft.sources.{GraftCatalogTable, MemberProbes}
   * translation has no rendering for `array_contains` / map-key access,
   * so the daily LLM-curation filter `WHERE array_contains(tags, 'en')`
   * would read every file of a 100 TB table no matter what the manifests
-  * know. This rule closes the gap the engine's side-channel way (like
-  * [[PushFiltersIntoVersionedStream]]): when a Filter sits on a graft
-  * relation, its top-level membership conjuncts are encoded into the
-  * relation's scan OPTIONS — the Filter node itself stays in the plan
-  * and Spark still applies it row-by-row, while the scan builder uses
-  * the probes only to SKIP files whose commit-time element blooms
-  * positively exclude the key. Results can never depend on the probe.
+  * know. This rule closes the gap through a side channel: when a Filter
+  * sits on a graft relation, its top-level membership conjuncts are
+  * encoded into the relation's scan OPTIONS — the Filter node itself
+  * stays in the plan and Spark still applies it row-by-row, while the
+  * scan builder uses the probes only to SKIP files whose commit-time
+  * element blooms positively exclude the key. Results can never depend on the probe.
   *
   * Conjuncts recognized (all imply "the key is an element / a map key
   * of the column" whenever the conjunct evaluates TRUE):
@@ -70,17 +69,14 @@ object PushMembershipProbes extends Rule[LogicalPlan] with PredicateHelper {
       case _           => None
     }
 
-  // shared with [[PushFiltersIntoVersionedStream]] — the streaming twin
-  // extracts the same membership conjuncts from its per-batch Filter
-  private[plans] def probeOf(
+  private def probeOf(
       top: Map[ExprId, String], e: Expression): Option[(String, Seq[Long])] = {
     // a membership column may be a TOP-LEVEL attribute or a STRUCT-LEAF
     // access chain (array_contains(meta.tags, 'en')): GetStructField
     // chains over relation output render as the dotted leaf name the
     // commit-side blooms record (the Filter sits directly on the
-    // relation here, so its attributes ARE relation output — no alias
-    // map needed, unlike the streaming rule's post-NestedColumnAliasing
-    // position)
+    // relation, so its attributes ARE relation output — no alias map
+    // needed)
     def col(a: Expression): Option[String] = a match {
       case ar: AttributeReference => top.get(ar.exprId)
       case g: GetStructField =>

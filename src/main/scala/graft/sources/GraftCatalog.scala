@@ -1296,7 +1296,7 @@ private[sources] object GraftFilters {
   /** UTF-8 encode + bytewise sort a runtime string key set, ready for
     * [[anyInStrZone]] probes.
     */
-  def sortedUtf8(vs: Set[String]): Array[Array[Byte]] =
+  private def sortedUtf8(vs: Set[String]): Array[Array[Byte]] =
     vs.toArray.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .sortWith(VersionedTable.byteCompare(_, _) < 0)
 
@@ -1311,7 +1311,7 @@ private[sources] object GraftFilters {
     else sortedInKeep(sets.view.mapValues(_.toArray.sorted).toMap,
       strSets.view.mapValues(sortedUtf8).toMap)
 
-  def sortedInKeep(sorted: Map[String, Array[Long]],
+  private def sortedInKeep(sorted: Map[String, Array[Long]],
       sSorted: Map[String, Array[Array[Byte]]])(f: FileEntry): Boolean =
     sorted.forall { case (c, vs) =>
       f.zones.get(c).forall { case (mn, mx) => anyInRange(vs, mn, mx) }
@@ -1332,14 +1332,13 @@ private[sources] object GraftFilters {
   /** Timestamp literal → epoch micros, the unit the timestamp zone maps
     * record (`unix_micros` at commit time). Pushed timestamp filters
     * carry `java.sql.Timestamp` (default) or `java.time.Instant` (java8
-    * API); the streaming side channel hands Catalyst's raw micros Long.
+    * API).
     */
   private def tsLit(v: Any): Option[Long] = v match {
     case t: java.sql.Timestamp =>
       Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
     case i: java.time.Instant =>
       Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case l: java.lang.Long => Some(l.longValue) // Catalyst-internal micros
     case _ => None
   }
 
@@ -1469,7 +1468,6 @@ private[sources] object GraftFilters {
 
   private def strLit(v: Any): Option[Array[Byte]] = v match {
     case s: String => Some(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    case u: org.apache.spark.unsafe.types.UTF8String => Some(u.getBytes)
     case _ => None
   }
 
@@ -4326,7 +4324,7 @@ class GraftCatalogVectorReader(
   override def close(): Unit = reader.close()
 }
 
-/** Shared Group-API field decoding for the catalog and streaming readers:
+/** Group-API field decoding for [[GraftCatalogReader]]:
   * primitives plus the three temporal encodings Spark emits — INT64
   * timestamps (MICROS or MILLIS annotation, adjusted or NTZ: Spark's
   * internal value is epoch-micros either way), legacy INT96 timestamps

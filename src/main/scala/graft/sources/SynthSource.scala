@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
   SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit,
   SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.{
   DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan,
   LessThanOrEqual}
@@ -127,10 +126,9 @@ class SynthTable(rows: Long, slices: Int, seed: Long) extends Table with Support
   override def name(): String = s"graft_synth(rows=$rows, slices=$slices, seed=$seed)"
   override def schema(): StructType = Synth.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SynthScanBuilder(rows, slices, seed,
-      options.getLong("batchRows", 1000L))
+    new SynthScanBuilder(rows, slices, seed)
 }
 
 /** Pushdown surface beyond pruning: `id` IS the row index, so range
@@ -140,7 +138,7 @@ class SynthTable(rows: Long, slices: Int, seed: Long) extends Table with Support
   * above the scan (they are returned as fully-pushed, not residual).
   * A pushed LIMIT caps the interval the same way.
   */
-class SynthScanBuilder(rows: Long, slices: Int, seed: Long, batchRows: Long = 1000L)
+class SynthScanBuilder(rows: Long, slices: Int, seed: Long)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
     with SupportsPushDownAggregates {
@@ -235,7 +233,7 @@ class SynthScanBuilder(rows: Long, slices: Int, seed: Long, batchRows: Long = 10
 
   override def build(): Scan = aggTags match {
     case Some(tags) => new SynthAggScan(lo, math.max(lo, hi), tags)
-    case None => new SynthScan(lo, math.max(lo, hi), slices, seed, required, batchRows)
+    case None => new SynthScan(lo, math.max(lo, hi), slices, seed, required)
   }
 }
 
@@ -281,13 +279,10 @@ class SynthAggReaderFactory(lo: Long, hi: Long, tags: Array[String])
     }
 }
 
-class SynthScan(lo: Long, hi: Long, slices: Int, seed: Long, required: StructType,
-    batchRows: Long = 1000L)
+class SynthScan(lo: Long, hi: Long, slices: Int, seed: Long, required: StructType)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new SynthMicroBatchStream(lo, hi, slices, seed, required, batchRows)
   override def description(): String =
     s"graft-synth range=[$lo,$hi) slices=$slices seed=$seed " +
       s"cols=${required.fieldNames.mkString(",")}"
@@ -310,60 +305,6 @@ class SynthScan(lo: Long, hi: Long, slices: Int, seed: Long, required: StructTyp
 }
 
 case class SynthPartition(start: Long, end: Long) extends InputPartition
-
-/** Row-index offset for the micro-batch stream: the stream's position is
-  * simply "rows emitted so far", serialized as a decimal string.
-  */
-case class SynthOffset(index: Long) extends Offset {
-  override def json(): String = index.toString
-}
-
-/** Micro-batch streaming read over the same deterministic generator: each
-  * trigger advances the offset by at most `batchRows` rows of [lo, hi),
-  * and every offset range replans as ordinary slice partitions — so a
-  * restarted query re-reads EXACTLY the same rows for an uncommitted
-  * batch (the generator is pure, offsets are row indices; nothing is
-  * buffered anywhere). This is the deterministic, replayable analogue of
-  * the built-in rate source, and it lets the streaming operators be
-  * driven at arbitrary volume without a parquet fixture.
-  */
-class SynthMicroBatchStream(
-    lo: Long, hi: Long, slices: Int, seed: Long, required: StructType,
-    batchRows: Long) extends MicroBatchStream {
-
-  // each latestOffset() poll (one per trigger) exposes one more batch
-  private val readUpTo = new java.util.concurrent.atomic.AtomicLong(lo)
-
-  override def initialOffset(): Offset = SynthOffset(lo)
-  override def latestOffset(): Offset =
-    SynthOffset(readUpTo.updateAndGet(cur => math.min(hi, cur + batchRows)))
-  override def deserializeOffset(json: String): Offset = SynthOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SynthOffset].index
-    val e = end.asInstanceOf[SynthOffset].index
-    val total = e - s
-    if (total <= 0) Array.empty
-    else {
-      val base = total / slices
-      val rem = total % slices
-      var cur = s
-      (0 until slices).flatMap { p =>
-        val len = base + (if (p < rem) 1L else 0L)
-        val part = SynthPartition(cur, cur + len)
-        cur += len
-        if (len > 0) Some(part: InputPartition) else None
-      }.toArray
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SynthReaderFactory(seed, required.fieldNames)
-
-  override def toString: String = s"graft-synth-stream[$lo,$hi) batch=$batchRows"
-}
 
 class SynthReaderFactory(seed: Long, cols: Array[String])
     extends PartitionReaderFactory {

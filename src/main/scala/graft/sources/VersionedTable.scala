@@ -1089,7 +1089,7 @@ object VersionedTable {
     * order in which adjacent longs are adjacent representable doubles.
     * Double zone maps record these bits under a TILDE-prefixed stats key
     * (`~col=lo..hi`), so (a) every piece of long-zone machinery — file
-    * zones, commit rollups, persisted headers, streaming probes — works
+    * zones, commit rollups, persisted headers, runtime key probes — works
     * on doubles unchanged and EXACTLY (the ±1 open-bound adjustments
     * mean nextUp/nextDown, not integer truncation, which is why raw
     * `cast(long)` zones could never prune doubles soundly), and (b) old
@@ -2334,29 +2334,13 @@ object VersionedTable {
     * Because the txn id rides inside the atomically-published manifest,
     * a crashed-and-replayed writer can never double-apply — this is the
     * exactly-once contract a streaming foreachBatch sink keys on its
-    * batchId (see `CdcStreamsSpec`'s ingest test).
+    * batchId (see `VersionedTableSpec`'s foreachBatch ingest test).
     */
   def commitIfAbsent(
       df: DataFrame, table: String, append: Boolean, txnId: String): Option[Long] =
     commitCore(df, table, append, Some(txnId), expectedLatest = None) match {
       case Left(_)  => None // this txn already committed (possibly by a racer)
       case Right(v) => Some(v)
-    }
-
-  /** Quality-gated idempotent commit: run the caller's expectation
-    * check over the batch first; a failing batch is NOT committed and
-    * the failure reason is returned, so a streaming foreachBatch sink
-    * composes exactly-once ingest with a data-quality gate — bad
-    * batches are quarantined (the caller decides where), never
-    * poisoning the standing table. The check runs BEFORE any file is
-    * written, so a rejected batch leaves no orphan data either.
-    */
-  def commitIfAbsentGated(
-      df: DataFrame, table: String, append: Boolean, txnId: String)(
-      check: DataFrame => Either[String, Unit]): Either[String, Option[Long]] =
-    check(df) match {
-      case Left(reason) => Left(reason)
-      case Right(())    => Right(commitIfAbsent(df, table, append, txnId))
     }
 
   /** Largest doomed-key count a merge-on-read delete may commit. Every
@@ -2787,53 +2771,6 @@ object VersionedTable {
     * chain walk while leaving routine short chains alone.
     */
   val chainDebtThreshold = 64
-
-  /** Commit classification for the streaming source: the paths of the
-    * data files and of the TOMBSTONE files made fresh by version `v` (the
-    * change-feed stream plans the latter as delete-row partitions), and
-    * whether it is an overwrite (no carried entries on a non-first
-    * version).
-    */
-  private[sources] def commitClassFiles(
-      table: String, v: Long): (Seq[String], Seq[String], Boolean) = {
-    val entries = manifestEntries(table, v)
-    val fresh = entries.filter(dataCommitOf(_) == v)
-    // a replace commit (copy-on-write delete) removed carried rows — to a
-    // version-offset stream its rewritten files are NOT pure inserts, so
-    // it is non-additive exactly like an overwrite. Overwrite-ness is
-    // read from the commit's OWN header (append/delete/replace commits
-    // record `carry=<prev>`; overwrites write self-contained manifests):
-    // classifying by whether the RESOLVED carried list happens to be
-    // empty would brand a legitimate append onto an empty predecessor
-    // (v1 committed zero rows, v2 appends) as an overwrite.
-    val replaced = ownRemovals(table, v).nonEmpty
-    (fresh.filterNot(isDeleteEntry).map(entryPath),
-      fresh.filter(isDeleteEntry).map(entryPath),
-      replaced || (carryOf(table, v).isEmpty && v != versions(table).min))
-  }
-
-  /** Footer-row total of the data files made FRESH by version `v`, from
-    * manifest arithmetic alone — None when any entry predates recorded
-    * counts. Drives the stream's rows-based admission control.
-    */
-  private[sources] def freshRows(table: String, v: Long): Option[Long] = {
-    val fresh = manifestEntries(table, v)
-      .filter(e => !isDeleteEntry(e) && dataCommitOf(e) == v)
-    val cs = fresh.map(parseEntry(_, Nil).rows)
-    if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
-  }
-
-  /** Exact fresh BYTES of version `v`'s own data files, from the
-    * rows@bytes manifest entries — None when any entry predates the
-    * byte-recording format (admission then treats the commit as
-    * unknown-size, admitted alone).
-    */
-  private[sources] def freshBytes(table: String, v: Long): Option[Long] = {
-    val fresh = manifestEntries(table, v)
-      .filter(e => !isDeleteEntry(e) && dataCommitOf(e) == v)
-    val cs = fresh.map(parseEntry(_, Nil).bytes)
-    if (cs.exists(_.isEmpty)) None else Some(cs.flatten.sum)
-  }
 
   /** The `R:`-removed entry paths recorded by version `v` itself. */
   private def ownRemovals(table: String, v: Long): Seq[String] =
@@ -4479,8 +4416,8 @@ object VersionedTable {
   /** Reclaim ORPHANED commit directories: `data/` children referenced by
     * NO manifest and older than the grace period — the debris a writer
     * leaves when it crashes between staging its files and publishing its
-    * manifest (crashed `c<N>_<token>` attempts, dead `_stg_*` streaming
-    * epochs). Published data is never touched: the referenced set is
+    * manifest (crashed `c<N>_<token>` attempts, dead `_stg_*` staging
+    * directories). Published data is never touched: the referenced set is
     * taken across ALL retained manifests. The grace period is the
     * correctness knob — it must exceed the longest conceivable
     * stage-to-publish window, because a still-alive writer's directory
@@ -4498,9 +4435,9 @@ object VersionedTable {
     * maps all ride along unchanged), so no data file is read, written,
     * or moved and the cost is O(snapshot files) manifest lines at any
     * data scale. The restored commit resets the carry chain — it
-    * classifies as an overwrite in [[commitClassFiles]] terms, so streams
-    * refuse to silently cross it, exactly as they refuse any overwrite
-    * — and because the old files become referenced by the NEW head,
+    * classifies as an overwrite, so incremental consumers
+    * ([[appendsBetween]]) refuse to silently cross it, exactly as they
+    * refuse any overwrite — and because the old files become referenced by the NEW head,
     * [[vacuum]] retains them for as long as the restore itself is
     * retained. Publish is optimistic: on losing the version race the
     * restore retries against the new head (restore is point-in-time,

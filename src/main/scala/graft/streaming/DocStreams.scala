@@ -1,41 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming over the documents table shape (doc_id, text):
-  * ingest-time near-duplicate detection.
-  *
-  * The batch dedup suite ([[graft.ops.Dedup]]) assumes the corpus is at
-  * rest; an ingest pipeline wants to know "is this document a near-dup of
-  * anything already accepted" AS documents arrive. The MinHash signature
-  * stage is fully narrow (no aggregation — see `Dedup.bandedSignatures`),
-  * so the exact same tokenize→sign→band pipeline runs on an unbounded
-  * stream; only the bucket membership is state.
+/** A plan over the documents table shape (doc_id, text) that runs
+  * unchanged on a batch frame and on a micro-batch stream.
   */
 object DocStreams {
 
-  /** Per-(band, band_hash) bucket state: accepted member ids, or a closed
-    * tombstone once the bucket exceeded the cap (members released — the
-    * state store keeps only the flag). */
-  case class BucketState(members: List[Long], closed: Boolean)
-
-  case class CandidatePair(doc_a: Long, doc_b: Long)
-
-  /** Streaming benchmark decontamination screen — the ingest-time "is
-    * this training document contaminated by an eval set" gate, and the
-    * STREAM-STATIC join mode (the third join shape next to
-    * [[EventStreams.clickToRecentViews]]'s stream-stream and the narrow
-    * broadcast lookups): the static benchmark's distinct hashed n-grams
+  /** Benchmark decontamination screen — the ingest-time "is this
+    * training document contaminated by an eval set" gate, as a
+    * STREAM-STATIC join: the static benchmark's distinct hashed n-grams
     * are planned per micro-batch and BROADCAST, so the document stream
     * never shuffles to be screened. Emits one (doc_id, gram) row per
     * matched benchmark gram (append-safe: each doc's grams arrive once;
-    * flag/count rollups are a downstream batch aggregate, same split as
-    * [[lshCandidateStream]]'s candidates → dedup). Gram scheme is
+    * flag/count rollups are a downstream batch aggregate). Gram scheme is
     * identical to the batch [[graft.ops.TextAnalysis.ngramContamination]]
     * (alnum tokens, 60-bit hashed n-grams), so batch and stream agree
-    * gram-for-gram.
+    * gram-for-gram. `q_docs_screen` runs it as a batch plan.
     */
   def benchmarkScreenStream(
       documents: DataFrame,
@@ -54,75 +36,5 @@ object DocStreams {
           .as("gram"))
       .join(broadcast(benchGrams), Seq("gram"))
       .select(col("doc_id"), col("gram"))
-  }
-
-  /** Streaming MinHash-LSH near-dup candidates: each arriving document is
-    * signed and banded narrow, then each of its `NumBands` band hashes
-    * joins its bucket's state; a pair is emitted against every member
-    * already in the bucket. State per bucket is capped: once a bucket
-    * would exceed `maxBucket` members it CLOSES — its member list is
-    * released and nothing more is emitted for it — bounding both store
-    * size and the O(bucket²) pair blowup a degenerate boilerplate bucket
-    * would cause (the batch twin [[graft.ops.Dedup.lshCandidatePairs]]
-    * drops such buckets entirely at the end; a stream cannot drop
-    * retroactively, so the contract here is emit-until-cap).
-    *
-    * Emission is at-least-once per pair (a pair sharing several bands is
-    * emitted once per shared band): candidates are a monitoring/routing
-    * signal, and a downstream exactly-once consumer composes this with
-    * [[EventStreams.dedupStream]]'s keyed dedup — the standard split
-    * between candidate generation and dedup-on-key. Intra-batch arrival
-    * order is made deterministic by processing each micro-batch's new ids
-    * sorted ascending.
-    */
-  def lshCandidateStream(
-      documents: DataFrame,
-      maxBucket: Int = 1000): Dataset[CandidatePair] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    bucketedPairStream(
-      graft.ops.Dedup.bandedSignatures(documents)
-        .select(col("doc_id").as("_1"), col("band_idx").as("_2"),
-          col("band_hash").as("_3"))
-        .as[(Long, Int, String)],
-      maxBucket)
-  }
-
-  /** The shared capped-bucket pair state machine: rows are (member id,
-    * bucket table/band index, bucket hash); each new member pairs with
-    * every member already in its bucket, and a bucket crossing
-    * `maxBucket` CLOSES — members released, tombstone retained (state ∝
-    * buckets, pinned by `DocStreamsSpec`). [[lshCandidateStream]]
-    * (MinHash bands over documents) and
-    * [[EmbStreams.srpCandidateStream]] (SRP sign buckets over
-    * embeddings) are both this machine over different signatures.
-    */
-  private[streaming] def bucketedPairStream(
-      keyed: Dataset[(Long, Int, String)],
-      maxBucket: Int): Dataset[CandidatePair] = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    keyed
-      .groupByKey { case (_, band, hash) => (band, hash) }
-      .flatMapGroupsWithState[BucketState, CandidatePair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), rows: Iterator[(Long, Int, String)],
-         state: GroupState[BucketState]) =>
-          var s = state.getOption.getOrElse(BucketState(Nil, closed = false))
-          val out = List.newBuilder[CandidatePair]
-          rows.map(_._1).toSeq.distinct.sorted.foreach { d =>
-            if (!s.closed && !s.members.contains(d)) {
-              if (s.members.size + 1 > maxBucket)
-                s = BucketState(Nil, closed = true) // release members, keep tombstone
-              else {
-                s.members.foreach(m =>
-                  out += CandidatePair(math.min(m, d), math.max(m, d)))
-                s = s.copy(members = d :: s.members)
-              }
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
   }
 }

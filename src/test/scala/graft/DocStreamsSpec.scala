@@ -1,52 +1,17 @@
 package graft
 
-import graft.ops.Dedup
 import graft.streaming.DocStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming LSH near-dup: the incremental candidate stream must agree
-  * with the batch generator on the same corpus (below cap), and must stop
-  * emitting for a bucket once the cap closes it.
+/** The benchmark decontamination screen (`q_docs_screen`'s plan): run as
+  * a stream-static join over micro-batches it must emit exactly the
+  * matches of the same plan run as a batch.
   */
 class DocStreamsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
-
-  // two long near-identical texts (every shingle equal ⇒ all bands
-  // collide), one unrelated text, one more twin arriving in a later batch
-  private val base =
-    "the quick brown fox jumps over the lazy dog again and again until dawn"
-  private val docs = Seq(
-    (1L, base),
-    (2L, base),
-    (3L, "completely different content about spark physical plans and shuffles"),
-    (4L, base))
-
-  test("streaming LSH candidates equal the batch pairs across micro-batches") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val query = DocStreams.lshCandidateStream(
-        input.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("lsh_stream_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(docs.take(3))
-      query.processAllAvailable()
-      input.addData(docs.drop(3)) // the late twin must pair with BOTH priors
-      query.processAllAvailable()
-      val streamed = spark.sql("SELECT doc_a, doc_b FROM lsh_stream_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).distinct.sorted
-      val batch = Dedup.lshCandidatePairs(docs.toDF("doc_id", "text"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(batch.nonEmpty, "batch generator found no pairs — corpus is wrong")
-      assert(streamed.toSeq == batch,
-        s"streaming $streamed != batch $batch")
-    } finally query.stop()
-  }
 
   test("benchmark screen: stream-static matches equal the batch screen") {
     val sparkS = spark
@@ -78,64 +43,6 @@ class DocStreamsSpec extends AnyFunSuite {
         s"batch screen shape wrong: ${batch.toSeq}")
       assert(streamed.toSeq == batch.toSeq,
         s"streaming ${streamed.toSeq} != batch ${batch.toSeq}")
-    } finally query.stop()
-  }
-
-  test("state-store rows stay bounded on a long over-cap stream") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val query = DocStreams.lshCandidateStream(
-        input.toDF().toDF("doc_id", "text"), maxBucket = 5)
-      .writeStream.format("memory").queryName("lsh_bound_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // 6 micro-batches × 10 identical docs: every doc lands in the SAME
-      // band buckets, which close (cap 5) during batch 1 — members are
-      // released and only the tombstone flag is retained, so the store
-      // must hold exactly one row per bucket from the first batch on and
-      // NEVER grow with the 50 further docs. This is the 100 TB ingest
-      // claim: state ∝ buckets, not corpus.
-      val rowsPerBatch = (0 until 6).map { b =>
-        input.addData((1 to 10).map(i => ((b * 10 + i).toLong, base)))
-        query.processAllAvailable()
-        query.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      }
-      assert(rowsPerBatch.head > 0, s"no state rows at all: $rowsPerBatch")
-      assert(rowsPerBatch.distinct.size == 1,
-        s"state rows must not grow across batches: $rowsPerBatch")
-      // emission stopped at the cap: only batch-1's pre-close pairs exist
-      val nPairs = spark.sql("SELECT count(*) FROM lsh_bound_test")
-        .collect()(0).getLong(0)
-      val afterMore = {
-        input.addData(Seq((999L, base))); query.processAllAvailable()
-        spark.sql("SELECT count(*) FROM lsh_bound_test").collect()(0).getLong(0)
-      }
-      assert(afterMore == nPairs, "closed buckets must emit nothing further")
-    } finally query.stop()
-  }
-
-  test("over-cap bucket closes: emission stops, earlier pairs stand") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val query = DocStreams.lshCandidateStream(
-        input.toDF().toDF("doc_id", "text"), maxBucket = 2)
-      .writeStream.format("memory").queryName("lsh_cap_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // four identical docs into a cap-2 bucket: (1,2) emits at size 2,
-      // doc 3 trips the cap and closes the bucket, doc 4 arrives closed
-      input.addData(Seq((1L, base), (2L, base), (3L, base)))
-      query.processAllAvailable()
-      input.addData(Seq((4L, base)))
-      query.processAllAvailable()
-      val streamed = spark.sql("SELECT doc_a, doc_b FROM lsh_cap_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).distinct.sorted
-      assert(streamed.toSeq == Seq((1L, 2L)),
-        s"expected only the pre-cap pair, got $streamed")
     } finally query.stop()
   }
 }

@@ -3,19 +3,20 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Inventory of the `spark.graft.*` session-conf gates, of the
-  * entry-point mains, of the fixture-memo idiom and of the manifest
-  * entry readers in the main sources. Every gate keeps a second
-  * execution path alive, so adding one means editing the expected set
-  * below, next to the gate's retirement plan in ROADMAP.md; a new `main`,
-  * a hand-rolled pay-once fixture beside `QueryCache.fixture`, or a
-  * second entry parser or planner selection beside `parseEntry` and
-  * `select` is likewise a visible edit here.
+  * entry-point mains, of the fixture-memo idiom, of the manifest entry
+  * readers and of the reachable units in the main sources. Every gate
+  * keeps a second execution path alive, so adding one means editing the
+  * expected set below, next to the gate's retirement plan in ROADMAP.md;
+  * a new `main`, a hand-rolled pay-once fixture beside
+  * `QueryCache.fixture`, a second entry parser or planner selection
+  * beside `parseEntry` and `select`, or a unit that only its own spec
+  * calls is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
 
-  /** (path relative to src/main/scala, content) of every main source. */
-  private def mainSources: Seq[(String, String)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  /** (path relative to `dir`, content) of every Scala source under `dir`. */
+  private def scalaSources(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
     assert(java.nio.file.Files.isDirectory(root),
       s"run from the repository root: ${root.toAbsolutePath} is not a directory")
     val walk = java.nio.file.Files.walk(root)
@@ -28,6 +29,54 @@ class GateInventorySpec extends AnyFunSuite {
     } finally walk.close()
   }
 
+  /** (path relative to src/main/scala, content) of every main source. */
+  private def mainSources: Seq[(String, String)] = scalaSources("src/main/scala")
+
+  private val pkg = """(?m)^package\s+([\w.]+)""".r
+
+  private def packagePrefix(src: String): String =
+    pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
+
+  private val mains = Set("graft.Bench", "graft.Verify", "graft.PlanAudit",
+    "graft.etl.TradePipeline", "graft.tools.CcScale", "graft.tools.MakeScaleDocs")
+
+  private val charLiteral = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'""".r.pattern
+
+  /** `src` without its comments: line comments and (nested) block
+    * comments go; string and character literals are kept whole, so a
+    * `//` inside a string is not read as a comment.
+    */
+  private def stripComments(src: String): String = {
+    val out = new java.lang.StringBuilder
+    val n = src.length
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    def keep(stop: Int): Unit = { out.append(src, i, stop); i = stop }
+    while (i < n) {
+      lazy val char = charLiteral.matcher(src).region(i, n)
+      if (at("//")) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0
+        while ({
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+          depth > 0 && i < n
+        }) ()
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        keep(if (end < 0) n else end + 3)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, n))
+      } else if (src(i) == '\'' && char.lookingAt()) keep(char.end())
+      else keep(i + 1)
+    }
+    out.toString
+  }
+
   test("the main sources read exactly the three retained spark.graft gates") {
     val key = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
     val found = mainSources
@@ -38,10 +87,9 @@ class GateInventorySpec extends AnyFunSuite {
   }
 
   test("the main sources declare exactly the six entry-point mains") {
-    val pkg = """(?m)^package\s+([\w.]+)""".r
     val obj = """(?m)^(?:private\[\w+\]\s+)?object\s+(\w+)""".r
     val found = mainSources.flatMap { case (path, src) =>
-      val prefix = pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
+      val prefix = packagePrefix(src)
       val objects = obj.findAllMatchIn(src).map(m => m.start -> m.group(1)).toList
       "def main\\(".r.findAllMatchIn(src).map { m =>
         val owner = objects.takeWhile(_._1 < m.start).lastOption
@@ -49,9 +97,7 @@ class GateInventorySpec extends AnyFunSuite {
         prefix + owner.get._2
       }
     }.toSet
-    assert(found == Set("graft.Bench", "graft.Verify", "graft.PlanAudit",
-      "graft.etl.TradePipeline", "graft.tools.CcScale", "graft.tools.MakeScaleDocs"),
-      s"mains in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
+    assert(found == mains, s"mains in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
   }
 
   /** path → occurrences of `token` in that main source, where any. */
@@ -83,5 +129,35 @@ class GateInventorySpec extends AnyFunSuite {
       .toSet
     assert(found == Set("selectiveRawEntries"),
       s"selective readers in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
+  }
+
+  /** Top-level units that nothing outside their own declaration names,
+    * kept anyway: fully qualified name → the reason. The mains need no
+    * entry.
+    */
+  private val unnamedButKept: Map[String, String] = Map.empty
+
+  test("every top-level unit in src/main is named outside its own declaration") {
+    val decl = ("""(?m)^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|""" +
+      """abstract\s+|case\s+|implicit\s+)*(?:object|class|trait)\s+(\w+)""").r
+    val main = mainSources.map { case (path, src) => path -> stripComments(src) }
+    val outside = scalaSources("perfbench/src").map(s => stripComments(s._2)) :+
+      java.nio.file.Files.readString(java.nio.file.Paths.get(
+        "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister"))
+    val unnamed = main.flatMap { case (path, src) =>
+      val decls = decl.findAllMatchIn(src).toList
+      decls.zip(decls.drop(1).map(_.start) :+ src.length).filterNot { case (m, end) =>
+        val word = s"\\b${m.group(1)}\\b".r
+        def names(text: String) = word.findFirstIn(text).isDefined
+        names(src.substring(0, m.start)) || names(src.substring(end)) ||
+          main.exists { case (p, other) => p != path && names(other) } ||
+          outside.exists(names)
+      }.map { case (m, _) => packagePrefix(src) + m.group(1) }
+    }.toSet
+    assert(unnamed -- mains -- unnamedButKept.keySet == Set.empty,
+      "units only their specs can reach: delete them, or keep them in unnamedButKept " +
+        "with the reason")
+    assert(unnamedButKept.keySet.subsetOf(unnamed),
+      s"unnamedButKept lists units that are named: ${unnamedButKept.keySet -- unnamed}")
   }
 }

@@ -279,7 +279,7 @@ object Reference {
     while (it.hasNext) {
       require(
         buf.length < maxRows,
-        s"writeSingleJsonArray: more than maxRows=$maxRows rows; use writeJsonLines for large outputs")
+        s"writeSingleJsonArray: more than maxRows=$maxRows rows; use DataFrame.write.json for large outputs")
       buf += it.next()
     }
     val rows: Seq[String] = buf.toSeq
