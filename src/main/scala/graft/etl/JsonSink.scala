@@ -26,10 +26,10 @@ import scala.collection.mutable
   * record reach the driver. The one file is still the contract, so the
   * sink stays guarded by `maxRows`.
   *
-  * At scale, `DataFrame.write.json` is the path: fully distributed
-  * JSON-lines part files with the same null-dropping record shape and no
-  * single output file. The array sink exists for golden format parity on
-  * small reconciliation outputs.
+  * At scale, [[writeJsonLines]] (`DataFrame.write.json`) is the path:
+  * fully distributed JSON-lines part files with the same null-dropping
+  * record shape and no single output file. The array sink exists for
+  * golden format parity on small reconciliation outputs.
   */
 object JsonSink {
 
@@ -198,6 +198,14 @@ object JsonSink {
     }
     to_json(struct(fields: _*), Map("pretty" -> "true", "ignoreNullFields" -> "true"))
   }
+
+  /** Distributed JSON-lines sink: one record per line across part files.
+    * Spark's JSON writer drops null fields, matching the array sink's
+    * record shape. `ignoreNullFields` is the default but set explicitly —
+    * it is the correctness contract, not a preference.
+    */
+  def writeJsonLines(df: DataFrame, dir: String): Unit =
+    df.write.mode("overwrite").option("ignoreNullFields", "true").json(dir)
 
   /** Read back a single-file JSON array written by [[writeSingleJsonArray]]
     * (or the reference's golden files) for comparison in tests.

@@ -480,6 +480,38 @@ object Multimodal {
     }
   }
 
+  /** A resized media asset (stub: a real implementation decodes, scales,
+    * re-encodes; the stub derives a deterministic payload slice so the
+    * schema/partitioning contract is real and testable).
+    */
+  final case class ResizedAsset(
+      asset_id: Long,
+      media_type: String,
+      target_w: Int,
+      target_h: Int,
+      payload: Array[Byte],
+  )
+
+  /** Resize stage: same per-partition batch-map shape as [[decodeFeatures]].
+    * STUB codec — payload is truncated/cycled to a size proportional to the
+    * target area, deterministic in (content, target).
+    */
+  def resize(assets: Dataset[MediaAsset], targetW: Int, targetH: Int): Dataset[ResizedAsset] = {
+    val spark = assets.sparkSession
+    import spark.implicits._
+    assets.mapPartitions { it =>
+      it.map { a =>
+        val out =
+          if (a.payload.isEmpty) Array.empty[Byte] // nothing to scale
+          else {
+            val outLen = math.max(1, math.min(a.payload.length, (targetW * targetH) / 64))
+            Array.tabulate[Byte](outLen)(i => a.payload(i % a.payload.length))
+          }
+        ResizedAsset(a.asset_id, a.media_type, targetW, targetH, out)
+      }
+    }
+  }
+
   /** One sampled frame of a video asset. */
   final case class Frame(asset_id: Long, frame_idx: Int, frame_hash: String)
 

@@ -2334,13 +2334,29 @@ object VersionedTable {
     * Because the txn id rides inside the atomically-published manifest,
     * a crashed-and-replayed writer can never double-apply — this is the
     * exactly-once contract a streaming foreachBatch sink keys on its
-    * batchId (see `VersionedTableSpec`'s foreachBatch ingest test).
+    * batchId (see `CdcStreamsSpec`'s ingest tests).
     */
   def commitIfAbsent(
       df: DataFrame, table: String, append: Boolean, txnId: String): Option[Long] =
     commitCore(df, table, append, Some(txnId), expectedLatest = None) match {
       case Left(_)  => None // this txn already committed (possibly by a racer)
       case Right(v) => Some(v)
+    }
+
+  /** Quality-gated idempotent commit: run the caller's expectation
+    * check over the batch first; a failing batch is NOT committed and
+    * the failure reason is returned, so a streaming foreachBatch sink
+    * composes exactly-once ingest with a data-quality gate — bad
+    * batches are quarantined (the caller decides where), never
+    * poisoning the standing table. The check runs BEFORE any file is
+    * written, so a rejected batch leaves no orphan data either.
+    */
+  def commitIfAbsentGated(
+      df: DataFrame, table: String, append: Boolean, txnId: String)(
+      check: DataFrame => Either[String, Unit]): Either[String, Option[Long]] =
+    check(df) match {
+      case Left(reason) => Left(reason)
+      case Right(())    => Right(commitIfAbsent(df, table, append, txnId))
     }
 
   /** Largest doomed-key count a merge-on-read delete may commit. Every

@@ -1,70 +1,16 @@
 package graft
 
-import graft.ops.Incremental
-import graft.streaming.CdcStreams
-import graft.streaming.CdcStreams.{Change, Upsert}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The streaming CDC standing view must converge to the batch
-  * `Incremental.cdcApply` result on the same change log, however the log
-  * is split into micro-batches — including a late low-seq change that
-  * must NOT regress the standing row (cross-batch LWW guard).
+/** CDC ingest into a versioned table from a streaming foreachBatch sink:
+  * keyed on the batch id, `VersionedTable.commitIfAbsent` makes a
+  * replayed batch a metadata no-op, and `commitIfAbsentGated` puts a
+  * data-quality gate in front of the same exactly-once commit.
   */
 class CdcStreamsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
-
-  private def runStream(batches: Seq[Seq[Change]], name: String): Map[Long, Upsert] = {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Change]
-    val query = CdcStreams.cdcUpsertStream(input.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Update()).start()
-    try {
-      batches.foreach { b => input.addData(b); query.processAllAvailable() }
-      spark.table(name).as[Upsert].collect()
-        .groupBy(_.k).map { case (k, ups) => k -> ups.maxBy(_.seq) }
-    } finally query.stop()
-  }
-
-  private val log = Seq(
-    Change(1L, "U", 1L, Some("A"), Some(100L)),
-    Change(2L, "U", 1L, Some("B"), Some(200L)),
-    Change(1L, "U", 3L, Some("A2"), Some(150L)),
-    Change(2L, "D", 2L, None, None),
-    Change(3L, "U", 5L, Some("C"), Some(300L)),
-    Change(3L, "U", 4L, Some("STALE"), Some(999L)), // late, lower seq → ignored
-    Change(4L, "D", 1L, None, None)) // delete-before-insert: tombstone only
-
-  private def batchView: Map[Long, (String, Long)] = {
-    val sparkS = spark
-    import sparkS.implicits._
-    val changes = log
-      .map(c => (c.k, c.op, c.seq, c.status.orNull, c.price_c.map(Long.box).orNull))
-      .toDF("k", "op", "seq", "status", "price_c")
-    val base = Seq.empty[(Long, String, java.lang.Long)].toDF("k", "status", "price_c")
-    Incremental.cdcApply(base, changes, "k").collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-  }
-
-  test("standing view equals batch cdcApply — one batch per change (worst-case splits)") {
-    val fin = runStream(log.map(Seq(_)), "cdc_stream_single")
-    val live = fin.filter(!_._2.deleted)
-      .map { case (k, u) => k -> ((u.status.get, u.price_c.get)) }
-    assert(live == batchView)
-    assert(fin(2L).deleted && fin(4L).deleted, "deleted keys must emit tombstones")
-  }
-
-  test("standing view equals batch cdcApply — everything in one micro-batch") {
-    val fin = runStream(Seq(log), "cdc_stream_all")
-    val live = fin.filter(!_._2.deleted)
-      .map { case (k, u) => k -> ((u.status.get, u.price_c.get)) }
-    assert(live == batchView)
-  }
 
   test("foreachBatch ingest into a versioned table is exactly-once across batch replays") {
     val sparkS = spark
@@ -121,15 +67,5 @@ class CdcStreamsSpec extends AnyFunSuite {
     // a replay of the CLEAN batch stays idempotent through the gate
     assert(graft.sources.VersionedTable
       .commitIfAbsentGated(clean, table, append = true, "b0")(gate) == Right(None))
-  }
-
-  test("a late lower-seq change emits nothing and leaves the standing row intact") {
-    val fin = runStream(
-      Seq(log.filter(_.seq != 4L), Seq(Change(3L, "U", 4L, Some("STALE"), Some(999L)))),
-      "cdc_stream_late")
-    assert(fin(3L).status.contains("C") && fin(3L).price_c.contains(300L))
-    val emitted = spark.table("cdc_stream_late").collect()
-      .count(r => r.getLong(0) == 3L)
-    assert(emitted == 1, "the stale change must not re-emit key 3")
   }
 }

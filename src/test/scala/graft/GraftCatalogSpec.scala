@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.VersionedTable
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -286,7 +287,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(p.contains("LocalTableScan") || p.contains("graft-history"), p)
   }
 
-  test("timestamp columns round-trip: Spark-written and SQL-inserted") {
+  test("timestamp columns round-trip: Spark-written, SQL-inserted, and streamed") {
     val t = s"$root/default/tev"
     // v1: committed by Spark's own parquet writer (whatever encoding the
     // session default produces — the decoder must take it as-is)
@@ -306,6 +307,29 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(viaCatalog == viaRead,
       "catalog Group decoder must agree with the vectorized read path")
     assert(viaCatalog.exists(_._1 == -1L))
+    // v3: appended by a Structured Streaming foreachBatch sink keyed on
+    // the batch id; the catalog decoder must take its encoding too
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, java.time.LocalDateTime, Long, String)]
+    val q = input.toDF().toDF("event_id", "ts", "user_id", "event_type").writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        VersionedTable.commitIfAbsent(df, t, append = true, txnId = s"tev-$batchId")
+        ()
+      }
+      .option("checkpointLocation", s"$root/tev_cp").start()
+    try {
+      input.addData(Seq((-2L, java.time.LocalDateTime.of(2024, 3, 2, 8, 15, 30), 9L, "streamed")))
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamedViaCatalog = spark.sql("SELECT event_id, ts FROM gtest.default.tev")
+      .collect().map(r => (r.getLong(0), r.get(1).toString)).toSet
+    val streamedViaRead = VersionedTable.read(spark, t)
+      .selectExpr("event_id", "ts").collect()
+      .map(r => (r.getLong(0), r.get(1).toString)).toSet
+    assert(streamedViaCatalog == streamedViaRead)
+    assert(streamedViaCatalog == viaRead + (-2L -> "2024-03-02T08:15:30"))
   }
 
   test("SQL INSERT is gated by CHECK constraints, atomically") {

@@ -53,6 +53,23 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rows(0) == f && rows(1) == Multimodal.MediaDecoder.decodeStub(junk))
   }
 
+  test("resize respects target dims and stays deterministic in content") {
+    val r = Multimodal.resize(assets, 64, 64).collect()
+    assert(r.nonEmpty)
+    r.foreach { a =>
+      assert(a.target_w == 64 && a.target_h == 64)
+      assert(a.payload.length <= 64 * 64 / 64)
+    }
+  }
+
+  test("resize handles an empty payload without failing the stage") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val empty = Seq(Multimodal.MediaAsset(1L, "image", Array.empty[Byte], "t")).toDS()
+    val r = Multimodal.resize(empty, 64, 64).collect()
+    assert(r.length == 1 && r(0).payload.isEmpty)
+  }
+
   test("WavCodec decodes an in-test generated 16-bit sine WAV exactly") {
     // hand-build a 16-bit mono WAV: a square "sine" alternating ±1000 at
     // 44100 Hz — peak and energy are known in closed form

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.VersionedTable
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -358,36 +357,6 @@ class VersionedTableSpec extends AnyFunSuite {
       assert(slurp(t) == Set(1L -> "once"))
       assert(VersionedTable.txnVersion(t, "replayed-batch-7").isDefined)
     } finally pool.shutdown()
-  }
-
-  test("foreachBatch ingest into a versioned table is exactly-once across batch replays") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = SparkTestBase.tempDir("graft_vt_ingest")
-    val table = s"$d/t"
-    val input = MemoryStream[(Long, String)]
-    val query = input.toDF().toDF("k", "v").writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // the sink's whole exactly-once contract: key the commit on the
-        // batch id; a replayed batch becomes a metadata no-op
-        graft.sources.VersionedTable.commitIfAbsent(
-          df, table, append = true, txnId = s"batch-$batchId")
-        ()
-      }
-      .start()
-    try {
-      input.addData(Seq(1L -> "a", 2L -> "b")); query.processAllAvailable()
-      input.addData(Seq(3L -> "c")); query.processAllAvailable()
-      // simulate the crash-replay: re-offer batch 0's data under its id
-      val replayed = graft.sources.VersionedTable.commitIfAbsent(
-        Seq(1L -> "a", 2L -> "b").toDF("k", "v"), table, append = true, txnId = "batch-0")
-      assert(replayed.isEmpty, "replayed batch must not commit twice")
-      val rows = graft.sources.VersionedTable.read(spark, table)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(rows == Set(1L -> "a", 2L -> "b", 3L -> "c"))
-      assert(graft.sources.VersionedTable.versions(table).size == 2)
-    } finally query.stop()
   }
 
   test("deleteWhere whose basis is overtaken by a concurrent commit fails loudly") {
