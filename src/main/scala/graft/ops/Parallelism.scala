@@ -21,8 +21,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * under AQE (adaptive plans submit their shuffle stages on RDD
   * construction), so a frame with joins/aggregates below it is returned
   * untouched: a shaped input is the caller's contract, and probing it
-  * would run real jobs at plan time. Streaming frames pass through
-  * unchanged (no RDD to probe; micro-batch sizing is the rate limiter).
+  * would run real jobs at plan time.
   */
 private[graft] object Parallelism {
 
@@ -42,11 +41,10 @@ private[graft] object Parallelism {
     * a narrow scan yielding fewer than half that many partitions. The
     * round-robin exchange it inserts ships only the scan's raw rows once
     * — strictly cheaper than serializing the downstream tokenize stage on
-    * one core. No-op for streaming frames, shaped (non-scan) frames, and
-    * scans already at (or near) cluster parallelism.
+    * one core. No-op for shaped (non-scan) frames and scans already at
+    * (or near) cluster parallelism.
     */
   def floor(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
     // A/B hook for probes and emergency off-switch — read per call from
     // the session conf (not a JVM global), so concurrent sessions and
     // in-flight plans can't disagree about which path they compiled.

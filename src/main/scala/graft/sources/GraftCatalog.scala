@@ -762,20 +762,8 @@ class GraftRowLevelOperation(
         new Scan with Batch {
           override def readSchema(): StructType = reportAs
           override def toBatch: Batch = this
-          private def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
-          // same per-scan vectorization rule as GraftTableScan: all-or-
-          // nothing, MOR-vectorizable tombstones, no schema gap
           private lazy val columnarOk: Boolean =
-            required.nonEmpty &&
-              kept.forall(e =>
-                GraftVectorization.morOk(required, e.tombstones.map(abs))) && {
-                kept.groupBy(_.commit).valuesIterator.forall { files =>
-                  GraftVectorization.schemaCompatible(required,
-                    VersionedTable.commitSchemaHinted(
-                      SparkSession.active, table, Some(basis),
-                      files.map(_.path).min))
-                }
-              }
+            GraftVectorization.scanColumnar(table, Some(basis), required, kept)
           // header-resolved total (exact on count-line manifests) — the
           // description must not re-introduce the O(files) layout memo
           private lazy val totalFiles: String =
@@ -785,9 +773,10 @@ class GraftRowLevelOperation(
             s"graft-rowlevel-scan $table@v$basis files=${kept.size}/$totalFiles " +
               s"vectorized=$columnarOk"
           override def planInputPartitions(): Array[InputPartition] =
-            kept.map { f =>
-              GraftCatalogPartition(abs(f.path), f.tombstones.map(abs), columnarOk): InputPartition
-            }.toArray
+            kept.map(f =>
+              GraftCatalogPartition.of(table, Seq(f), columnarOk): InputPartition).toArray
+          // the candidates are replaced whole, so the rewrite reads every
+          // row of each: no row-group filter, no runtime pruning
           override def createReaderFactory(): PartitionReaderFactory =
             new GraftCatalogReaderFactory(required)
         }
@@ -799,110 +788,15 @@ class GraftRowLevelOperation(
       // rewritten rows arrive under logical names; files stay physical
       private val physSchema =
         VersionedTable.physicalizeSchema(table, info.schema())
-      override def build(): Write = bucket match {
-        case None => new Write {
-          override def toBatch: BatchWrite =
-            new GraftReplaceBatchWrite(table, physSchema, GraftRowLevelOperation.this)
+      override def build(): Write = {
+        def batch = new GraftBatchWrite(table, physSchema, overwrite = false,
+          bucket, replacing = Some(GraftRowLevelOperation.this))
+        bucket match {
+          case None => new Write { override def toBatch: BatchWrite = batch }
+          case Some((c, n)) => GraftWriteBuilder.bucketClustered(c, n, batch)
         }
-        case Some((c, n)) =>
-          // same clustered-distribution declaration as the plain bucketed
-          // write: rewritten rows reach the writers grouped by bucket, so
-          // each task opens (normally) one file — correctness never
-          // depends on it, the writer routes per-row regardless
-          new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-            import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-            override def requiredDistribution(): Distribution =
-              Distributions.clustered(Array(Expressions.bucket(n, c)))
-            override def requiredNumPartitions(): Int = n
-            override def requiredOrdering(): Array[SortOrder] = Array.empty
-            override def toBatch: BatchWrite =
-              new GraftReplaceBatchWrite(
-                table, physSchema, GraftRowLevelOperation.this, bucket)
-          }
       }
     }
-}
-
-/** The replacing write of a row-level operation: executors stage the new
-  * content of the scanned files (plus any MERGE-inserted rows); commit
-  * publishes ONE replace commit — `R:` lines for the scanned entries,
-  * fresh entries for the staged files — with the scanned basis as the
-  * expected head (a concurrent commit in between fails loudly rather
-  * than basing the rewrite on a stale snapshot).
-  */
-class GraftReplaceBatchWrite(
-    table: String, schema: StructType, op: GraftRowLevelOperation,
-    bucket: Option[(String, Int)] = None)
-    extends BatchWrite {
-  private val token = java.util.UUID.randomUUID().toString.take(8)
-  private val stagingAbs =
-    java.nio.file.Paths.get(table, "data", s"_stg_$token").toString
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingAbs))
-    val bucketIdx = bucket.map { case (c, n) =>
-      val i = schema.fieldIndex(c)
-      require(schema.fields(i).dataType == LongType ||
-        schema.fields(i).dataType == IntegerType,
-        s"bucket column $c must be BIGINT/INT")
-      (i, n)
-    }
-    new GraftDataWriterFactory(stagingAbs, schema, rowLevel = true,
-      bucketIdx = bucketIdx,
-      bloomCols = VersionedTable.bloomCols(table, schema))
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    require(op.basis >= 0L, "row-level write committed before its scan planned")
-    val next = op.basis + 1L
-    val dirName = s"c${next}_$token"
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(stagingAbs),
-      java.nio.file.Paths.get(table, "data", dirName))
-    GraftStagedCommit.reconcile(
-      java.nio.file.Paths.get(table, "data", dirName), stagingAbs, messages)
-    val entries0 = VersionedTable.dirMetadata(
-      spark, table, dirName, VersionedTable.defaultStatsCols(table, schema),
-      VersionedTable.constraints(table))
-    // a rewrite that empties the table entirely (bucket-routing writers
-    // open files lazily, so a 0-row rewrite stages nothing) must still
-    // leave a schema source — land the carrier CREATE TABLE uses
-    val entries = if (entries0.nonEmpty ||
-        VersionedTable.select(table, Some(op.basis), Prune.none)
-          .exists(f => !op.planned.contains(f.path))) entries0
-      else {
-        val fileName = VersionedTable.bucketSpec(table)
-          .fold("part-schema-0.parquet")(_ => "__graft_bucket=0/part-schema-0.parquet")
-        val p = java.nio.file.Paths.get(table, "data", dirName).resolve(fileName)
-        java.nio.file.Files.createDirectories(p.getParent)
-        new GraftDataWriter(p.toString, schema).commit()
-        Seq(s"$fileName#0")
-      }
-    val removals = op.planned.map(p => s"R:$p")
-    val fresh = entries.map(n => s"data/$dirName/$n")
-    if (!VersionedTable.tryPublishStaged(
-        table, next, removals ++ fresh, carry = Some(op.basis))) {
-      abort(messages)
-      VersionedTable.usingPaths(
-        java.nio.file.Files.walk(java.nio.file.Paths.get(table, "data", dirName)))(
-        _.toSeq.sortBy(_.toString)(Ordering[String].reverse)
-          .foreach(p => { java.nio.file.Files.deleteIfExists(p); () }))
-      throw new java.util.ConcurrentModificationException(
-        s"row-level ${op.command} on $table scanned version ${op.basis} but " +
-          s"version $next was committed concurrently — re-run the statement")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val p = java.nio.file.Paths.get(stagingAbs)
-    if (java.nio.file.Files.exists(p)) {
-      VersionedTable.usingPaths(java.nio.file.Files.walk(p))(
-        _.toSeq.sortBy(_.toString)(Ordering[String].reverse)
-          .foreach(q => { java.nio.file.Files.deleteIfExists(q); () }))
-    }
-  }
 }
 
 /** The `bucket(n, col)` V2 function backing storage-partitioned joins:
@@ -1708,66 +1602,84 @@ class GraftWriteBuilder(
     extends WriteBuilder with SupportsTruncate {
   private var overwrite = false
   override def truncate(): WriteBuilder = { overwrite = true; this }
-  override def build(): Write = bucket match {
-    case None => VersionedTable.clusterSpecCols(table) match {
-      case cols if cols.nonEmpty && cols.forall(schema.fieldNames.contains) =>
-        // clustered-on-write: an ORDERED distribution (Spark range-
-        // partitions the incoming rows) plus an in-partition sort, so
-        // every staged file covers one tight, disjoint key range and the
-        // commit's zone maps prune from birth — no OPTIMIZE needed for
-        // the common selective read. Multi-column specs (identity
-        // partitioning by several columns) order LEXICOGRAPHICALLY —
-        // the year/month/day idiom, where predicates filter on a
-        // prefix. Correctness never depends on it: the distribution
-        // shapes file layout only.
-        new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, SortDirection, NullOrdering}
-          private def order: Array[SortOrder] = cols.map(c =>
-            Expressions.sort(Expressions.column(c),
-              SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
-          override def requiredDistribution(): Distribution =
-            Distributions.ordered(order)
-          override def requiredNumPartitions(): Int = 0 // planner's choice
-          override def requiredOrdering(): Array[SortOrder] = order
-          override def toBatch: BatchWrite =
-            new GraftBatchWrite(table, schema, overwrite)
-        }
-      case _ => new Write {
-        override def toBatch: BatchWrite = new GraftBatchWrite(table, schema, overwrite)
+  override def build(): Write = {
+    def batch = new GraftBatchWrite(table, schema, overwrite, bucket)
+    bucket match {
+      case None => VersionedTable.clusterSpecCols(table) match {
+        case cols if cols.nonEmpty && cols.forall(schema.fieldNames.contains) =>
+          // clustered-on-write: an ORDERED distribution (Spark range-
+          // partitions the incoming rows) plus an in-partition sort, so
+          // every staged file covers one tight, disjoint key range and the
+          // commit's zone maps prune from birth — no OPTIMIZE needed for
+          // the common selective read. Multi-column specs (identity
+          // partitioning by several columns) order LEXICOGRAPHICALLY —
+          // the year/month/day idiom, where predicates filter on a
+          // prefix. Correctness never depends on it: the distribution
+          // shapes file layout only.
+          new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+            import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+            import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, SortDirection, NullOrdering}
+            private def order: Array[SortOrder] = cols.map(c =>
+              Expressions.sort(Expressions.column(c),
+                SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
+            override def requiredDistribution(): Distribution =
+              Distributions.ordered(order)
+            override def requiredNumPartitions(): Int = 0 // planner's choice
+            override def requiredOrdering(): Array[SortOrder] = order
+            override def toBatch: BatchWrite = batch
+          }
+        case _ => new Write { override def toBatch: BatchWrite = batch }
       }
+      case Some((c, n)) => GraftWriteBuilder.bucketClustered(c, n, batch)
     }
-    case Some((c, n)) =>
-      // a bucketed write REQUIRES a clustered distribution on the table's
-      // own bucket transform (resolved through the catalog's
-      // FunctionCatalog to the identical pmod placement), so Spark
-      // shuffles input rows into bucket-pure-ish tasks before they reach
-      // the writers; each writer still routes rows per-bucket, so
-      // correctness never depends on the distribution — only file counts
-      new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-        import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-        override def requiredDistribution(): Distribution =
-          Distributions.clustered(Array(Expressions.bucket(n, c)))
-        override def requiredNumPartitions(): Int = n
-        override def requiredOrdering(): Array[SortOrder] = Array.empty
-        override def toBatch: BatchWrite =
-          new GraftBatchWrite(table, schema, overwrite, bucket)
-      }
   }
 }
 
+object GraftWriteBuilder {
+  /** A bucketed write (SQL INSERT or a row-level rewrite) REQUIRES a
+    * clustered distribution on the table's own bucket transform
+    * (resolved through the catalog's FunctionCatalog to the identical
+    * pmod placement), so Spark shuffles rows into bucket-pure-ish tasks
+    * and each task opens (normally) one file. Each writer still routes
+    * rows per bucket, so correctness never depends on the distribution —
+    * only file counts.
+    */
+  private[sources] def bucketClustered(c: String, n: Int, batch: => BatchWrite): Write =
+    new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+      import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+      import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
+      override def requiredDistribution(): Distribution =
+        Distributions.clustered(Array(Expressions.bucket(n, c)))
+      override def requiredNumPartitions(): Int = n
+      override def requiredOrdering(): Array[SortOrder] = Array.empty
+      override def toBatch: BatchWrite = batch
+    }
+}
+
+/** The staged write behind every catalog SQL write: executors stage
+  * parquet under `data/_stg_<token>` (bucket-routed on a bucketed
+  * table); commit moves the directory to `data/c<next>_<token>`, drops
+  * the debris of unaccepted attempts ([[GraftStagedCommit]]), runs the
+  * one metadata job and publishes; abort deletes the staging directory.
+  *
+  * INSERT INTO / INSERT OVERWRITE publish through the append/overwrite
+  * retry loop. A row-level operation's replacing write (`replacing`)
+  * instead publishes ONE replace commit — `R:` lines for the scanned
+  * entries, fresh entries for the staged files (plus any MERGE-inserted
+  * rows) — with the scanned basis as the expected head: a concurrent
+  * commit in between fails loudly rather than basing the rewrite on a
+  * stale snapshot.
+  */
 class GraftBatchWrite(
     table: String, schema: StructType, overwrite: Boolean,
-    bucket: Option[(String, Int)] = None)
+    bucket: Option[(String, Int)] = None,
+    replacing: Option[GraftRowLevelOperation] = None)
     extends BatchWrite {
   private val token = java.util.UUID.randomUUID().toString.take(8)
-  private val stagingName = s"_stg_$token"
-  private val stagingAbs =
-    java.nio.file.Paths.get(table, "data", stagingName).toString
+  private val staging = java.nio.file.Paths.get(table, "data", s"_stg_$token")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingAbs))
+    java.nio.file.Files.createDirectories(staging)
     val bucketIdx = bucket.map { case (c, n) =>
       val i = schema.fieldIndex(c)
       require(schema.fields(i).dataType == LongType ||
@@ -1775,40 +1687,62 @@ class GraftBatchWrite(
         s"bucket column $c must be BIGINT/INT")
       (i, n)
     }
-    new GraftDataWriterFactory(stagingAbs, schema, bucketIdx = bucketIdx,
+    new GraftDataWriterFactory(staging.toString, schema,
+      rowLevel = replacing.nonEmpty, bucketIdx = bucketIdx,
       bloomCols = VersionedTable.bloomCols(table, schema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val next = VersionedTable.versions(table).lastOption.getOrElse(0L) + 1L
+    val next = replacing.fold(VersionedTable.versions(table).lastOption.getOrElse(0L)) { op =>
+      require(op.basis >= 0L, "row-level write committed before its scan planned")
+      op.basis
+    } + 1L
     val dirName = s"c${next}_$token"
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(stagingAbs),
-      java.nio.file.Paths.get(table, "data", dirName))
-    GraftStagedCommit.reconcile(
-      java.nio.file.Paths.get(table, "data", dirName), stagingAbs, messages)
+    val dir = java.nio.file.Paths.get(table, "data", dirName)
+    java.nio.file.Files.move(staging, dir)
+    GraftStagedCommit.reconcile(dir, staging.toString, messages)
     val entries = VersionedTable.dirMetadata(
-      spark, table, dirName, VersionedTable.defaultStatsCols(table, schema),
-      VersionedTable.constraints(table))
-    VersionedTable.publishStaged(table, token, next, dirName, entries,
-      append = !overwrite, txnId = None, expectedLatest = None)
+      SparkSession.active, table, dirName,
+      VersionedTable.defaultStatsCols(table, schema), VersionedTable.constraints(table))
+    replacing match {
+      case None =>
+        VersionedTable.publishStaged(table, token, next, dirName, entries,
+          append = !overwrite, txnId = None, expectedLatest = None)
+      case Some(op) => publishReplace(op, next, dirName, entries)
+    }
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    def del(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          VersionedTable.usingPaths(java.nio.file.Files.list(p))(_.toSeq)
-            .foreach(del)
-        }
-        java.nio.file.Files.deleteIfExists(p)
-        ()
+  private def publishReplace(
+      op: GraftRowLevelOperation, next: Long, dirName: String,
+      entries0: Seq[String]): Unit = {
+    // a rewrite that empties the table entirely (bucket-routing writers
+    // open files lazily, so a 0-row rewrite stages nothing) must still
+    // leave a schema source — land the carrier CREATE TABLE uses
+    val entries = if (entries0.nonEmpty ||
+        VersionedTable.select(table, Some(op.basis), Prune.none)
+          .exists(f => !op.planned.contains(f.path))) entries0
+      else {
+        val fileName = bucket
+          .fold("part-schema-0.parquet")(_ => "__graft_bucket=0/part-schema-0.parquet")
+        val p = java.nio.file.Paths.get(table, "data", dirName).resolve(fileName)
+        java.nio.file.Files.createDirectories(p.getParent)
+        new GraftDataWriter(p.toString, schema).commit()
+        Seq(s"$fileName#0")
       }
-    del(java.nio.file.Paths.get(stagingAbs))
+    val removals = op.planned.map(p => s"R:$p")
+    val fresh = entries.map(n => s"data/$dirName/$n")
+    if (!VersionedTable.tryPublishStaged(
+        table, next, removals ++ fresh, carry = Some(op.basis))) {
+      VersionedTable.deleteRecursively(java.nio.file.Paths.get(table, "data", dirName))
+      throw new java.util.ConcurrentModificationException(
+        s"row-level ${op.command} on $table scanned version ${op.basis} but " +
+          s"version $next was committed concurrently — re-run the statement")
+    }
   }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    VersionedTable.deleteRecursively(staging)
 }
 
 case class GraftWriteDone(files: Seq[String]) extends WriterCommitMessage
@@ -2158,10 +2092,11 @@ class GraftTableScanBuilder(
     * Spark still applies the exact row limit above; the pushdown only
     * bounds how many files are opened (LIMIT 10 over a 100 TB table
     * reads one file). Declined after an aggregate pushdown (the limit
-    * would then bound the 1-row aggregate output, not the data).
+    * would then bound the 1-row aggregate output, not the data) and on a
+    * bucketed table (every bucket keeps its partition).
     */
   override def pushLimit(limit: Int): Boolean = {
-    if (aggPlan.isEmpty) limitOpt = Some(limit)
+    if (aggPlan.isEmpty && bucket.isEmpty) limitOpt = Some(limit)
     false
   }
 
@@ -2285,51 +2220,32 @@ class GraftTableScanBuilder(
         if (hiSide == (cmp >= 0)) a else b
       })
     }
+    // one MIN or MAX from the zones of its side: integral, DOUBLE (the
+    // `~col` sortable-bits zones) or exact string sides; None declines
+    def minMax(kind: String, e: org.apache.spark.sql.connector.expressions.Expression)
+        : Option[GraftAggSpec] = {
+      val hiSide = kind == "max"
+      def side(z: (Option[Long], Option[Long])) = if (hiSide) z._2 else z._1
+      e match {
+        case f: NamedReference if f.fieldNames.length == 1 =>
+          val c = p(f.fieldNames()(0))
+          if (integral.contains(c) && statsComplete(c))
+            Some(GraftAggSpec(kind, c, integral(c), side(extremes(c))))
+          else if (dblCols.contains(c) && statsComplete(s"~$c"))
+            Some(GraftAggSpec(kind, c,
+              physSchema(full).fields.find(_.name == c).get.dataType,
+              side(extremes(s"~$c"))))
+          else if (stringCols.contains(c))
+            strSide(c, hiSide).map(v => GraftAggSpec(kind, c, StringType, None, v))
+          else None
+        case _ => None
+      }
+    }
     val specs = agg.aggregateExpressions.map {
       case _: CountStar =>
         GraftAggSpec("count", "", LongType, Some(files.flatMap(_.rows).sum))
-      case m: VMin => m.column match {
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            integral.contains(p(f.fieldNames()(0))) &&
-            statsComplete(p(f.fieldNames()(0))) =>
-          val c = p(f.fieldNames()(0))
-          GraftAggSpec("min", c, integral(c), extremes(c)._1)
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            dblCols.contains(p(f.fieldNames()(0))) &&
-            statsComplete(s"~${p(f.fieldNames()(0))}") =>
-          val c = p(f.fieldNames()(0))
-          val dt = physSchema(full).fields.find(_.name == c).get.dataType
-          GraftAggSpec("min", c, dt, extremes(s"~$c")._1)
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            stringCols.contains(p(f.fieldNames()(0))) =>
-          val c = p(f.fieldNames()(0))
-          strSide(c, hiSide = false) match {
-            case Some(v) => GraftAggSpec("min", c, StringType, None, v)
-            case None    => return None
-          }
-        case _ => return None
-      }
-      case m: VMax => m.column match {
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            integral.contains(p(f.fieldNames()(0))) &&
-            statsComplete(p(f.fieldNames()(0))) =>
-          val c = p(f.fieldNames()(0))
-          GraftAggSpec("max", c, integral(c), extremes(c)._2)
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            dblCols.contains(p(f.fieldNames()(0))) &&
-            statsComplete(s"~${p(f.fieldNames()(0))}") =>
-          val c = p(f.fieldNames()(0))
-          val dt = physSchema(full).fields.find(_.name == c).get.dataType
-          GraftAggSpec("max", c, dt, extremes(s"~$c")._2)
-        case f: NamedReference if f.fieldNames.length == 1 &&
-            stringCols.contains(p(f.fieldNames()(0))) =>
-          val c = p(f.fieldNames()(0))
-          strSide(c, hiSide = true) match {
-            case Some(v) => GraftAggSpec("max", c, StringType, None, v)
-            case None    => return None
-          }
-        case _ => return None
-      }
+      case m: VMin => minMax("min", m.column).getOrElse(return None)
+      case m: VMax => minMax("max", m.column).getOrElse(return None)
       case _ => return None
     }
     Some(specs.toSeq)
@@ -2386,232 +2302,12 @@ class GraftTableScanBuilder(
   private def prune =
     Prune(bounds, strBounds, memberProbes.map { case (c, h) => p(c) -> h })
 
-  override def build(): Scan = (aggPlan, bucket) match {
-    case (Some(specs), _) => new GraftAggScan(table, version, specs)
-    case (None, Some((c, n))) =>
-      new GraftBucketedScan(table, version, required, prune,
-        c, n, reportAs, staticIn, staticStrIn)
-    case (None, None) =>
+  override def build(): Scan = aggPlan match {
+    case Some(specs) => new GraftAggScan(table, version, specs)
+    case None =>
       new GraftTableScan(table, version, required, prune,
-        limitOpt, topN, reportAs, staticIn, staticStrIn)
+        limitOpt, topN, reportAs, staticIn, staticStrIn, bucket)
   }
-}
-
-/** Scan over a BUCKETED table: one InputPartition per bucket (that
-  * bucket's files across every commit, with their tombstones), reported
-  * to Spark as `KeyGroupedPartitioning(bucket(n, col))` with each
-  * partition carrying its bucket id as the partition key — the
-  * storage-partitioned-join contract: two tables bucketed by the same
-  * (col, n) through [[VersionedTable.commitBucketed]] equi-join on that
-  * column with NO exchange on either side
-  * (`spark.sql.sources.v2.bucketing.enabled=true`). Zone-map bounds
-  * still prune files INSIDE buckets; every bucket id is always emitted
-  * (possibly with zero files) so the two sides' partition-value sets
-  * align 1:1. Statistics are manifest-derived like [[GraftTableScan]].
-  */
-class GraftBucketedScan(
-    table: String, version: Option[Long], required: StructType,
-    prune: Prune,
-    bucketCol: String, nBuckets: Int,
-    reportAs: StructType = null,
-    staticIn: Map[String, Set[Long]] = Map.empty,
-    staticStrIn: Map[String, Set[String]] = Map.empty)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with org.apache.spark.sql.connector.read.SupportsReportOrdering
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  // physical/logical name split as in [[GraftTableScan]]; the bucket
-  // column itself can never be renamed, so its name is in both sets
-  private val rep: StructType = Option(reportAs).getOrElse(required)
-  private val repToPhys: Map[String, String] =
-    rep.fieldNames.zip(required.fieldNames).toMap
-
-  override def readSchema(): StructType = rep
-  override def toBatch: Batch = this
-
-  /** Runtime zone-map pruning INSIDE buckets (see [[GraftTableScan]]):
-    * every bucket id keeps its partition (the SPJ alignment contract —
-    * both sides' partition-value sets must match 1:1), only the file
-    * lists shrink.
-    */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    rep.fields.collect { // reported in the names Spark resolves (logical)
-      case f if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == StringType =>
-        org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
-    }
-
-  @volatile private var runtimeSets: Map[String, Set[Long]] = staticIn
-  @volatile private var strRuntimeSets: Map[String, Set[String]] = staticStrIn
-  override def filter(filters: Array[Filter]): Unit = {
-    runtimeSets = GraftFilters.intersectSets(staticIn,
-      GraftFilters.inSets(filters)
-        .map { case (c, s) => repToPhys.getOrElse(c, c) -> s })
-    strRuntimeSets = GraftFilters.intersectSets(staticStrIn,
-      GraftFilters.strInSets(filters)
-        .map { case (c, s) => repToPhys.getOrElse(c, c) -> s })
-  }
-
-  // the planner selection minus footer-counted zero-row files (schema
-  // carriers), grouped by bucket: bucket ids all stay (SPJ alignment),
-  // only their file lists shrink
-  private lazy val perBucket: Map[Int, Seq[FileEntry]] =
-    VersionedTable.bucketLayout(table,
-      VersionedTable.select(table, version, prune).filterNot(_.rows.contains(0L)))
-
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-      Array(org.apache.spark.sql.connector.expressions.Expressions
-        .bucket(nBuckets, bucketCol)),
-      nBuckets)
-
-  /** Per-partition ordering on the bucket key — reported ONLY when every
-    * bucket holds at most ONE data file carrying the `sorted-` name
-    * marker that exclusively the sorting writers produce (a chain of two
-    * individually-sorted files is not sorted; an unsorted INSERT can't
-    * fake the marker). After [[VersionedTable.compactBucketed]] this
-    * holds table-wide, so the storage-partitioned join elides its sorts
-    * too: zero exchange, zero sort, on either side. The MOR tombstone
-    * filter drops rows in place and preserves order, so tombstones don't
-    * gate the report.
-    */
-  override def outputOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{
-      Expressions, NullOrdering, SortDirection}
-    val sortedSingletons = perBucket.valuesIterator.forall(files =>
-      files.size <= 1 &&
-        files.forall(_.path.split('/').last.startsWith("sorted-")))
-    if (sortedSingletons && required.fieldNames.contains(bucketCol))
-      Array(Expressions.sort(Expressions.column(bucketCol),
-        SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
-    else Array.empty
-  }
-
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val files = perBucket.valuesIterator.flatten.toSeq
-    val rows: Option[Long] =
-      if (files.exists(_.rows.isEmpty)) None else Some(files.flatMap(_.rows).sum)
-    // exact recorded bytes when complete (same rule as GraftTableScan)
-    val exactBytes: Option[Long] =
-      if (files.isEmpty || files.exists(_.bytes.isEmpty)) None
-      else Some(files.flatMap(_.bytes).sum)
-    lazy val colStats = GraftColumnStats.forScan(table, files, required, rep)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        exactBytes.orElse(
-          rows.map(_ * math.max(1, required.fields.length) * 16L))
-          .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-      override def numRows(): java.util.OptionalLong =
-        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-      override def columnStats(): java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
-    }
-  }
-
-  // same per-scan vectorization rule as GraftTableScan: every file
-  // MOR-vectorizable and physically holding all required columns
-  private lazy val columnarOk: Boolean =
-    required.nonEmpty && {
-      def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
-      perBucket.valuesIterator.flatten.forall(e =>
-        GraftVectorization.morOk(required, e.tombstones.map(abs)))
-    } && {
-      val spark = SparkSession.active
-      perBucket.valuesIterator.flatten.map(_.path).toSeq
-        .groupBy(p => p.split('/')(1)).valuesIterator.forall { files =>
-          GraftVectorization.schemaCompatible(required,
-            VersionedTable.commitSchemaHinted(spark, table, version, files.min))
-        }
-    }
-
-  override def description(): String =
-    s"graft-catalog-bucketed $table${version.fold("")(v => s"@v$v")} " +
-      s"bucket($nBuckets, $bucketCol) vectorized=$columnarOk " +
-      s"files=${perBucket.valuesIterator.map(_.size).sum}"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
-    val keep = GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets)
-    (0 until nBuckets).map { b =>
-      GraftBucketPartition(b,
-        perBucket.getOrElse(b, Nil).filter(keep).map { f =>
-          (abs(f.path), f.tombstones.map(abs))
-        }, columnarOk): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftBucketReaderFactory(required,
-      // per-commit generation-appropriate predicates, as in the flat scan
-      GraftRowGroupFilter.perCommit(table,
-        perBucket.valuesIterator.flatten.map(_.path).toSeq,
-        prune.bounds.keySet ++ prune.strBounds.keySet ++
-          runtimeSets.keySet ++ strRuntimeSets.keySet,
-        prune.bounds, prune.strBounds, runtimeSets, strRuntimeSets, version))
-}
-
-case class GraftBucketPartition(
-    bucketId: Int, files: Seq[(String, Seq[String])],
-    columnar: Boolean = false)
-    extends InputPartition
-    with org.apache.spark.sql.connector.read.HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucketId))
-}
-
-class GraftBucketReaderFactory(
-    required: StructType,
-    rowFilters: Map[String,
-      Option[org.apache.parquet.filter2.predicate.FilterPredicate]] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val files = partition.asInstanceOf[GraftBucketPartition].files.iterator
-      private var current: PartitionReader[InternalRow] = _
-      override def next(): Boolean = {
-        while (current == null || !current.next()) {
-          if (current != null) current.close()
-          current = null
-          if (!files.hasNext) return false
-          val (f, tombs) = files.next()
-          current = new GraftCatalogReader(GraftCatalogPartition(f, tombs), required)
-        }
-        true
-      }
-      override def get(): InternalRow = current.get()
-      override def close(): Unit = if (current != null) current.close()
-    }
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[GraftBucketPartition].columnar
-  // chained vectorized decode across the bucket's files — one
-  // VectorizedParquetRecordReader at a time, batches served through
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private val files = partition.asInstanceOf[GraftBucketPartition]
-        .files.iterator
-      private var current: GraftCatalogVectorReader = _
-      override def next(): Boolean = {
-        while (current == null || !current.next()) {
-          if (current != null) current.close()
-          current = null
-          if (!files.hasNext) return false
-          val (f, tombs) = files.next()
-          current = new GraftCatalogVectorReader(f, required, tombs,
-            GraftCatalogReaderFactory.filterFor(rowFilters, f))
-        }
-        true
-      }
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-        current.get()
-      override def close(): Unit = if (current != null) current.close()
-    }
 }
 
 /** One completely-pushed aggregate: kind (count/min/max), source column,
@@ -2635,7 +2331,7 @@ class GraftAggScan(table: String, version: Option[Long], specs: Seq[GraftAggSpec
     s"graft-catalog-agg $table${version.fold("")(v => s"@v$v")} " +
       s"aggs=${specs.map(s => s"${s.kind}(${s.col})").mkString(",")} manifest-only"
   override def planInputPartitions(): Array[InputPartition] =
-    Array(GraftCatalogPartition("", Nil))
+    Array(GraftCatalogPartition(Nil))
   override def createReaderFactory(): PartitionReaderFactory = {
     val payload = specs.toArray
     new PartitionReaderFactory {
@@ -2684,6 +2380,19 @@ class GraftAggScan(table: String, version: Option[Long], specs: Seq[GraftAggSpec
   }
 }
 
+/** Scan over a catalog table's snapshot. A flat table plans one partition
+  * per file. A BUCKETED table plans one partition per bucket (that
+  * bucket's files across every commit, with their tombstones), reported
+  * to Spark as `KeyGroupedPartitioning(bucket(n, col))` with each
+  * partition carrying its bucket id as the partition key — the
+  * storage-partitioned-join contract: two tables bucketed by the same
+  * (col, n) through [[VersionedTable.commitBucketed]] equi-join on that
+  * column with NO exchange on either side
+  * (`spark.sql.sources.v2.bucketing.enabled=true`). Zone-map bounds
+  * still prune files INSIDE buckets; every bucket id is always emitted
+  * (possibly with zero files) so the two sides' partition-value sets
+  * align 1:1. LIMIT and TopN file planning apply to flat tables only.
+  */
 class GraftTableScan(
     table: String, version: Option[Long], required: StructType,
     prune: Prune,
@@ -2691,13 +2400,17 @@ class GraftTableScan(
     topN: Option[(String, Boolean, Int)] = None,
     reportAs: StructType = null,
     staticIn: Map[String, Set[Long]] = Map.empty,
-    staticStrIn: Map[String, Set[String]] = Map.empty) extends Scan with Batch
+    staticStrIn: Map[String, Set[String]] = Map.empty,
+    bucket: Option[(String, Int)] = None) extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
+    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
+    with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   // `required` is PHYSICAL (drives file reads and zone maps); `reportAs`
   // is the LOGICAL rendering Spark resolves against — same fields
-  // positionally, names differ only under a column mapping
+  // positionally, names differ only under a column mapping (the bucket
+  // column itself can never be renamed, so its name is in both sets)
   private val rep: StructType = Option(reportAs).getOrElse(required)
   private val repToPhys: Map[String, String] =
     rep.fieldNames.zip(required.fieldNames).toMap
@@ -2715,6 +2428,8 @@ class GraftTableScan(
     * fractional zone maps could wrongly prune), every filter stays
     * conservative (stat-less files are kept), and Spark re-applies the
     * join itself, so pruning can only skip work, never change results.
+    * A bucketed scan keeps every bucket's partition (the SPJ alignment
+    * contract); only the file lists shrink.
     */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -2737,25 +2452,21 @@ class GraftTableScan(
         .map { case (c, s) => repToPhys.getOrElse(c, c) -> s })
   }
 
-  private[sources] def runtimeKept =
-    kept.filter(GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets))
-
   /** Manifest-derived statistics for the PLANNER: without them a DSv2
     * scan defaults to "unknown = huge", so a join against a catalog
     * table would NEVER broadcast regardless of its true size. Row count
     * is the footer-count sum of the files this scan actually plans
     * (zone-map pruning already applied — a pruned range read reports its
-    * pruned size, improving downstream join planning); size is rows ×
-    * a per-type width estimate (strings/binaries at 20 bytes, the
-    * EstimationUtils convention). Tombstones make the row count an
+    * pruned size, improving downstream join planning); size is the
+    * files' recorded bytes, or rows × a per-type width estimate
+    * (strings/binaries at 20 bytes, the EstimationUtils convention) when
+    * some file predates recorded sizes. Tombstones make the row count an
     * over-approximation, which is the safe direction for broadcast
     * decisions.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val rows: Option[Long] = if (kept.exists(_.rows.isEmpty)) None
       else Some(kept.flatMap(_.rows).sum)
-    // EXACT bytes when every planned file recorded its size at commit
-    // (post-round-14 manifests); per-type width estimate otherwise
     val exactBytes: Option[Long] =
       if (kept.isEmpty || kept.exists(_.bytes.isEmpty)) None
       else Some(kept.flatMap(_.bytes).sum)
@@ -2850,46 +2561,78 @@ class GraftTableScan(
       }
     case _ => topped
   }
-  private def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
+  // bucketed scans only: the selection grouped by bucket. Bucket ids all
+  // stay (SPJ alignment), only their file lists shrink
+  private lazy val perBucket: Map[Int, Seq[FileEntry]] =
+    VersionedTable.bucketLayout(table, kept)
 
-  /** VECTORIZED scan eligibility — Spark forbids mixing row-based and
-    * columnar partitions in one scan, so the decision is per-SCAN: every
-    * kept file must be tombstone-free (the MOR anti-join is a row-wise
-    * filter; compaction restores vectorized reads) and every commit's
-    * files must physically contain ALL required columns (an ADD COLUMN
-    * evolution gap null-fills through the row decoder instead). Checked
-    * from ONE representative footer per commit directory — O(commits)
-    * driver reads, the [[VersionedTable.snapshotSchema]] discipline.
+  override def outputPartitioning()
+      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
+    bucket match {
+      case Some((c, n)) =>
+        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
+          Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)), n)
+      case None =>
+        new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
+    }
+
+  /** Per-partition ordering on the bucket key — reported ONLY when every
+    * bucket holds at most ONE data file carrying the `sorted-` name
+    * marker that exclusively the sorting writers produce (a chain of two
+    * individually-sorted files is not sorted; an unsorted INSERT can't
+    * fake the marker). After [[VersionedTable.compactBucketed]] this
+    * holds table-wide, so the storage-partitioned join elides its sorts
+    * too: zero exchange, zero sort, on either side. The MOR tombstone
+    * filter drops rows in place and preserves order, so tombstones don't
+    * gate the report.
     */
+  override def outputOrdering()
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
+    import org.apache.spark.sql.connector.expressions.{
+      Expressions, NullOrdering, SortDirection}
+    bucket match {
+      case Some((c, _)) if required.fieldNames.contains(c) &&
+          perBucket.valuesIterator.forall(files => files.size <= 1 &&
+            files.forall(_.path.split('/').last.startsWith("sorted-"))) =>
+        Array(Expressions.sort(Expressions.column(c),
+          SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
+      case _ => Array.empty
+    }
+  }
+
   private lazy val columnarOk: Boolean =
-    required.nonEmpty &&
-      kept.forall(e => GraftVectorization.morOk(required, e.tombstones.map(abs))) && {
-        val spark = SparkSession.active
-        kept.groupBy(_.commit).valuesIterator.forall { files =>
-          GraftVectorization.schemaCompatible(required, VersionedTable
-            .commitSchemaHinted(spark, table, version, files.map(_.path).min))
-        }
-      }
+    GraftVectorization.scanColumnar(table, version, required, kept)
 
-  override def description(): String =
-    s"graft-catalog $table${version.fold("")(v => s"@v$v")} " +
-      // denominator from header count lines when present (exact, zero
-      // entry reads), else the full selection — a selective cold plan
-      // must never stream O(files) lines just to print its description
-      s"files=${kept.size}/${
-        VersionedTable.snapshotFileCountFast(table, version).getOrElse(
-          VersionedTable.select(table, version, Prune.none).size.toLong)} " +
-      s"vectorized=$columnarOk " +
-      s"bounds=${prune.bounds.map { case (c, (l, h)) => s"$c∈[$l,$h]" }.mkString(",")}" +
-      (if (prune.strBounds.isEmpty) ""
-       else s" strBounds=${prune.strBounds.keys.toSeq.sorted.mkString(",")}") +
-      (if (prune.memberProbes.isEmpty) ""
-       else s" member=${prune.memberProbes.map(_._1).distinct.sorted.mkString(",")}")
+  override def description(): String = bucket match {
+    case Some((c, n)) =>
+      s"graft-catalog-bucketed $table${version.fold("")(v => s"@v$v")} " +
+        s"bucket($n, $c) vectorized=$columnarOk files=${kept.size}"
+    case None =>
+      s"graft-catalog $table${version.fold("")(v => s"@v$v")} " +
+        // denominator from header count lines when present (exact, zero
+        // entry reads), else the full selection — a selective cold plan
+        // must never stream O(files) lines just to print its description
+        s"files=${kept.size}/${
+          VersionedTable.snapshotFileCountFast(table, version).getOrElse(
+            VersionedTable.select(table, version, Prune.none).size.toLong)} " +
+        s"vectorized=$columnarOk " +
+        s"bounds=${prune.bounds.map { case (c, (l, h)) => s"$c∈[$l,$h]" }.mkString(",")}" +
+        (if (prune.strBounds.isEmpty) ""
+         else s" strBounds=${prune.strBounds.keys.toSeq.sorted.mkString(",")}") +
+        (if (prune.memberProbes.isEmpty) ""
+         else s" member=${prune.memberProbes.map(_._1).distinct.sorted.mkString(",")}")
+  }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    runtimeKept.map { f =>
-      GraftCatalogPartition(abs(f.path), f.tombstones.map(abs), columnarOk): InputPartition
-    }.toArray
+  override def planInputPartitions(): Array[InputPartition] = {
+    val keep = GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets)
+    def part(files: Seq[FileEntry], bucketId: Int) =
+      GraftCatalogPartition.of(table, files, columnarOk, bucketId): InputPartition
+    bucket match {
+      case Some((_, n)) =>
+        (0 until n).map(b => part(perBucket.getOrElse(b, Nil).filter(keep), b)).toArray
+      case None => kept.filter(keep).map(f => part(Seq(f), 0)).toArray
+    }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     // called AFTER filter(): runtime key sets ride into the row-group
@@ -2906,10 +2649,33 @@ class GraftTableScan(
         prune.bounds, prune.strBounds, runtimeSets, strRuntimeSets, version))
 }
 
+/** One scan partition: data files (absolute paths) with their
+  * tombstones, read one after another — one file on a flat scan, one
+  * bucket's files on a bucketed scan, whose bucket id is the partition
+  * key the storage-partitioned join groups on.
+  */
 case class GraftCatalogPartition(
-    file: String, tombstones: Seq[String], columnar: Boolean = false)
+    files: Seq[(String, Seq[String])], columnar: Boolean = false,
+    bucketId: Int = 0)
     extends InputPartition
+    with org.apache.spark.sql.connector.read.HasPartitionKey {
+  override def partitionKey(): InternalRow =
+    new GenericInternalRow(Array[Any](bucketId))
+}
 
+object GraftCatalogPartition {
+  private[sources] def of(table: String, files: Seq[FileEntry],
+      columnar: Boolean, bucketId: Int = 0): GraftCatalogPartition = {
+    def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
+    GraftCatalogPartition(
+      files.map(f => (abs(f.path), f.tombstones.map(abs))), columnar, bucketId)
+  }
+}
+
+/** The reader factory of every catalog scan — flat, bucketed and the
+  * row-level rewrite's candidate scan. Row and columnar readers chain
+  * over the partition's files, one file open at a time.
+  */
 class GraftCatalogReaderFactory(
     required: StructType,
     // PER-COMMIT (generation-appropriate) row-group predicates, keyed by
@@ -2918,16 +2684,18 @@ class GraftCatalogReaderFactory(
     rowFilters: Map[String,
       Option[org.apache.parquet.filter2.predicate.FilterPredicate]] = Map.empty)
     extends PartitionReaderFactory {
+  private def part(p: InputPartition) = p.asInstanceOf[GraftCatalogPartition]
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftCatalogReader(partition.asInstanceOf[GraftCatalogPartition], required)
+    GraftCatalogReaderFactory.chain(part(partition).files)(
+      new GraftCatalogReader(_, _, required))
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[GraftCatalogPartition].columnar
+    part(partition).columnar
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftCatalogPartition]
-    new GraftCatalogVectorReader(p.file, required, p.tombstones,
-      GraftCatalogReaderFactory.filterFor(rowFilters, p.file))
-  }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    GraftCatalogReaderFactory.chain(part(partition).files) { (f, tombs) =>
+      new GraftCatalogVectorReader(f, required, tombs,
+        GraftCatalogReaderFactory.filterFor(rowFilters, f))
+    }
 }
 
 object GraftCatalogReaderFactory {
@@ -2938,6 +2706,24 @@ object GraftCatalogReaderFactory {
       : Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
     rowFilters.getOrElse(
       VersionedTable.dvKeyOf(file).split('/').head, None)
+
+  private def chain[T](files: Seq[(String, Seq[String])])(
+      open: (String, Seq[String]) => PartitionReader[T]): PartitionReader[T] =
+    new PartitionReader[T] {
+      private val rest = files.iterator
+      private var current: PartitionReader[T] = _
+      override def next(): Boolean = {
+        while (current == null || !current.next()) {
+          if (current != null) current.close()
+          current = null
+          if (!rest.hasNext) return false
+          current = open.tupled(rest.next())
+        }
+        true
+      }
+      override def get(): T = current.get()
+      override def close(): Unit = if (current != null) current.close()
+    }
 }
 
 /** Membership structure for a tombstone file's doomed keys. The dominant
@@ -3693,8 +3479,29 @@ private[sources] object GraftRowGroupFilter {
     }
 }
 
-/** Planning-time vectorization gates shared by the catalog's scans. */
+/** The planning-time vectorization rule of the catalog's scans. */
 private[sources] object GraftVectorization {
+  /** VECTORIZED scan eligibility — Spark forbids mixing row-based and
+    * columnar partitions in one scan, so the decision is per-SCAN: every
+    * planned file must be MOR-vectorizable ([[morOk]]) and every commit's
+    * files must serve ALL required columns ([[schemaCompatible]]; a gap
+    * the vectorized reader cannot serve decodes through the row reader
+    * instead). Checked from ONE representative footer per commit
+    * directory — O(commits) driver reads, the
+    * [[VersionedTable.snapshotSchema]] discipline.
+    */
+  def scanColumnar(table: String, version: Option[Long],
+      required: StructType, files: Seq[FileEntry]): Boolean =
+    required.nonEmpty &&
+      files.forall(e => morOk(required,
+        e.tombstones.map(java.nio.file.Paths.get(table, _).toString))) && {
+        val spark = SparkSession.active
+        files.map(_.path).groupBy(_.split('/')(1)).valuesIterator.forall { ps =>
+          schemaCompatible(required,
+            VersionedTable.commitSchemaHinted(spark, table, version, ps.min))
+        }
+      }
+
   private val copyable: Set[DataType] = Set(
     LongType, IntegerType, DoubleType, FloatType, BooleanType, StringType,
     BinaryType, TimestampType, TimestampNTZType, DateType,
@@ -3736,7 +3543,7 @@ private[sources] object GraftVectorization {
     * POSITIONAL vectors are always columnar-applicable — they probe a
     * bitmap by row ordinal, never a key column.
     */
-  def morOk(required: StructType, tombstonesAbs: Seq[String]): Boolean =
+  private def morOk(required: StructType, tombstonesAbs: Seq[String]): Boolean =
     tombstonesAbs.isEmpty ||
       (required.fields.forall(f => copyOk(f.dataType)) &&
         tombstonesAbs.filterNot(VersionedTable.isPosDeleteFile)
@@ -4492,7 +4299,7 @@ private[sources] object ParquetGroups {
   * planning-time wins (zone-map file pruning, manifest-pinned snapshots)
   * apply to both paths; only the per-row decode differs.
   */
-class GraftCatalogReader(part: GraftCatalogPartition, required: StructType)
+class GraftCatalogReader(file: String, tombstones: Seq[String], required: StructType)
     extends PartitionReader[InternalRow] {
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.hadoop.ParquetReader
@@ -4502,7 +4309,7 @@ class GraftCatalogReader(part: GraftCatalogPartition, required: StructType)
     .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f)).build()
 
   private val (posDelFiles, eqDelFiles) =
-    part.tombstones.partition(VersionedTable.isPosDeleteFile)
+    tombstones.partition(VersionedTable.isPosDeleteFile)
 
   // (key column name, doomed key membership) per tombstone file — key
   // type is whatever deleteWhere keyed on; compare on the decoded
@@ -4514,9 +4321,9 @@ class GraftCatalogReader(part: GraftCatalogPartition, required: StructType)
   // Group reader streams the whole file in order, so the running counter
   // IS the file position
   private val posBitmaps: Seq[PositionKeys.Bitmap] =
-    PositionKeys.forFile(posDelFiles, VersionedTable.dvKeyOf(part.file))
+    PositionKeys.forFile(posDelFiles, VersionedTable.dvKeyOf(file))
 
-  private val reader = open(part.file)
+  private val reader = open(file)
   private var current: Group = _
   private var rowPos = -1L
 

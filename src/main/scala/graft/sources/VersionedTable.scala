@@ -993,7 +993,7 @@ object VersionedTable {
       carry: Option[Long]): Boolean =
     tryPublish(table, next, entries, None, carry)
 
-  private def deleteRecursively(p: Path): Unit =
+  private[sources] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       if (Files.isDirectory(p))
         usingPaths(Files.list(p))(_.toSeq).foreach(deleteRecursively)
@@ -2363,9 +2363,9 @@ object VersionedTable {
     * reader of a tombstoned file materializes the applicable doomed keys
     * (8 bytes/key primitive-specialized — see the catalog's
     * `LongDoomedKeys`) per task until compaction; 10M keys ≈ 80 MB is
-    * the honest ceiling for "small by construction". Larger deletes
-    * route to copy-on-write, whose cost is bounded by the REWRITE (disk,
-    * streamed), never by reader memory.
+    * the honest ceiling for "small by construction". [[deleteWhere]]
+    * rejects a `maxKeys` above it; a delete over its `maxKeys` routes to
+    * the positional form, whose reader memory is a per-file bitmap.
     */
   val MorMaxDeleteKeys: Long = 10L * 1000 * 1000
 
@@ -2404,7 +2404,8 @@ object VersionedTable {
     * SIZE-GATED: a delete matching more than `maxKeys` distinct keys
     * (default [[MorEqualityMaxKeys]], the measured COST crossover; the
     * absolute reader-memory ceiling for explicit callers is
-    * [[MorMaxDeleteKeys]]) is NOT committed as a KEY tombstone —
+    * [[MorMaxDeleteKeys]], and a larger `maxKeys` is rejected before
+    * anything is staged) is NOT committed as a KEY tombstone —
     * above the crossover every scan until compaction pays a growing
     * per-row key-probe tax (1.14× at ~118k keys, 3.1× at ~1.2M — SCALING.md
     * round 16), and above the ceiling every reader task would carry the whole
@@ -2422,6 +2423,8 @@ object VersionedTable {
       spark: SparkSession, table: String, predicate: Column, keyCol: String,
       maxKeys: Long = MorEqualityMaxKeys): Long = {
     require(maxKeys > 0, "maxKeys must be positive")
+    require(maxKeys <= MorMaxDeleteKeys,
+      s"maxKeys $maxKeys exceeds the tombstone reader-memory ceiling $MorMaxDeleteKeys")
     val prev = versions(table)
     require(prev.nonEmpty, s"no committed versions at $table")
     val lastV = prev.last
@@ -4287,28 +4290,34 @@ object VersionedTable {
   def deletesBetween(
       spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    def abs(rel: String) = Paths.get(table, rel).toString
     val frames = rangeCommits(table, fromVersion, toVersion).flatMap {
       case (w, fresh) =>
-        val del = fresh.filter(isDeleteEntry)
-        val (pos, eq) = del.partition(e => isPosDeleteFile(entryPath(e)))
-        val eqF =
-          if (eq.isEmpty) None
-          else Some(spark.read.parquet(eq.map(entryPath).map(abs): _*))
-        // a POSITIONAL delete names positions, not keys — reconstruct the
-        // full deleted ROWS (a superset of any key column; richer than
-        // the key-only equality rendering)
-        val posF =
-          if (pos.isEmpty) None
-          else Some(posDeletedRows(spark, table, pos.map(entryPath),
-            pos.head.split(":", 3)(1).toLong))
-        (eqF.toSeq ++ posF.toSeq).map(_.withColumn("_commit_version",
-          org.apache.spark.sql.functions.lit(w)))
+        deletedFrames(spark, table, fresh.filter(isDeleteEntry))
+          .map(_.withColumn("_commit_version",
+            org.apache.spark.sql.functions.lit(w)))
     }
     require(frames.nonEmpty,
       s"no deletes in ($fromVersion, $toVersion] of $table")
     logicalizeFrame(table,
       frames.reduce(_.unionByName(_, allowMissingColumns = true)))
+  }
+
+  /** The delete side of one commit's `delete` entries: equality
+    * tombstones keep their key-only rendering, while a POSITIONAL delete
+    * names positions, not keys — it reconstructs the full deleted ROWS
+    * ([[posDeletedRows]]; a superset of any key column).
+    */
+  private def deletedFrames(
+      spark: SparkSession, table: String, delete: Seq[String]): Seq[DataFrame] = {
+    val (pos, eq) = delete.partition(e => isPosDeleteFile(entryPath(e)))
+    val eqF =
+      if (eq.isEmpty) None
+      else Some(spark.read.parquet(eq.map(e => Paths.get(table, entryPath(e)).toString): _*))
+    val posF =
+      if (pos.isEmpty) None
+      else Some(posDeletedRows(spark, table, pos.map(entryPath),
+        pos.head.split(":", 3)(1).toLong))
+    eqF.toSeq ++ posF.toSeq
   }
 
   /** The full data rows a positional delete commit removed: the deletion
@@ -4369,21 +4378,8 @@ object VersionedTable {
             val paths = own.map(entryPath)
             if (paths.isEmpty) None
             else Some(spark.read.parquet(paths.map(abs): _*))
-          } else {
-            // positional deletes reconstruct the full deleted ROWS by
-            // position (see [[posDeletedRows]]); equality tombstones
-            // keep their key-only rendering
-            val (pos, eq) = own.partition(e => isPosDeleteFile(entryPath(e)))
-            val eqF =
-              if (eq.isEmpty) None
-              else Some(spark.read.parquet(eq.map(entryPath).map(abs): _*))
-            val posF =
-              if (pos.isEmpty) None
-              else Some(posDeletedRows(spark, table, pos.map(entryPath),
-                pos.head.split(":", 3)(1).toLong))
-            (eqF.toSeq ++ posF.toSeq)
-              .reduceOption(_.unionByName(_, allowMissingColumns = true))
-          }
+          } else deletedFrames(spark, table, own)
+            .reduceOption(_.unionByName(_, allowMissingColumns = true))
         base.map(_.withColumn("_change_type",
             lit(if (delete) "delete" else "insert"))
           .withColumn("_commit_version", lit(w)))

@@ -25,34 +25,6 @@ object GraftSqlInternals {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): Dataset[Row] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Rebuild `df` as a fresh `LogicalRDD` leaf over its physical
-    * `RDD[InternalRow]`, dropping inherited statistics. Call this on an
-    * already-checkpointed frame: `toRdd` then wraps the checkpointed scan,
-    * not a recomputation of the original lineage. (On a *lazily*
-    * checkpointed frame the contract is preserved too — the first action on
-    * the result materializes the checkpoint, exactly as it would have on
-    * the input.)
-    *
-    * Built via `LogicalRDD.fromDataset` so the leaf keeps the physical
-    * plan's output partitioning and ordering (what `localCheckpoint`'s own
-    * leaf preserves — losing it would force a re-shuffle of data whose
-    * layout Spark could reuse in the next fixpoint round); the rebuild
-    * then strips ONLY the inherited `originStats`/`originConstraints`,
-    * which are the per-round compounding source.
-    */
-  def resetLeafStats(df: Dataset[Row]): Dataset[Row] = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val withLayout = execution.LogicalRDD
-      .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
-    val statsFree = execution.LogicalRDD(
-      withLayout.output,
-      withLayout.rdd,
-      withLayout.outputPartitioning,
-      withLayout.outputOrdering,
-      withLayout.isStreaming)(ds.sparkSession)
-    classic.Dataset.ofRows(ds.sparkSession, statsFree)
-  }
-
   /** `localCheckpoint` + stats reset that also KEEPS the frame's physical
     * layout. With AQE on (the default), `AdaptiveSparkPlanExec` advertises
     * `UnknownPartitioning` — AQE may still re-plan — so Spark's own
@@ -61,8 +33,9 @@ object GraftSqlInternals {
     * partitioned. After EXECUTION (eager checkpoint) the final physical
     * plan is frozen, so its partitioning is real; this recovers it from
     * `finalPhysicalPlan`, rewrites its attributes onto the checkpoint
-    * leaf's output ids, and rebuilds the leaf stats-free (see
-    * [[resetLeafStats]] for why the inherited stats must go).
+    * leaf's output ids, and rebuilds the leaf stats-free: only the
+    * inherited `originStats`/`originConstraints` go, the per-round
+    * compounding source the object doc describes.
     *
     * With `eager = false` the layout recovery is skipped (forcing
     * `finalPhysicalPlan` would materialize the frame, defeating the lazy

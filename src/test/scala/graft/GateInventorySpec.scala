@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * expected set below, next to the gate's retirement plan in ROADMAP.md;
   * a new `main`, a hand-rolled pay-once fixture beside
   * `QueryCache.fixture`, a second entry parser or planner selection
-  * beside `parseEntry` and `select`, or a unit that only its own spec
-  * calls is likewise a visible edit here.
+  * beside `parseEntry` and `select`, or a unit or object member that
+  * only its own spec calls is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
 
@@ -131,6 +131,30 @@ class GateInventorySpec extends AnyFunSuite {
       s"selective readers in src/main/scala: ${found.toSeq.sorted.mkString(", ")}")
   }
 
+  /** (path relative to src/main/scala, content) of every main source,
+    * comments stripped.
+    */
+  private lazy val strippedMain: Seq[(String, String)] =
+    mainSources.map { case (path, src) => path -> stripComments(src) }
+
+  /** perfbench's sources, comments stripped, and the services file. */
+  private lazy val strippedOutside: Seq[String] =
+    scalaSources("perfbench/src").map(s => stripComments(s._2)) :+
+      java.nio.file.Files.readString(java.nio.file.Paths.get(
+        "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister"))
+
+  /** Is `name` named in the main sources, perfbench or the services file
+    * anywhere but in `[start, end)` of the main source at `path`?
+    */
+  private def namedOutside(name: String, path: String, src: String,
+      start: Int, end: Int): Boolean = {
+    val word = s"\\b$name\\b".r
+    def names(text: String) = word.findFirstIn(text).isDefined
+    names(src.substring(0, start)) || names(src.substring(end)) ||
+      strippedMain.exists { case (p, other) => p != path && names(other) } ||
+      strippedOutside.exists(names)
+  }
+
   /** Top-level units that nothing outside their own declaration names,
     * kept anyway: fully qualified name → the reason. The mains need no
     * entry.
@@ -140,18 +164,10 @@ class GateInventorySpec extends AnyFunSuite {
   test("every top-level unit in src/main is named outside its own declaration") {
     val decl = ("""(?m)^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|""" +
       """abstract\s+|case\s+|implicit\s+)*(?:object|class|trait)\s+(\w+)""").r
-    val main = mainSources.map { case (path, src) => path -> stripComments(src) }
-    val outside = scalaSources("perfbench/src").map(s => stripComments(s._2)) :+
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister"))
-    val unnamed = main.flatMap { case (path, src) =>
+    val unnamed = strippedMain.flatMap { case (path, src) =>
       val decls = decl.findAllMatchIn(src).toList
       decls.zip(decls.drop(1).map(_.start) :+ src.length).filterNot { case (m, end) =>
-        val word = s"\\b${m.group(1)}\\b".r
-        def names(text: String) = word.findFirstIn(text).isDefined
-        names(src.substring(0, m.start)) || names(src.substring(end)) ||
-          main.exists { case (p, other) => p != path && names(other) } ||
-          outside.exists(names)
+        namedOutside(m.group(1), path, src, m.start, end)
       }.map { case (m, _) => packagePrefix(src) + m.group(1) }
     }.toSet
     assert(unnamed -- mains -- unnamedButKept.keySet == Set.empty,
@@ -159,5 +175,51 @@ class GateInventorySpec extends AnyFunSuite {
         "with the reason")
     assert(unnamedButKept.keySet.subsetOf(unnamed),
       s"unnamedButKept lists units that are named: ${unnamedButKept.keySet -- unnamed}")
+  }
+
+  /** Public members of top-level objects that nothing outside their own
+    * declaration names, kept anyway: `Object.member` → the reason.
+    */
+  private val unnamedMembersKept: Map[String, String] = Map(
+    "SparkEntry.entry" ->
+      "the flagship star query COVERAGE names as the smoke query run by name",
+    "Relational.approxAgg" ->
+      "the user-facing sketch operator; the registry runs its deterministic audit form",
+    "VersionedTable.pruneCount" ->
+      "the caller-facing manifest-skip probe the catalog and table specs assert through",
+    "JsonSink.writeJsonLines" ->
+      "the JSON-lines sink README offers beside the array sink",
+    "Multimodal.resize" -> "the image resize operator README lists",
+    "VersionedTable.commitIfAbsentGated" ->
+      "the quality-gated foreachBatch ingest README lists")
+
+  test("every public member of a top-level object in src/main is named outside its own declaration") {
+    val obj = """(?m)^(?:private\[\w+\]\s+)?(?:case\s+)?object\s+(\w+)""".r
+    val topLevel = """(?m)^\S""".r.pattern
+    // members sit at two spaces of indent; a declaration runs to the next
+    // line at two spaces or less
+    val member = """(?m)^  (?:final\s+|lazy\s+)*(?:def|val)\s+([A-Za-z_]\w*)""".r.pattern
+    val declEnd = """(?m)^ {0,2}\S""".r.pattern
+    def find(p: java.util.regex.Pattern, src: String, from: Int, to: Int) = {
+      val m = p.matcher(src).region(from, to).useAnchoringBounds(false)
+      Iterator.continually(m).takeWhile(_.find()).map(_.toMatchResult)
+    }
+    val unnamed = strippedMain.flatMap { case (path, src) =>
+      obj.findAllMatchIn(src).flatMap { o =>
+        val end = find(topLevel, src, o.end, src.length).nextOption().fold(src.length)(_.start)
+        find(member, src, o.end, end)
+          .filterNot(m => Set("main", "apply", "unapply")(m.group(1)))
+          .filterNot { m =>
+            val stop = find(declEnd, src, m.end, src.length).nextOption().fold(src.length)(_.start)
+            namedOutside(m.group(1), path, src, m.start, stop)
+          }
+          .map(m => s"${o.group(1)}.${m.group(1)}")
+      }
+    }.toSet
+    assert(unnamed -- unnamedMembersKept.keySet == Set.empty,
+      "members only their specs can reach: delete them, or keep them in " +
+        s"unnamedMembersKept with the reason: ${(unnamed -- unnamedMembersKept.keySet).toSeq.sorted}")
+    assert(unnamedMembersKept.keySet.subsetOf(unnamed),
+      s"unnamedMembersKept lists members that are named: ${unnamedMembersKept.keySet -- unnamed}")
   }
 }

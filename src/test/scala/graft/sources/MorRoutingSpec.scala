@@ -68,4 +68,25 @@ class MorRoutingSpec extends AnyFunSuite {
       s"an explicit maxKeys caller keeps EQUALITY tombstones, got $tombs")
     assert(VersionedTable.read(spark, t).count() == 150000L)
   }
+
+  test("a maxKeys above the memory ceiling is rejected before anything is staged") {
+    val s = spark; import s.implicits._
+    val t = s"$root/ceiling"
+    VersionedTable.commit(
+      (1L to 1000L).map(k => (k, k % 97)).toDF("k", "v"), t, append = false)
+    def dataDir = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(t, "data"))
+      try { import scala.jdk.CollectionConverters._; w.iterator().asScala.map(_.toString).toSet }
+      finally w.close()
+    }
+    val (versions, files) = (VersionedTable.versions(t), dataDir)
+    val e = intercept[IllegalArgumentException] {
+      VersionedTable.deleteWhere(spark, t, col("k") <= 10L, "k",
+        maxKeys = VersionedTable.MorMaxDeleteKeys + 1L)
+    }
+    assert(e.getMessage.contains("ceiling"), e.getMessage)
+    assert(VersionedTable.versions(t) == versions)
+    assert(dataDir == files, "a rejected delete must stage nothing under data/")
+    assert(VersionedTable.read(spark, t).count() == 1000L)
+  }
 }
