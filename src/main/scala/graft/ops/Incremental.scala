@@ -1896,9 +1896,10 @@ object Incremental {
     * ... ALTER COLUMN ... TYPE BIGINT` (a schema-only carrier commit, no
     * rewrite), INSERT keys beyond the INT range (INT64 files), then read
     * the union: both physical generations decode losslessly under the
-    * widened schema (the row decoder upcasts; the vectorized path
-    * declines per narrow commit — pinned in `GraftCatalogSpec` along
-    * with zone pruning and manifest MIN/MAX across generations). The
+    * widened schema (the catalog's vectorized reader declares the wide
+    * type and Spark's parquet decoder promotes the narrow files inside
+    * the batch load — pinned columnar in `GraftCatalogSpec` along with
+    * zone pruning and manifest MIN/MAX across generations). The
     * oracle reconstructs the same union from raw orders.
     */
   def ordersSqlWiden(orders: DataFrame): DataFrame = {

@@ -18,6 +18,7 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnVector
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A DataSource V2 TABLE CATALOG over [[VersionedTable]] directories — the
@@ -762,19 +763,15 @@ class GraftRowLevelOperation(
         new Scan with Batch {
           override def readSchema(): StructType = reportAs
           override def toBatch: Batch = this
-          private lazy val columnarOk: Boolean =
-            GraftVectorization.scanColumnar(table, Some(basis), required, kept)
           // header-resolved total (exact on count-line manifests) — the
           // description must not re-introduce the O(files) layout memo
           private lazy val totalFiles: String =
             VersionedTable.snapshotFileCountFast(table, Some(basis))
               .map(_.toString).getOrElse("?")
           override def description(): String =
-            s"graft-rowlevel-scan $table@v$basis files=${kept.size}/$totalFiles " +
-              s"vectorized=$columnarOk"
+            s"graft-rowlevel-scan $table@v$basis files=${kept.size}/$totalFiles"
           override def planInputPartitions(): Array[InputPartition] =
-            kept.map(f =>
-              GraftCatalogPartition.of(table, Seq(f), columnarOk): InputPartition).toArray
+            kept.map(f => GraftCatalogPartition.of(table, Seq(f)): InputPartition).toArray
           // the candidates are replaced whole, so the rewrite reads every
           // row of each: no row-group filter, no runtime pruning
           override def createReaderFactory(): PartitionReaderFactory =
@@ -2600,13 +2597,10 @@ class GraftTableScan(
     }
   }
 
-  private lazy val columnarOk: Boolean =
-    GraftVectorization.scanColumnar(table, version, required, kept)
-
   override def description(): String = bucket match {
     case Some((c, n)) =>
       s"graft-catalog-bucketed $table${version.fold("")(v => s"@v$v")} " +
-        s"bucket($n, $c) vectorized=$columnarOk files=${kept.size}"
+        s"bucket($n, $c) files=${kept.size}"
     case None =>
       s"graft-catalog $table${version.fold("")(v => s"@v$v")} " +
         // denominator from header count lines when present (exact, zero
@@ -2615,7 +2609,6 @@ class GraftTableScan(
         s"files=${kept.size}/${
           VersionedTable.snapshotFileCountFast(table, version).getOrElse(
             VersionedTable.select(table, version, Prune.none).size.toLong)} " +
-        s"vectorized=$columnarOk " +
         s"bounds=${prune.bounds.map { case (c, (l, h)) => s"$c∈[$l,$h]" }.mkString(",")}" +
         (if (prune.strBounds.isEmpty) ""
          else s" strBounds=${prune.strBounds.keys.toSeq.sorted.mkString(",")}") +
@@ -2626,7 +2619,7 @@ class GraftTableScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val keep = GraftFilters.inSetsKeep(runtimeSets, strRuntimeSets)
     def part(files: Seq[FileEntry], bucketId: Int) =
-      GraftCatalogPartition.of(table, files, columnarOk, bucketId): InputPartition
+      GraftCatalogPartition.of(table, files, bucketId): InputPartition
     bucket match {
       case Some((_, n)) =>
         (0 until n).map(b => part(perBucket.getOrElse(b, Nil).filter(keep), b)).toArray
@@ -2655,8 +2648,7 @@ class GraftTableScan(
   * key the storage-partitioned join groups on.
   */
 case class GraftCatalogPartition(
-    files: Seq[(String, Seq[String])], columnar: Boolean = false,
-    bucketId: Int = 0)
+    files: Seq[(String, Seq[String])], bucketId: Int = 0)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -2665,16 +2657,18 @@ case class GraftCatalogPartition(
 
 object GraftCatalogPartition {
   private[sources] def of(table: String, files: Seq[FileEntry],
-      columnar: Boolean, bucketId: Int = 0): GraftCatalogPartition = {
+      bucketId: Int = 0): GraftCatalogPartition = {
     def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
     GraftCatalogPartition(
-      files.map(f => (abs(f.path), f.tombstones.map(abs))), columnar, bucketId)
+      files.map(f => (abs(f.path), f.tombstones.map(abs))), bucketId)
   }
 }
 
-/** The reader factory of every catalog scan — flat, bucketed and the
-  * row-level rewrite's candidate scan. Row and columnar readers chain
-  * over the partition's files, one file open at a time.
+/** The reader factory of every catalog scan — flat, bucketed, time
+  * travel and the row-level rewrite's candidate scan. Every partition
+  * reads columnar through [[GraftCatalogVectorReader]], chained over the
+  * partition's files one file open at a time, so Spark never asks for a
+  * row reader.
   */
 class GraftCatalogReaderFactory(
     required: StructType,
@@ -2684,15 +2678,13 @@ class GraftCatalogReaderFactory(
     rowFilters: Map[String,
       Option[org.apache.parquet.filter2.predicate.FilterPredicate]] = Map.empty)
     extends PartitionReaderFactory {
-  private def part(p: InputPartition) = p.asInstanceOf[GraftCatalogPartition]
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    GraftCatalogReaderFactory.chain(part(partition).files)(
-      new GraftCatalogReader(_, _, required))
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    part(partition).columnar
+    throw new UnsupportedOperationException("graft catalog scans read columnar only")
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    GraftCatalogReaderFactory.chain(part(partition).files) { (f, tombs) =>
+    GraftCatalogReaderFactory.chain(
+        partition.asInstanceOf[GraftCatalogPartition].files) { (f, tombs) =>
       new GraftCatalogVectorReader(f, required, tombs,
         GraftCatalogReaderFactory.filterFor(rowFilters, f))
     }
@@ -2726,108 +2718,116 @@ object GraftCatalogReaderFactory {
     }
 }
 
-/** Membership structure for a tombstone file's doomed keys. The dominant
-  * integral/floating/boolean case is PRIMITIVE-SPECIALIZED
-  * ([[LongDoomedKeys]]): every key normalizes to a long bit pattern and
-  * membership is a binary search over one sorted `long[]` — 8 flat bytes
-  * per key, no per-key object headers, no GC pressure, so even a
-  * maximum-size tombstone (see [[VersionedTable.MorMaxDeleteKeys]]) costs
-  * a reader task tens of megabytes, not gigabytes of boxed objects.
-  * String keys keep a hash set ([[StringDoomedKeys]]) — they are
-  * variable-width by nature and bounded by the same delete-size gate.
+/** Membership structure for a tombstone file's doomed keys, under the
+  * equality of [[VersionedTable.read]]'s left-anti join: a row is doomed
+  * iff that join drops it. Integral, floating, boolean and decimal keys
+  * are PRIMITIVE-SPECIALIZED ([[LongDoomedKeys]]): every key normalizes
+  * to a long and membership is a binary search over one sorted `long[]`
+  * — 8 flat bytes per key, no per-key object headers, no GC pressure, so
+  * even a maximum-size tombstone (see [[VersionedTable.MorMaxDeleteKeys]])
+  * costs a reader task tens of megabytes, not gigabytes of boxed
+  * objects. STRING and BINARY keys keep a hash set of their raw bytes
+  * ([[StringDoomedKeys]]) — they are variable-width by nature and
+  * bounded by the same delete-size gate.
   */
 private[sources] sealed trait DoomedKeys {
   def size: Int
-  /** Boxed-probe membership — the row (Group API) reader's path. */
-  def contains(v: Any): Boolean
+  /** The row probe of a batch vector of type `vt` holding key column
+    * `name`: picked from the keys' family and the vector's type, so the
+    * compare happens at the snapshot type, never the file's physical
+    * one. A type the keys cannot compare with fails loudly.
+    */
+  def probe(name: String, vt: DataType): (ColumnVector, Int) => Boolean
 }
 
 private[sources] object DoomedKeys {
-  // the normalization family a LongDoomedKeys was built from; probes of a
-  // different family never match (a double's bit pattern must not doom a
-  // long key). INT32 and INT64 share ONE family: they are value-equal
-  // integers, and a TYPE-WIDENED column legitimately mixes INT32 data
-  // files with an INT64 tombstone — the delete must doom both.
+  // the normalization family a LongDoomedKeys was built from. INT32 and
+  // INT64 share ONE family: they are value-equal integers, and a
+  // TYPE-WIDENED column legitimately mixes INT32 data files with an
+  // INT64 tombstone — the delete must doom both. FLOAT and DOUBLE share
+  // one the same way: a float widens to the double exactly, which is how
+  // the join compares a widened column.
   final val KindIntegral = 0
-  final val KindDouble = 2
-  final val KindFloat = 3
-  final val KindBool = 4
+  final val KindFloating = 1
+  final val KindBool = 2
+  final val KindDecimal = 3
+
+  /** A double's key bits under Spark's join-key normalization: -0.0
+    * equals 0.0, and every NaN equals every NaN (`doubleToLongBits`
+    * canonicalizes NaN).
+    */
+  def doubleBits(d: Double): Long =
+    if (d == 0.0) 0L else java.lang.Double.doubleToLongBits(d)
 }
 
-/** Sorted-long-bits membership. Doubles/floats normalize through their
-  * IEEE bit patterns (`doubleToLongBits` canonicalizes NaN), matching the
-  * equality `java.lang.Double.equals` gave the old boxed representation
-  * exactly: NaN == NaN, -0.0 != 0.0.
+/** Sorted-long membership: integral values, normalized double bits
+  * ([[DoomedKeys.doubleBits]]), booleans as 0/1, and decimals as their
+  * unscaled value at `scale`.
   */
 private[sources] final class LongDoomedKeys(
-    val kind: Int, sorted: Array[Long]) extends DoomedKeys {
+    val kind: Int, sorted: Array[Long], scale: Int = 0) extends DoomedKeys {
   import DoomedKeys._
   override def size: Int = sorted.length
   def containsBits(v: Long): Boolean =
     java.util.Arrays.binarySearch(sorted, v) >= 0
-  override def contains(v: Any): Boolean = v match {
-    case l: java.lang.Long =>
-      kind == KindIntegral && containsBits(l.longValue)
-    case i: java.lang.Integer =>
-      kind == KindIntegral && containsBits(i.longValue)
-    case d: java.lang.Double =>
-      kind == KindDouble &&
-        containsBits(java.lang.Double.doubleToLongBits(d.doubleValue))
-    case f: java.lang.Float =>
-      kind == KindFloat &&
-        containsBits(java.lang.Float.floatToIntBits(f.floatValue).toLong)
-    case b: java.lang.Boolean =>
-      kind == KindBool && containsBits(if (b.booleanValue) 1L else 0L)
-    case _ => false
-  }
+  override def probe(name: String, vt: DataType): (ColumnVector, Int) => Boolean =
+    (kind, vt) match {
+      case (KindIntegral, LongType | TimestampType | TimestampNTZType) =>
+        (v, i) => containsBits(v.getLong(i))
+      case (KindIntegral, IntegerType | DateType) =>
+        (v, i) => containsBits(v.getInt(i).toLong)
+      case (KindIntegral, ShortType) => (v, i) => containsBits(v.getShort(i).toLong)
+      case (KindIntegral, ByteType)  => (v, i) => containsBits(v.getByte(i).toLong)
+      case (KindFloating, DoubleType) =>
+        (v, i) => containsBits(doubleBits(v.getDouble(i)))
+      case (KindFloating, FloatType) =>
+        (v, i) => containsBits(doubleBits(v.getFloat(i).toDouble))
+      case (KindBool, BooleanType) =>
+        (v, i) => containsBits(if (v.getBoolean(i)) 1L else 0L)
+      case (KindDecimal, d: DecimalType) if d.scale == scale && d.precision <= 18 =>
+        (v, i) => containsBits(v.getDecimal(i, d.precision, d.scale).toUnscaledLong)
+      case (KindDecimal, d: DecimalType) if d.scale == scale =>
+        // widened past 18 digits: an unscaled value outside a long is no key
+        (v, i) => {
+          val u = v.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.unscaledValue
+          u.bitLength < 64 && containsBits(u.longValue)
+        }
+      case _ => throw new UnsupportedOperationException(
+        s"graft tombstone keys of kind $kind (scale $scale) do not compare " +
+          s"with $vt values (column $name)")
+    }
 }
 
-/** String-key membership: UTF8String hash set, so the vectorized probe
-  * (`getUTF8String`, a pointer into the batch buffer) needs no per-row
-  * conversion or allocation.
+/** STRING and BINARY key membership: a hash set of the keys' raw bytes
+  * as UTF8String (bytewise equality, nothing decoded), so the STRING
+  * probe (`getUTF8String`, a pointer into the batch buffer) needs no
+  * per-row conversion.
   */
 private[sources] final class StringDoomedKeys(
     set: java.util.HashSet[UTF8String]) extends DoomedKeys {
   override def size: Int = set.size
   def containsUtf8(u: UTF8String): Boolean = set.contains(u)
-  override def contains(v: Any): Boolean = v match {
-    case s: String => set.contains(UTF8String.fromString(s))
-    case u: UTF8String => set.contains(u)
-    case _ => false
-  }
+  override def probe(name: String, vt: DataType): (ColumnVector, Int) => Boolean =
+    vt match {
+      case StringType => (v, i) => containsUtf8(v.getUTF8String(i))
+      case BinaryType => (v, i) => containsUtf8(UTF8String.fromBytes(v.getBinary(i)))
+      case _ => throw new UnsupportedOperationException(
+        s"graft byte-string tombstone keys do not compare with $vt values (column $name)")
+    }
 }
 
-/** Tombstone key handling shared by the row and vectorized readers: a
-  * tombstone parquet file holds ONE key column of doomed values (written
-  * by [[VersionedTable.deleteWhere]]); [[load]] decodes it into a
-  * [[DoomedKeys]] membership structure — primitive-specialized for
-  * integral/floating/boolean keys, a hash set only for strings.
-  * [[vectorizable]] is the planning-time gate: the columnar path can
-  * apply a tombstone iff its key column is a primitive the extractors
-  * decode.
+/** Tombstone key loading: a tombstone parquet file holds ONE key column
+  * of doomed values (written by [[VersionedTable.deleteWhere]]); [[load]]
+  * decodes it into a [[DoomedKeys]] membership structure whose family
+  * follows the key column's parquet type — primitive-specialized for
+  * integral, floating, boolean and long-backed decimal keys, a raw-bytes
+  * hash set for STRING and BINARY ones.
   */
 private[sources] object TombstoneKeys {
-  import org.apache.parquet.example.data.Group
   import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
   import org.apache.parquet.hadoop.example.GroupReadSupport
   import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  private[sources] def primitive(
-      g: Group, name: String, t: org.apache.parquet.schema.Type): Any = {
-    val p = t.asPrimitiveType().getPrimitiveTypeName
-    p match {
-      case INT64   => g.getLong(name, 0)
-      case INT32   => g.getInteger(name, 0)
-      case DOUBLE  => g.getDouble(name, 0)
-      case FLOAT   => g.getFloat(name, 0)
-      case BOOLEAN => g.getBoolean(name, 0)
-      case BINARY  => g.getString(name, 0)
-      case other   => throw new UnsupportedOperationException(
-        s"graft tombstone reader does not decode $other (column $name)")
-    }
-  }
-
   // Per-JVM (= per-EXECUTOR) key-set cache: tombstone files are immutable
   // once published, yet every reader task of every query re-decoded and
   // re-sorted the same key file — at 32 tasks/executor that is 32
@@ -2891,52 +2891,49 @@ private[sources] object TombstoneKeys {
     paths.map(tf => cached(tf)(loadOne(tf))).filter(_._1 != null)
 
   private def loadOne(tf: String): (String, DoomedKeys) = {
-      val r = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(tf)).build()
-      var name: String = null
-      var prim: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName = null
+    import DoomedKeys._
+    val r = ParquetReader
+      .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(tf)).build()
+    try {
+      var g = r.read()
+      if (g == null) return (null, null)
+      val t = g.getType.getType(0).asPrimitiveType()
+      val scale = t.getLogicalTypeAnnotation match {
+        case d: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+          Some(d.getScale)
+        case _ => None
+      }
+      val kind = (t.getPrimitiveTypeName, scale) match {
+        case (INT32 | INT64, None)    => KindIntegral
+        case (INT32 | INT64, Some(_)) => KindDecimal
+        case (FLOAT | DOUBLE, _)      => KindFloating
+        case (BOOLEAN, _)             => KindBool
+        case (BINARY, None)           => -1 // raw bytes
+        case _ => throw new UnsupportedOperationException(
+          s"graft tombstone reader does not decode $t (column ${t.getName})")
+      }
       val bits = new scala.collection.mutable.ArrayBuilder.ofLong
-      var strSet: java.util.HashSet[UTF8String] = null
-      var g: Group = r.read()
+      val bytes = new java.util.HashSet[UTF8String]()
       while (g != null) {
-        if (name == null) {
-          name = g.getType.getFieldName(0)
-          prim = g.getType.getType(0).asPrimitiveType().getPrimitiveTypeName
-          if (prim == BINARY) strSet = new java.util.HashSet[UTF8String]()
-        }
-        if (g.getFieldRepetitionCount(0) > 0) prim match {
-          case INT64   => bits += g.getLong(name, 0)
-          case INT32   => bits += g.getInteger(name, 0).toLong
-          case DOUBLE  =>
-            bits += java.lang.Double.doubleToLongBits(g.getDouble(name, 0))
-          case FLOAT   =>
-            bits += java.lang.Float.floatToIntBits(g.getFloat(name, 0)).toLong
-          case BOOLEAN => bits += (if (g.getBoolean(name, 0)) 1L else 0L)
-          case BINARY  =>
-            strSet.add(UTF8String.fromString(g.getString(name, 0))); ()
-          case other   => throw new UnsupportedOperationException(
-            s"graft tombstone reader does not decode $other (column $name)")
+        if (g.getFieldRepetitionCount(0) > 0) t.getPrimitiveTypeName match {
+          case INT64   => bits += g.getLong(0, 0)
+          case INT32   => bits += g.getInteger(0, 0).toLong
+          case DOUBLE  => bits += doubleBits(g.getDouble(0, 0))
+          case FLOAT   => bits += doubleBits(g.getFloat(0, 0).toDouble)
+          case BOOLEAN => bits += (if (g.getBoolean(0, 0)) 1L else 0L)
+          case _       => bytes.add(UTF8String.fromBytes(g.getBinary(0, 0).getBytes)); ()
         }
         g = r.read()
       }
-      r.close()
-      val keys: DoomedKeys =
-        if (name == null) null
-        else if (prim == BINARY) new StringDoomedKeys(strSet)
+      val keys =
+        if (kind < 0) new StringDoomedKeys(bytes)
         else {
           val arr = bits.result()
           java.util.Arrays.sort(arr)
-          import DoomedKeys._
-          val kind = prim match {
-            case INT64 | INT32 => KindIntegral // widened columns mix both
-            case DOUBLE        => KindDouble
-            case FLOAT         => KindFloat
-            case BOOLEAN       => KindBool
-            case _             => KindIntegral // unreachable: BINARY above
-          }
-          new LongDoomedKeys(kind, arr)
+          new LongDoomedKeys(kind, arr, scale.getOrElse(0))
         }
-      (name, keys)
+      (t.getName, keys)
+    } finally r.close()
   }
 
   /** The (immutable once published) parquet schema of `path`. */
@@ -2950,23 +2947,10 @@ private[sources] object TombstoneKeys {
       rd.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
     } finally rd.close()
   }
-
-  // one footer read per tombstone file per JVM — they're immutable
-  private val keyOkCache = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-  def vectorizable(path: String): Boolean =
-    keyOkCache.computeIfAbsent(path, { _ =>
-      val fields = fileFields(path)
-      fields.size == 1 && fields.head.isPrimitive && {
-        fields.head.asPrimitiveType().getPrimitiveTypeName match {
-          case INT64 | INT32 | DOUBLE | FLOAT | BOOLEAN | BINARY => true
-          case _ => false
-        }
-      }
-    })
 }
 
-/** POSITIONAL deletion-vector handling shared by the row and vectorized
-  * readers: a `posdel-*.parquet` tombstone holds (_file, _pos) pairs
+/** POSITIONAL deletion-vector handling for the catalog reader: a
+  * `posdel-*.parquet` tombstone holds (_file, _pos) pairs
   * ([[VersionedTable.deleteWherePositional]]); [[forFile]] serves the
   * BITMAP of doomed row ordinals for one data file. Vectors are
   * per-executor cached exactly like equality key sets, but the memory
@@ -3479,153 +3463,21 @@ private[sources] object GraftRowGroupFilter {
     }
 }
 
-/** The planning-time vectorization rule of the catalog's scans. */
-private[sources] object GraftVectorization {
-  /** VECTORIZED scan eligibility — Spark forbids mixing row-based and
-    * columnar partitions in one scan, so the decision is per-SCAN: every
-    * planned file must be MOR-vectorizable ([[morOk]]) and every commit's
-    * files must serve ALL required columns ([[schemaCompatible]]; a gap
-    * the vectorized reader cannot serve decodes through the row reader
-    * instead). Checked from ONE representative footer per commit
-    * directory — O(commits) driver reads, the
-    * [[VersionedTable.snapshotSchema]] discipline.
-    */
-  def scanColumnar(table: String, version: Option[Long],
-      required: StructType, files: Seq[FileEntry]): Boolean =
-    required.nonEmpty &&
-      files.forall(e => morOk(required,
-        e.tombstones.map(java.nio.file.Paths.get(table, _).toString))) && {
-        val spark = SparkSession.active
-        files.map(_.path).groupBy(_.split('/')(1)).valuesIterator.forall { ps =>
-          schemaCompatible(required,
-            VersionedTable.commitSchemaHinted(spark, table, version, ps.min))
-        }
-      }
-
-  private val copyable: Set[DataType] = Set(
-    LongType, IntegerType, DoubleType, FloatType, BooleanType, StringType,
-    BinaryType, TimestampType, TimestampNTZType, DateType,
-    org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
-
-  /** `spark.graft.nestedMorCopy=false` reverts [[copyOk]] to the
-    * flat-only gate: nested columns under tombstones take the row decoder,
-    * which NestedTableSpec uses as the reference for the columnar copy. Read
-    * from the ACTIVE SESSION's conf at each planning-time call — a JVM-global
-    * here could flip between a plan's vectorized= report and its execution,
-    * across every session in the process; a session conf is scoped to the
-    * caller's own session and consistent per plan compilation. No hot-path
-    * cost (planning only; executors see no active session and take the
-    * default).
-    */
-  private def nestedMorCopyEnabled: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .forall(!_.conf.get("spark.graft.nestedMorCopy", "true")
-        .equalsIgnoreCase("false"))
-
-  /** ARRAY/STRUCT/MAP join the surviving-row copy recursively: the copy
-    * appends through the WritableColumnVector child-vector API, so any
-    * nesting of supported leaf types rides the columnar MOR path.
-    */
-  private def copyOk(dt: DataType): Boolean = copyable(dt) ||
-    dt.isInstanceOf[org.apache.spark.sql.types.DecimalType] ||
-    (nestedMorCopyEnabled && (dt match {
-      case org.apache.spark.sql.types.ArrayType(et, _) => copyOk(et)
-      case org.apache.spark.sql.types.MapType(kt, vt, _) =>
-        copyOk(kt) && copyOk(vt)
-      case st: StructType => st.fields.forall(f => copyOk(f.dataType))
-      case _ => false
-    }))
-
-  /** May a file with these tombstones be served columnar? Tombstone-free
-    * always (no copy, batches pass straight through); tombstoned files
-    * need a projection the surviving-row copy supports, and EQUALITY
-    * tombstones additionally need key footers the extractors decode.
-    * POSITIONAL vectors are always columnar-applicable — they probe a
-    * bitmap by row ordinal, never a key column.
-    */
-  private def morOk(required: StructType, tombstonesAbs: Seq[String]): Boolean =
-    tombstonesAbs.isEmpty ||
-      (required.fields.forall(f => copyOk(f.dataType)) &&
-        tombstonesAbs.filterNot(VersionedTable.isPosDeleteFile)
-          .forall(TombstoneKeys.vectorizable))
-
-  /** Does the commit's type SERVE the required type? Equal, or — for
-    * nested types — recursive COMPATIBILITY, BOTH directions of schema
-    * drift: a required struct PRUNED to a subset of the commit's fields
-    * is served by parquet's schema clipping (the mechanism Spark's own
-    * nested-schema-pruned scans use), and a required struct field
-    * ABSENT from the commit (nested ADD COLUMN evolution) is served by
-    * the reader's missing-column null-fill — the same machinery that
-    * serves a wholly absent top-level column as a constant null vector.
-    * Leaf types inside nested stay exact: widening promotions are
-    * top-level-only.
-    */
-  private def servesNested(g: DataType, f: DataType): Boolean =
-    (g == f) || ((g, f) match {
-      case (ga: org.apache.spark.sql.types.ArrayType,
-            fa: org.apache.spark.sql.types.ArrayType) =>
-        servesNested(ga.elementType, fa.elementType)
-      case (gm: org.apache.spark.sql.types.MapType,
-            fm: org.apache.spark.sql.types.MapType) =>
-        servesNested(gm.keyType, fm.keyType) &&
-          servesNested(gm.valueType, fm.valueType)
-      case (gs: StructType, fs: StructType) =>
-        fs.fields.forall(ff => gs.fields.find(_.name == ff.name)
-          .forall(gf => servesNested(gf.dataType, ff.dataType)))
-      case _ => false
-    })
-
-  /** Does the commit's footer serve every required column? Exact types,
-    * relaxed by the LOSSLESS widening promotions Spark 4's vectorized
-    * parquet reader performs natively inside the batch load (INT32 under
-    * a BIGINT snapshot column, FLOAT under DOUBLE): a widened table stays
-    * columnar — the explicit-schema initialize declares the wide type and
-    * the reader's updaters promote during decode, so no row-decoder
-    * fallback and no compaction tax.
-    */
-  def schemaCompatible(
-      required: StructType,
-      commitSchema: StructType): Boolean =
-    required.fields.forall(f =>
-      commitSchema.fields.find(_.name == f.name) match {
-        // an ADD COLUMN evolution gap: the vectorized reader serves the
-        // absent column as a constant null vector (and the row decoder
-        // null-fills identically) — no reason to lose the columnar path
-        case None => true
-        case Some(g) =>
-          servesNested(g.dataType, f.dataType) ||
-            (g.dataType == IntegerType && f.dataType == LongType) ||
-            (g.dataType == FloatType && f.dataType == DoubleType) ||
-            ((g.dataType, f.dataType) match {
-              // same-scale decimal precision increase (the widening the
-              // vectorized reader promotes natively)
-              case (a: org.apache.spark.sql.types.DecimalType,
-                b: org.apache.spark.sql.types.DecimalType) =>
-                a.scale == b.scale && a.precision <= b.precision
-              case _ => false
-            })
-      })
-}
-
-/** VECTORIZED partition reader: Spark's own columnar parquet decoder
+/** The catalog's partition reader: Spark's own columnar parquet decoder
   * (`VectorizedParquetRecordReader`) serving ColumnarBatches straight
-  * into the scan — the constant-factor row-decode tax of the Group API
-  * disappears. Tombstone-free files pass batches through untouched;
-  * under MOR tombstones the doomed-key sets load once per file (exactly
-  * like the row decoder) and each batch is compacted to its surviving
-  * rows — the key column rides the projection when the query didn't ask
-  * for it and is dropped from the output batch. Rebase modes are
-  * CORRECTED/UTC on both timestamp96 and datetime, matching the row
-  * decoder's plain-arithmetic INT96 conversion, so the paths are
-  * value-identical.
+  * into every catalog scan. Tombstone-free files pass batches through
+  * untouched; under MOR tombstones the doomed-key sets load once per file
+  * and each batch is compacted to its surviving rows — the key column
+  * rides the projection when the query didn't ask for it and is dropped
+  * from the output batch. Rebase modes are CORRECTED/UTC on both
+  * timestamp96 and datetime, Spark's plain proleptic reading.
   */
 class GraftCatalogVectorReader(
-    file: String, required: StructType, tombstones: Seq[String] = Nil,
-    rowFilter: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None)
+    file: String, required: StructType, tombstones: Seq[String],
+    rowFilter: Option[org.apache.parquet.filter2.predicate.FilterPredicate])
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val (posDelFiles, eqDelFiles) =
     tombstones.partition(VersionedTable.isPosDeleteFile)
@@ -3636,8 +3488,7 @@ class GraftCatalogVectorReader(
     PositionKeys.forFile(posDelFiles, VersionedTable.dvKeyOf(file))
 
   // the data file's own columns — read only when EQUALITY tombstones
-  // force the projection/extractor decisions (one footer read, same as
-  // the row reader's open)
+  // force the projection decisions (one footer read)
   private val fileFields: Seq[org.apache.parquet.schema.Type] =
     if (eqDelFiles.isEmpty) Nil else TombstoneKeys.fileFields(file)
 
@@ -3647,47 +3498,18 @@ class GraftCatalogVectorReader(
     TombstoneKeys.load(eqDelFiles)
       .filter { case (name, _) => fileFields.exists(_.getName == name) }
 
-  // key columns the query didn't project — appended to the read, never
-  // copied to the output batch
-  private val extraKeyCols: Seq[String] =
-    doomed.map(_._1).distinct.filterNot(required.fieldNames.contains)
-
-  // an extra (unprojected) tombstone-key column joins the read in its
-  // SPARK rendering of the file's physical type (annotated temporals
-  // included); a column outside this map drops the row-group filter for
-  // this file — a pure de-optimization
-  private def extraField(name: String): Option[StructField] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    fileFields.find(_.getName == name).flatMap { t =>
-      val p = t.asPrimitiveType()
-      val dt = (p.getPrimitiveTypeName, Option(p.getLogicalTypeAnnotation)) match {
-        case (PrimitiveTypeName.INT64, None)   => Some(LongType)
-        case (PrimitiveTypeName.INT32, None)   => Some(IntegerType)
-        case (PrimitiveTypeName.INT32,
-          Some(_: LogicalTypeAnnotation.DateLogicalTypeAnnotation)) =>
-          Some(DateType)
-        case (PrimitiveTypeName.INT64,
-          Some(ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation))
-          if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-          Some(if (ts.isAdjustedToUTC) TimestampType else TimestampNTZType)
-        case (PrimitiveTypeName.DOUBLE, None)  => Some(DoubleType)
-        case (PrimitiveTypeName.FLOAT, None)   => Some(FloatType)
-        case (PrimitiveTypeName.BOOLEAN, None) => Some(BooleanType)
-        case (PrimitiveTypeName.BINARY, _)     => Some(StringType)
-        case _                                 => None
-      }
-      dt.map(d => StructField(name, d, nullable = true))
-    }
-  }
-
-  private val extras: Seq[Option[StructField]] = extraKeyCols.map(extraField)
   // the schema the batch vectors are DECLARED in: required fields keep
   // their (possibly WIDENED) snapshot types — Spark 4's vectorized
-  // parquet reader promotes INT32→LONG and FLOAT→DOUBLE natively inside
-  // the batch load, so a widened table stays columnar — plus any
-  // unprojected tombstone-key columns in their file rendering
-  private val readStruct = StructType(required.fields ++ extras.flatten)
+  // parquet reader promotes INT32→LONG, FLOAT→DOUBLE and decimal
+  // precision natively inside the batch load — plus any tombstone-key
+  // column the query didn't project, in Spark's own rendering of the
+  // file's parquet type, appended to the read and never copied out
+  private val readStruct = StructType(required.fields ++
+    doomed.map(_._1).distinct.filterNot(required.fieldNames.contains).map { name =>
+      val t = fileFields.find(_.getName == name).get
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
+        .convert(new org.apache.parquet.schema.MessageType("key", t)).head
+    })
 
   private val reader =
     new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
@@ -3710,141 +3532,81 @@ class GraftCatalogVectorReader(
     // replayed on the footer here to pre-compute each kept group's
     // starting ordinal. Same parquet-mr evaluator both sides → the kept
     // sets cannot diverge, and `basePos` stays exact while groups skip.
-    val effFilter = rowFilter
-    if (extras.forall(_.isDefined)) {
-      // the split-based initialize declares the REQUESTED schema
-      // explicitly (the name-list overload would infer narrow types from
-      // the footer, breaking widened reads) and honors an optional
-      // parquet FilterPredicate in the task conf: ParquetFileReader then
-      // drops the row groups whose stats/dictionary/bloom exclude it
-      // BEFORE any page is decoded. Record-level and column-index
-      // filtering stay OFF so the page stream matches
-      // getFilteredRecordCount exactly — this path skips whole row
-      // groups and nothing finer.
-      import org.apache.spark.sql.internal.SQLConf
-      val conf = new org.apache.hadoop.conf.Configuration()
-      conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
-      conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, false)
-      conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
-      conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
-      conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
-      conf.set("org.apache.spark.sql.parquet.row.requested_schema",
-        readStruct.json)
-      conf.set("parquet.read.support.class",
-        "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
-      effFilter.foreach { pred =>
-        org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, pred)
-        conf.setBoolean("parquet.filter.record-level.enabled", false)
-        conf.setBoolean("parquet.filter.columnindex.enabled", false)
-        if (posBitmaps.nonEmpty) {
-          // pin the reader's group filtering to the STATISTICS level so
-          // the external ordinal replay below sees the identical kept set
-          conf.setBoolean("parquet.filter.dictionary.enabled", false)
-          conf.setBoolean("parquet.filter.bloom.enabled", false)
-        }
+    //
+    // The split-based initialize declares the REQUESTED schema
+    // explicitly (the name-list overload would infer narrow types from
+    // the footer, breaking widened reads) and honors an optional
+    // parquet FilterPredicate in the task conf: ParquetFileReader then
+    // drops the row groups whose stats/dictionary/bloom exclude it
+    // BEFORE any page is decoded. Record-level and column-index
+    // filtering stay OFF so the page stream matches
+    // getFilteredRecordCount exactly — this path skips whole row
+    // groups and nothing finer.
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, false)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
+    conf.set("org.apache.spark.sql.parquet.row.requested_schema",
+      readStruct.json)
+    conf.set("parquet.read.support.class",
+      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+    rowFilter.foreach { pred =>
+      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, pred)
+      conf.setBoolean("parquet.filter.record-level.enabled", false)
+      conf.setBoolean("parquet.filter.columnindex.enabled", false)
+      if (posBitmaps.nonEmpty) {
+        // pin the reader's group filtering to the STATISTICS level so
+        // the external ordinal replay below sees the identical kept set
+        conf.setBoolean("parquet.filter.dictionary.enabled", false)
+        conf.setBoolean("parquet.filter.bloom.enabled", false)
       }
-      val p = new org.apache.hadoop.fs.Path(file)
-      val len = p.getFileSystem(conf).getFileStatus(p).getLen
-      if (posBitmaps.nonEmpty) effFilter.foreach { pred =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try {
-          val blocks = rd.getFooter.getBlocks
-          val kept = org.apache.parquet.filter2.compat.RowGroupFilter
-            .filterRowGroups(
-              org.apache.parquet.filter2.compat.FilterCompat.get(pred),
-              blocks, rd.getFooter.getFileMetaData.getSchema)
-          val keptPos = new java.util.HashSet[java.lang.Long]()
-          kept.forEach(b => { keptPos.add(b.getStartingPos); () })
-          val starts = Array.newBuilder[Long]
-          val rows = Array.newBuilder[Long]
-          var ordinal = 0L
-          blocks.forEach { b =>
-            if (keptPos.contains(b.getStartingPos)) {
-              starts += ordinal; rows += b.getRowCount
-            }
-            ordinal += b.getRowCount
-          }
-          rgStarts = starts.result(); rgRows = rows.result()
-        } finally rd.close()
-      }
-      val split =
-        new org.apache.hadoop.mapred.FileSplit(p, 0, len, Array.empty[String])
-      reader.initialize(split,
-        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-          conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-    } else {
-      // an exotic extra-key type: request by name (footer types). This
-      // path cannot serve WIDENED columns (the vectors would come out
-      // narrow) — assert the combination away rather than misread.
-      val widened = required.fields.exists { f =>
-        fileFields.find(_.getName == f.name).exists { ff =>
-          val p = ff.asPrimitiveType().getPrimitiveTypeName
-          (f.dataType == LongType && p == INT32) ||
-            (f.dataType == DoubleType && p == FLOAT)
-        }
-      }
-      require(!widened,
-        s"columnar read of $file: a widened column needs the explicit-" +
-          s"schema read, but tombstone key column(s) $extraKeyCols have " +
-          "no Spark rendering — compact the table")
-      reader.initialize(
-        file,
-        java.util.Arrays.asList((required.fieldNames.toSeq ++ extraKeyCols): _*))
     }
+    val p = new org.apache.hadoop.fs.Path(file)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    if (posBitmaps.nonEmpty) rowFilter.foreach { pred =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try {
+        val blocks = rd.getFooter.getBlocks
+        val kept = org.apache.parquet.filter2.compat.RowGroupFilter
+          .filterRowGroups(
+            org.apache.parquet.filter2.compat.FilterCompat.get(pred),
+            blocks, rd.getFooter.getFileMetaData.getSchema)
+        val keptPos = new java.util.HashSet[java.lang.Long]()
+        kept.forEach(b => { keptPos.add(b.getStartingPos); () })
+        val starts = Array.newBuilder[Long]
+        val rows = Array.newBuilder[Long]
+        var ordinal = 0L
+        blocks.forEach { b =>
+          if (keptPos.contains(b.getStartingPos)) {
+            starts += ordinal; rows += b.getRowCount
+          }
+          ordinal += b.getRowCount
+        }
+        rgStarts = starts.result(); rgRows = rows.result()
+      } finally rd.close()
+    }
+    val split =
+      new org.apache.hadoop.mapred.FileSplit(p, 0, len, Array.empty[String])
+    reader.initialize(split,
+      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
   }
   reader.initBatch(new StructType(), InternalRow.empty)
   reader.enableReturningBatches()
 
-  // per-tombstone (batch column index, primitive-specialized row probe):
-  // the probe reads the vector's native value and binary-searches the
-  // sorted long-bits array (or hashes the UTF8String view) — no boxing,
-  // no per-row allocation. SELECTION is on (file primitive, BATCH vector
-  // type): a widened column's vector is wide (LongType over an INT32
-  // file, DoubleType over FLOAT) while tombstone-family semantics follow
-  // the FILE primitive, exactly matching the row decoder's
-  // `TombstoneKeys.primitive` dispatch. A probe whose DATA type family
-  // differs from the tombstone's key family never matches, exactly like
-  // the old boxed equality (a boxed Integer never equalled a boxed Long).
+  // per-tombstone (batch column index, row probe): the probe reads the
+  // vector's native value and binary-searches the sorted long array (or
+  // hashes the UTF8String view) — no boxing. It is picked from the keys'
+  // family and the BATCH vector's type ([[DoomedKeys.probe]]), so a
+  // widened column compares at its snapshot type.
   private val keyProbes: Seq[(Int, (ColumnVector, Int) => Boolean)] =
     doomed.map { case (name, keys) =>
-      val idx = required.fieldNames.indexOf(name) match {
-        case -1 => required.fields.length + extraKeyCols.indexOf(name)
-        case j  => j
-      }
-      val prim = fileFields.find(_.getName == name).get
-        .asPrimitiveType().getPrimitiveTypeName
-      val vecType: DataType = readStruct.fields
-        .find(_.name == name).map(_.dataType).getOrElse(IntegerType)
-      import DoomedKeys._
-      val probe: (ColumnVector, Int) => Boolean = (prim, vecType, keys) match {
-        case (INT64, LongType | TimestampType | TimestampNTZType,
-          k: LongDoomedKeys) if k.kind == KindIntegral =>
-          (v, i) => k.containsBits(v.getLong(i))
-        case (INT32, LongType, k: LongDoomedKeys) if k.kind == KindIntegral =>
-          (v, i) => k.containsBits(v.getLong(i)) // widened: wide vector, same values
-        case (INT32, IntegerType | DateType, k: LongDoomedKeys)
-          if k.kind == KindIntegral =>
-          (v, i) => k.containsBits(v.getInt(i).toLong)
-        case (DOUBLE, DoubleType, k: LongDoomedKeys) if k.kind == KindDouble =>
-          (v, i) => k.containsBits(java.lang.Double.doubleToLongBits(v.getDouble(i)))
-        case (FLOAT, DoubleType, k: LongDoomedKeys) if k.kind == KindFloat =>
-          // widened FLOAT file: the double is the exact float widened, so
-          // the float-bits normalization is lossless — row-path parity
-          (v, i) => k.containsBits(
-            java.lang.Float.floatToIntBits(v.getDouble(i).toFloat).toLong)
-        case (FLOAT, FloatType, k: LongDoomedKeys) if k.kind == KindFloat =>
-          (v, i) => k.containsBits(java.lang.Float.floatToIntBits(v.getFloat(i)).toLong)
-        case (BOOLEAN, BooleanType, k: LongDoomedKeys) if k.kind == KindBool =>
-          (v, i) => k.containsBits(if (v.getBoolean(i)) 1L else 0L)
-        case (BINARY, StringType, k: StringDoomedKeys) =>
-          (v, i) => k.containsUtf8(v.getUTF8String(i))
-        case (INT64 | INT32 | DOUBLE | FLOAT | BOOLEAN | BINARY, _, _) =>
-          (_, _) => false // family mismatch: dooms nothing
-        case (other, _, _) => throw new UnsupportedOperationException(
-          s"vectorized MOR key extractor: $other (column $name)")
-      }
-      (idx, probe)
+      val idx = readStruct.fieldIndex(name)
+      (idx, keys.probe(name, readStruct(idx).dataType))
     }
 
   // reused output vectors: reset per batch, capacity = the reader's own
@@ -3877,7 +3639,7 @@ class GraftCatalogVectorReader(
 
   private def copyRow(in: ColumnarBatch, r: Int, o: Int): Unit = {
     var c = 0
-    while (c < required.fields.length) {
+    try while (c < required.fields.length) {
       val src = in.column(c)
       val dst = out(c)
       if (src.isNullAt(r)) {
@@ -3926,6 +3688,12 @@ class GraftCatalogVectorReader(
           s"vectorized MOR copy does not support $dt")
       }
       c += 1
+    } catch {
+      // a type the surviving-row copy cannot serve fails loudly, naming
+      // the column it sits in
+      case e: UnsupportedOperationException =>
+        throw new UnsupportedOperationException(
+          s"${e.getMessage} (column ${required.fields(c).name} of $file)", e)
     }
   }
 
@@ -3994,8 +3762,8 @@ class GraftCatalogVectorReader(
   /** Bulk element copy into a child vector: ONE capacity reserve and a
     * primitive-specialized put-loop per array (token/embedding arrays
     * run to hundreds of elements — a per-element append with its
-    * capacity check and DataType dispatch is measurably slower than the
-    * row decoder; this loop is what keeps the columnar path ahead).
+    * capacity check and DataType dispatch is measurably slower than a
+    * bulk put per array).
     * Non-primitive elements fall back to the recursive append.
     */
   private def appendElements(child: OnHeapColumnVector, et: DataType,
@@ -4128,230 +3896,5 @@ class GraftCatalogVectorReader(
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
     if (keyProbes.isEmpty && posBitmaps.isEmpty) reader.resultBatch()
     else outBatch
-  override def close(): Unit = reader.close()
-}
-
-/** Group-API field decoding for [[GraftCatalogReader]]:
-  * primitives plus the three temporal encodings Spark emits — INT64
-  * timestamps (MICROS or MILLIS annotation, adjusted or NTZ: Spark's
-  * internal value is epoch-micros either way), legacy INT96 timestamps
-  * (Julian day + nanos-of-day), and INT32 dates (epoch days).
-  */
-private[sources] object ParquetGroups {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.schema.LogicalTypeAnnotation
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  private def int96ToMicros(b: org.apache.parquet.io.api.Binary): Long = {
-    val bytes = b.getBytes // 12 bytes LE: nanos-of-day (8) + Julian day (4)
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanos = buf.getLong
-    val julian = buf.getInt
-    (julian - 2440588).toLong * 86400000000L + nanos / 1000L
-  }
-
-  private def timestampMicros(g: Group, name: String): Long = {
-    val t = g.getType.getType(name).asPrimitiveType()
-    t.getPrimitiveTypeName match {
-      case INT96 => int96ToMicros(g.getInt96(name, 0))
-      case INT64 =>
-        val v = g.getLong(name, 0)
-        t.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-          case _ => v // MICROS (Spark's default) or unannotated
-        }
-      case other => throw new UnsupportedOperationException(
-        s"timestamp column $name stored as $other")
-    }
-  }
-
-  /** Decode field `f` of `g` to Spark's internal representation; null
-    * when absent. Widened columns decode losslessly from their NARROW
-    * physical form (INT32 file under a BIGINT column, FLOAT under
-    * DOUBLE — the type-widening evolution contract: old files are never
-    * rewritten). Throws (loudly, with the column name) on types outside
-    * the supported set.
-    */
-  def valueOf(g: Group, f: StructField): Any = {
-    if (!g.getType.containsField(f.name) ||
-      g.getFieldRepetitionCount(f.name) == 0) null
-    else nonNull(g, f.name, f.dataType)
-  }
-
-  /** Decode the PRESENT field `name` of `g` as `dt` — the recursive core
-    * of [[valueOf]]. Nested types decode the STANDARD parquet shapes
-    * (3-level lists, key_value maps, plain groups) into Spark's internal
-    * containers ([[org.apache.spark.sql.catalyst.util.GenericArrayData]],
-    * [[org.apache.spark.sql.catalyst.util.ArrayBasedMapData]],
-    * [[GenericInternalRow]]); legacy 2-level lists fail loudly — neither
-    * this engine's writers nor Spark 4's default emit them.
-    */
-  private def nonNull(g: Group, name: String, dt: DataType): Any = dt match {
-    case LongType =>
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      g.getType.getType(name).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 => g.getInteger(name, 0).toLong
-        case _                       => g.getLong(name, 0)
-      }
-    case IntegerType      => g.getInteger(name, 0)
-    case DoubleType =>
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      g.getType.getType(name).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.FLOAT => g.getFloat(name, 0).toDouble
-        case _                       => g.getDouble(name, 0)
-      }
-    case FloatType        => g.getFloat(name, 0)
-    case BooleanType      => g.getBoolean(name, 0)
-    case StringType       => UTF8String.fromString(g.getString(name, 0))
-    case BinaryType       => g.getBinary(name, 0).getBytes
-    case TimestampType    => timestampMicros(g, name)
-    case TimestampNTZType => timestampMicros(g, name)
-    case DateType         => g.getInteger(name, 0)
-    case dt: org.apache.spark.sql.types.DecimalType =>
-      // decode by the FILE's physical form (a widened DECIMAL column
-      // reads INT32/INT64 files under a wider declared precision; the
-      // scale never changes across a widen)
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      val prim = g.getType.getType(name).asPrimitiveType()
-      prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getInteger(name, 0).toLong, dt.precision, dt.scale)
-        case PrimitiveTypeName.INT64 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getLong(name, 0), dt.precision, dt.scale)
-        case PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY |
-          PrimitiveTypeName.BINARY =>
-          val bytes = g.getBinary(name, 0).getBytes
-          org.apache.spark.sql.types.Decimal(
-            new java.math.BigDecimal(
-              new java.math.BigInteger(bytes), dt.scale),
-            dt.precision, dt.scale)
-        case other => throw new UnsupportedOperationException(
-          s"decimal column $name stored as $other")
-      }
-    case at: org.apache.spark.sql.types.ArrayType =>
-      val lg = g.getGroup(name, 0) // the LIST group
-      val inner = lg.getType
-      require(inner.getFieldCount == 1 && !inner.getType(0).isPrimitive,
-        s"list column $name is not a standard 3-level parquet list")
-      val n = lg.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val el = lg.getGroup(0, i) // one repeated "list" group per element
-        val elName = el.getType.getFieldName(0)
-        out(i) =
-          if (el.getFieldRepetitionCount(0) == 0) null
-          else nonNull(el, elName, at.elementType)
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    case st: StructType =>
-      val sg = g.getGroup(name, 0)
-      val vals = new Array[Any](st.fields.length)
-      var i = 0
-      while (i < st.fields.length) {
-        vals(i) = valueOf(sg, st.fields(i)) // absent/evolved fields null-fill
-        i += 1
-      }
-      new GenericInternalRow(vals)
-    case mt: org.apache.spark.sql.types.MapType =>
-      val mg = g.getGroup(name, 0) // the MAP group: repeated key_value
-      val n = mg.getFieldRepetitionCount(0)
-      val keys = new Array[Any](n)
-      val vals = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val kv = mg.getGroup(0, i)
-        val kName = kv.getType.getFieldName(0)
-        val vName = kv.getType.getFieldName(1)
-        keys(i) = nonNull(kv, kName, mt.keyType) // map keys are required
-        vals(i) =
-          if (kv.getFieldRepetitionCount(1) == 0) null
-          else nonNull(kv, vName, mt.valueType)
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-    case dt => throw new UnsupportedOperationException(
-      s"graft Group reader does not decode $dt (column $name)")
-  }
-}
-
-/** Reads one data file with parquet's Group API, applying merge-on-read
-  * tombstones inline: the partition's tombstone files (key-only, small by
-  * construction — they hold doomed KEYS, not rows) load into a hash set
-  * once per partition, and each decoded row is dropped when its key is a
-  * member. This is the per-file form of the anti-join
-  * [[VersionedTable.read]] plans — same semantics, no join, because the
-  * tombstone side is already commit-scoped to exactly this file.
-  *
-  * Performance note, stated honestly: this decoder is ROW-based (one
-  * Group per record), not Spark's vectorized columnar reader — fine for
-  * the interactive SQL front door, but a full-corpus scan should use the
-  * programmatic [[VersionedTable.read]]/[[VersionedTable.readWhere]]
-  * path, which plans ordinary vectorized parquet scans. The catalog's
-  * planning-time wins (zone-map file pruning, manifest-pinned snapshots)
-  * apply to both paths; only the per-row decode differs.
-  */
-class GraftCatalogReader(file: String, tombstones: Seq[String], required: StructType)
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  private def open(f: String) = ParquetReader
-    .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f)).build()
-
-  private val (posDelFiles, eqDelFiles) =
-    tombstones.partition(VersionedTable.isPosDeleteFile)
-
-  // (key column name, doomed key membership) per tombstone file — key
-  // type is whatever deleteWhere keyed on; compare on the decoded
-  // primitive ([[DoomedKeys.contains]] normalizes the box)
-  private val doomed: Seq[(String, DoomedKeys)] =
-    TombstoneKeys.load(eqDelFiles)
-
-  // doomed row-position bitmaps for THIS file (positional vectors); the
-  // Group reader streams the whole file in order, so the running counter
-  // IS the file position
-  private val posBitmaps: Seq[PositionKeys.Bitmap] =
-    PositionKeys.forFile(posDelFiles, VersionedTable.dvKeyOf(file))
-
-  private val reader = open(file)
-  private var current: Group = _
-  private var rowPos = -1L
-
-  override def next(): Boolean = {
-    current = reader.read(); rowPos += 1
-    while (current != null &&
-      (posBitmaps.exists(_.get(rowPos)) || isDoomed(current))) {
-      current = reader.read(); rowPos += 1
-    }
-    current != null
-  }
-
-  private def isDoomed(g: Group): Boolean = doomed.exists { case (name, keys) =>
-    g.getType.containsField(name) && {
-      val i = g.getType.getFieldIndex(name)
-      g.getFieldRepetitionCount(i) > 0 &&
-        keys.contains(TombstoneKeys.primitive(g, name, g.getType.getType(i)))
-    }
-  }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.fields.length)
-    var i = 0
-    while (i < required.fields.length) {
-      vals(i) = ParquetGroups.valueOf(current, required.fields(i)); i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
   override def close(): Unit = reader.close()
 }

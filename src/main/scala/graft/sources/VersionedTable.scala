@@ -2235,9 +2235,9 @@ object VersionedTable {
     * carries the wide type. NO data file is rewritten: the snapshot
     * schema union resolves to the wide type, old INT32/FLOAT files
     * decode losslessly through every read path (Spark's parquet readers
-    * support the promotion natively; the catalog's Group decoder
-    * upcasts; the vectorized simple path declines per commit and falls
-    * back — compaction re-vectorizes), and pinned pre-widening
+    * support the promotion natively, and the catalog's vectorized
+    * reader declares the wide type so they promote inside the batch
+    * load), and pinned pre-widening
     * snapshots keep their narrow schema. SQL surface:
     * `ALTER TABLE t ALTER COLUMN c TYPE BIGINT`.
     */

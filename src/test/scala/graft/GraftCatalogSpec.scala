@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.VersionedTable
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, isnan, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -71,9 +71,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // THE point of position vectors: the scan stays columnar (an equality
     // tombstone on a string-typed key would too, but a position vector
     // never even reads a key column)
-    val desc = q.queryExecution.executedPlan.toString
-    assert(desc.contains("vectorized=true"),
-      s"positional vectors must keep the scan vectorized:\n$desc")
+    SparkTestBase.assertColumnarScan(q, "positional vectors must keep the scan vectorized")
     // selective point lookups stay exact with the row-group filter
     // disabled under the vector (correctness over pruning)
     val one = spark.sql("SELECT v FROM gtest.default.pdv WHERE k = 7")
@@ -305,7 +303,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       .selectExpr("event_id", "ts").collect()
       .map(r => (r.getLong(0), r.get(1).toString)).toSet
     assert(viaCatalog == viaRead,
-      "catalog Group decoder must agree with the vectorized read path")
+      "the catalog scan must agree with VersionedTable.read")
     assert(viaCatalog.exists(_._1 == -1L))
     // v3: appended by a Structured Streaming foreachBatch sink keyed on
     // the batch id; the catalog decoder must take its encoding too
@@ -695,10 +693,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     VersionedTable.commit(
       (1L to 500L).map(k => (k, s"v$k", k * 0.5)).toDF("k", "v", "x"), t, append = false)
     val q1 = spark.sql("SELECT k, v, x FROM gtest.default.vec")
-    assert(q1.queryExecution.executedPlan.toString.contains("vectorized=true"),
+    SparkTestBase.assertColumnarScan(q1,
       "tombstone-free scan must take the columnar path")
     assert(q1.collect().length == 500)
-    // the columnar and row decoders must agree value-for-value
+    // the catalog scan and the programmatic read agree value-for-value
     val viaCatalog = spark.sql("SELECT k, v, x FROM gtest.default.vec")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     val viaApi = VersionedTable.read(spark, t)
@@ -708,13 +706,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     // compacts each batch to its surviving rows in the reader
     VersionedTable.deleteWhere(spark, t, col("k") <= 10L, "k")
     val q2 = spark.sql("SELECT k FROM gtest.default.vec")
-    assert(q2.queryExecution.executedPlan.toString.contains("vectorized=true"),
+    SparkTestBase.assertColumnarScan(q2,
       "tombstoned snapshot must stay vectorized (batch-compacting filter)")
     assert(q2.collect().map(_.getLong(0)).toSet == (11L to 500L).toSet)
     // ...including when the projection does NOT hold the key column
     // (it rides the read and is dropped from the output batch)
     val q2b = spark.sql("SELECT v, x FROM gtest.default.vec")
-    assert(q2b.queryExecution.executedPlan.toString.contains("vectorized=true"))
+    SparkTestBase.assertColumnarScan(q2b)
     assert(q2b.collect().map(_.getString(0)).toSet ==
       (11L to 500L).map(k => s"v$k").toSet)
     // the vectorized MOR decode and the programmatic anti-join agree
@@ -725,14 +723,14 @@ class GraftCatalogSpec extends AnyFunSuite {
     // compaction folds the tombstones in; still columnar
     VersionedTable.compact(spark, t)
     val q3 = spark.sql("SELECT k FROM gtest.default.vec")
-    assert(q3.queryExecution.executedPlan.toString.contains("vectorized=true"),
+    SparkTestBase.assertColumnarScan(q3,
       "compaction must keep vectorized scans")
     assert(q3.collect().map(_.getLong(0)).toSet == (11L to 500L).toSet)
     // an ADD COLUMN evolution gap null-fills COLUMNAR: the vectorized
     // reader serves the absent column as a constant null vector
     spark.sql("ALTER TABLE gtest.default.vec ADD COLUMN extra BIGINT")
     val q4 = spark.sql("SELECT k, extra FROM gtest.default.vec")
-    assert(q4.queryExecution.executedPlan.toString.contains("vectorized=true"),
+    SparkTestBase.assertColumnarScan(q4,
       "schema-gap scans stay columnar (missing-column null vectors)")
     assert(q4.collect().forall(_.isNullAt(1)))
     // projections covered by every commit's files still vectorize
@@ -924,8 +922,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("ALTER TABLE gtest.default.wide_f ALTER COLUMN x TYPE DOUBLE")
     spark.sql("INSERT INTO gtest.default.wide_f VALUES (200, 1e200)")
     val q = spark.sql("SELECT k, x FROM gtest.default.wide_f")
-    assert(q.queryExecution.executedPlan.toString.contains("vectorized=true"),
-      s"widened + tombstoned must stay columnar:\n${q.queryExecution.executedPlan}")
+    SparkTestBase.assertColumnarScan(q, "widened + tombstoned must stay columnar")
     val got = q.collect().map(x => (x.getLong(0), x.getDouble(1))).toSet
     val want = (1L to 100L).filter(_ != 10L)
       .map(i => (i, i.toFloat / 2.0f.toFloat * 1.0)).map {
@@ -948,13 +945,36 @@ class GraftCatalogSpec extends AnyFunSuite {
     // NARROW files too (KindIntegral spans INT32/INT64)
     VersionedTable.deleteWhere(spark, ti, col("k") % 10L === 3L, "k")
     val qi = spark.sql("SELECT k FROM gtest.default.wide_i")
-    assert(qi.queryExecution.executedPlan.toString.contains("vectorized=true"))
+    SparkTestBase.assertColumnarScan(qi)
     assert(qi.collect().map(_.getLong(0)).toSet ==
       ((1L to 50L).filter(_ % 10L != 3L).toSet + 6000000000L))
   }
 
   test("MOR deletes on DECIMAL-carrying tables stay columnar; values exact") {
+    val s = spark; import s.implicits._
     val r = root
+    // one equality rule for every key family: a row is doomed iff
+    // VersionedTable.read's left-anti join drops it — with the key
+    // projected, unprojected, and under count(*), every scan columnar
+    def render(row: org.apache.spark.sql.Row): String = row.toSeq.map {
+      case b: Array[Byte] => b.map(x => f"$x%02x").mkString("0x", "", "")
+      case v => String.valueOf(v)
+    }.mkString("|")
+    def check(name: String, cols: String, all: Seq[String], ks: Seq[String]): Unit =
+      for ((sql, want) <- Seq(
+          s"SELECT $cols FROM gtest.default.$name" -> all,
+          s"SELECT k FROM gtest.default.$name" -> ks,
+          s"SELECT count(*) FROM gtest.default.$name" -> Seq(ks.size.toString))) {
+        val q = spark.sql(sql)
+        SparkTestBase.assertColumnarScan(q, sql)
+        assert(q.collect().map(render).sorted.toSeq == want.sorted, sql)
+      }
+    def sameAsRead(name: String): Unit = {
+      val read = VersionedTable.read(spark, s"$r/default/$name")
+      check(name, read.columns.mkString(", "), read.collect().map(render).toSeq,
+        read.select("k").collect().map(render).toSeq)
+    }
+    // a BIGINT key over a decimal column, then a positional vector on top
     spark.sql(
       "CREATE TABLE gtest.default.decmor (k BIGINT, amt DECIMAL(9, 2))")
     spark.sql(
@@ -962,14 +982,64 @@ class GraftCatalogSpec extends AnyFunSuite {
         "SELECT id, CAST(id + 0.25 AS DECIMAL(9, 2)) FROM range(1, 101)")
     val t = s"$root/default/decmor"
     VersionedTable.deleteWhere(spark, t, col("k") % 10L === 0L, "k")
-    val q = spark.sql("SELECT k, amt FROM gtest.default.decmor")
-    assert(q.queryExecution.executedPlan.toString.contains("vectorized=true"),
-      s"decimal projection under MOR tombstones must stay columnar:\n${
-        q.queryExecution.executedPlan}")
-    val got = q.collect()
+    val got = spark.sql("SELECT k, amt FROM gtest.default.decmor").collect()
       .map(x => (x.getLong(0), x.getDecimal(1).toString)).toSet
     assert(got == (1L to 100L).filter(_ % 10L != 0L)
       .map(i => (i, s"$i.25")).toSet, got.toString)
+    VersionedTable.deleteWherePositional(spark, t, col("k") % 7L === 0L)
+    sameAsRead("decmor")
+    // a positional vector alone: count(*) reads no column at all
+    VersionedTable.commit((1L to 20L).map(k => (k, k * 2)).toDF("k", "v"),
+      s"$r/default/posmor", append = false)
+    VersionedTable.deleteWherePositional(spark, s"$r/default/posmor", col("k") % 3L === 0L)
+    sameAsRead("posmor")
+    // DECIMAL keys on INT32 (9 digits) and INT64 (18 digits): unscaled
+    for ((name, p) <- Seq("deck9" -> 9, "deck18" -> 18)) {
+      spark.sql(s"CREATE TABLE gtest.default.$name (k BIGINT, amt DECIMAL($p, 2))")
+      spark.sql(s"INSERT INTO gtest.default.$name " +
+        s"SELECT id, CAST(id * 0.4 AS DECIMAL($p, 2)) FROM range(1, 21)")
+      VersionedTable.deleteWhere(spark, s"$r/default/$name", col("amt") < 6, "amt")
+      sameAsRead(name)
+    }
+    // BINARY keys compare raw bytes: 0xFE and 0xFF are not UTF-8 and
+    // must not collapse into one replacement character
+    VersionedTable.commit(
+      (1L to 20L).map(k => (k, Array((if (k >= 19) 0xEB + k else 0x60 + k).toByte)))
+        .toDF("k", "b"), s"$r/default/binmor", append = false)
+    VersionedTable.deleteWhere(spark, s"$r/default/binmor",
+      col("b") === lit(Array(0xFE.toByte)) || col("k") <= 5L, "b")
+    sameAsRead("binmor")
+    // FLOAT widened to DOUBLE: a post-widen DOUBLE tombstone dooms a
+    // narrow-file row and a wide one
+    def widened(name: String, preWiden: Boolean): Unit = {
+      spark.sql(s"CREATE TABLE gtest.default.$name (k BIGINT, x FLOAT)")
+      spark.sql(s"INSERT INTO gtest.default.$name " +
+        "SELECT id, CAST(id AS FLOAT) / 2 FROM range(1, 21)")
+      val tw = s"$r/default/$name"
+      if (preWiden) VersionedTable.deleteWhere(spark, tw, col("x") === 2.5f, "x")
+      spark.sql(s"ALTER TABLE gtest.default.$name ALTER COLUMN x TYPE DOUBLE")
+      spark.sql(s"INSERT INTO gtest.default.$name VALUES (100, 7.5), (101, 0.1)")
+      VersionedTable.deleteWhere(spark, tw, col("x") === 7.5, "x")
+    }
+    widened("widepost", preWiden = false)
+    sameAsRead("widepost")
+    // ...and under a pre-widen FLOAT tombstone too. VersionedTable.read
+    // cannot serve this table (it reads a commit's FLOAT and DOUBLE key
+    // files as one frame and fails on the type mismatch), so the rows
+    // are spelled out: k = 5 (2.5) and 15, 100 (7.5) are doomed
+    widened("widemor", preWiden = true)
+    val kept = (1 to 20).filterNot(Set(5, 15)) :+ 101
+    check("widemor", "k, x",
+      kept.map(k => s"$k|${if (k == 101) 0.1 else k / 2.0}"), kept.map(_.toString))
+    // signed zeros and NaNs follow Spark's join-key normalization
+    VersionedTable.commit(
+      Seq(1L -> -0.0, 2L -> 0.0, 3L -> Double.NaN, 4L -> 1.5).toDF("k", "x"),
+      s"$r/default/zeromor", append = false)
+    VersionedTable.deleteWhere(spark, s"$r/default/zeromor",
+      col("x") === 0.0 || isnan(col("x")), "x")
+    sameAsRead("zeromor")
+    assert(spark.sql("SELECT k FROM gtest.default.zeromor").collect()
+      .map(_.getLong(0)).toSeq == Seq(4L))
   }
 
   test("DECIMAL lifecycle: SQL round-trip, same-scale precision widening, scale refusal") {
@@ -1017,12 +1087,9 @@ class GraftCatalogSpec extends AnyFunSuite {
       "both physical generations must decode under the widened schema")
     // widened columns STAY COLUMNAR: the explicit-schema read declares
     // the wide type and Spark 4's vectorized reader promotes INT32→LONG
-    // natively inside the batch load — no row-decoder fallback, no
-    // compaction tax (the round-14 carve-out, erased)
-    val plan = spark.sql("SELECT k FROM gtest.default.wide_t")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("vectorized=true"),
-      s"widened scans must stay vectorized (native INT32->LONG promotion):\n$plan")
+    // natively inside the batch load — no compaction tax
+    SparkTestBase.assertColumnarScan(spark.sql("SELECT k FROM gtest.default.wide_t"),
+      "widened scans must stay vectorized (native INT32->LONG promotion)")
     // zone-map pruning still works across generations (stats were
     // recorded as longs on both sides)
     val q = spark.sql(

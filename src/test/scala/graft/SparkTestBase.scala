@@ -48,6 +48,22 @@ object SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Asserts that `df` plans at least one graft catalog scan and that
+    * every one reports columnar reads (`BatchScanExec.supportsColumnar`),
+    * looking through adaptive query stages.
+    */
+  def assertColumnarScan(df: org.apache.spark.sql.DataFrame, clue: => Any = ""): Unit = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plan = df.queryExecution.executedPlan
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case b: BatchScanExec
+            if b.readerFactory.isInstanceOf[graft.sources.GraftCatalogReaderFactory] => b
+      }
+    org.scalatest.Assertions.assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+      s"$clue\nexpected columnar graft catalog scans in:\n$plan")
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .appName("graft-tests")
