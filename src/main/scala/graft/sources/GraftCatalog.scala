@@ -1727,15 +1727,10 @@ class GraftBatchWrite(
         new GraftDataWriter(p.toString, schema).commit()
         Seq(s"$fileName#0")
       }
-    val removals = op.planned.map(p => s"R:$p")
-    val fresh = entries.map(n => s"data/$dirName/$n")
-    if (!VersionedTable.tryPublishStaged(
-        table, next, removals ++ fresh, carry = Some(op.basis))) {
-      VersionedTable.deleteRecursively(java.nio.file.Paths.get(table, "data", dirName))
-      throw new java.util.ConcurrentModificationException(
-        s"row-level ${op.command} on $table scanned version ${op.basis} but " +
-          s"version $next was committed concurrently — re-run the statement")
-    }
+    VersionedTable.publishStaged(table, token, next, dirName, entries,
+      append = true, txnId = None, expectedLatest = Some(op.basis),
+      removed = op.planned, op = s"row-level ${op.command}")
+    ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -3554,14 +3549,15 @@ class GraftCatalogVectorReader(
     conf.set("parquet.read.support.class",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
     rowFilter.foreach { pred =>
-      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, pred)
-      conf.setBoolean("parquet.filter.record-level.enabled", false)
-      conf.setBoolean("parquet.filter.columnindex.enabled", false)
+      import org.apache.parquet.hadoop.ParquetInputFormat
+      ParquetInputFormat.setFilterPredicate(conf, pred)
+      conf.setBoolean(ParquetInputFormat.RECORD_FILTERING_ENABLED, false)
+      conf.setBoolean(ParquetInputFormat.COLUMN_INDEX_FILTERING_ENABLED, false)
       if (posBitmaps.nonEmpty) {
         // pin the reader's group filtering to the STATISTICS level so
         // the external ordinal replay below sees the identical kept set
-        conf.setBoolean("parquet.filter.dictionary.enabled", false)
-        conf.setBoolean("parquet.filter.bloom.enabled", false)
+        conf.setBoolean(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, false)
+        conf.setBoolean(ParquetInputFormat.BLOOM_FILTERING_ENABLED, false)
       }
     }
     val p = new org.apache.hadoop.fs.Path(file)

@@ -942,14 +942,45 @@ object VersionedTable {
     (ordered.result(), idx.result())
   }
 
+  /** `f`'s writer-unique temp sibling, written in full with `lines`. */
+  private def stageBeside(f: Path, lines: Seq[String]): Path = {
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(
+      s"${f.getFileName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
+    Files.write(tmp, lines.asJava)
+    tmp
+  }
+
+  /** CREATE-ONCE metadata write: stage `lines` beside `f`, then hard-link
+    * the temp file to `f`. The link fails when `f` exists, so exactly one
+    * writer creates it and a reader sees it whole or not at all — the
+    * compare-and-swap under manifest publication and the table's
+    * write-once specs. True iff this call created `f`; callers compare
+    * what is recorded against what they meant to record.
+    */
+  private def createOnce(f: Path, lines: Seq[String]): Boolean =
+    !Files.exists(f) && {
+      val tmp = stageBeside(f, lines)
+      try { Files.createLink(f, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally Files.deleteIfExists(tmp)
+    }
+
+  /** ATOMIC REPLACE of a metadata file: stage `lines` beside `f`, then
+    * move the temp file over it atomically — a reader sees the old
+    * content or the new, never a partial file. Last writer wins.
+    */
+  private def replaceFile(f: Path, lines: Seq[String]): Unit = {
+    Files.move(stageBeside(f, lines), f,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
+
   private def tryPublish(
       table: String, next: Long, entries: Seq[String], txnId: Option[String],
       carry: Option[Long] = None,
       statHeader: Option[Seq[String]] = None): Boolean = {
-    val mdir = manifestDir(table)
-    Files.createDirectories(mdir)
-    val tmp = mdir.resolve(
-      s"$next.manifest.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
     // rollup/schema lines depend only on `entries`, not on the version
     // number — retrying callers (restore's CAS loop, publishStaged)
     // precompute them ONCE and pass them in, so a version collision
@@ -975,23 +1006,8 @@ object VersionedTable {
       Seq(countLine) ++
       statHeader.getOrElse(rollupLines(entries) ++ schemaLines(table, entries)) ++
       idxLines
-    Files.write(tmp, (header ++ body).asJava)
-    try {
-      Files.createLink(mdir.resolve(s"$next.manifest"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.deleteIfExists(tmp)
+    createOnce(manifestDir(table).resolve(s"$next.manifest"), header ++ body)
   }
-
-  /** [[tryPublish]] for the catalog's row-level replacing write, which
-    * assembles its own entry list (removals + fresh). Same CAS contract:
-    * true iff this writer won version `next`.
-    */
-  private[sources] def tryPublishStaged(
-      table: String, next: Long, entries: Seq[String],
-      carry: Option[Long]): Boolean =
-    tryPublish(table, next, entries, None, carry)
 
   private[sources] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -1265,16 +1281,8 @@ object VersionedTable {
   private[sources] def recordTableProps(
       table: String, props: Map[String, String]): Unit = {
     if (props.isEmpty) return
-    if (!Files.exists(propsFile(table))) {
-      Files.createDirectories(manifestDir(table))
-      val tmp = manifestDir(table).resolve(
-        s"props.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp,
-        props.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }.asJava)
-      try Files.createLink(propsFile(table), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { Files.deleteIfExists(tmp); () }
-    }
+    createOnce(propsFile(table),
+      props.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" })
     val have = tableProps(table)
     if (have != props)
       throw new java.util.ConcurrentModificationException(
@@ -1668,30 +1676,15 @@ object VersionedTable {
       require(bad == 0L,
         s"cannot add CHECK '$name' ($exprSql): the current head violates it on $bad row(s)")
     }
-    val mdir = manifestDir(table)
-    Files.createDirectories(mdir)
-    val tmp = mdir.resolve(
-      s"constraints.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, (constraints(table) :+ (name -> exprSql))
-      .map { case (n, e) => s"$n\t$e" }.asJava)
-    Files.move(tmp, constraintsFile(table),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    replaceFile(constraintsFile(table), (constraints(table) :+ (name -> exprSql))
+      .map { case (n, e) => s"$n\t$e" })
   }
 
   /** Drop a CHECK constraint by name (no-op if absent). */
-  def dropConstraint(table: String, name: String): Unit = {
-    val remaining = constraints(table).filterNot(_._1 == name)
-    val mdir = manifestDir(table)
-    if (Files.exists(constraintsFile(table))) {
-      val tmp = mdir.resolve(
-        s"constraints.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, remaining.map { case (n, e) => s"$n\t$e" }.asJava)
-      Files.move(tmp, constraintsFile(table),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  def dropConstraint(table: String, name: String): Unit =
+    if (Files.exists(constraintsFile(table)))
+      replaceFile(constraintsFile(table),
+        constraints(table).filterNot(_._1 == name).map { case (n, e) => s"$n\t$e" })
 
   // ---- Parsed-snapshot memoization ----
   //
@@ -1860,15 +1853,30 @@ object VersionedTable {
     publishStaged(table, token, next, dirName, fileEntries, append, txnId, expectedLatest)
   }
 
-  /** The optimistic publish loop over an ALREADY-STAGED commit directory
+  /** The one publish of an ALREADY-STAGED commit directory
     * (`data/<dirName0>` with `fileEntries` as its manifest suffixes) —
-    * shared by [[commitCore]] and the SQL catalog's INSERT path, whose
-    * data files are written by executors before the commit is assembled.
+    * every commit goes through here: [[commitCore]], the schema carrier,
+    * the bucketed writer, the merge-on-read and copy-on-write deletes,
+    * [[optimizeWhere]], and the SQL catalog's INSERT and row-level
+    * writes, whose data files are written by executors before the commit
+    * is assembled. The staged files publish as data entries, or as
+    * `D:<basis>:` tombstones bounded to the basis when `tombstones` is set;
+    * `removed` (manifest paths) publish as `R:` lines dropping those
+    * files from the carried snapshot.
+    *
+    * `expectedLatest = None` retries a lost version race on the next free
+    * version. A commit derived from `expectedLatest` instead deletes its
+    * staged directory on losing and throws
+    * `ConcurrentModificationException` naming `op` and the table.
     */
   private[sources] def publishStaged(
       table: String, token: String, next0: Long, dirName0: String,
       fileEntries: Seq[String], append: Boolean,
-      txnId: Option[String], expectedLatest: Option[Long]): Either[Long, Long] = {
+      txnId: Option[String], expectedLatest: Option[Long],
+      removed: Seq[String] = Nil, tombstones: Boolean = false,
+      op: String = "commit"): Either[Long, Long] = {
+    require(!tombstones || expectedLatest.isDefined,
+      "tombstones are bounded to the basis they were computed from")
     var next = next0
     var dirName = dirName0
     var cachedStats: Option[(String, Seq[String])] = None
@@ -1893,7 +1901,8 @@ object VersionedTable {
       // append = a carry POINTER to the previous head, never a rewrite
       // of its (table-sized) entry list: append metadata is O(fresh)
       val carry = if (append) latest else None
-      val fresh = fileEntries.map(n => s"data/$dirName/$n")
+      val fresh = fileEntries.map(n =>
+        (if (tombstones) s"D:${latest.get}:" else "") + s"data/$dirName/$n")
       // stats header: compute once, then RETAG the directory name on
       // retries (a lost race renames the commit dir, but the per-file
       // stats and the footer schema are unchanged) — no repeated
@@ -1913,13 +1922,13 @@ object VersionedTable {
           val lines = rollupLines(fresh) ++ schemaLines(table, fresh)
           cachedStats = Some((dirName, lines)); lines
       }
-      if (tryPublish(table, next, fresh, txnId, carry,
+      if (tryPublish(table, next, removed.map(p => s"R:$p") ++ fresh, txnId, carry,
           statHeader = Some(statHeader))) return Right(next)
-      if (expectedLatest.isDefined) {
+      expectedLatest.foreach { basis =>
         abandon()
         throw new java.util.ConcurrentModificationException(
-          s"commit to $table lost the race for version $next and its content " +
-            "was derived from the previous head — recompute against the new head")
+          s"$op on $table was computed from version $basis but version $next " +
+            "was committed concurrently — re-run against the new head")
       }
     }
     throw new IllegalStateException("unreachable")
@@ -2443,19 +2452,13 @@ object VersionedTable {
       deleteRecursively(Paths.get(table, "data", dirName))
       return deleteWherePositional(spark, table, predicate)
     }
-    val bound = next - 1L
-    val fresh = fileEntries.map(n => s"D:$bound:data/$dirName/$n")
     // the doomed-key set was computed FROM snapshot lastV — if another
     // writer took version `next`, applying this tombstone over their
     // head could delete rows they just (re-)inserted; fail loudly
     // instead of retrying (the caller re-runs against the new head)
-    if (!tryPublish(table, next, fresh, None, carry = Some(lastV))) {
-      deleteRecursively(Paths.get(table, "data", dirName))
-      throw new java.util.ConcurrentModificationException(
-        s"deleteWhere on $table computed its tombstones from version $lastV " +
-          s"but version $next was committed concurrently — re-run against the new head")
-    }
-    next
+    publishStaged(table, token, next, dirName, fileEntries, append = true,
+      txnId = None, expectedLatest = Some(lastV), tombstones = true,
+      op = "deleteWhere").fold(identity, identity)
   }
 
   /** POSITIONAL merge-on-read delete: instead of doomed KEYS, commit a
@@ -2471,39 +2474,27 @@ object VersionedTable {
     *  - BUCKETED / clustered tables keep their layout (nothing is
     *    rewritten), which copy-on-write cannot offer.
     * Snapshot-derived like [[deleteWhere]]: positions are computed from
-    * the head (fully distributed — the scan tags each row with the
-    * parquet source's own `_metadata.file_path`/`row_index`), a
+    * the head (fully distributed — the data-file scan tags each row with
+    * its file and row ordinal), a
     * concurrent commit fails the publish loudly, and a later append is
     * unaffected (its files are not referenced by the vector). Returns
     * the new version — the basis version unchanged when nothing matches.
     */
   def deleteWherePositional(
       spark: SparkSession, table: String, predicate: Column): Long = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
+    import org.apache.spark.sql.functions.col
     val prev = versions(table)
     require(prev.nonEmpty, s"no committed versions at $table")
     val lastV = prev.last
     val next = lastV + 1L
-    val entries = manifestEntries(table, lastV)
-    val dataE = entries.filterNot(isDeleteEntry).map(entryPath)
+    val dataE = manifestEntries(table, lastV).filterNot(isDeleteEntry).map(entryPath)
     if (dataE.isEmpty) return lastV
-    def abs(rel: String) = Paths.get(table, rel).toString
-    // ONE scan over the snapshot's data files with the union schema
-    // (widened columns read wide, added columns null-fill), tagged with
-    // each row's (file, position); the predicate pushes into the scan.
-    // Rows already doomed by an EARLIER tombstone may re-match here —
-    // re-dooming a dead position is harmless and avoids paying the
-    // standing anti-joins inside the delete itself.
-    val sch = dataE.groupBy(dataCommitOf).toSeq.sortBy(_._1).map(_._2.min)
-      .map(p => commitSchemaOf(spark, table, p))
-      .reduce(unionSchemas(table, _, _))
-    val tagged = spark.read.schema(sch).parquet(dataE.map(abs): _*)
-      .withColumn("_graft_dv_file",
-        regexp_extract(col("_metadata.file_path"), ".*/data/(.*)$", 1))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-    val dv = logicalizeFrame(table, tagged).filter(predicate)
-      .select(col("_graft_dv_file").as("_file"),
-        col("_graft_dv_pos").as("_pos"))
+    // ONE tagged scan over the snapshot's data files; the predicate
+    // pushes into it. Rows already doomed by an EARLIER tombstone may
+    // re-match here — re-dooming a dead position is harmless and avoids
+    // paying the standing anti-joins inside the delete itself.
+    val dv = logicalizeFrame(table, scan(spark, table, dataE, tagged = true))
+      .filter(predicate).select(col(DvFile).as("_file"), col(DvPos).as("_pos"))
     val token = java.util.UUID.randomUUID().toString.take(8)
     val dirName = s"c${next}_$token"
     val dataDir = Paths.get(table, "data", dirName)
@@ -2522,15 +2513,9 @@ object VersionedTable {
     val doomedRows = fileEntries
       .map(_.split('#')(1).takeWhile(_ != '@').toLong).sum
     if (doomedRows == 0L) { deleteRecursively(dataDir); return lastV }
-    val fresh = fileEntries.map(n => s"D:$lastV:data/$dirName/$n")
-    if (!tryPublish(table, next, fresh, None, carry = Some(lastV))) {
-      deleteRecursively(dataDir)
-      throw new java.util.ConcurrentModificationException(
-        s"deleteWherePositional on $table computed its deletion vector " +
-          s"from version $lastV but version $next was committed " +
-          "concurrently — re-run against the new head")
-    }
-    next
+    publishStaged(table, token, next, dirName, fileEntries, append = true,
+      txnId = None, expectedLatest = Some(lastV), tombstones = true,
+      op = "deleteWherePositional").fold(identity, identity)
   }
 
   /** Copy-on-write DELETE: remove the rows matching `predicate` by
@@ -2548,11 +2533,14 @@ object VersionedTable {
     * `bounds` pre-prunes candidates from the manifest zone maps and MUST
     * be implied by the predicate (every matching row lies within them) —
     * the SQL path guarantees that by deriving both from the same pushed
-    * filters. A touched-file probe (one aggregate job over the
-    * candidates, column-pruned to the predicate's inputs) then narrows
-    * the rewrite to files that actually contain matches. Rows whose
-    * predicate evaluates NULL are KEPT (SQL DELETE semantics).
-    * Snapshot-derived: losing the publish race throws
+    * filters. A touched-file probe then narrows the rewrite to files
+    * that actually contain matches: one distinct job over the candidates
+    * (column-pruned to the predicate's inputs) whose surviving matches
+    * carry their file tag from the data-file scan, so a touched file is
+    * a set lookup on its manifest path. Rows whose predicate evaluates
+    * NULL are KEPT (SQL DELETE semantics). Published through
+    * [[publishStaged]] as `R:` lines plus the rewrites; snapshot-derived,
+    * so losing the publish race deletes the staged rewrite and throws
     * `ConcurrentModificationException`. Returns the new version, or the
     * basis version unchanged when nothing matches.
     */
@@ -2562,7 +2550,7 @@ object VersionedTable {
       statsCols: Seq[String] = Nil,
       strBounds: Seq[(String, Option[Array[Byte]], Option[Array[Byte]])] = Nil)
       : Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     bucketSpec(table).foreach { case (c, n) =>
       throw new UnsupportedOperationException(
         s"$table is bucketed by ($c, $n): copy-on-write rewrites would " +
@@ -2580,25 +2568,14 @@ object VersionedTable {
       .filter(e => prune.admits(parseEntry(e, Nil)))
     if (candidates.isEmpty) return basis
     val hit = coalesce(predicate, lit(false))
-    // the source-file tag is projected INSIDE the per-commit scan (before
-    // the tombstone anti-join): input_file_name() evaluated above a
-    // shuffled join returns "", which would silently empty the touched
-    // set and turn the DELETE into a no-op whenever the doomed-key side
-    // is not broadcast. The frame is logicalized (file tag passes
-    // through) because `predicate` speaks logical column names.
-    val touchedAbs = logicalizeFrame(table,
-        snapshotFrame(spark, table, candidates ++ delE,
-          mergeSchema = false, fileTag = Some("__graft_src_file")))
-      .filter(hit)
-      .groupBy(col("__graft_src_file").as("g_f")).agg(count(lit(1)).as("g_n"))
+    // the surviving rows carry their file tag through the tombstone
+    // anti-joins; the frame is logicalized (the tag passes through)
+    // because `predicate` speaks logical column names
+    val touchedKeys = logicalizeFrame(table,
+        snapshotFrame(spark, table, candidates ++ delE, mergeSchema = false, tagged = true))
+      .filter(hit).select(DvFile).distinct()
       .collect().map(_.getString(0)).toSet
-    require(!touchedAbs.contains(""),
-      s"deleteWhereCow on $table: a matching row lost its source-file tag — " +
-        "refusing to compute a possibly-partial rewrite")
-    // input_file_name is a URI; manifest paths are unique suffixes
-    // (every commit directory carries a random token)
-    val touched = candidates.filter(e =>
-      touchedAbs.exists(_.endsWith("/" + entryPath(e))))
+    val touched = candidates.filter(e => touchedKeys.contains(dvKeyOf(entryPath(e))))
     if (touched.isEmpty) return basis
     val keep = physicalizeFrame(table,
       logicalizeFrame(table,
@@ -2609,15 +2586,9 @@ object VersionedTable {
     val dirName = s"c${next}_$token"
     val fileEntries = writeFiles(keep, table, dirName,
       statsCols.map(physName(table, _)), constraints(table))
-    val removals = touched.map(e => s"R:${entryPath(e)}")
-    val fresh = fileEntries.map(n => s"data/$dirName/$n")
-    if (!tryPublish(table, next, removals ++ fresh, None, carry = Some(basis))) {
-      deleteRecursively(Paths.get(table, "data", dirName))
-      throw new java.util.ConcurrentModificationException(
-        s"deleteWhereCow on $table computed its rewrite from version $basis " +
-          s"but version $next was committed concurrently — re-run against the new head")
-    }
-    next
+    publishStaged(table, token, next, dirName, fileEntries, append = true,
+      txnId = None, expectedLatest = Some(basis), removed = touched.map(entryPath),
+      op = "deleteWhereCow").fold(identity, identity)
   }
 
   /** Rewrite the current merge-on-read view as a plain overwrite commit:
@@ -3169,15 +3140,7 @@ object VersionedTable {
         s"$table clusters on write by $c: bucket placement and " +
           "cluster-on-write ordering cannot coexist")
     }
-    if (!Files.exists(bucketSpecFile(table))) {
-      Files.createDirectories(manifestDir(table))
-      val tmp = manifestDir(table).resolve(
-        s"bucketspec.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, java.util.List.of(s"$bucketCol\t$nBuckets"))
-      try Files.createLink(bucketSpecFile(table), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { Files.deleteIfExists(tmp); () }
-    }
+    createOnce(bucketSpecFile(table), Seq(s"$bucketCol\t$nBuckets"))
     bucketSpec(table).foreach { case (c, n) =>
       if (c != bucketCol || n != nBuckets)
         throw new java.util.ConcurrentModificationException(
@@ -3222,15 +3185,7 @@ object VersionedTable {
         s"$table is bucketed by ($c, $n): bucket placement and " +
           "cluster-on-write ordering cannot coexist")
     }
-    if (!Files.exists(clusterSpecFile(table))) {
-      Files.createDirectories(manifestDir(table))
-      val tmp = manifestDir(table).resolve(
-        s"clusterspec.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, java.util.List.of(col))
-      try Files.createLink(clusterSpecFile(table), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { Files.deleteIfExists(tmp); () }
-    }
+    createOnce(clusterSpecFile(table), Seq(col))
     clusterSpec(table).foreach { c =>
       if (c != col)
         throw new java.util.ConcurrentModificationException(
@@ -3309,15 +3264,7 @@ object VersionedTable {
     * records too — this marker only preserves the DECLARED transform).
     */
   private[sources] def recordIdentityPartition(table: String, col: String): Unit = {
-    if (!Files.exists(identitySpecFile(table))) {
-      Files.createDirectories(manifestDir(table))
-      val tmp = manifestDir(table).resolve(
-        s"identityspec.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, java.util.List.of(col))
-      try Files.createLink(identitySpecFile(table), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { Files.deleteIfExists(tmp); () }
-    }
+    createOnce(identitySpecFile(table), Seq(col))
     identityPartition(table).foreach { c =>
       if (c != col)
         throw new java.util.ConcurrentModificationException(
@@ -3390,21 +3337,12 @@ object VersionedTable {
     val srcs = decls.map(declSource)
     require(srcs.distinct.size == srcs.size,
       s"duplicate partition columns: ${srcs.mkString(", ")}")
-    // atomic replace (tmp + ATOMIC_MOVE) of both the declared transform
-    // and the cluster-on-write keys it implies — a concurrent INSERT
-    // reads either the old or the new spec, both of which are valid
-    // layouts pruning resolves per file
-    def replace(f: Path, content: String): Unit = {
-      Files.createDirectories(manifestDir(table))
-      val tmp = manifestDir(table).resolve(
-        s"${f.getFileName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, java.util.List.of(content))
-      Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-    replace(identitySpecFile(table), decls.mkString(","))
-    replace(clusterSpecFile(table), srcs.mkString(","))
+    // atomic replace of both the declared transform and the
+    // cluster-on-write keys it implies — a concurrent INSERT reads either
+    // the old or the new spec, both of which are valid layouts pruning
+    // resolves per file
+    replaceFile(identitySpecFile(table), Seq(decls.mkString(",")))
+    replaceFile(clusterSpecFile(table), Seq(srcs.mkString(",")))
   }
 
   /** Commit `df` BUCKETED on `bucketCol` into `nBuckets` modulo buckets
@@ -3569,15 +3507,9 @@ object VersionedTable {
       frame.repartitionByRange(parts, col(pc)).sortWithinPartitions(pc),
       table, dirName, (defaultStatsCols(table, frame.schema) :+ pc).distinct,
       constraints(table))
-    val removals = touched.map(e => s"R:${entryPath(e)}")
-    val fresh = fileEntries.map(nm => s"data/$dirName/$nm")
-    if (!tryPublish(table, next, removals ++ fresh, None, carry = Some(basis))) {
-      deleteRecursively(Paths.get(table, "data", dirName))
-      throw new java.util.ConcurrentModificationException(
-        s"optimizeWhere on $table rewrote from version $basis but version " +
-          s"$next was committed concurrently — re-run against the new head")
-    }
-    next
+    publishStaged(table, token, next, dirName, fileEntries, append = true,
+      txnId = None, expectedLatest = Some(basis), removed = touched.map(entryPath),
+      op = "optimizeWhere").fold(identity, identity)
   }
 
   /** Multi-column zone-map read: [[readWhere]] generalized to a
@@ -3653,16 +3585,8 @@ object VersionedTable {
     }.toMap
   }
 
-  private def writeColMap(table: String, m: Map[String, String]): Unit = {
-    val f = colMapFile(table)
-    Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(
-      s"colmap.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, m.toSeq.sortBy(_._1).map { case (p, lg) => s"$p\t$lg" }.asJava)
-    Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def writeColMap(table: String, m: Map[String, String]): Unit =
+    replaceFile(colMapFile(table), m.toSeq.sortBy(_._1).map { case (p, lg) => s"$p\t$lg" })
 
   /** Refuse field names containing '.', at any nesting depth. Spark
     * permits them via backticks, but the engine's zone-map keys,
@@ -4142,86 +4066,87 @@ object VersionedTable {
     manifestEntries(table, v)
   }
 
+  /** Deletion-vector identity columns: [[scan]] tags each row with its
+    * file (the path below `data/`, [[dvKeyOf]]'s form) and its row
+    * ordinal in that file.
+    */
+  private val DvFile = "_graft_dv_file"
+  private val DvPos = "_graft_dv_pos"
+
+  /** The one data-file scan of a versioned table: data files and
+    * tombstone files (`files`, table-relative manifest paths) are read
+    * here and nowhere else.
+    *  - Schema: pure footer inference when the files belong to ONE commit
+    *    (zero extra footer work); the commit-union schema (one memoized
+    *    footer per commit, [[unionSchemas]]) when they span several or
+    *    `mergeSchema` asks for additive evolution. A WIDENED column
+    *    (INT->BIGINT across commits) needs the wide type declared, or
+    *    inference would take one file's narrow type and misread the others.
+    *  - Parquet's DICTIONARY row-group filter is always off. Its evaluator
+    *    compares doubles by TOTAL order: a pushed eq(+0.0) against an
+    *    all--0.0 dictionary drops the whole group, silently losing rows
+    *    Spark's own comparison (-0.0 == 0.0) would match (reproduced on
+    *    vanilla Spark 4.1). Statistics filtering is zero-widened at write
+    *    and stays on — the dictionary evaluator is the one unsound layer.
+    *    The catalog scan builds its own zero-widened FilterPredicate
+    *    (never an Eq leaf on ±0.0), which every evaluator handles soundly.
+    *  - `tagged` adds [[DvFile]] and [[DvPos]] from the parquet source's
+    *    own `_metadata` — on the scan itself, because metadata columns do
+    *    not survive joins.
+    */
+  private def scan(
+      spark: SparkSession, table: String, files: Seq[String],
+      mergeSchema: Boolean = false, tagged: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    val reader =
+      if (!mergeSchema && files.map(dataCommitOf).distinct.size <= 1)
+        spark.read.option("mergeSchema", false)
+      else spark.read.schema(files.groupBy(dataCommitOf).toSeq.sortBy(_._1)
+        .map(c => commitSchemaOf(spark, table, c._2.min))
+        .reduce(unionSchemas(table, _, _)))
+    val df = reader.option("parquet.filter.dictionary.enabled", "false")
+      .parquet(files.map(Paths.get(table, _).toString): _*)
+    if (!tagged) df
+    else df.withColumn(DvFile, regexp_extract(col("_metadata.file_path"), ".*/data/(.*)$", 1))
+      .withColumn(DvPos, col("_metadata.row_index"))
+  }
+
   /** The scan of a pinned entry set: the manifest's data files, with any
-    * tombstone entries applied as an anti-join of doomed keys against
-    * the data commits they are bounded to. `fileTag` optionally names an
-    * extra column holding each row's source-file URI, projected DIRECTLY
-    * on the scan — evaluating `input_file_name()` above a shuffled
-    * anti-join yields "" (the row no longer lives in a scan task), so
-    * callers that need file provenance must tag here, below any join.
+    * tombstone entries applied as anti-joins against the data commits
+    * they are bounded to — each (key column, key type) group of equality
+    * tombstones on its own key, then the deletion vectors on
+    * ([[DvFile]], [[DvPos]]). `tagged` keeps those two columns on the
+    * surviving rows, which is how [[deleteWhereCow]] learns the files
+    * its matches live in.
     */
   private def snapshotFrame(
       spark: SparkSession, table: String, entries: Seq[String],
-      mergeSchema: Boolean, fileTag: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.input_file_name
-    def abs(rel: String) = Paths.get(table, rel).toString
-    def readData(files: Seq[String]) = {
-      // a WIDENED column (INT->BIGINT across commits) needs the read to
-      // declare the wide type explicitly — footer inference would take
-      // one file's narrow type and misread the others. The union schema
-      // costs one memoized footer per commit; it is computed only when
-      // the file set spans several commits or evolution is requested
-      // (single-commit reads keep pure inference: zero footer work)
-      val commits = files.map(dataCommitOf).distinct
-      // parquet's DICTIONARY row-group evaluator compares doubles by
-      // TOTAL order: a pushed eq(+0.0) against an all--0.0 dictionary
-      // drops the whole group, silently losing rows Spark's own
-      // comparison (-0.0 == 0.0) would match (reproduced on vanilla
-      // Spark 4.1). Stats filtering is zero-widened at write and stays
-      // ON — the dictionary evaluator is the one unsound layer, so this
-      // path turns exactly it off. The catalog scan is unaffected: it
-      // builds its own zero-widened FilterPredicate (never an Eq leaf
-      // on ±0.0), which every evaluator handles soundly.
-      val dictOff = Map("parquet.filter.dictionary.enabled" -> "false")
-      val reader =
-        if (!mergeSchema && commits.size <= 1)
-          spark.read.option("mergeSchema", false).options(dictOff)
-        else {
-          val sch = files.groupBy(dataCommitOf)
-            .toSeq.sortBy(_._1).map(_._2.min)
-            .map(p => commitSchemaOf(spark, table, p))
-            .reduce(unionSchemas(table, _, _))
-          spark.read.schema(sch).options(dictOff)
-        }
-      val df = reader.parquet(files.map(abs): _*)
-      fileTag.fold(df)(t => df.withColumn(t, input_file_name()))
-    }
+      mergeSchema: Boolean, tagged: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val dataE = entries.filterNot(isDeleteEntry).map(entryPath)
     val delE = entries.filter(isDeleteEntry).map { e =>
       (e.split(":", 3)(1).toLong, entryPath(e))
     }
-    if (delE.isEmpty) readData(dataE)
+    if (delE.isEmpty) scan(spark, table, dataE, mergeSchema, tagged)
     else
       dataE.groupBy(dataCommitOf).toSeq.sortBy(_._1).map { case (c, files) =>
         val applicable = delE.collect { case (b, p) if b >= c => p }
         val (posDel, eqDel) = applicable.partition(isPosDeleteFile)
-        val df0 = readData(files)
-        // positional tags come straight off the scan (a parquet source's
-        // metadata columns do not survive joins)
-        val df =
-          if (posDel.isEmpty) df0
-          else {
-            import org.apache.spark.sql.functions.{col, regexp_extract}
-            df0.withColumn("_graft_dv_file",
-                regexp_extract(col("_metadata.file_path"), ".*/data/(.*)$", 1))
-              .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-          }
-        val afterEq =
-          if (eqDel.isEmpty) df
-          else {
-            val del = spark.read.parquet(eqDel.map(abs): _*)
-            df.join(del.select(del.columns.head).distinct(),
-              Seq(del.columns.head), "left_anti")
-          }
+        val df = scan(spark, table, files, mergeSchema, tagged || posDel.nonEmpty)
+        val keyed = eqDel.map { p =>
+          val f = commitSchemaOf(spark, table, p).fields.head
+          (f.name, f.dataType) -> p
+        }
+        val afterEq = keyed.map(_._1).distinct.foldLeft(df) { case (acc, key @ (k, _)) =>
+          val doomed = scan(spark, table, keyed.filter(_._1 == key).map(_._2))
+          acc.join(doomed.select(k).distinct(), Seq(k), "left_anti")
+        }
         if (posDel.isEmpty) afterEq
         else {
-          import org.apache.spark.sql.functions.col
-          val dvf = spark.read.parquet(posDel.map(abs): _*)
-          afterEq.join(
-            dvf.select(col("_file").as("_graft_dv_file"),
-              col("_pos").as("_graft_dv_pos")),
-            Seq("_graft_dv_file", "_graft_dv_pos"), "left_anti")
-            .drop("_graft_dv_file", "_graft_dv_pos")
+          val kept = afterEq.join(
+            scan(spark, table, posDel).select(col("_file").as(DvFile), col("_pos").as(DvPos)),
+            Seq(DvFile, DvPos), "left_anti")
+          if (tagged) kept else kept.drop(DvFile, DvPos)
         }
       }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
@@ -4269,12 +4194,11 @@ object VersionedTable {
   def appendsBetween(
       spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    def abs(rel: String) = Paths.get(table, rel).toString
     val frames = rangeCommits(table, fromVersion, toVersion).flatMap {
       case (w, fresh) =>
         val data = fresh.filterNot(isDeleteEntry).map(entryPath)
         if (data.isEmpty) None
-        else Some(spark.read.parquet(data.map(abs): _*)
+        else Some(scan(spark, table, data)
           .withColumn("_commit_version",
             org.apache.spark.sql.functions.lit(w)))
     }
@@ -4312,7 +4236,7 @@ object VersionedTable {
     val (pos, eq) = delete.partition(e => isPosDeleteFile(entryPath(e)))
     val eqF =
       if (eq.isEmpty) None
-      else Some(spark.read.parquet(eq.map(e => Paths.get(table, entryPath(e)).toString): _*))
+      else Some(scan(spark, table, eq.map(entryPath)))
     val posF =
       if (pos.isEmpty) None
       else Some(posDeletedRows(spark, table, pos.map(entryPath),
@@ -4330,9 +4254,8 @@ object VersionedTable {
   private def posDeletedRows(
       spark: SparkSession, table: String, dvRel: Seq[String],
       bound: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
-    def abs(rel: String) = Paths.get(table, rel).toString
-    val dv = spark.read.parquet(dvRel.map(abs): _*)
+    import org.apache.spark.sql.functions.col
+    val dv = scan(spark, table, dvRel)
     val refKeys = dv.select("_file").distinct()
       .collect().map(_.getString(0)).toSet
     val files = manifestEntries(table, bound)
@@ -4340,17 +4263,10 @@ object VersionedTable {
       .filter(p => refKeys.contains(dvKeyOf(p)))
     require(files.nonEmpty,
       s"deletion vector of $table references no file of snapshot $bound")
-    val sch = files.groupBy(dataCommitOf).toSeq.sortBy(_._1).map(_._2.min)
-      .map(p => commitSchemaOf(spark, table, p))
-      .reduce(unionSchemas(table, _, _))
-    spark.read.schema(sch).parquet(files.map(abs): _*)
-      .withColumn("_graft_dv_file",
-        regexp_extract(col("_metadata.file_path"), ".*/data/(.*)$", 1))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-      .join(dv.select(col("_file").as("_graft_dv_file"),
-        col("_pos").as("_graft_dv_pos")),
-        Seq("_graft_dv_file", "_graft_dv_pos"), "left_semi")
-      .drop("_graft_dv_file", "_graft_dv_pos")
+    scan(spark, table, files, tagged = true)
+      .join(dv.select(col("_file").as(DvFile), col("_pos").as(DvPos)),
+        Seq(DvFile, DvPos), "left_semi")
+      .drop(DvFile, DvPos)
   }
 
   /** Delta-style `table_changes`: ONE frame unifying the additive and
@@ -4368,7 +4284,6 @@ object VersionedTable {
       spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    def abs(rel: String) = Paths.get(table, rel).toString
     val commits = rangeCommits(table, fromVersion, toVersion)
     def side(delete: Boolean): Seq[DataFrame] = commits.flatMap {
       case (w, fresh) =>
@@ -4377,7 +4292,7 @@ object VersionedTable {
           if (!delete) {
             val paths = own.map(entryPath)
             if (paths.isEmpty) None
-            else Some(spark.read.parquet(paths.map(abs): _*))
+            else Some(scan(spark, table, paths))
           } else deletedFrames(spark, table, own)
             .reduceOption(_.unionByName(_, allowMissingColumns = true))
         base.map(_.withColumn("_change_type",
@@ -4634,19 +4549,12 @@ object VersionedTable {
       } ++
       schemas.filter(kv => liveDirs.contains(kv._1)).toSeq.sortBy(_._1)
         .map { case (dir, st) => s"schema=$dir ${st.json}" }
-    val mdir = manifestDir(table)
-    val tmp = mdir.resolve(
-      s"$v.manifest.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
     // the materialized manifest is self-contained — give it a fresh
     // indexed entry segment so cold selective plans keep seeking
     val (body, idxLines) = indexedEntryLayout(resolved)
     val totalLine = s"total=${resolved.count(e => !isDeleteEntry(e))}"
-    Files.write(tmp,
-      ((s"version=$v" +: headers) ++ (totalLine +: hints) ++
-        idxLines ++ body).asJava)
-    Files.move(tmp, mdir.resolve(s"$v.manifest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    replaceFile(manifestDir(table).resolve(s"$v.manifest"),
+      (s"version=$v" +: headers) ++ (totalLine +: hints) ++ idxLines ++ body)
     // byte-offset memos (header positions, seek blocks) are STALE
     // against the rewritten file — drop them for this version; the
     // entry-SET memos stay valid (the rewrite is entry-identical).

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * expected set below, next to the gate's retirement plan in ROADMAP.md;
   * a new `main`, a hand-rolled pay-once fixture beside
   * `QueryCache.fixture`, a second entry parser or planner selection
-  * beside `parseEntry` and `select`, or a unit or object member that
+  * beside `parseEntry` and `select`, a second versioned-table data-file
+  * scan or metadata-file write primitive, or a unit or object member that
   * only its own spec calls is likewise a visible edit here.
   */
 class GateInventorySpec extends AnyFunSuite {
@@ -143,6 +144,29 @@ class GateInventorySpec extends AnyFunSuite {
       unit.findAllMatchIn(src).takeWhile(_.start < m.start).toList.last.group(1)
     }.toSet
     assert(owners == Set("TombstoneKeys", "PositionKeys"), owners.toString)
+  }
+
+  test("each versioned-table read rule and atomic-write step has one owner") {
+    val path = "graft/sources/VersionedTable.scala"
+    val src = mainSources.toMap.apply(path)
+    // the object member (two-space indent) each use of `token` sits in
+    val member = """(?m)^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    def owners(token: String): Seq[String] =
+      java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).map { m =>
+        member.findAllMatchIn(src).takeWhile(_.start < m.start).toList.last.group(1)
+      }.toSeq
+    // the data-file scan: the dictionary-filter rule and the row tags
+    for (token <- Seq("\"parquet.filter.dictionary.enabled\"", "_metadata.row_index")) {
+      assert(uses(token) == Map(path -> 1), token)
+      assert(owners(token) == Seq("scan"), token)
+    }
+    // create-once (link as compare-and-swap) and atomic replace
+    assert(uses("Files.createLink(").keySet == Set(path))
+    assert(owners("Files.createLink(").distinct == Seq("createOnce", "cloneTable"))
+    assert(uses("StandardCopyOption.ATOMIC_MOVE") == Map(path -> 1))
+    assert(owners("StandardCopyOption.ATOMIC_MOVE") == Seq("replaceFile"))
+    // every staged commit publishes through publishStaged
+    assert(uses("tryPublishStaged").isEmpty)
   }
 
   /** (path relative to src/main/scala, content) of every main source,

@@ -1023,14 +1023,22 @@ class GraftCatalogSpec extends AnyFunSuite {
     }
     widened("widepost", preWiden = false)
     sameAsRead("widepost")
-    // ...and under a pre-widen FLOAT tombstone too. VersionedTable.read
-    // cannot serve this table (it reads a commit's FLOAT and DOUBLE key
-    // files as one frame and fails on the type mismatch), so the rows
-    // are spelled out: k = 5 (2.5) and 15, 100 (7.5) are doomed
+    // ...and under a pre-widen FLOAT tombstone too: VersionedTable.read
+    // anti-joins the FLOAT and the DOUBLE key files separately, and the
+    // rows are spelled out as well: k = 5 (2.5) and 15, 100 (7.5) are doomed
     widened("widemor", preWiden = true)
+    sameAsRead("widemor")
     val kept = (1 to 20).filterNot(Set(5, 15)) :+ 101
     check("widemor", "k, x",
       kept.map(k => s"$k|${if (k == 101) 0.1 else k / 2.0}"), kept.map(_.toString))
+    // tombstones keyed on different columns each doom their own rows
+    VersionedTable.commit(Seq(1L -> "v1", 2L -> "v2", 3L -> "v3").toDF("k", "x"),
+      s"$r/default/multikey", append = false)
+    VersionedTable.deleteWhere(spark, s"$r/default/multikey", col("k") === 1L, "k")
+    VersionedTable.deleteWhere(spark, s"$r/default/multikey", col("x") === "v2", "x")
+    assert(VersionedTable.read(spark, s"$r/default/multikey").select("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(3L))
+    sameAsRead("multikey")
     // signed zeros and NaNs follow Spark's join-key normalization
     VersionedTable.commit(
       Seq(1L -> -0.0, 2L -> 0.0, 3L -> Double.NaN, 4L -> 1.5).toDF("k", "x"),

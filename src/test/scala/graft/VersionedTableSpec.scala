@@ -188,6 +188,36 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.fastCount(t).contains(3L))
   }
 
+  /** One data file: 30 rows of x = -0.0, then 10 of 1.5 — one
+    * dictionary-encoded row group whose dictionary holds -0.0, never 0.0.
+    */
+  private def signedZeros(): String = {
+    val s = spark; import s.implicits._
+    val t = freshTable()
+    VersionedTable.commit(((1L to 30L).map(_ -> -0.0) ++ (31L to 40L).map(_ -> 1.5))
+      .toDF("k", "x").coalesce(1), t, append = false)
+    t
+  }
+
+  test("a positional delete of x = 0.0 dooms every -0.0 row") {
+    val t = signedZeros()
+    val v = VersionedTable.deleteWherePositional(spark, t, col("x") === 0.0)
+    // (the committed version, the rows left)
+    assert((v, VersionedTable.read(spark, t).count()) == (2L, 10L))
+  }
+
+  test("appendsBetween filtered on x = 0.0 returns every -0.0 row") {
+    val t = signedZeros()
+    assert(VersionedTable.appendsBetween(spark, t, 0L, 1L)
+      .filter(col("x") === 0.0).count() == 30L)
+  }
+
+  test("tableChanges filtered on x = 0.0 returns every -0.0 row") {
+    val t = signedZeros()
+    assert(VersionedTable.tableChanges(spark, t, 0L, 1L)
+      .filter(col("x") === 0.0).count() == 30L)
+  }
+
   test("commitIfAbsent is idempotent under a transaction id") {
     val t = freshTable()
     assert(VersionedTable.commitIfAbsent(df(1L -> "a"), t, append = false,
@@ -359,56 +389,85 @@ class VersionedTableSpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
-  test("deleteWhere whose basis is overtaken by a concurrent commit fails loudly") {
-    val t = freshTable()
-    VersionedTable.commit(df(1L -> "a", 2L -> "b"), t, append = false)
+  /** Commit directories under `data/` that no manifest of `table` names. */
+  private def unreferencedDirs(table: String): Set[String] = {
+    def names(dir: String): Seq[Path] = {
+      val ls = Files.list(Path.of(table, dir))
+      try ls.iterator.asScala.toList finally ls.close()
+    }
+    val named = names("_manifest").filter(_.toString.endsWith(".manifest"))
+      .flatMap(m => "data/([^/]+)/".r.findAllMatchIn(Files.readString(m)).map(_.group(1)))
+    names("data").map(_.getFileName.toString).toSet -- named
+  }
+
+  /** `op` reads version 1 of `t` (rows 1 and 2) as its basis and blocks on
+    * [[VtConflictGate]] with its commit directory staged or staging; a
+    * concurrent append then takes version 2. `op` must fail loudly, the
+    * winner's rows must be intact, and no directory the lost commit
+    * staged may outlive it.
+    */
+  private def loseRace(t: String, what: String)(op: => Long): Unit = {
     VtConflictGate.reset()
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     try {
-      // the predicate blocks inside deleteWhere's tombstone write — after
-      // it has read version 1 as its basis but before it publishes v2
       val f = pool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long =
-          VersionedTable.deleteWhere(spark, t, VtConflictGate.slowTrue(col("k")), "k")
+        override def call(): Long = op
       })
       assert(VtConflictGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "predicate never evaluated — deleteWhere did not reach its write")
+        s"the gate never evaluated — $what did not reach its write")
       VersionedTable.commit(df(3L -> "c"), t, append = true) // steals version 2
       VtConflictGate.release.countDown()
       val err = intercept[java.util.concurrent.ExecutionException] {
         f.get(120, java.util.concurrent.TimeUnit.SECONDS)
       }
       assert(err.getCause.isInstanceOf[java.util.ConcurrentModificationException],
-        s"expected a loud conflict, got ${err.getCause}")
-      // the winner's commit is intact and no tombstone was applied
-      assert(slurp(t) == Set(1L -> "a", 2L -> "b", 3L -> "c"))
+        s"$what: expected a loud conflict, got ${err.getCause}")
+      // the winner's commit is intact and nothing of the loser applied
+      assert(slurp(t) == Set(1L -> "a", 2L -> "b", 3L -> "c"), what)
+      assert(unreferencedDirs(t).isEmpty,
+        s"$what left staged directories behind: ${unreferencedDirs(t)}")
     } finally pool.shutdown()
+  }
+
+  test("deleteWhere whose basis is overtaken by a concurrent commit fails loudly") {
+    val t = freshTable()
+    VersionedTable.commit(df(1L -> "a", 2L -> "b"), t, append = false)
+    // the predicate blocks inside deleteWhere's tombstone write — after
+    // it has read version 1 as its basis but before it publishes v2
+    loseRace(t, "deleteWhere")(
+      VersionedTable.deleteWhere(spark, t, VtConflictGate.slowTrue(col("k")), "k"))
   }
 
   test("deleteWhereCow whose basis is overtaken by a concurrent commit fails loudly") {
     val t = freshTable()
     VersionedTable.commit(df(1L -> "a", 2L -> "b"), t, append = false)
-    VtConflictGate.reset()
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try {
-      // the gated predicate blocks inside the touched-file probe — after
-      // deleteWhereCow has read version 1 as its basis, before publish
-      val f = pool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long =
-          VersionedTable.deleteWhereCow(spark, t, VtConflictGate.slowTrue(col("k")))
-      })
-      assert(VtConflictGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "predicate never evaluated — deleteWhereCow did not reach its probe")
-      VersionedTable.commit(df(3L -> "c"), t, append = true) // steals version 2
-      VtConflictGate.release.countDown()
-      val err = intercept[java.util.concurrent.ExecutionException] {
-        f.get(120, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(err.getCause.isInstanceOf[java.util.ConcurrentModificationException],
-        s"expected a loud conflict, got ${err.getCause}")
-      // the winner's commit is intact and nothing was deleted
-      assert(slurp(t) == Set(1L -> "a", 2L -> "b", 3L -> "c"))
-    } finally pool.shutdown()
+    // the gated predicate blocks inside the touched-file probe — after
+    // deleteWhereCow has read version 1 as its basis, before publish
+    loseRace(t, "deleteWhereCow")(
+      VersionedTable.deleteWhereCow(spark, t, VtConflictGate.slowTrue(col("k"))))
+  }
+
+  test("a staged commit that loses the race leaves nothing behind") {
+    // the gate as a SQL function for CHECK constraints: it blocks on the
+    // rows of the basis (k < 3) and passes the winner's row untouched
+    spark.udf.register("vt_gate", (k: Long) => k >= 3L || VtConflictGate.pass())
+    val cases = Seq[(String, String => Unit, String => Long)](
+      // the predicate blocks inside the deletion-vector write
+      ("deleteWherePositional", _ => (),
+        t => VersionedTable.deleteWherePositional(spark, t, VtConflictGate.slowTrue(col("k")))),
+      // the constraint blocks inside the rewrite's commit-check job,
+      // after the rewritten files are staged
+      ("optimizeWhere", t => {
+        VtConflictGate.reset()
+        VtConflictGate.release.countDown() // the DDL's own head check passes
+        VersionedTable.addCheckConstraint(spark, t, "gate", "vt_gate(k)")
+      }, t => VersionedTable.optimizeWhere(spark, t, "k", 0L, 10L)))
+    for ((what, setup, op) <- cases) {
+      val t = freshTable()
+      VersionedTable.commit(df(1L -> "a", 2L -> "b"), t, append = false)
+      setup(t)
+      loseRace(t, what)(op(t))
+    }
   }
 
   test("a reader pinned to a vacuumed snapshot fails loudly, never partially") {
@@ -1005,7 +1064,7 @@ class VersionedTableSpec extends AnyFunSuite {
   }
 }
 
-/** Static gate for the deleteWhere conflict test: lives outside the spec
+/** Static gate for the lost-race tests: lives outside the spec
   * class so the UDF closure stays serializable and both the test thread
   * and Spark tasks see the one JVM-wide instance (local mode).
   */
@@ -1016,12 +1075,12 @@ private[graft] object VtConflictGate {
     entered = new java.util.concurrent.CountDownLatch(1)
     release = new java.util.concurrent.CountDownLatch(1)
   }
-  def slowTrue(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val f = org.apache.spark.sql.functions.udf { (_: Long) =>
-      entered.countDown()
-      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
-      true
-    }
-    f(c)
+  /** Signal `entered`, then wait for `release`; always true. */
+  def pass(): Boolean = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    true
   }
+  def slowTrue(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.udf((_: Long) => pass()).apply(c)
 }
